@@ -240,17 +240,26 @@ object Bench {
     // round-stamp started at load 5.2 because the wait defaulted OFF
     // and showed 2x phantom regressions): if the 1-min load is above
     // the threshold, wait up to SPARK_GRAFT_LOAD_WAIT seconds
-    // (default 15 min — waiting is always cheaper than a defamatory
-    // artifact) for it to drain. If it never does: with
+    // (default 15 min, at most a sixth of the budget — waiting is
+    // always cheaper than a defamatory artifact) for it to drain. If
+    // it never does: with
     // SPARK_GRAFT_REQUIRE_QUIET=1 REFUSE to run (exit 2, no artifact
     // — a noisy run can never become the artifact of record);
     // otherwise proceed but stamp `load_warn` so downstream tooling
     // knows the medians are suspect before comparing rounds.
     val maxLoad = sys.env.getOrElse("SPARK_GRAFT_MAX_LOAD", "4.0").toDouble
-    // the load wait may not eat the budget the timed reps need
-    val loadWaitSec = math.min(
-      sys.env.getOrElse("SPARK_GRAFT_LOAD_WAIT", "900").toInt,
-      if (budgetSec > 0) (budgetSec / 6).toInt else Int.MaxValue)
+    // the default load wait may not eat the budget the timed reps
+    // need; an explicit wait is honoured up to the whole budget
+    val loadWaitSec = {
+      val cap = if (budgetSec > 0) budgetSec.toInt else Int.MaxValue
+      sys.env.get("SPARK_GRAFT_LOAD_WAIT").map(_.toInt) match {
+        case None => math.min(900, cap / 6)
+        case Some(asked) if asked > cap =>
+          System.err.println(s"[bench] SPARK_GRAFT_LOAD_WAIT=$asked s exceeds the $cap s budget; waiting at most $cap s")
+          cap
+        case Some(asked) => asked
+      }
+    }
     val deadline = System.nanoTime() + loadWaitSec * 1000L * 1000 * 1000
     while (loadAvg() > maxLoad && System.nanoTime() < deadline) {
       System.err.println(f"[bench] 1-min load ${loadAvg()}%.1f > $maxLoad%.1f, waiting...")

@@ -56,10 +56,11 @@ object JobProfile {
     val times = (1 to reps).map { _ =>
       jobs.synchronized(jobs.clear()); stageToJob.synchronized(stageToJob.clear())
       val t = run()
-      // drain the listener bus: poll until every observed job has its
-      // end time AND the snapshot is stable across two polls (r14
-      // ADVICE: a fixed sleep could drop or misattribute late task-end
-      // events), with a bounded wait as the backstop
+      // drain the listener bus: poll until at least one job was seen,
+      // every observed job has its end time AND the snapshot is stable
+      // across two polls (a fixed sleep could drop or misattribute late
+      // task-end events; an empty map is not yet drained), with a
+      // bounded wait as the backstop
       var prev = ""
       var stable = false
       val drainDeadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
@@ -68,7 +69,7 @@ object JobProfile {
         val sig = jobs.synchronized(
           jobs.map { case (id, j) => s"$id:${j.end}:${j.tasks}:${j.taskMs}" }.mkString(","))
         val allEnded = jobs.synchronized(jobs.values.forall(_.end != 0L))
-        stable = allEnded && sig == prev
+        stable = sig.nonEmpty && allEnded && sig == prev
         prev = sig
       }
       val snap = jobs.synchronized(jobs.toVector)

@@ -58,13 +58,14 @@ class GraftCatalog extends TableCatalog {
     t
   }
 
-  override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    val cur = loadTable(ident).asInstanceOf[GraftTable]
-    val next = new GraftTable(cur.name(),
-      changes.foldLeft(cur.schema())(SchemaChanges.apply), cur.properties())
-    tables.put(ident, next)
-    next
-  }
+  /** Applies all of `changes` or none: the new schema is built inside
+    * `compute`, so a failing change stores nothing and two concurrent
+    * calls on one table cannot lose either's update. */
+  override def alterTable(ident: Identifier, changes: TableChange*): Table =
+    tables.compute(ident, (_, cur) => {
+      if (cur == null) throw new NoSuchTableException(ident.namespace.toSeq :+ ident.name)
+      new GraftTable(cur.name(), changes.foldLeft(cur.schema())(SchemaChanges.apply), cur.properties())
+    })
 
   override def dropTable(ident: Identifier): Boolean = tables.remove(ident) != null
 
@@ -111,7 +112,8 @@ private object EmptyReaderFactory extends PartitionReaderFactory {
 /** Applies V2 `TableChange`s to a `StructType`, recursing through
   * dotted field paths — the catalog-side twin of
   * [[graft.schema.Evolver.applyOp]] (which does the same at the
-  * GSchema level). */
+  * GSchema level). A path with a missing or non-struct segment
+  * throws. */
 object SchemaChanges {
   def apply(schema: StructType, change: TableChange): StructType = change match {
     case a: TableChange.AddColumn =>
@@ -141,14 +143,14 @@ object SchemaChanges {
       case Seq(leaf) =>
         require(st.fields.exists(_.name == leaf), s"no field '$leaf'")
         StructType(st.fields.toSeq.flatMap(fl => if (fl.name == leaf) f(fl) else Seq(fl)))
-      case head +: rest => StructType(st.fields.toSeq.map(descend(_, head, rest, update(_, rest)(f))))
+      case head +: rest => descend(st, head)(update(_, rest)(f))
       case _ => throw new IllegalArgumentException("empty field path")
     }
 
   private def insert(st: StructType, parent: Seq[String], field: StructField,
       pos: TableChange.ColumnPosition): StructType =
     if (parent.isEmpty) StructType(place(st.fields.toSeq, field, pos))
-    else StructType(st.fields.toSeq.map(descend(_, parent.head, parent.tail, insert(_, parent.tail, field, pos))))
+    else descend(st, parent.head)(insert(_, parent.tail, field, pos))
 
   private def move(st: StructType, path: Seq[String], pos: TableChange.ColumnPosition): StructType =
     path match {
@@ -156,7 +158,7 @@ object SchemaChanges {
         val moving = st.fields.find(_.name == leaf)
           .getOrElse(throw new IllegalArgumentException(s"no field '$leaf'"))
         StructType(place(st.fields.toSeq.filterNot(_.name == leaf), moving, pos))
-      case head +: rest => StructType(st.fields.toSeq.map(descend(_, head, rest, move(_, rest, pos))))
+      case head +: rest => descend(st, head)(move(_, rest, pos))
       case _ => throw new IllegalArgumentException("empty field path")
     }
 
@@ -171,11 +173,14 @@ object SchemaChanges {
     case other => throw new UnsupportedOperationException(s"unsupported position: $other")
   }
 
-  private def descend(fl: StructField, head: String, rest: Seq[String],
-      rec: StructType => StructType): StructField =
-    if (fl.name != head) fl
-    else fl.dataType match {
-      case s: StructType => fl.copy(dataType = rec(s))
+  /** Rewrite the struct-typed field `head` of `st` with `rec`. */
+  private def descend(st: StructType, head: String)(rec: StructType => StructType): StructType = {
+    val i = st.fieldNames.indexOf(head)
+    require(i >= 0, s"no field '$head'")
+    val fl = st.fields(i)
+    fl.dataType match {
+      case s: StructType => StructType(st.fields.updated(i, fl.copy(dataType = rec(s))))
       case other => throw new IllegalArgumentException(s"'$head' is not a struct ($other)")
     }
+  }
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Result of an evolve run: the migrated data, the schema after
   * evolution, the applied operations (in phase order) and the DDL
-  * that would implement them on a live catalog table. */
+  * that would implement them on a live catalog table, coalesced as
+  * [[Ddl.statements]] describes. */
 final case class EvolveResult(
     data: Option[DataFrame],
     schema: GSchema,
@@ -43,16 +44,25 @@ object Evolver {
   }
 
   /** Renames first, then add/update/drop, then moves (schema.py:233). */
-  def phased(ops: Seq[EvolutionOp]): Seq[EvolutionOp] = {
-    val renames = ops.collect { case o: RenameColumn => o }
-    val moves = ops.collect { case o: MoveColumn => o }
-    val middle = ops.filter(o => !o.isInstanceOf[RenameColumn] && !o.isInstanceOf[MoveColumn])
-    renames ++ middle ++ moves
+  def phased(ops: Seq[EvolutionOp]): Seq[EvolutionOp] = ops.sortBy(phase)
+
+  private def phase(op: EvolutionOp): Int = op match {
+    case _: RenameColumn => 0
+    case _: MoveColumn => 2
+    case _ => 1
   }
 
   /** Full workflow: diff → gate → evolved schema (+ migrated data when
     * a DataFrame is supplied). dryRun returns the plan but leaves data
-    * and schema untouched. */
+    * and schema untouched.
+    *
+    * `ddl` is coalesced: within a phase, each run of consecutive
+    * same-kind changes becomes one statement (`ADD COLUMN a INT, s.b
+    * STRING`, `DROP COLUMN a, s.b`, `ALTER COLUMN a TYPE BIGINT, b
+    * COMMENT 'x', c AFTER d`), and a change starts a new statement
+    * when its column, an ancestor or a descendant is already in the
+    * current one. Renames are one per statement. A one-op evolution
+    * emits exactly `op.toSql(table)`. */
   def evolve(
       current: GSchema,
       target: GSchema,
@@ -63,22 +73,23 @@ object Evolver {
       dryRun: Boolean = false): EvolveResult = {
     val diff = SchemaDiff.byId(current, target)
     val ops = plan(diff, strict, allowBreaking)
-    // Emit DDL against the schema state each op actually sees (ops
-    // apply in phase order), so `before` moves resolve to executable
-    // FIRST/AFTER statements.
-    val (evolved, ddl) = ops.foldLeft((current, Seq.empty[String])) {
-      case ((sch, acc), op) => (applyOp(sch, op), acc ++ ddlFor(sch, op, table))
+    // Render each op's clauses against the schema state it actually
+    // sees (ops apply in phase order), so `before` moves resolve to
+    // executable FIRST/AFTER clauses; then coalesce within each phase.
+    val (evolved, steps) = ops.foldLeft((current, Vector.empty[(Int, Seq[DdlClause])])) {
+      case ((sch, acc), op) => (applyOp(sch, op), acc :+ (phase(op) -> resolved(sch, op).clauses))
     }
+    val ddl = steps.groupBy(_._1).toSeq.sortBy(_._1)
+      .flatMap { case (_, inPhase) => Ddl.statements(table, inPhase.flatMap(_._2)) }
     if (dryRun) EvolveResult(data, current, ops, ddl)
     else EvolveResult(data.map(df => conform(df, current, evolved)), evolved, ops, ddl)
   }
 
-  /** Executable DDL for one op given the schema it will apply to:
-    * everything delegates to [[EvolutionOp.toSql]] except `before`
-    * moves, which Spark DDL lacks — resolved here to FIRST / AFTER
-    * the target's predecessor among the *current* siblings. */
-  private def ddlFor(schema: GSchema, op: EvolutionOp, table: String): Seq[String] = op match {
-    case m @ MoveColumn(path, target, "before") =>
+  /** `op` with a `before` move, which Spark DDL lacks, resolved to
+    * FIRST / AFTER the target's predecessor among the siblings in
+    * `schema`. */
+  private def resolved(schema: GSchema, op: EvolutionOp): EvolutionOp = op match {
+    case MoveColumn(path, target, "before") =>
       val (parent, leaf) = splitPath(path)
       val siblings =
         if (parent.isEmpty) schema.fields
@@ -89,10 +100,8 @@ object Evolver {
       val rest = siblings.filterNot(_.name == leaf)
       val i = rest.indexWhere(_.name == target)
       require(i >= 0, s"move: no target field '$target'")
-      val q = path.split('.').map(p => s"`$p`").mkString(".")
-      if (i == 0) Seq(s"ALTER TABLE $table ALTER COLUMN $q FIRST")
-      else Seq(s"ALTER TABLE $table ALTER COLUMN $q AFTER `${rest(i - 1).name}`")
-    case other => other.toSql(table)
+      if (i == 0) MoveColumn(path, "", "first") else MoveColumn(path, rest(i - 1).name, "after")
+    case other => other
   }
 
   private def fieldAt(schema: GSchema, path: String): GField = {
@@ -113,7 +122,10 @@ object Evolver {
     * through PyIceberg (reference migrate.py:31; integration-tested
     * against a REST catalog in tests/test_integration.py). Works on
     * any V2 catalog the session is wired to (Iceberg in production,
-    * [[graft.catalog.GraftCatalog]] in this offline environment). */
+    * [[graft.catalog.GraftCatalog]] offline). Each statement is one
+    * `TableCatalog.alterTable` call, which is one Iceberg commit and
+    * applies all of its changes or none, so a failure leaves exactly
+    * the statements before it applied. */
   def executeDdl(spark: org.apache.spark.sql.SparkSession, ddl: Seq[String]): Unit =
     ddl.zipWithIndex.foreach { case (stmt, i) =>
       try spark.sql(stmt)

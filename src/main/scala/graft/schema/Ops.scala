@@ -15,10 +15,53 @@ sealed trait EvolutionOp {
   def isBreaking: Boolean = false
   def toSerializableMap: Map[String, String]
   def pretty: String
-  /** Spark DDL statement(s) implementing this op on `table`. */
-  def toSql(table: String): Seq[String]
-  protected def q(path: String): String =
-    path.split('.').map(p => s"`$p`").mkString(".")
+  /** The `ALTER TABLE` clauses implementing this op, in apply order. */
+  def clauses: Seq[DdlClause]
+  /** Spark DDL statement(s) implementing this op on `table`: the
+    * one-op case of [[Ddl.statements]]. */
+  def toSql(table: String): Seq[String] = Ddl.statements(table, clauses)
+}
+
+/** One column clause of an `ALTER TABLE` statement: the verb it goes
+  * under, the dotted path it changes and the text after that path. */
+final case class DdlClause(verb: String, path: String, action: String)
+
+/** Renders clauses as `ALTER TABLE` statements, coalescing them the
+  * way one Spark statement can hold them. */
+object Ddl {
+  val Add = "ADD COLUMN"
+  val Drop = "DROP COLUMN"
+  val Alter = "ALTER COLUMN"
+  val Rename = "RENAME COLUMN"
+
+  def quote(path: String): String = path.split('.').map(p => s"`$p`").mkString(".")
+  def comment(doc: String): String = s" COMMENT '${doc.replace("'", "''")}'"
+
+  /** One statement per run of consecutive clauses with the same verb
+    * (`ADD COLUMN a INT, s.b STRING`). A clause starts a new statement
+    * when its path, an ancestor or a descendant of it is already in the
+    * current one, which Spark rejects as NOT_SUPPORTED_CHANGE_SAME_COLUMN
+    * (a type and a comment change on one column, an add into a struct
+    * the same statement adds). Renames have no list form: one each. */
+  def statements(table: String, clauses: Seq[DdlClause]): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    var stmt = Vector.empty[DdlClause]
+    def flush(): Unit = if (stmt.nonEmpty) {
+      out += s"ALTER TABLE $table ${stmt.head.verb} " + stmt.map(c => quote(c.path) + c.action).mkString(", ")
+      stmt = Vector.empty
+    }
+    clauses.foreach { c =>
+      val joins = stmt.nonEmpty && c.verb == stmt.head.verb && c.verb != Rename &&
+        !stmt.exists(s => overlaps(s.path, c.path))
+      if (!joins) flush()
+      stmt :+= c
+    }
+    flush()
+    out.result()
+  }
+
+  private def overlaps(a: String, b: String): Boolean =
+    a == b || a.startsWith(b + ".") || b.startsWith(a + ".")
 }
 
 final case class AddColumn(name: String, newType: GType, doc: Option[String] = None) extends EvolutionOp {
@@ -26,17 +69,15 @@ final case class AddColumn(name: String, newType: GType, doc: Option[String] = N
     Map("operation" -> "add_column", "name" -> name, "to" -> newType.typeString) ++
       doc.map("doc" -> _)
   def pretty: String = s"ADD\n└── + $name: ${newType.typeString}"
-  def toSql(table: String): Seq[String] = {
-    val comment = doc.map(d => s" COMMENT '${d.replace("'", "''")}'").getOrElse("")
-    Seq(s"ALTER TABLE $table ADD COLUMN ${q(name)} ${GSchema.toSparkType(newType).sql}$comment")
-  }
+  def clauses: Seq[DdlClause] =
+    Seq(DdlClause(Ddl.Add, name, s" ${GSchema.toSparkType(newType).sql}${doc.map(Ddl.comment).getOrElse("")}"))
 }
 
 final case class DropColumn(name: String) extends EvolutionOp {
   override def isBreaking: Boolean = true // always removes data (migrate.py:142)
   def toSerializableMap: Map[String, String] = Map("operation" -> "drop_column", "name" -> name)
   def pretty: String = s"DROP\n└── - $name"
-  def toSql(table: String): Seq[String] = Seq(s"ALTER TABLE $table DROP COLUMN ${q(name)}")
+  def clauses: Seq[DdlClause] = Seq(DdlClause(Ddl.Drop, name, ""))
 }
 
 final case class UpdateColumn(
@@ -59,32 +100,32 @@ final case class UpdateColumn(
     s"UPDATE${if (isSupported) "" else " (unsupported)"}\n└── ~ $name:\n" +
       Render.indent(from, "    ") + "\n" + Render.indent(to, "    ")
   }
-  def toSql(table: String): Seq[String] = {
-    val typeSql = newType.map(t => s"ALTER TABLE $table ALTER COLUMN ${q(name)} TYPE ${GSchema.toSparkType(t).sql}").toSeq
-    val docSql = doc.map(d => s"ALTER TABLE $table ALTER COLUMN ${q(name)} COMMENT '${d.replace("'", "''")}'").toSeq
-    typeSql ++ docSql
-  }
+  def clauses: Seq[DdlClause] =
+    newType.map(t => DdlClause(Ddl.Alter, name, s" TYPE ${GSchema.toSparkType(t).sql}")).toSeq ++
+      doc.map(d => DdlClause(Ddl.Alter, name, Ddl.comment(d)))
 }
 
 final case class RenameColumn(name: String, target: String) extends EvolutionOp {
   def toSerializableMap: Map[String, String] =
     Map("operation" -> "rename_column", "name" -> name, "to" -> target)
   def pretty: String = s"RENAME\n└── ~ $name\n    to: $target"
-  def toSql(table: String): Seq[String] =
-    Seq(s"ALTER TABLE $table RENAME COLUMN ${q(name)} TO `$target`")
+  def clauses: Seq[DdlClause] = Seq(DdlClause(Ddl.Rename, name, s" TO `$target`"))
 }
 
 final case class MoveColumn(name: String, target: String, position: String) extends EvolutionOp {
   def toSerializableMap: Map[String, String] =
     Map("operation" -> "move_column", "name" -> name, "position" -> position, "target" -> target)
   def pretty: String = s"MOVE\n└── ~ $name\n    from: $position\n    of: $target"
-  def toSql(table: String): Seq[String] = position match {
-    case "first"  => Seq(s"ALTER TABLE $table ALTER COLUMN ${q(name)} FIRST")
-    case "after"  => Seq(s"ALTER TABLE $table ALTER COLUMN ${q(name)} AFTER ${q(target)}")
-    case "before" => // Spark DDL has no BEFORE; express as AFTER of the predecessor at plan time
-      Seq(s"-- move ${q(name)} before ${q(target)}: emitted as AFTER by Evolver once ordering is resolved")
-    case other => throw new IllegalArgumentException(s"bad move position: $other")
+  def clauses: Seq[DdlClause] = position match {
+    case "first"  => Seq(DdlClause(Ddl.Alter, name, " FIRST"))
+    case "after"  => Seq(DdlClause(Ddl.Alter, name, s" AFTER ${Ddl.quote(target)}"))
+    // Spark DDL has no BEFORE; Evolver.evolve resolves it to FIRST/AFTER against the schema
+    case other => throw new IllegalArgumentException(s"move position '$other' has no Spark DDL")
   }
+  override def toSql(table: String): Seq[String] =
+    if (position == "before") Seq(s"-- move ${Ddl.quote(name)} before ${Ddl.quote(target)}: " +
+      "emitted as AFTER by Evolver once ordering is resolved")
+    else super.toSql(table)
 }
 
 /** DDL emission for whole schemas (complement of the per-op ALTER
@@ -94,7 +135,7 @@ object CreateTableDdl {
       partitionedBy: Seq[String] = Nil): String = {
     val cols = schema.fields.map { f =>
       val notNull = if (f.required) " NOT NULL" else ""
-      val comment = f.doc.map(d => s" COMMENT '${d.replace("'", "''")}'").getOrElse("")
+      val comment = f.doc.map(Ddl.comment).getOrElse("")
       s"  `${f.name}` ${GSchema.toSparkType(f.tpe).sql}$notNull$comment"
     }.mkString(",\n")
     val part = if (partitionedBy.nonEmpty)
@@ -112,5 +153,5 @@ final case class UnionSchema(name: String, newType: GType) extends EvolutionOp {
   def toSerializableMap: Map[String, String] =
     Map("operation" -> "union_schema", "with" -> newType.typeString)
   def pretty: String = s"UNION SCHEMA (unsupported)\n└── ~ $name:\n    with type: ${newType.typeString}"
-  def toSql(table: String): Seq[String] = Nil
+  def clauses: Seq[DdlClause] = Nil
 }

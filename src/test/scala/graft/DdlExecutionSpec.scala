@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.Random
+
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.schema._
@@ -70,20 +72,28 @@ class DdlExecutionSpec extends AnyFunSuite {
       lastColumnId = 11)
 
     val res = Evolver.evolve(base, target, table = t, allowBreaking = true)
-    assert(res.ddl.nonEmpty)
+    // 8 ops, one statement each before coalescing: 2 renames, then one
+    // statement each for the retype, the adds (meta.country, score),
+    // the drop and the moves (the reorder, score's position)
+    assert(res.ddl.size == 6, res.ddl.mkString("\n"))
     assert(!res.ddl.exists(_.trim.startsWith("--")), s"unexecutable DDL emitted:\n${res.ddl.mkString("\n")}")
     Evolver.executeDdl(spark, res.ddl)
 
-    val actual = spark.table(t).schema
-    assert(strip(actual) == strip(GSchema.toSpark(res.schema)),
-      s"\nactual:   ${strip(actual).sql}\nexpected: ${strip(GSchema.toSpark(res.schema)).sql}")
+    assertApplied(t, res, res.schema)
+  }
 
-    // re-diff to empty, with both sides given identical positional ids
-    val rediff = SchemaDiff.byId(
-      GSchema.fromSpark(StructType(strip(actual).asInstanceOf[StructType].fields)),
-      GSchema.fromSpark(StructType(strip(GSchema.toSpark(res.schema)).asInstanceOf[StructType].fields)))
+  /** The table's read-back schema equals the evolved schema, and
+    * re-diffs to empty against `target` with both sides given
+    * identical positional ids (added fields get allocator ids). */
+  private def assertApplied(t: String, res: EvolveResult, target: GSchema): Unit = {
+    val actual = strip(spark.table(t).schema)
+    val expected = strip(GSchema.toSpark(res.schema))
+    assert(actual == expected, s"\nactual:   ${actual.sql}\nexpected: ${expected.sql}\nddl:\n${res.ddl.mkString("\n")}")
+    val rediff = SchemaDiff.byId(positional(actual), positional(GSchema.toSpark(target)))
     assert(rediff.toOperations.isEmpty, s"re-diff not empty: ${rediff.toOperations.map(_.pretty)}")
   }
+
+  private def positional(dt: DataType): GSchema = GSchema.fromSpark(strip(dt).asInstanceOf[StructType])
 
   test("RENAME TABLE moves metadata and refuses to clobber an existing table") {
     val cur = GSchema(0, Seq(GField(1, "a", required = false, GInt)), lastColumnId = 1)
@@ -112,5 +122,148 @@ class DdlExecutionSpec extends AnyFunSuite {
     val res = Evolver.evolve(cur, target, table = t)
     Evolver.executeDdl(spark, res.ddl)
     assert(spark.table(t).schema.fieldNames.toSeq == Seq("c", "a", "d", "b"))
+  }
+
+  test("a one-op evolution emits exactly op.toSql") {
+    val cases = Seq[EvolutionOp](
+      RenameColumn("meta.city", "town"),
+      UpdateColumn("qty", Some(GInt), Some(GLong)),
+      UpdateColumn("old_name", None, None, Some("it's new")),
+      AddColumn("meta.country", GString, Some("iso")),
+      DropColumn("meta.zip"),
+      MoveColumn("tags", "", "first"),
+      MoveColumn("id", "meta", "after"))
+    cases.zipWithIndex.foreach { case (op, i) =>
+      val t = s"graftcat.ns.one_op_$i"
+      val res = Evolver.evolve(base, Evolver.applyOp(base, op), table = t, allowBreaking = true)
+      assert(res.ops == Seq(op))
+      assert(res.ddl == op.toSql(t))
+      spark.sql(CreateTableDdl(base, t))
+      Evolver.executeDdl(spark, res.ddl)
+      assertApplied(t, res, res.schema)
+    }
+    // a retype of a documented column re-sets its doc: two clauses on
+    // one column, so two statements, as op.toSql gives them
+    val documented = Evolver.evolve(base, base.copy(fields = base.fields.map(f =>
+      if (f.name == "old_name") f.copy(tpe = GLong) else f)), table = "t", allowBreaking = true)
+    assert(documented.ops.size == 1)
+    assert(documented.ddl == Seq(
+      "ALTER TABLE t ALTER COLUMN `old_name` TYPE BIGINT",
+      "ALTER TABLE t ALTER COLUMN `old_name` COMMENT 'to be renamed'"))
+  }
+
+  test("coalescing splits on a column already in the statement, its ancestors or descendants") {
+    val clauses = Seq(
+      DdlClause(Ddl.Alter, "a", " TYPE BIGINT"), DdlClause(Ddl.Alter, "b", " COMMENT 'x'"),
+      DdlClause(Ddl.Alter, "a", " COMMENT 'y'"), DdlClause(Ddl.Alter, "s.x", " TYPE BIGINT"),
+      DdlClause(Ddl.Alter, "s.y", " COMMENT 'q'"),
+      DdlClause(Ddl.Rename, "a", " TO `a2`"), DdlClause(Ddl.Rename, "b", " TO `b2`"),
+      DdlClause(Ddl.Add, "n", " STRUCT<p: INT>"), DdlClause(Ddl.Add, "n.q", " INT"),
+      DdlClause(Ddl.Add, "s.z", " INT"),
+      DdlClause(Ddl.Drop, "s.x", ""), DdlClause(Ddl.Drop, "s.y", ""), DdlClause(Ddl.Drop, "b2", ""))
+    val t = "graftcat.ns.coalesce"
+    val ddl = Ddl.statements(t, clauses)
+    assert(ddl == Seq(
+      s"ALTER TABLE $t ALTER COLUMN `a` TYPE BIGINT, `b` COMMENT 'x'",
+      s"ALTER TABLE $t ALTER COLUMN `a` COMMENT 'y', `s`.`x` TYPE BIGINT, `s`.`y` COMMENT 'q'",
+      s"ALTER TABLE $t RENAME COLUMN `a` TO `a2`",
+      s"ALTER TABLE $t RENAME COLUMN `b` TO `b2`",
+      s"ALTER TABLE $t ADD COLUMN `n` STRUCT<p: INT>",
+      s"ALTER TABLE $t ADD COLUMN `n`.`q` INT, `s`.`z` INT",
+      s"ALTER TABLE $t DROP COLUMN `s`.`x`, `s`.`y`, `b2`"))
+    spark.sql(s"CREATE TABLE $t (a INT, b STRING, s STRUCT<x: INT, y: STRING>) USING parquet")
+    Evolver.executeDdl(spark, ddl)
+    assert(strip(spark.table(t).schema) == strip(StructType.fromDDL(
+      "a2 BIGINT COMMENT 'y', s STRUCT<z: INT>, n STRUCT<p: INT, q: INT>")))
+  }
+
+  test("coalesced evolution DDL executes and re-diffs to empty, 100 seeded evolutions") {
+    var statements, perOp = 0
+    val ddl = Seq.newBuilder[String]
+    (0 until 100).foreach { seed =>
+      val rnd = new Random(7000L + seed)
+      val cur = Evolutions.schema(rnd)
+      val target = Evolutions.evolve(cur, rnd)
+      val t = s"graftcat.ns.prop_$seed"
+      val res = Evolver.evolve(cur, target, table = t, allowBreaking = true)
+      if (res.ops.size == 1) assert(res.ddl == res.ops.head.toSql(t))
+      spark.sql(CreateTableDdl(cur, t))
+      Evolver.executeDdl(spark, res.ddl)
+      withClue(s"seed $seed\ncurrent=$cur\ntarget=$target\nops=${res.ops}\n")(assertApplied(t, res, target))
+      statements += res.ddl.size
+      perOp += res.ops.map(op => op.toSql(t).size).sum
+      ddl ++= res.ddl
+    }
+    assert(statements < perOp)
+    // the generator reaches every coalescing case
+    val all = ddl.result()
+    def covers(what: String)(p: String => Boolean): Unit = assert(all.exists(p), s"no $what in\n${all.mkString("\n")}")
+    def count(d: String, s: String): Int = d.sliding(s.length).count(_ == s)
+    covers("nested rename")(d => d.contains("RENAME COLUMN") && d.contains("`.`"))
+    covers("type and doc on one column")(d => d.contains("ALTER COLUMN") && d.contains("TYPE") && d.contains("COMMENT"))
+    covers("widen of two struct members")(d => count(d, "`.`") >= 2 && count(d, " TYPE ") >= 2)
+    covers("chained moves")(d => count(d, " AFTER ") + count(d, " FIRST") >= 2)
+    covers("several adds")(d => d.contains("ADD COLUMN") && d.contains(", "))
+    covers("struct-member drop")(d => d.contains("DROP COLUMN") && d.contains("`.`"))
+  }
+}
+
+/** Seeded schemas and evolutions that exercise every coalescing case:
+  * nested renames, a type and a doc change on one column, widens of
+  * several members of one struct, chained, `first` and `before` moves,
+  * positioned adds, adds into structs and struct-member drops. */
+private object Evolutions {
+  private val widen: Map[GType, GType] = Map(GInt -> GLong, GFloat -> GDouble)
+  private val prims = IndexedSeq[GType](GInt, GLong, GFloat, GDouble, GString, GBoolean, GDate)
+
+  def schema(rnd: Random): GSchema = {
+    var id = 1
+    def next(): Int = { id += 1; id }
+    def doc(): Option[String] = if (rnd.nextInt(3) == 0) Some(s"doc $id") else None
+    def prim(): GType = prims(rnd.nextInt(prims.size))
+    val fields = (1 to 4 + rnd.nextInt(5)).map { i =>
+      if (i % 3 == 0) GField(next(), s"s$i", required = false, GStruct((1 to 2 + rnd.nextInt(3)).map(j =>
+        GField(next(), s"m$j", required = false, prim(), doc()))), doc())
+      else GField(next(), s"c$i", required = false, prim(), doc())
+    }
+    val s = GSchema(0, GField(1, "id", required = true, GLong) +: fields)
+    s.copy(lastColumnId = s.highwaterId)
+  }
+
+  def evolve(cur: GSchema, rnd: Random): GSchema =
+    (0 until 2 + rnd.nextInt(7)).foldLeft(cur) { (s, step) =>
+      val top = s.fields.tail // never touch the key column
+      val structs = top.filter(_.tpe.isInstanceOf[GStruct])
+      def pick[T](xs: Seq[T]): Option[T] = if (xs.isEmpty) None else Some(xs(rnd.nextInt(xs.size)))
+      def members(f: GField): Seq[GField] = f.tpe.asInstanceOf[GStruct].fields
+      val ops: Seq[EvolutionOp] = rnd.nextInt(11) match {
+        case 0 => pick(top).toSeq.map(f => RenameColumn(f.name, s"${f.name}_r$step"))
+        case 1 => pick(structs).toSeq.flatMap(f =>
+          pick(members(f)).map(m => RenameColumn(s"${f.name}.${m.name}", s"${m.name}_r$step")))
+        case 2 => pick(top.filter(f => widen.contains(f.tpe))).toSeq.map(f =>
+          UpdateColumn(f.name, Some(f.tpe), widen.get(f.tpe), Some(s"widened $step")))
+        case 3 => pick(structs).toSeq.flatMap(f => members(f).filter(m => widen.contains(m.tpe)).map(m =>
+          UpdateColumn(s"${f.name}.${m.name}", Some(m.tpe), widen.get(m.tpe))))
+        case 4 => pick(structs ++ top).toSeq.map(f => UpdateColumn(f.name, None, None, Some(s"now $step")))
+        case 5 | 6 => (0 to rnd.nextInt(3)).flatMap { _ =>
+          pick(top).map(f => pos(f.name, top.map(_.name), rnd))
+        }
+        case 7 =>
+          val name = s"a$step"
+          AddColumn(name, prims(rnd.nextInt(prims.size)), if (rnd.nextBoolean()) Some(s"added $step") else None) +:
+            (if (rnd.nextBoolean()) Seq(pos(name, top.map(_.name), rnd)) else Nil)
+        case 8 => pick(structs).toSeq.map(f => AddColumn(s"${f.name}.a$step", GDouble))
+        case 9 => pick(structs.filter(f => members(f).size > 1)).toSeq.flatMap(f =>
+          pick(members(f)).map(m => DropColumn(s"${f.name}.${m.name}")))
+        case _ => if (top.size > 1) pick(top).toSeq.map(f => DropColumn(f.name)) else Nil
+      }
+      ops.foldLeft(s)(Evolver.applyOp)
+    }
+
+  /** Move `name` first, or before or after another of `names`. */
+  private def pos(name: String, names: Seq[String], rnd: Random): MoveColumn = {
+    val others = names.filterNot(_ == name)
+    if (others.isEmpty || rnd.nextInt(4) == 0) MoveColumn(name, "", "first")
+    else MoveColumn(name, others(rnd.nextInt(others.size)), if (rnd.nextBoolean()) "before" else "after")
   }
 }
