@@ -1,17 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark entry point: runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Each query is forced
   * through the `noop` sink so the full plan executes (a bare count()
   * would let Catalyst prune every computed column away).
   *
-  * Each query runs `SPARK_GRAFT_BENCH_REPS` times (default 3) and the
-  * reported number is the MEDIAN, with per-query [min, max] spreads in
-  * `spread` and the per-query MIN in `mins` — single-shot timings on
-  * this box swing ±25%, wide enough to mask real regressions (the
-  * round-2 verdict's bench-stability item).
+  * Each query runs `SPARK_GRAFT_BENCH_REPS` times (default 3) after one
+  * untimed warm-up sweep, on `local[SPARK_GRAFT_CPUS]` (default: every
+  * core), and the reported number is the MEDIAN, with per-query
+  * [min, max] spreads in `spread` and the per-query MIN in `mins` —
+  * single-shot timings on this box swing ±25%, wide enough to mask
+  * real regressions (the round-2 verdict's bench-stability item).
   *
   * Reps are interleaved REP-MAJOR (rep 1 of every query, then rep 2 of
   * every query, ...) rather than query-major: a transient ambient-load
@@ -29,7 +28,7 @@ object Bench {
     * size buckets, cosine LSH buckets), so regressions in the
     * sub-quadratic paths show up here; only the all-pairs reference
     * scans (dedup_embed_cosine, banded=false simhash) are excluded. */
-  private val headline = Seq(
+  private[graft] val headline = Seq(
     "q1_pricing_summary", "q3_top_orders", "q7_window_rank",
     "q12_join_multi", "q13_percentiles", "q16_events_window",
     "q17_sessionize", "q19_asof_join",
@@ -121,82 +120,6 @@ object Bench {
     // round-13 operators
     "ml_spearman_shuffle")
 
-  /** FROZEN round-over-round comparison basket: the 222 queries of the
-    * round-11 stamp (`BENCH_r11_local_d.json`). Every bench emits
-    * `common_total` over exactly this set next to the growing full
-    * `total`, so cross-round comparison reads two numbers instead of a
-    * hand intersection (the r11 verdict's bench-hygiene item). Do NOT
-    * grow this list — new queries belong only in [[headline]]; freeze
-    * a NEW basket (common_r{N}) if a future round needs a fresh
-    * baseline. */
-  private val commonR11: Set[String] = Set(
-    "ann_dim_audit", "ann_filtered_search", "ann_hybrid_rrf", "ann_ivf",
-    "ann_ivf_kmeans", "ann_ivfpq_residual", "ann_knn_graph", "ann_lsh",
-    "ann_mips", "ann_mmr", "ann_multiprobe_lsh", "ann_ndcg",
-    "ann_pq", "ann_range_search", "ann_recall_audit", "ann_sq8",
-    "approx_heavy_hitters", "approx_hll_union", "approx_set_overlap", "approx_tdigest_quantiles",
-    "corpus_bpe_encode", "corpus_bpe_merges", "corpus_budget_select", "corpus_decontaminate",
-    "corpus_decontaminate_bloom", "corpus_decontaminate_semantic", "corpus_domain_stats", "corpus_dsir",
-    "corpus_epoch_mix", "corpus_mixture_sample", "corpus_naive_bayes", "corpus_ngram_lm",
-    "corpus_oov_rate", "corpus_pack_ffd", "corpus_pack_sequences", "corpus_pmi_bigrams",
-    "corpus_quality_gate", "corpus_sample_weighted", "corpus_span_corruption", "corpus_split_leakage",
-    "corpus_temperature_sample", "corpus_tokenizer_fertility", "corpus_topic_clusters", "corpus_url_dedup",
-    "corpus_version_diff", "corpus_vocab_growth", "dedup_cluster_stats", "dedup_clusters",
-    "dedup_containment", "dedup_embed_cosine_lsh", "dedup_exact", "dedup_incremental",
-    "dedup_keep_best", "dedup_minhash_fidelity", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "dedup_paragraph_minhash", "dedup_semantic", "dedup_simhash", "dedup_simhash_pairs",
-    "dedup_source_stats", "dedup_substring", "dedup_threshold_sweep", "graph_anf",
-    "graph_assortativity", "graph_bfs", "graph_closeness", "graph_clustering_coeff",
-    "graph_connected_components", "graph_degree_stats", "graph_hits", "graph_kcore",
-    "graph_label_prop", "graph_link_prediction", "graph_modularity", "graph_node_similarity",
-    "graph_pagerank", "graph_triangles", "ml_auc_delong", "ml_average_precision",
-    "ml_bootstrap_ci", "ml_brier_decomposition", "ml_c2st_drift", "ml_calibration",
-    "ml_cochran_q", "ml_cohens_kappa", "ml_conformal_interval", "ml_confusion_mcc",
-    "ml_feature_importance", "ml_hosmer_lemeshow", "ml_isotonic_calibration", "ml_kfold_cv",
-    "ml_ks_two_sample", "ml_learning_curve", "ml_lift_deciles", "ml_linear_probe",
-    "ml_logreg_gd", "ml_mcnemar_test", "ml_pr_auc", "ml_ridge_path",
-    "ml_roc_auc", "ml_shap_linear", "ml_spearman_corr", "ml_threshold_cost_opt",
-    "ml_threshold_sweep", "ml_wilcoxon_signed_rank", "mm_audio_fingerprint", "mm_audio_vad",
-    "mm_features", "mm_phash_dedup", "pipeline_crawl_ingest", "pipeline_data_card",
-    "pipeline_graph_centrality", "pipeline_ingest_full", "pipeline_mixture_pack", "pipeline_ml_readouts",
-    "pipeline_ml_scorecard", "pipeline_model_compare", "pipeline_near_dedup", "pipeline_perplexity_filter",
-    "pipeline_retrieval_eval", "pipeline_schema_drift", "pipeline_trend_panel", "q100_runs_test",
-    "q101_autocorrelation", "q102_ljung_box", "q103_dow_anova", "q12_join_multi",
-    "q13_percentiles", "q16_events_window", "q17_sessionize", "q19_asof_join",
-    "q1_pricing_summary", "q3_top_orders", "q40_funnel", "q41_salted_join",
-    "q42_scd2_merge", "q43_stats_suite", "q44_window_frames", "q45_retention",
-    "q46_peak_concurrency", "q47_anomaly_zscore", "q48_asof_tolerance", "q49_time_weighted_avg",
-    "q50_session_overlap", "q51_streaks", "q52_winsorize", "q53_ewma",
-    "q54_anomaly_mad", "q55_fuzzy_link", "q56_transition_matrix", "q57_skyline",
-    "q58_attribution", "q59_ab_test", "q60_psi_drift", "q61_top_paths",
-    "q62_histogram2d", "q63_cumulative_reach", "q64_rfm", "q65_wow_change",
-    "q66_seasonality", "q67_gini", "q68_zipf_fit", "q69_lead_time",
-    "q70_abandoned_carts", "q71_basket_lift", "q72_stickiness", "q73_bm25",
-    "q74_cohort_matrix", "q75_purchase_intervals", "q76_grouped_regression", "q77_abc_classification",
-    "q78_new_vs_returning", "q79_trend_decompose", "q7_window_rank", "q80_cusum_changepoint",
-    "q81_hhi_concentration", "q82_price_elasticity", "q83_cohort_ltv", "q84_survival_retention",
-    "q85_benford_audit", "q86_chi2_independence", "q87_seasonal_naive_backtest", "q88_join_skew_report",
-    "q89_dq_audit", "q90_markov_stationary", "q91_theil_sen", "q92_equidepth_histogram",
-    "q93_join_size_estimate", "q94_calendar_fill", "q95_rolling_metrics", "q96_percentile_bands",
-    "q97_active_users", "q98_rolling_robust", "q99_mann_kendall", "src_text_roundtrip",
-    "text_bm25_topk", "text_boilerplate_fraction", "text_collocations", "text_dedup_spans",
-    "text_diversity", "text_dup_ngram_fraction", "text_entropy", "text_fingerprint",
-    "text_hash_features", "text_inverted_index", "text_keyphrases", "text_langid_eval",
-    "text_novelty_curve", "text_quality", "text_rarity_score", "text_readability",
-    "text_repetition", "text_tfidf_topk", "text_top_tokens", "vec_covariance",
-    "vec_hard_negatives", "vec_matryoshka_eval", "vec_outliers", "vec_pca_project",
-    "vec_rp_project", "vec_silhouette")
-
-  /** FROZEN r13 basket (r13 verdict item #5): the r11 basket plus the
-    * two queries added since (`pipeline_train_data_card` r12,
-    * `ml_spearman_shuffle` r13) — 224 keys, the full r13-stamp
-    * headline. Emitted as `common_r13_total` NEXT TO the r11
-    * `common_total` (kept for one more round of continuity). Same
-    * freeze discipline: do NOT grow this set; freeze a new basket
-    * when needed. */
-  private val commonR13: Set[String] =
-    commonR11 + "pipeline_train_data_card" + "ml_spearman_shuffle"
-
   /** 1-minute system load average, or -1 where the JMX bean refuses
     * (it never does on Linux). Sampled once per rep sweep: the r4
     * driver host showed noisy-neighbor spikes (one rep 3x slow at
@@ -221,17 +144,16 @@ object Bench {
     val t0 = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - t0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
     // wall-clock budget (r14 verdict item #1: the driver's 32-core run
     // died at its orchestration timeout with NOTHING written because
     // results were assembled only at the very end). Seconds; 0 disables.
     // When the budget runs tight the bench SHEDS work in hygiene order —
-    // remaining warmup first, then extra slow-tier reps, then whole rep
-    // sweeps — so a time-boxed run still emits a complete, parseable
-    // artifact over the reps it DID finish. Independently, the result
-    // file is (re)written after every rep sweep, so even a hard kill
-    // leaves the last sweep's parseable snapshot in place.
+    // remaining warmup first, then whole rep sweeps — so a time-boxed
+    // run still emits a complete, parseable artifact over the sweeps it
+    // DID finish. Independently, the result file is (re)written after
+    // every rep sweep, so even a hard kill leaves the last sweep's
+    // parseable snapshot in place.
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_TIME_BUDGET", "2700").toDouble
     def budgetLeft(frac: Double): Double =
       if (budgetSec <= 0) Double.MaxValue else budgetSec * frac - elapsedSec
@@ -273,51 +195,39 @@ object Bench {
     }
     if (loadWarn) System.err.println(
       f"[bench] WARNING: starting at 1-min load ${loadAvg()}%.1f > $maxLoad%.1f — timings will be polluted")
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.local(Harness.cores)
     // JVM/codegen warmup outside the timings (tiny sf, flagship plan)
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => }
+    try Harness.runNoop(SparkEntry.entry(spark)) catch { case _: Throwable => }
     val qs = SparkEntry.queries
+    val missing = headline.filterNot(qs.contains)
+    require(missing.isEmpty, s"Bench headline names unknown queries: ${missing.mkString(",")}")
     // SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the set (local iteration)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = headline.filter(qs.contains)
-      .filter(n => only.forall(_.contains(n)))
-    // one untimed sweep before the timed reps (SPARK_GRAFT_BENCH_WARMUP=0
-    // disables): rep 1 was systematically the spread's top end — cold
-    // parquet page cache + per-query JIT, not GC (gc_sec ≈ 0.3 s/rep on
-    // an isolated 5-rep ngram_jaccard run whose spread was still
-    // [3.6, 9.1]) and not ambient load. Warm reps answer the question
-    // the bench asks — steady-state engine time — and the cold-start
-    // cost is visible in the warmup's own wall time if ever needed.
-    // clearCache() only drops catalog-tracked cache entries; the many
-    // localCheckpoint(true) RDDs queries materialize wait on GC-driven
-    // ContextCleaner otherwise and pile up block-manager memory across
-    // the 115-query session (the r5/r6 verdicts' ngram_jaccard rep
-    // variance billed 35–41 s/rep to GC). Unpersist them DETERMINISTICALLY
-    // between queries instead of hoping System.gc() gets there in time —
-    // blocking = true, so no block removal bleeds into the next timed rep.
-    def dropAllBlocks(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
-    // warmup sheds first when the budget is tight: it is rep-1 hygiene,
-    // not data — capped at 25% of the budget, checked per query
+    val names = headline.filter(n => only.forall(_.contains(n)))
+    // one untimed sweep before the timed reps: rep 1 was
+    // systematically the spread's top end — cold parquet page cache +
+    // per-query JIT, not GC (gc_sec ≈ 0.3 s/rep on an isolated 5-rep
+    // ngram_jaccard run whose spread was still [3.6, 9.1]) and not
+    // ambient load. Warm reps answer the question the bench asks —
+    // steady-state engine time — and the cold-start cost is visible in
+    // the warmup's own wall time if ever needed. The warmup sheds first
+    // when the budget is tight: it is rep-1 hygiene, not data — capped
+    // at 25% of the budget, checked per query.
     var warmupShed = 0
-    if (sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1") != "0") {
-      for (name <- names) {
-        if (budgetLeft(0.25) > 0) {
-          try qs(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => }
-          dropAllBlocks()
-        } else warmupShed += 1
-      }
-      if (warmupShed > 0) System.err.println(
-        f"[bench] budget: shed warmup for $warmupShed queries at ${elapsedSec}%.0f s")
-      System.gc()
+    for (name <- names) {
+      if (budgetLeft(0.25) > 0) {
+        try Harness.runNoop(qs(name)(spark, sfDir)) catch { case _: Throwable => }
+        Harness.dropAllBlocks(spark)
+      } else warmupShed += 1
     }
+    if (warmupShed > 0) System.err.println(
+      f"[bench] budget: shed warmup for $warmupShed queries at ${elapsedSec}%.0f s")
+    System.gc()
     // rep-major: time rep 1 of every query, then rep 2 of every query,
-    // ... so an ambient-load spike overlaps at most one rep per query
+    // ... so an ambient-load spike overlaps at most one rep per query.
+    // Every attempted run appends one sample (NaN when it failed), so a
+    // query's first k samples are exactly its first k sweeps.
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
     val repLoads = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -325,6 +235,14 @@ object Bench {
     var repsDone = 0
     var lastSweepSec = 0.0
     var budgetTruncated = false
+    def recordOf(repsEff: Int, partial: Boolean): Record = {
+      // per-rep GC seconds: rep i's delta is bounded by the next rep's
+      // start (the final rep by now)
+      val gcEnds = repGcStart.drop(1) :+ gcMillis()
+      val gcSec = repGcStart.zip(gcEnds).map { case (s, e) => (e - s) / 1000.0 }
+      record(names, samples.toMap, repsEff, partial, Run(reps, repLoads.toSeq, gcSec.toSeq,
+        loadWarn, sfDir, warmupShed, budgetTruncated))
+    }
     for (rep <- 1 to reps if !budgetTruncated) {
       // shed whole sweeps past the first when the previous sweep would
       // not fit in what remains of the budget
@@ -336,20 +254,18 @@ object Bench {
         val sweepT0 = System.nanoTime()
         repLoads += loadAvg(); repGcStart += gcMillis() // once per rep sweep
         for (name <- names if !budgetTruncated) {
-          val t0q = System.nanoTime()
-          val ok =
-            try { qs(name)(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-            catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
-          val elapsed = (System.nanoTime() - t0q) / 1e9
+          val elapsed =
+            try Harness.runNoop(qs(name)(spark, sfDir))
+            catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); Double.NaN }
           // per-query persists must not eat later reps'/queries' memory, and
           // a GC+settle outside the timed section keeps one query's garbage
           // from billing the next query's rep
-          dropAllBlocks()
+          Harness.dropAllBlocks(spark)
           System.gc()
           Thread.sleep(100)
-          if (ok) samples(name) = samples(name) :+ elapsed
-          // hard mid-sweep stop: a partial last sweep still yields a
-          // parseable artifact over the completed sweeps
+          samples(name) = samples(name) :+ elapsed
+          // hard mid-sweep stop: the partial sweep's samples are dropped
+          // by `record`, which keeps only the completed sweeps
           if (budgetLeft(0.97) < 0 && rep > 1) {
             budgetTruncated = true
             System.err.println(
@@ -359,49 +275,12 @@ object Bench {
         if (!budgetTruncated) {
           repsDone = rep
           lastSweepSec = (System.nanoTime() - sweepT0) / 1e9
-          writeResult(emitLine(names, samples.toMap, math.min(rep, reps), reps,
-            repLoads.toSeq, repGcStart.toSeq, loadWarn, sfDir,
-            partial = rep < reps, warmupShed, budgetTruncated = false))
+          writeResult(recordOf(rep, partial = rep < reps).full)
         }
       }
     }
-    val repsEff = math.max(1, repsDone)
-    // min-of-5 for the slow tier (r13 verdict item #5: §7p.2 made
-    // min-of-many the only attributable statistic, and the ≥10 s
-    // queries are where round-over-round claims live):
-    // SPARK_GRAFT_BENCH_EXTRA_REPS_OVER=<secs> appends extra reps
-    // (default 2, → 5 samples at reps=3) to every query whose current
-    // MIN is at or above the threshold. Query-major is fine here —
-    // mins are robust to a load spike in a way medians are not, and
-    // that is the statistic the tier exists for.
-    val extraOver = sys.env.get("SPARK_GRAFT_BENCH_EXTRA_REPS_OVER")
-      .map(_.trim).filter(_.nonEmpty).map(_.toDouble)
-    val extraReps = math.max(0,
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_EXTRA_REPS", "2").toInt)
-    var extraShed = 0
-    for (thr <- extraOver.toSeq; name <- names;
-         if samples(name).size == repsEff && samples(name).min >= thr;
-         _ <- 1 to extraReps) {
-      // extra slow-tier reps shed per run when what remains of the
-      // budget would not cover this query's fastest observed rep
-      if (budgetLeft(0.95) < samples(name).min) extraShed += 1
-      else {
-        val t0q = System.nanoTime()
-        val ok =
-          try { qs(name)(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
-        val elapsed = (System.nanoTime() - t0q) / 1e9
-        dropAllBlocks()
-        System.gc()
-        Thread.sleep(100)
-        if (ok) samples(name) = samples(name) :+ elapsed
-      }
-    }
-    if (extraShed > 0) System.err.println(
-      f"[bench] budget: shed $extraShed slow-tier extra reps at ${elapsedSec}%.0f s")
-    val line = emitLine(names, samples.toMap, repsEff, reps,
-      repLoads.toSeq, repGcStart.toSeq, loadWarn, sfDir,
-      partial = false, warmupShed, budgetTruncated)
+    val result = recordOf(math.max(1, repsDone), partial = false)
+    val line = result.full
     val outPath = writeResult(line)
     // stdout scraping is lossy: the round stamper keeps only the LAST
     // 2000 chars of sbt output, so a 180-query line loses its head and
@@ -410,100 +289,77 @@ object Bench {
     // complete-but-compact JSON object (totals + slowest queries under
     // a char budget + the canonical file path). The file always holds
     // the full result.
-    println(if (line.length <= 1400) line
-      else compactLine(names, samples.toMap, repsEff, reps,
-        repLoads.toSeq, repGcStart.toSeq, loadWarn, sfDir, outPath, budgetTruncated))
+    println(if (line.length <= 1400) line else result.compact(outPath))
     spark.stop()
   }
 
-  /** Per-query (median, min, max) over every query whose sample count
-    * reached `repsEff` — a query is failed unless every counted rep
-    * succeeded: a partial sample is not comparable to a full one, and
-    * folding a fail-fast elapsed into the totals would make a broken
-    * round read as a speedup (>= : the slow tier legitimately carries
-    * extra samples). */
-  private def goodOf(names: Seq[String], samples: Map[String, Vector[Double]],
-      repsEff: Int): Seq[(String, Double, Double, Double)] =
-    names.map(n => (n, samples.getOrElse(n, Vector.empty)))
-      .collect { case (k, ts) if ts.size >= repsEff =>
-        val sorted = ts.sorted
-        val median = // true median: mean of the middle two for even sizes
-          if (sorted.size % 2 == 1) sorted(sorted.size / 2)
-          else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2
-        (k, median, sorted.head, sorted.last)
-      }
+  /** One query's median, min and max seconds. */
+  private[graft] final case class Stat(name: String, median: Double, min: Double, max: Double)
 
-  /** The full result line. `repsEff` is the number of COMPLETED rep
-    * sweeps (== requested `reps` on an un-truncated run); a
-    * budget-truncated or in-progress snapshot reports medians over the
-    * sweeps that finished, with `reps` stamped as what was actually
-    * comparable and `reps_requested`/`partial`/`budget_truncated`
-    * recording the difference (r14 verdict item #1). */
-  private def emitLine(names: Seq[String], samples: Map[String, Vector[Double]],
-      repsEff: Int, repsRequested: Int, repLoads: Seq[Double], repGcStart: Seq[Long],
-      loadWarn: Boolean, sfDir: String, partial: Boolean, warmupShed: Int,
-      budgetTruncated: Boolean): String = {
-    val good = goodOf(names, samples, repsEff)
-    val qjson = good.map { case (k, med, _, _) => "\"" + k + "\":" + f"$med%.3f" }
-      .mkString("{", ",", "}")
-    val spread = good.map { case (k, _, mn, mx) => "\"" + k + "\":[" + f"$mn%.3f,$mx%.3f]" }
-      .mkString("{", ",", "}")
-    // per-query minimum: the load-free estimate when medians are suspect
-    val mins = good.map { case (k, _, mn, _) => "\"" + k + "\":" + f"$mn%.3f" }
-      .mkString("{", ",", "}")
-    val failed = names.filter(n => samples.getOrElse(n, Vector.empty).size < repsEff)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val loads = repLoads.map(l => f"$l%.2f").mkString("[", ",", "]")
-    // per-rep GC seconds: rep i's delta is bounded by the next rep's
-    // start (the final rep by now)
-    val gcEnds = repGcStart.drop(1) :+ gcMillis()
-    val gcs = repGcStart.zip(gcEnds).map { case (s, e) => f"${(e - s) / 1000.0}%.1f" }
-      .mkString("[", ",", "]")
-    val total = good.map(_._2).sum
-    // frozen-basket total: comparable round over round without
-    // intersecting query lists by hand; null if any basket query
-    // failed or was filtered out (a partial basket is not comparable)
-    val commonGood = good.filter(g => commonR11.contains(g._1))
-    val commonTotal =
-      if (commonGood.size == commonR11.size) f"${commonGood.map(_._2).sum}%.3f" else "null"
-    val commonR13Good = good.filter(g => commonR13.contains(g._1))
-    val commonR13Total =
-      if (commonR13Good.size == commonR13.size) f"${commonR13Good.map(_._2).sum}%.3f" else "null"
-    val extras = (if (partial) s""","partial":true""" else "") +
-      (if (repsEff != repsRequested) s""","reps_requested":$repsRequested""" else "") +
-      (if (warmupShed > 0) s""","warmup_shed":$warmupShed""" else "") +
-      (if (budgetTruncated) s""","budget_truncated":true""" else "")
-    s"""{"metric":"total","value":$total,"unit":"sec","common_total":$commonTotal,"common_n":${commonGood.size},"common_r13_total":$commonR13Total,"common_r13_n":${commonR13Good.size},"queries":$qjson,"spread":$spread,"mins":$mins,"reps":$repsEff,"load_avg":$loads,"gc_sec":$gcs,"load_warn":$loadWarn,"failed":$failed,"sf":"$sfDir"$extras}"""
+  /** What a run records besides its samples. */
+  private[graft] final case class Run(repsRequested: Int, loads: Seq[Double], gcSec: Seq[Double],
+      loadWarn: Boolean, sfDir: String, warmupShed: Int, budgetTruncated: Boolean)
+
+  /** A bench result, computed once by [[record]] and rendered twice:
+    * [[full]] for the result file, [[compact]] for stdout. `repsEff`
+    * is the number of COMPLETED rep sweeps (== requested `reps` on an
+    * un-truncated run); a budget-truncated or in-progress snapshot
+    * reports medians over the sweeps that finished, with `reps`
+    * stamped as what was actually comparable and
+    * `reps_requested`/`partial`/`budget_truncated` recording the
+    * difference (r14 verdict item #1). */
+  private[graft] final case class Record(good: Seq[Stat], failed: Seq[String], repsEff: Int,
+      partial: Boolean, run: Run) {
+    val total: Double = good.map(_.median).sum
+    private def obj(v: Stat => String): String =
+      good.map(g => "\"" + g.name + "\":" + v(g)).mkString("{", ",", "}")
+    private def head = s"""{"metric":"total","value":$total,"unit":"sec""""
+    private def arr(xs: Seq[String]): String = xs.mkString("[", ",", "]")
+    private def tail = s""""reps":$repsEff,"load_avg":${arr(run.loads.map(l => f"$l%.2f"))},""" +
+      s""""gc_sec":${arr(run.gcSec.map(g => f"$g%.1f"))},"load_warn":${run.loadWarn},""" +
+      s""""failed":${arr(failed.map("\"" + _ + "\""))},"sf":"${run.sfDir}""""
+    private def repsRequested =
+      if (repsEff != run.repsRequested) s""","reps_requested":${run.repsRequested}""" else ""
+    private def truncated = if (run.budgetTruncated) ""","budget_truncated":true""" else ""
+
+    /** The full line; `mins` is the load-free estimate when medians are suspect. */
+    def full: String = head +
+      s""","queries":${obj(g => f"${g.median}%.3f")}""" +
+      s""","spread":${obj(g => f"[${g.min}%.3f,${g.max}%.3f]")}""" +
+      s""","mins":${obj(g => f"${g.min}%.3f")},""" + tail +
+      (if (partial) ""","partial":true""" else "") + repsRequested +
+      (if (run.warmupShed > 0) s""","warmup_shed":${run.warmupShed}""" else "") + truncated + "}"
+
+    /** Totals + the slowest queries under a char budget + the path of the full file. */
+    def compact(outPath: String): String = {
+      val sb = new StringBuilder
+      for (g <- good.sortBy(-_.median) if sb.length < 700) {
+        if (sb.nonEmpty) sb.append(',')
+        sb.append("\"" + g.name + "\":" + f"${g.median}%.3f")
+      }
+      head + s""","n_queries":${good.size},"queries_slowest":{$sb},""" +
+        tail + repsRequested + truncated + s""","full_result":"$outPath"}"""
+    }
   }
 
-  /** Compact stdout form of the final result (totals + slowest queries
-    * + pointer to the full file). */
-  private def compactLine(names: Seq[String], samples: Map[String, Vector[Double]],
-      repsEff: Int, repsRequested: Int, repLoads: Seq[Double], repGcStart: Seq[Long],
-      loadWarn: Boolean, sfDir: String, outPath: String,
-      budgetTruncated: Boolean): String = {
-    val good = goodOf(names, samples, repsEff)
-    val total = good.map(_._2).sum
-    val commonGood = good.filter(g => commonR11.contains(g._1))
-    val commonTotal =
-      if (commonGood.size == commonR11.size) f"${commonGood.map(_._2).sum}%.3f" else "null"
-    val commonR13Good = good.filter(g => commonR13.contains(g._1))
-    val commonR13Total =
-      if (commonR13Good.size == commonR13.size) f"${commonR13Good.map(_._2).sum}%.3f" else "null"
-    val failed = names.filter(n => samples.getOrElse(n, Vector.empty).size < repsEff)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val loads = repLoads.map(l => f"$l%.2f").mkString("[", ",", "]")
-    val gcEnds = repGcStart.drop(1) :+ gcMillis()
-    val gcs = repGcStart.zip(gcEnds).map { case (s, e) => f"${(e - s) / 1000.0}%.1f" }
-      .mkString("[", ",", "]")
-    val sb = new StringBuilder
-    for ((k, med, _, _) <- good.sortBy(-_._2) if sb.length < 700) {
-      if (sb.nonEmpty) sb.append(',')
-      sb.append("\"" + k + "\":" + f"$med%.3f")
-    }
-    val extras = (if (repsEff != repsRequested) s""","reps_requested":$repsRequested""" else "") +
-      (if (budgetTruncated) s""","budget_truncated":true""" else "")
-    s"""{"metric":"total","value":$total,"unit":"sec","common_total":$commonTotal,"common_n":${commonGood.size},"common_r13_total":$commonR13Total,"common_r13_n":${commonR13Good.size},"n_queries":${good.size},"queries_slowest":{$sb},"reps":$repsEff,"load_avg":$loads,"gc_sec":$gcs,"load_warn":$loadWarn,"failed":$failed,"sf":"$sfDir"$extras,"full_result":"$outPath"}"""
+  /** Pure: per-query stats over each query's first `repsEff` samples,
+    * i.e. over the completed sweeps only — a sweep the budget cut
+    * mid-way leaves one extra sample on some queries, and mixing sample
+    * counts would mix medians. A query is failed unless all `repsEff`
+    * runs succeeded (a failed run is NaN): a partial sample is not
+    * comparable to a full one, and folding a fail-fast elapsed into
+    * the totals would make a broken round read as a speedup. */
+  private[graft] def record(names: Seq[String], samples: Map[String, Vector[Double]],
+      repsEff: Int, partial: Boolean, run: Run): Record = {
+    val (good, failed) = names.map(n => n -> samples.getOrElse(n, Vector.empty).take(repsEff))
+      .partition { case (_, ts) => ts.size == repsEff && !ts.exists(_.isNaN) }
+    Record(good.map { case (n, ts) =>
+      val sorted = ts.sorted
+      val median = // true median: mean of the middle two for even sizes
+        if (sorted.size % 2 == 1) sorted(sorted.size / 2)
+        else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2
+      Stat(n, median, sorted.head, sorted.last)
+    }, failed.map(_._1), repsEff, partial, run)
   }
 
   /** Write (atomically replace) the result file; returns the path.

@@ -19,7 +19,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * The default (no implicit in scope) is [[CacheScope.untracked]]:
   * persists are left alive, and batch entry points clear them with
-  * `spark.catalog.clearCache()` between queries (what Verify/Bench
+  * [[Harness.dropAllBlocks]] between queries (what Verify/Bench
   * do). Results must be materialized before the scope closes —
   * unpersist is lazy-safe (recompute, not failure) but forfeits the
   * reuse the persist paid for.
@@ -44,7 +44,7 @@ final class CacheScope private[graft] (track: Boolean) {
 }
 
 object CacheScope {
-  /** Leak-by-default scope for harness entry points that clearCache
+  /** Leak-by-default scope for harness entry points that drop blocks
     * between queries; library callers should prefer [[withScope]]. */
   val untracked: CacheScope = new CacheScope(false)
 

@@ -17,8 +17,7 @@ object JobProfile {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.local(Harness.cores)
     val q = SparkEntry.queries(name)
 
     final case class Job(start: Long, var end: Long = 0L,
@@ -43,19 +42,13 @@ object JobProfile {
         } } }
       }
     }
-    def run(): Double = {
-      val t0 = System.nanoTime()
-      q(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
     // warmup rep (JIT + page cache), untimed and unprofiled
-    run()
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    Harness.runNoop(q(spark, sfDir))
+    Harness.dropAllBlocks(spark)
     spark.sparkContext.addSparkListener(listener)
     val times = (1 to reps).map { _ =>
       jobs.synchronized(jobs.clear()); stageToJob.synchronized(stageToJob.clear())
-      val t = run()
+      val t = Harness.runNoop(q(spark, sfDir))
       // drain the listener bus: poll until at least one job was seen,
       // every observed job has its end time AND the snapshot is stable
       // across two polls (a fixed sleep could drop or misattribute late
@@ -77,8 +70,7 @@ object JobProfile {
       snap.foreach { case (id, j) =>
         println(f"  job $id%3d  wall ${j.end - j.start}%6d ms  tasks ${j.tasks}%4d  taskTime ${j.taskMs}%7d ms  ${j.desc.take(80)}")
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      Harness.dropAllBlocks(spark)
       t
     }
     println(f"== $name min of $reps: ${times.min}%.3f s ==")

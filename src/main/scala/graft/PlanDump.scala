@@ -2,9 +2,9 @@ package graft
 
 /** Per-query `.explain("formatted")` dumper for the optimization-round
   * evidence files (`plans/r<N>/<query>_{before,after}.txt`) — the same
-  * capture discipline as [[Plans]] (static plan + executed
-  * pre-checkpoint plans for localCheckpoint-terminated gates), one
-  * file per query instead of one monolithic PLANS.md.
+  * capture as [[Plans]] ([[Harness.explainExecuted]]: static plan +
+  * executed pre-checkpoint plans for localCheckpoint-terminated gates),
+  * one file per query instead of one monolithic PLANS.md.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>
   */
@@ -17,49 +17,13 @@ object PlanDump {
     val missing = names.filterNot(qs.contains)
     require(missing.isEmpty, s"unknown queries: ${missing.mkString(",")}")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val checkpointPlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        if (funcName == "checkpoint" || funcName == "localCheckpoint")
-          checkpointPlans.add(qe.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    def drain(): Unit = {
-      var last = -1; var same = 0
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (same < 2 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val now = checkpointPlans.size
-        if (now == last) same += 1 else { same = 0; last = now }
-      }
-    }
-    try names.foreach { n =>
-      checkpointPlans.clear()
-      val df = qs(n)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      val sb = new StringBuilder
-      sb ++= s"# $n ($suffix) — explain(formatted) at $sfDir\n\n"
-      sb ++= plan
-      if (plan.contains("ExistingRDD")) {
-        drain()
-        val caught = checkpointPlans.toArray(Array.empty[String])
-        caught.zipWithIndex.foreach { case (p, i) =>
-          sb ++= s"\n## executed checkpointed stage ${i + 1} of ${caught.size}" +
-            (if (i == caught.size - 1) " (terminal plan)" else "") + "\n\n"
-          sb ++= p
-        }
-      }
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"), sb.toString)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    names.foreach { n =>
+      val plan = Harness.explainExecuted(spark, qs(n)(spark, sfDir))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"),
+        s"# $n ($suffix) — explain(formatted) at $sfDir\n\n$plan")
+      Harness.dropAllBlocks(spark)
       println(s"wrote $outDir/${n}_$suffix.txt")
-    } finally spark.listenerManager.unregister(listener)
+    }
     spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dumps `.explain("formatted")` for the headline queries → PLANS.md,
+/** Dumps `.explain("formatted")` for every SparkEntry query → PLANS.md,
   * the per-round plan-review evidence (pushdown, broadcast, shuffle
   * count) required by SURVEY.md §4/§6.
   */
@@ -11,92 +11,7 @@ object Plans {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
     val spark = Sessions.local("8", logLevel = "ERROR")
-    val names = Seq("q1_pricing_summary", "q2_filter_pushdown", "q3_top_orders", "q7_window_rank",
-      "q12_join_multi", "q13_percentiles", "q16_events_window", "q17_sessionize", "q19_asof_join",
-      "dedup_exact", "dedup_minhash_lsh", "dedup_simhash_pairs", "dedup_ngram_jaccard",
-      "dedup_embed_cosine_lsh", "ann_lsh", "ann_ivf_kmeans", "text_top_tokens", "schema_migrate",
-      "corpus_pack_shards", "corpus_decontaminate", "corpus_domain_mix",
-      "mm_image_features", "mm_audio_features", "vec_kmeans",
-      "dedup_substring", "text_dup_ngram_fraction", "pipeline_ingest_full",
-      "corpus_decontaminate_bloom", "corpus_decontaminate_fuzzy", "text_tfidf_topk", "q40_funnel",
-      "dedup_incremental", "text_pii_scrub", "corpus_chunk",
-      "ann_pq", "ann_ivfpq", "ann_ivfpq_residual", "graph_pagerank", "q41_salted_join", "src_zorder_keys",
-      "dedup_semantic", "text_rarity_score", "ann_sq8", "q42_scd2_merge", "graph_triangles",
-      "corpus_temperature_sample", "q43_stats_suite", "q44_window_frames",
-      "text_diversity", "corpus_pack_sequences", "corpus_budget_select",
-      "vec_covariance", "q45_retention", "graph_node_similarity",
-      "dedup_keep_best", "ann_mmr", "corpus_split_leakage",
-      "corpus_quality_gate", "text_readability", "vec_pca_project",
-      "corpus_bpe_merges", "corpus_epoch_mix", "q46_peak_concurrency",
-      "q47_anomaly_zscore", "q48_asof_tolerance", "q49_time_weighted_avg",
-      "dedup_containment",
-      "graph_connected_components", "corpus_dsir", "q50_session_overlap",
-      "ann_range_search", "mm_phash_dedup", "q51_streaks",
-      "corpus_bpe_encode", "q52_winsorize",
-      "corpus_ngram_lm", "pipeline_perplexity_filter", "corpus_pmi_bigrams",
-      "corpus_sample_weighted", "corpus_naive_bayes", "graph_kcore",
-      "q53_ewma", "q54_anomaly_mad",
-      "q55_fuzzy_link", "q56_transition_matrix", "q57_skyline",
-      "ml_linear_probe", "graph_bfs", "graph_label_prop",
-      "vec_rp_project", "ann_knn_graph",
-      "text_entropy", "corpus_vocab_growth", "q58_attribution",
-      "vec_silhouette", "src_partitioned_prune", "q59_ab_test",
-      "graph_degree_stats", "mm_audio_fingerprint", "ml_logreg_gd",
-      "q60_psi_drift", "q61_top_paths", "ml_kfold_cv", "graph_modularity",
-      "q62_histogram2d", "q63_cumulative_reach", "q64_rfm",
-      "ml_threshold_sweep", "corpus_version_diff", "corpus_topic_clusters",
-      "q65_wow_change", "graph_assortativity", "vec_outliers",
-      "q66_seasonality", "q67_gini", "ml_lift_deciles", "q68_zipf_fit",
-      "q69_lead_time", "src_mergeschema_read", "q70_abandoned_carts",
-      "q71_basket_lift", "q72_stickiness", "q73_bm25", "q74_cohort_matrix",
-      "ml_ridge_path", "graph_closeness", "text_keyphrases",
-      "vec_hard_negatives", "q75_purchase_intervals",
-      "q76_grouped_regression", "q77_abc_classification", "ann_recall_audit",
-      "q78_new_vs_returning", "q79_trend_decompose", "ml_calibration",
-      "text_inverted_index")
     val qs = SparkEntry.queries
-    // NEVER fall behind the inventory (r7 verdict: text_inverted_index
-    // landed after the last regen): a curated name that no longer
-    // exists is an error; a query key missing from the curated order
-    // is auto-appended, so section count == query count by construction
-    val stale = names.filterNot(qs.contains)
-    require(stale.isEmpty, s"Plans curated list has stale names: $stale")
-    val names2 = names ++ (qs.keySet -- names).toSeq.sorted
-    // localCheckpoint(true)-terminated gates execute their REAL plan
-    // eagerly at build time and hand back a Scan ExistingRDD — the
-    // static explain below is blind there (the r11 verdict's
-    // auditability item). Dataset.checkpoint runs through
-    // withAction("checkpoint", qe), so a QueryExecutionListener sees
-    // every pre-checkpoint QueryExecution; we keep the LAST one per
-    // query (the terminal checkpoint — the plan that produced the
-    // gate's rows) and emit it alongside the blind section.
-    val checkpointPlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    // held in a val and unregistered in the finally below (r12
-    // ADVICE: repeated generation in one session must not accumulate
-    // listeners)
-    val checkpointListener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        if (funcName == "checkpoint" || funcName == "localCheckpoint")
-          checkpointPlans.add(qe.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(checkpointListener)
-    // the listener bus is asynchronous: wait until the capture count
-    // stops moving before reading it (generation-time only — never a
-    // runtime cost)
-    def drainListeners(): Unit = {
-      var last = -1
-      var same = 0
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (same < 2 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val now = checkpointPlans.size
-        if (now == last) same += 1 else { same = 0; last = now }
-      }
-    }
     val sb = new StringBuilder
     sb ++= "# PLANS — formatted physical plans at sf0.01 (auto-generated by graft.Plans)\n"
     sb ++= "\nReview checklist per plan: filters/projection pushed to the scan,\n"
@@ -110,32 +25,13 @@ object Plans {
     sb ++= "Sections whose gate terminates in localCheckpoint(true) show the\n"
     sb ++= "checkpoint's Scan ExistingRDD plus the captured PRE-CHECKPOINT plan\n"
     sb ++= "(the plan that actually executed) as an 'executed pre-checkpoint\n"
-    sb ++= "plan' subsection.\n"
-    try names2.foreach { n =>
-      checkpointPlans.clear()
-      val df = qs(n)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb ++= s"\n## $n\n\n```\n$plan```\n"
-      if (plan.contains("ExistingRDD")) {
-        drainListeners()
-        val caught = checkpointPlans.toArray(Array.empty[String])
-        if (caught.isEmpty)
-          // loud, never silent (r12 ADVICE); name BOTH possible causes
-          // (r13 ADVICE): an ExistingRDD can also come from an
-          // RDD-backed frame with no checkpoint executed in this build
-          sb ++= s"\n### $n — WARNING: pre-checkpoint plan NOT captured — " +
-            "either the listener drain exceeded its 5s deadline (rerun " +
-            "graft.Plans on a quiet box), or this plan's ExistingRDD is " +
-            "RDD-backed without a checkpoint/localCheckpoint executed " +
-            "during this build (no pre-checkpoint plan exists to capture)\n"
-        caught.lastOption.foreach { pre =>
-          if (caught.size > 1)
-            sb ++= s"\n${caught.size - 1} earlier checkpointed stage(s) executed during build; terminal plan:\n"
-          sb ++= s"\n### $n — executed pre-checkpoint plan\n\n```\n$pre```\n"
-        }
-      }
-    } finally spark.listenerManager.unregister(checkpointListener)
+    sb ++= "stage' subsection per checkpoint, the last one the terminal plan.\n"
+    // every query gets a section, in name order, so the file never
+    // falls behind the inventory
+    qs.keySet.toSeq.sorted.foreach { n =>
+      sb ++= s"\n## $n\n\n${Harness.explainExecuted(spark, qs(n)(spark, sfDir))}"
+      Harness.dropAllBlocks(spark)
+    }
     sb ++= streamingNearDupPlan(spark)
     sb ++= streamingRepeatedSpanPlan(spark)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)

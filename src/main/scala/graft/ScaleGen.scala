@@ -47,9 +47,19 @@ object ScaleGen {
     val skewMod = if (args.length > 3) args(3).toInt else 16
     val docMutate = args.length > 4 && Set("true", "1").contains(args(4).toLowerCase)
     val out = if (args.length > 1) args(1)
-      else s"target/graft_tmp/sfgen_x$factor${skewLang.map(l => s"_skew_$l").getOrElse("")}"
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-      logLevel = "ERROR")
+      else defaultOut(factor) + skewLang.map(l => s"_skew_$l").getOrElse("")
+    val spark = Sessions.local(Harness.cores, logLevel = "ERROR")
+    build(spark, factor, out, skewLang, skewMod, docMutate)
+    spark.stop()
+  }
+
+  /** Where a plain `factor`× build goes (also what [[ScaleProbe]] reads). */
+  def defaultOut(factor: Int): String = s"target/graft_tmp/sfgen_x$factor"
+
+  /** Materializes `factor`× sf0.1 under `out`; the last table written
+    * is `part.parquet`, so its presence marks a finished build. */
+  def build(spark: org.apache.spark.sql.SparkSession, factor: Int, out: String,
+      skewLang: Option[String] = None, skewMod: Int = 16, docMutate: Boolean = false): Unit = {
     val base = "/root/testdata/sf0.1"
 
     // single FILE per table (the /root/testdata layout): the DuckDB
@@ -100,6 +110,5 @@ object ScaleGen {
     for (dim <- Seq("customer", "region", "nation", "supplier", "part"))
       writeOne(Tables.table(spark, base, dim), dim)
     println(s"done: $out")
-    spark.stop()
   }
 }

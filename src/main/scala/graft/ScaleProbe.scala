@@ -1,251 +1,103 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Scale probe: materializes N× copies of the test tables (keys
-  * re-spaced so cardinalities scale too) under target/, then times the
-  * scale-critical pipelines at 1× and N×. Evidence for the SURVEY §4
-  * claim that the plans scale linearly-ish in data volume (constant
-  * shuffle rounds, no quadratic blowups outside the intentionally
-  * quadratic pair scans).
+/** Scale probe: times the scale-critical pipelines at 1× (sf0.1) and
+  * N× ([[ScaleGen]]'s data — keys re-spaced so cardinalities scale
+  * too, dims kept 1× — built under target/ when missing). Evidence for
+  * the SURVEY §4 claim that the plans scale linearly-ish in data
+  * volume (constant shuffle rounds, no quadratic blowups outside the
+  * intentionally quadratic pair scans).
   *
   * Usage: runMain graft.ScaleProbe [factor=10] [probe,probe,...]
   * (second arg restricts to the named probes) — writes nothing
   * outside target/.
   */
 object ScaleProbe {
+  /** Registry-resolved probes: the scale-sensitive queries (pair
+    * scans, iterative GD/BFS/LPA, selection-machinery users, two-level
+    * ranks — map-only ops like vec_rp_project scale trivially and stay
+    * out to keep the probe wall-time bounded). */
+  private[graft] val probeNames = Seq(
+    "q1_pricing_summary", "q13_percentiles", "q7_window_rank", "q17_sessionize",
+    "dedup_exact", "dedup_minhash_lsh", "dedup_simhash_pairs", "dedup_ngram_jaccard",
+    "dedup_embed_cosine_lsh", "dedup_clusters", "corpus_pack_shards", "ann_ivf_kmeans",
+    "text_quality", "dedup_substring", "text_dup_ngram_fraction", "pipeline_ingest_full",
+    "q39_percentiles_scalable", "corpus_decontaminate_bloom", "corpus_decontaminate_fuzzy",
+    "text_tfidf_topk", "dedup_incremental", "q40_funnel", "q41_salted_join", "ann_pq",
+    "graph_pagerank", "dedup_semantic", "text_rarity_score", "ann_sq8", "graph_triangles",
+    "text_diversity", "corpus_pack_sequences", "corpus_budget_select", "vec_covariance",
+    "q45_retention", "dedup_keep_best", "ann_mmr", "corpus_split_leakage",
+    "corpus_quality_gate", "text_readability", "vec_pca_project", "graph_node_similarity",
+    "corpus_bpe_merges", "corpus_epoch_mix", "q46_peak_concurrency", "q47_anomaly_zscore",
+    "q48_asof_tolerance", "q49_time_weighted_avg", "dedup_containment",
+    "graph_connected_components", "corpus_dsir", "q50_session_overlap", "ann_range_search",
+    "q51_streaks", "corpus_bpe_encode", "q52_winsorize", "corpus_ngram_lm",
+    "pipeline_perplexity_filter", "corpus_pmi_bigrams", "corpus_sample_weighted",
+    "corpus_naive_bayes", "graph_kcore", "q53_ewma", "q54_anomaly_mad", "q55_fuzzy_link",
+    "q57_skyline", "ml_linear_probe", "ml_logreg_gd", "ml_kfold_cv", "graph_bfs",
+    "graph_label_prop", "ann_knn_graph", "corpus_topic_clusters", "q64_rfm", "q67_gini",
+    "text_entropy", "q83_cohort_ltv", "q84_survival_retention", "graph_hits",
+    "dedup_threshold_sweep", "q87_seasonal_naive_backtest", "graph_closeness",
+    "q88_join_skew_report", "ann_hybrid_rrf", "graph_anf", "approx_tdigest_quantiles",
+    "approx_set_overlap", "pipeline_retrieval_eval", "q89_dq_audit", "ml_conformal_interval",
+    "q90_markov_stationary", "q91_theil_sen", "pipeline_trend_panel", "ml_feature_importance",
+    "text_novelty_curve", "text_boilerplate_fraction", "q92_equidepth_histogram",
+    "q93_join_size_estimate", "ml_learning_curve", "dedup_source_stats", "ml_ks_two_sample",
+    "corpus_url_dedup", "text_dedup_spans", "dedup_paragraph_minhash",
+    "pipeline_crawl_ingest", "corpus_decontaminate_semantic", "text_repetition",
+    "corpus_pack_ffd", "text_bm25_topk", "corpus_mixture_sample", "q96_percentile_bands",
+    "pipeline_mixture_pack", "ml_average_precision", "ml_brier_decomposition",
+    "ml_auc_delong", "corpus_domain_stats", "graph_link_prediction", "ml_shap_linear",
+    "q97_active_users", "pipeline_ml_scorecard", "text_collocations", "q98_rolling_robust",
+    "ml_mcnemar_test", "ml_cohens_kappa", "ml_hosmer_lemeshow", "q99_mann_kendall",
+    "q100_runs_test", "ml_isotonic_calibration", "text_hash_features", "ann_multiprobe_lsh",
+    "ml_cochran_q", "ml_spearman_corr", "q101_autocorrelation", "q102_ljung_box",
+    "corpus_span_corruption", "graph_clustering_coeff", "corpus_oov_rate", "text_langid_eval",
+    "q103_dow_anova", "ml_c2st_drift", "ml_wilcoxon_signed_rank", "ml_threshold_cost_opt",
+    "pipeline_model_compare", "vec_matryoshka_eval", "pipeline_train_data_card")
+
   def main(args: Array[String]): Unit = {
     val factor = if (args.nonEmpty) args(0).toInt else 10
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").map(_.trim).toSet) else None
-    val spark = Sessions.local("32", logLevel = "ERROR")
+    val spark = Sessions.local(Harness.cores, logLevel = "ERROR")
 
     val base = "/root/testdata/sf0.1"
-    val scaled = s"/root/repo/target/graft_tmp/scaled_x$factor"
+    val scaled = ScaleGen.defaultOut(factor)
+    if (!new java.io.File(s"$scaled/part.parquet").exists) ScaleGen.build(spark, factor, scaled)
 
-    def scale(name: String, keyCols: Seq[String], shift: Long): Unit = {
-      val df = Tables.table(spark, base, name)
-      val rep = df.crossJoin(spark.range(factor).toDF("__rep"))
-      val shifted = keyCols.foldLeft(rep) { (d, k) =>
-        d.withColumn(k, col(k) + col("__rep") * shift)
-      }.drop("__rep")
-      shifted.write.mode("overwrite").parquet(s"$scaled/$name.parquet")
-    }
-    println(s"building ${factor}x copies under $scaled ...")
-    scale("lineitem", Seq("l_orderkey"), 10000000L)
-    scale("documents", Seq("doc_id"), 10000000L)
-    scale("embeddings", Seq("vec_id"), 10000000L)
-    scale("events", Seq("event_id", "user_id"), 10000000L)
-    scale("orders", Seq("o_orderkey"), 10000000L)
-    // dims stay 1× (the realistic shape): q41's replicated fact rows
-    // miss the unscaled customer dim (scan+shuffle volume still 20×),
-    // and pagerank's DISTINCT edge set stays constant while its
-    // edge-derivation input grows 20× (iterations are graph-scale)
-    for (dim <- Seq("customer", "region", "nation", "supplier", "part")) {
-      val df = Tables.table(spark, base, dim)
-      df.write.mode("overwrite").parquet(s"$scaled/$dim.parquet")
-    }
-
+    val qs = SparkEntry.queries
+    val missing = probeNames.filterNot(qs.contains)
+    require(missing.isEmpty, s"ScaleProbe names unknown queries: ${missing.mkString(",")}")
+    val probes: Seq[(String, String => DataFrame)] =
+      probeNames.map(n => (n, (d: String) => qs(n)(spark, d))) ++ Seq(
+        // SemDeDup's scale knob: k grows with the corpus so cell size
+        // stays constant — Σ|cell|² then grows linearly, not
+        // quadratically (the fixed-k dedup_semantic probe documents the
+        // wrong-configuration cost: 38× at 20×)
+        ("dedup_semantic_kscaled", { d =>
+          val k = if (d != base) 160 else 8
+          dedup.DedupApi.semanticPairs(Tables.embeddings(spark, d), "vec_id", "embedding",
+            threshold = 0.4, kCells = k, iters = 2, trainMod = 4)
+        }),
+        // q42's gated instantiation reads customer (a 1× dim here) — the
+        // probe applies the same scd2Apply shape to the N× orders table
+        // so the base side actually scales
+        ("q42_scd2_merge", { d =>
+          val o = Tables.orders(spark, d)
+          val accts = o.select(col("o_orderkey"), col("o_totalprice").as("c_acctbal"))
+          val changes = o.filter(pmod(col("o_orderkey"), lit(10)) === 0)
+            .select(col("o_orderkey"), (col("o_totalprice") + lit(100.0)).as("new_bal"))
+          operators.Extra.scd2Apply(accts, changes, "o_orderkey", "c_acctbal", "new_bal")
+        }))
     def time(tag: String, f: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      f.write.format("noop").mode("overwrite").save()
-      val s = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache() // per-query persists must not skew the next probe
+      val s = Harness.runNoop(f)
+      Harness.dropAllBlocks(spark) // per-query persists must not skew the next probe
       println(f"$tag: $s%.2f s")
       s
     }
-    val probes: Seq[(String, String => DataFrame)] = Seq(
-      ("q1_pricing_summary", d => operators.Relational.q1.build(spark, d)),
-      ("q13_percentiles", d => operators.Relational.q13.build(spark, d)),
-      ("q7_window_rank", d => operators.Relational.q7.build(spark, d)),
-      ("q17_sessionize", d => operators.Relational.q17.build(spark, d)),
-      ("dedup_exact", d => dedup.Dedup.exact.build(spark, d)),
-      ("dedup_minhash_lsh", d => dedup.Dedup.minhashLsh.build(spark, d)),
-      ("dedup_simhash_pairs", d => dedup.Dedup.simhashPairs.build(spark, d)),
-      ("dedup_ngram_jaccard", d => dedup.Dedup.ngramJaccard.build(spark, d)),
-      ("dedup_embed_cosine_lsh", d => dedup.Dedup.embedCosineLsh.build(spark, d)),
-      ("dedup_clusters", d => dedup.Dedup.clusters.build(spark, d)),
-      ("corpus_pack_shards", d => functions.Pipeline.packShards.build(spark, d)),
-      ("ann_ivf_kmeans", d => similarity.Similarity.ivfKmeans.build(spark, d)),
-      ("text_quality", d => functions.TextAnalysis.quality.build(spark, d)),
-      // the round-4 operators
-      ("dedup_substring", d => dedup.Dedup.substring.build(spark, d)),
-      ("text_dup_ngram_fraction", d => functions.TextAnalysis.dupNgramFraction.build(spark, d)),
-      ("pipeline_ingest_full", d => functions.Pipeline.ingestFull.build(spark, d)),
-      ("q39_percentiles_scalable", d => operators.Extra.q39.build(spark, d)),
-      // the round-5 operators
-      ("corpus_decontaminate_bloom", d => functions.Pipeline.decontaminateBloom.build(spark, d)),
-      ("corpus_decontaminate_fuzzy", d => functions.Pipeline.decontaminateFuzzy.build(spark, d)),
-      ("text_tfidf_topk", d => functions.Corpus.tfidfTopK.build(spark, d)),
-      ("dedup_incremental", d => dedup.Dedup.incremental.build(spark, d)),
-      ("q40_funnel", d => operators.Extra.q40.build(spark, d)),
-      ("q41_salted_join", d => operators.Extra.q41.build(spark, d)),
-      ("ann_pq", d => similarity.Similarity.annPq.build(spark, d)),
-      ("graph_pagerank", d => operators.Graph.pagerankTop.build(spark, d)),
-      // the round-5 continuation operators
-      ("dedup_semantic", d => dedup.Dedup.semantic.build(spark, d)),
-      // SemDeDup's scale knob: k grows with the corpus so cell size
-      // stays constant — Σ|cell|² then grows linearly, not
-      // quadratically (the fixed-k probe above documents the wrong-
-      // configuration cost: 38× at 20×)
-      ("dedup_semantic_kscaled", { d =>
-        val k = if (d.contains("scaled_x")) 160 else 8
-        dedup.DedupApi.semanticPairs(Tables.embeddings(spark, d), "vec_id", "embedding",
-          threshold = 0.4, kCells = k, iters = 2, trainMod = 4)
-      }),
-      ("text_rarity_score", d => functions.Corpus.rarityScore.build(spark, d)),
-      ("ann_sq8", d => similarity.Similarity.annSq8.build(spark, d)),
-      // q42's gated instantiation reads customer (a 1× dim here) — the
-      // probe applies the same scd2Apply shape to the 20× orders table
-      // so the base side actually scales
-      ("q42_scd2_merge", { d =>
-        val o = Tables.orders(spark, d)
-        val base = o.select(col("o_orderkey"), col("o_totalprice").as("c_acctbal"))
-        val changes = o.filter(pmod(col("o_orderkey"), lit(10)) === 0)
-          .select(col("o_orderkey"), (col("o_totalprice") + lit(100.0)).as("new_bal"))
-        operators.Extra.scd2Apply(base, changes, "o_orderkey", "c_acctbal", "new_bal")
-      }),
-      ("graph_triangles", d => operators.Graph.triangles.build(spark, d)),
-      // the round-5 fourth-session operators
-      ("text_diversity", d => functions.TextAnalysis.diversity.build(spark, d)),
-      ("corpus_pack_sequences", d => functions.Pipeline.packSequences.build(spark, d)),
-      ("corpus_budget_select", d => functions.Pipeline.budgetSelect.build(spark, d)),
-      ("vec_covariance", d => similarity.Similarity.vecCovariance.build(spark, d)),
-      ("q45_retention", d => operators.Extra.q45.build(spark, d)),
-      // the round-6 operators
-      ("dedup_keep_best", d => dedup.Dedup.keepBest.build(spark, d)),
-      ("ann_mmr", d => similarity.Similarity.annMmr.build(spark, d)),
-      ("corpus_split_leakage", d => functions.Pipeline.splitLeakage.build(spark, d)),
-      ("corpus_quality_gate", d => functions.Pipeline.qualityGate.build(spark, d)),
-      ("text_readability", d => functions.TextAnalysis.readability.build(spark, d)),
-      ("vec_pca_project", d => similarity.Similarity.vecPcaProject.build(spark, d)),
-      ("graph_node_similarity", d => operators.Graph.nodeSimilarity.build(spark, d)),
-      ("corpus_bpe_merges", d => functions.Corpus.bpeMerges.build(spark, d)),
-      ("corpus_epoch_mix", d => functions.Pipeline.epochMix.build(spark, d)),
-      ("q46_peak_concurrency", d => operators.Extra.q46.build(spark, d)),
-      ("q47_anomaly_zscore", d => operators.Extra.q47.build(spark, d)),
-      ("q48_asof_tolerance", d => operators.Extra.q48.build(spark, d)),
-      ("q49_time_weighted_avg", d => operators.Extra.q49.build(spark, d)),
-      ("dedup_containment", d => dedup.Dedup.containment.build(spark, d)),
-      // the round-6 continuation operators
-      ("graph_connected_components", d => operators.Graph.connectedComponents.build(spark, d)),
-      ("corpus_dsir", d => functions.Pipeline.dsirSelect.build(spark, d)),
-      ("q50_session_overlap", d => operators.Extra.q50.build(spark, d)),
-      ("ann_range_search", d => similarity.Similarity.annRange.build(spark, d)),
-      ("q51_streaks", d => operators.Extra.q51.build(spark, d)),
-      ("corpus_bpe_encode", d => functions.Corpus.bpeEncode.build(spark, d)),
-      ("q52_winsorize", d => operators.Extra.q52.build(spark, d)),
-      // the round-6 third-session operators
-      ("corpus_ngram_lm", d => functions.LangModel.ngramLm.build(spark, d)),
-      ("pipeline_perplexity_filter", d => functions.LangModel.perplexityFilter.build(spark, d)),
-      ("corpus_pmi_bigrams", d => functions.LangModel.pmiBigrams.build(spark, d)),
-      ("corpus_sample_weighted", d => functions.LangModel.sampleWeighted.build(spark, d)),
-      ("corpus_naive_bayes", d => functions.LangModel.naiveBayes.build(spark, d)),
-      ("graph_kcore", d => operators.Graph.kcoreQuery.build(spark, d)),
-      ("q53_ewma", d => operators.Extra.q53.build(spark, d)),
-      ("q54_anomaly_mad", d => operators.Extra.q54.build(spark, d)),
-      // the round-6 fourth-session operators (the scale-sensitive ones:
-      // pair scans, iterative GD/BFS/LPA, selection-machinery users,
-      // two-level ranks — map-only ops like vec_rp_project scale
-      // trivially and stay out to keep the probe wall-time bounded)
-      ("q55_fuzzy_link", d => operators.Analytics.q55.build(spark, d)),
-      ("q57_skyline", d => operators.Analytics.q57.build(spark, d)),
-      ("ml_linear_probe", d => operators.Analytics.linearProbe.build(spark, d)),
-      ("ml_logreg_gd", d => operators.Analytics.mlLogregGd.build(spark, d)),
-      ("ml_kfold_cv", d => operators.Analytics.mlKfoldCv.build(spark, d)),
-      ("graph_bfs", d => operators.Graph.bfsQuery.build(spark, d)),
-      ("graph_label_prop", d => operators.Graph.labelPropQuery.build(spark, d)),
-      ("ann_knn_graph", d => similarity.Similarity.annKnnGraph.build(spark, d)),
-      ("corpus_topic_clusters", d => functions.Corpus.topicClusters.build(spark, d)),
-      ("q64_rfm", d => operators.Analytics.q64.build(spark, d)),
-      ("q67_gini", d => operators.Analytics.q67.build(spark, d)),
-      ("text_entropy", d => functions.TextAnalysis.entropy.build(spark, d)),
-      // the round-8 tier (probed r9): customer-keyed shuffles,
-      // edge-scale iteration, user-grain spans, capped pair scans
-      ("q83_cohort_ltv", d => operators.Insights2.q83.build(spark, d)),
-      ("q84_survival_retention", d => operators.Insights2.q84.build(spark, d)),
-      ("graph_hits", d => operators.Graph.hitsQuery.build(spark, d)),
-      ("dedup_threshold_sweep", d => dedup.Dedup.thresholdSweep.build(spark, d)),
-      ("q87_seasonal_naive_backtest", d => operators.Insights2.q87.build(spark, d)),
-      ("graph_closeness", d => operators.Graph.closenessQuery.build(spark, d)),
-      // the round-9 tier: key-grain skew report + selection machinery,
-      // postings-bound hybrid retrieval, bitmask-BFS radius readout,
-      // mergeable sketches, the composed LSH-audit pair
-      ("q88_join_skew_report", d => operators.Insights2.q88.build(spark, d)),
-      ("ann_hybrid_rrf", d => similarity.Similarity.hybridRrf.build(spark, d)),
-      ("graph_anf", d => operators.Graph.anfQuery.build(spark, d)),
-      ("approx_tdigest_quantiles", d => operators.Sketches.approxTdigestQuantiles.build(spark, d)),
-      ("approx_set_overlap", d => operators.Sketches.approxSetOverlap.build(spark, d)),
-      ("pipeline_retrieval_eval", d => similarity.Similarity.retrievalEval.build(spark, d)),
-      // the round-9 session tier: multi-table scan checks + FK joins,
-      // order-statistic selection at corpus scale, day-grain pair
-      // scans, composed one-scan panel, moment-only ablation
-      ("q89_dq_audit", d => operators.Insights2.q89.build(spark, d)),
-      ("ml_conformal_interval", d => operators.Analytics.mlConformal.build(spark, d)),
-      ("q90_markov_stationary", d => operators.Insights2.q90.build(spark, d)),
-      ("q91_theil_sen", d => operators.Insights2.q91.build(spark, d)),
-      ("pipeline_trend_panel", d => operators.Insights2.pipelineTrendPanel.build(spark, d)),
-      ("ml_feature_importance", d => operators.Analytics.mlFeatureImportance.build(spark, d)),
-      // the round-9 late tier: shingle/sentence-grain shuffles,
-      // selection-backed histogram, key-grain size estimate, per-fold
-      // moment curve, filtered slice scan, source attribution
-      ("text_novelty_curve", d => functions.TextAnalysis.noveltyCurve.build(spark, d)),
-      ("text_boilerplate_fraction", d => functions.TextAnalysis.boilerplateFraction.build(spark, d)),
-      ("q92_equidepth_histogram", d => operators.Insights2.q92.build(spark, d)),
-      ("q93_join_size_estimate", d => operators.Insights2.q93.build(spark, d)),
-      ("ml_learning_curve", d => operators.Analytics.mlLearningCurve.build(spark, d)),
-      ("dedup_source_stats", d => dedup.Dedup.sourceStats.build(spark, d)),
-      ("ml_ks_two_sample", d => operators.Analytics.mlKsTwoSample.build(spark, d)),
-      // the round-10 tier: derived-key exact dedup, sentence-grain
-      // excision rewrite, paragraph-grain banded near-dup
-      ("corpus_url_dedup", d => functions.UrlCanon.urlDedup.build(spark, d)),
-      ("text_dedup_spans", d => functions.TextAnalysis.dedupSpansQuery.build(spark, d)),
-      ("dedup_paragraph_minhash", d => dedup.Dedup.paragraphMinhash.build(spark, d)),
-      ("pipeline_crawl_ingest", d => functions.UrlCanon.crawlIngest.build(spark, d)),
-      ("corpus_decontaminate_semantic", d => functions.Pipeline.semanticDecontaminateQ.build(spark, d)),
-      ("text_repetition", d => functions.TextAnalysis.repetition.build(spark, d)),
-      // the round-11 tier: salted harmonic-class FFD packing, BM25
-      // inverted-index retrieval + cross-modality nDCG
-      ("corpus_pack_ffd", d => functions.Pipeline.packFfd.build(spark, d)),
-      ("text_bm25_topk", d => similarity.Similarity.bm25TopKQ.build(spark, d)),
-      ("corpus_mixture_sample", d => functions.Pipeline.mixtureSampleQ.build(spark, d)),
-      ("q96_percentile_bands", d => operators.Insights2.q96.build(spark, d)),
-      ("pipeline_mixture_pack", d => functions.Pipeline.mixturePackQ.build(spark, d)),
-      ("ml_average_precision", d => operators.Analytics.mlAveragePrecision.build(spark, d)),
-      ("ml_brier_decomposition", d => operators.Analytics.mlBrierDecomposition.build(spark, d)),
-      ("ml_auc_delong", d => operators.Analytics.mlAucDelong.build(spark, d)),
-      ("corpus_domain_stats", d => functions.UrlCanon.domainStatsQ.build(spark, d)),
-      ("graph_link_prediction", d => operators.Graph.linkPrediction.build(spark, d)),
-      ("ml_shap_linear", d => operators.Analytics.mlShapLinear.build(spark, d)),
-      ("q97_active_users", d => operators.Insights2.q97.build(spark, d)),
-      ("pipeline_ml_scorecard", d => operators.Analytics.pipelineMlScorecard.build(spark, d)),
-      ("text_collocations", d => functions.TextAnalysis.collocations.build(spark, d)),
-      ("q98_rolling_robust", d => operators.Insights2.q98.build(spark, d)),
-      ("ml_mcnemar_test", d => operators.Analytics.mlMcnemarTest.build(spark, d)),
-      ("ml_cohens_kappa", d => operators.Analytics.mlCohensKappa.build(spark, d)),
-      ("ml_hosmer_lemeshow", d => operators.Analytics.mlHosmerLemeshow.build(spark, d)),
-      ("q99_mann_kendall", d => operators.Insights2.q99.build(spark, d)),
-      ("q100_runs_test", d => operators.Insights2.q100.build(spark, d)),
-      ("ml_isotonic_calibration", d => operators.Analytics.mlIsotonicCalibration.build(spark, d)),
-      ("text_hash_features", d => functions.TextAnalysis.hashFeatures.build(spark, d)),
-      ("ann_multiprobe_lsh", d => similarity.Similarity.multiprobeLsh.build(spark, d)),
-      ("ml_cochran_q", d => operators.Analytics.mlCochranQ.build(spark, d)),
-      ("ml_spearman_corr", d => operators.Analytics.mlSpearmanCorr.build(spark, d)),
-      ("q101_autocorrelation", d => operators.Insights2.q101.build(spark, d)),
-      ("q102_ljung_box", d => operators.Insights2.q102.build(spark, d)),
-      ("corpus_span_corruption", d => functions.Pipeline.spanCorruptionQ.build(spark, d)),
-      ("graph_clustering_coeff", d => operators.Graph.clusteringCoeff.build(spark, d)),
-      ("corpus_oov_rate", d => functions.Corpus.oovRate.build(spark, d)),
-      ("text_langid_eval", d => functions.TextAnalysis.langidEval.build(spark, d)),
-      ("q103_dow_anova", d => operators.Insights2.q103.build(spark, d)),
-      ("ml_c2st_drift", d => operators.Analytics.mlC2stDrift.build(spark, d)),
-      ("ml_wilcoxon_signed_rank", d => operators.Analytics.mlWilcoxonSignedRank.build(spark, d)),
-      ("ml_threshold_cost_opt", d => operators.Analytics.mlThresholdCostOpt.build(spark, d)),
-      ("pipeline_model_compare", d => operators.Analytics.pipelineModelCompare.build(spark, d)),
-      ("vec_matryoshka_eval", d => similarity.Similarity.matryoshkaEval.build(spark, d)),
-      // the round-12 tier: the full crawl→mixture→pack→card chain
-      ("pipeline_train_data_card", d => functions.Pipeline.trainDataCardQ.build(spark, d)))
     probes.filter(p => only.forall(_.contains(p._1))).foreach { case (tag, b) =>
       val t1 = time(s"$tag @1x", b(base))
       val tn = time(s"$tag @${factor}x", b(scaled))

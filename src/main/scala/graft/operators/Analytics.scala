@@ -477,7 +477,11 @@ object Analytics {
     * double-normalized grain (±0.0 merged) — indistinguishable to the
     * readouts' z >/≥ comparisons, and the logit z domain cannot
     * produce −0.0 (an IEEE sum of finite nonzero addends that cancels
-    * yields +0.0). */
+    * yields +0.0).
+    *
+    * Precondition: y ∈ {0, 1}. p counts y > 0.5 and q counts y < 0.5,
+    * so a graded label lands in whichever side of 0.5 it falls, and a
+    * y of exactly 0.5 or NULL is in neither count. */
   def vgOfScores(zz: DataFrame): DataFrame =
     zz.groupBy(col("z")).agg(
       sum(when(col("y") > 0.5, 1L).otherwise(0L)).cast(LongType).as("p"),
@@ -1962,18 +1966,22 @@ object Analytics {
         .selectExpr("wa AS wa2", "wb AS wb2", "wc AS wc2")
       val wC = round6(chain(GdRounds - 2))
         .selectExpr("wa AS wa1", "wb AS wb1", "wc AS wc1")
-      val zz = scope.persist(
-        b.crossJoin(broadcast(wA)).crossJoin(broadcast(wB)).crossJoin(broadcast(wC))
-          .selectExpr("(wa3 + wb3 * x1 + wc3 * x2) AS za",
-            "(wa2 + wb2 * x1 + wc2 * x2) AS zb",
-            "(wa1 + wb1 * x1 + wc1 * x2) AS zc", "y"))
+      val zz = b.crossJoin(broadcast(wA)).crossJoin(broadcast(wB)).crossJoin(broadcast(wC))
+        .selectExpr("(wa3 + wb3 * x1 + wc3 * x2) AS za",
+          "(wa2 + wb2 * x1 + wc2 * x2) AS zb",
+          "(wa1 + wb1 * x1 + wc1 * x2) AS zc", "y")
       modelCompareOfScores(zz).localCheckpoint(true)
     })
 
-  /** The composed readout over a persisted (za, zb, zc, y) frame —
-    * every metric the SAME expression tree as its single gate. */
-  def modelCompareOfScores(zz: DataFrame)(
+  /** The composed readout over a (za, zb, zc, y) frame — every metric
+    * the SAME expression tree as its single gate. */
+  def modelCompareOfScores(scored: DataFrame)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
+    // EAGER one-shot materialization before the Par.run3 fan-out below
+    // (as in [[spearmanOfScores]]): three concurrent chains over a lazy,
+    // or persisted but not yet filled, frame race to compute it — up
+    // to 3× the scoring projection. Values are bit-identical.
+    val zz = scored.select(col("za"), col("zb"), col("zc"), col("y")).localCheckpoint(true)
     def row(name: String, df: DataFrame, valueExpr: String) =
       df.selectExpr(s"'$name' AS metric", s"CAST($valueExpr AS DOUBLE) AS value")
     // ONE fused contingency pass (r15, guide §1.2): McNemar, kappa and
