@@ -45,7 +45,7 @@ object DedupApi {
     * argument). Rows with < k tokens drop out (empty fingerprint
     * set). */
   def shingleHashes60(df: DataFrame, id: String, text: String, k: Int = 3): DataFrame = {
-    graft.functions.WordShingles.ensure(df.sparkSession)
+    graft.functions.Natives.ensure(df.sparkSession)
     df.select(col(id),
         graft.functions.WordShingles.hashes(normText(col(text)), k).as("sh"))
       .filter(size(col("sh")) > 0)
@@ -71,7 +71,7 @@ object DedupApi {
       if (hashed) sh.select(col(id), expr(s"transform(sh, h -> h % ${Portable.P}L)").as("hs"))
       else sh.select(col(id), shingleHashes(col("sh")).as("hs"))
     if (numHashes == NumHashes) {
-      graft.functions.MinhashSigs.ensure(sh.sparkSession)
+      graft.functions.Natives.ensure(sh.sparkSession)
       hs.select(col(id), graft.functions.MinhashSigs.sigs(col("hs")).as("ms"))
         .select(col(id) +: (0 until numHashes).map(j =>
           element_at(col("ms"), j + 1).as(s"m$j")): _*)
@@ -145,7 +145,7 @@ object DedupApi {
         col(s"a.$id") < col(s"b.$id"))
       .select(col(s"a.$id").as("doc_a"), col(s"b.$id").as("doc_b"))
       .distinct()
-    graft.functions.SortedInter.ensure(df.sparkSession)
+    graft.functions.Natives.ensure(df.sparkSession)
     cand
       .join(sh.hint("shuffle_hash").as("s1"), col("doc_a") === col(s"s1.$id"))
       .join(sh.hint("shuffle_hash").as("s2"), col("doc_b") === col(s"s2.$id"))
@@ -274,7 +274,7 @@ object DedupApi {
     // native single-pass gram build (graft.functions.NgramsExpr):
     // the composed array_distinct/transform/sequence/substring form
     // was the scan's heaviest map-side stage (~2 s of the sf0.1 run)
-    graft.functions.Ngrams.ensure(df.sparkSession)
+    graft.functions.Natives.ensure(df.sparkSession)
     // r15 NOTE (verdict item #2, measured and NOT adopted): both
     // prescribed reshapes were A/B-benched same-session at sf0.1 AND
     // at the 10× ScaleGen dir and both lost —
@@ -317,7 +317,7 @@ object DedupApi {
     // shuffle-hash verify joins: the gram-array side is hash-built per
     // partition instead of sort-merged — sorting wide array rows was
     // 6x the cost of the whole verify at sf0.1
-    graft.functions.SortedInter.ensure(df.sparkSession)
+    graft.functions.Natives.ensure(df.sparkSession)
     cand
       .join(g.select(col(id), col("gr")).hint("shuffle_hash").as("s1"), col("doc_a") === col(s"s1.$id"))
       .join(g.select(col(id), col("gr")).hint("shuffle_hash").as("s2"), col("doc_b") === col(s"s2.$id"))
@@ -363,7 +363,7 @@ object DedupApi {
         col("a.h") === col("b.h") && col(s"a.$id") < col(s"b.$id"))
       .select(col(s"a.$id").as("doc_a"), col(s"b.$id").as("doc_b"))
       .distinct()
-    graft.functions.SortedInter.ensure(df.sparkSession)
+    graft.functions.Natives.ensure(df.sparkSession)
     cand
       .join(sh.hint("shuffle_hash").as("s1"), col("doc_a") === col(s"s1.$id"))
       .join(sh.hint("shuffle_hash").as("s2"), col("doc_b") === col(s"s2.$id"))
@@ -407,7 +407,7 @@ object DedupApi {
     // gram-hash array must be let-bound as a lambda variable or
     // CollapseProject inlines it per window (O(len²) md5, ~100×). The
     // equivalence property spec pins the native output to that form.
-    graft.functions.Winnow.ensure(df.sparkSession)
+    graft.functions.Natives.ensure(df.sparkSession)
     val keep = col(id) +: passthrough.map(col)
     df.select(keep :+ normText(col(text)).as("s"): _*)
       .filter(length(col("s")) >= k + w - 1) // shorter docs have no full winnow window
@@ -561,7 +561,7 @@ object DedupApi {
     // native one-pass majority fold (graft.functions.SimhashExpr): the
     // composed aggregate/filter form re-scanned the hash array once
     // per bit (60 passes/doc) and dominated the signature stage
-    graft.functions.Simhash.ensure(df.sparkSession)
+    graft.functions.Natives.ensure(df.sparkSession)
     df.withColumn("__toks", split(normText(col(text)), " "))
       .withColumn("__hs", expr(s"transform(array_distinct(__toks), t -> $h60SparkSql)"))
       .withColumn(out, graft.functions.Simhash.simhash(col("__hs"), SimhashBits))
@@ -725,7 +725,7 @@ object DedupApi {
   }
 
   private[graft] def normVecs(df: DataFrame, id: String, vec: String): DataFrame = {
-    graft.functions.Dot.ensure(df.sparkSession)
+    graft.functions.Natives.ensure(df.sparkSession)
     df.select(col(id), expr(s"transform($vec, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
   }

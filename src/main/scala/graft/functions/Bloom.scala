@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
@@ -185,26 +184,4 @@ case class BloomContainsExpr(left: Expression, right: Expression) extends Binary
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BloomContainsExpr =
     copy(left = newLeft, right = newRight)
-}
-
-object Bloom {
-  /** Register both functions; idempotent via [[Registration]]. */
-  def ensure(spark: SparkSession): Unit = {
-    Registration.ensure(spark, "graft_bloom_agg") { exprs =>
-      val m = exprs(1) match {
-        case Literal(v: Int, IntegerType) if v >= 64 && v % 64 == 0 => v.toLong
-        case Literal(v: Long, LongType) if v >= 64 && v % 64 == 0 => v
-        case other => sys.error(
-          s"graft_bloom_agg: mBits must be an int literal >= 64 and a multiple of 64, got $other")
-      }
-      val k = exprs(2) match {
-        case Literal(v: Int, IntegerType) if v >= 1 && v <= 32 => v
-        case other => sys.error(s"graft_bloom_agg: k must be an int literal in [1,32], got $other")
-      }
-      BloomAgg(exprs.head, m, k).toAggregateExpression()
-    }
-    Registration.ensure(spark, "graft_bloom_contains") { exprs =>
-      BloomContainsExpr(exprs(0), exprs(1))
-    }
-  }
 }

@@ -54,7 +54,7 @@ object Corpus {
         round(CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS mean_x
       FROM p GROUP BY label, i ORDER BY label, pos"""),
     (s, d) => {
-      graft.functions.VecSumDec.ensure(s)
+      Natives.ensure(s)
       Tables.embeddings(s, d)
         .select(col("label"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
         .groupBy(col("label"))
@@ -418,7 +418,7 @@ object Corpus {
       WINDOW w AS (ORDER BY pb.bucket ROWS UNBOUNDED PRECEDING)
       ORDER BY pb.bucket"""),
     (s, d) => {
-      TokenStats.ensure(s)
+      Natives.ensure(s)
       val docs = Tables.documents(s, d)
       val mx = docs.agg(max(col("doc_id")).as("m"))
       val b = docs.crossJoin(broadcast(mx))
@@ -564,8 +564,7 @@ object Corpus {
     * frame. */
   def topicClustersOf(docs: org.apache.spark.sql.DataFrame)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): org.apache.spark.sql.DataFrame = {
-    graft.functions.Dot.ensure(docs.sparkSession)
-    graft.functions.VecSumDec.ensure(docs.sparkSession)
+    Natives.ensure(docs.sparkSession)
     val cnt = scope.persist(docs
       .select(col("doc_id"), explode(split(normText(col("text")), " ")).as("tok"))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c")))

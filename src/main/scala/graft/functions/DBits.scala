@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -50,13 +50,6 @@ object DBitsExpr {
 }
 
 object DBits {
-  /** Register `graft_dbits(x)`; idempotent via [[Registration]]. */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_dbits") { exprs =>
-      DBitsExpr(exprs.head)
-    }
-
-  /** Column API; requires `ensure(spark)` (or GraftExtensions). */
   def ordered(c: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_dbits", c)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -70,12 +69,4 @@ object DotExpr {
     }
     s
   }
-}
-
-object Dot {
-  /** Register `graft_dot(a, b)`; idempotent via [[Registration]]. */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_dot") { exprs =>
-      DotExpr(exprs(0), exprs(1))
-    }
 }

@@ -3,9 +3,8 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -93,15 +92,4 @@ object KMinValues {
   def estimateSql(sk: String, k: Int): String =
     s"""CASE WHEN size($sk) < $k THEN CAST(size($sk) AS DOUBLE)
         ELSE (CAST($k AS DOUBLE) - 1) / (CAST(element_at($sk, $k) AS DOUBLE) / ${HashSpace}D) END"""
-
-  /** Register `graft_kmv(col, k)` (k a positive literal int);
-    * idempotent via [[Registration]]. */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_kmv") { exprs =>
-      val k = exprs(1) match {
-        case Literal(v: Int, IntegerType) if v >= 16 => v
-        case other => sys.error(s"graft_kmv: k must be an int literal >= 16, got $other")
-      }
-      KMinValues(exprs.head, k).toAggregateExpression()
-    }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -64,12 +64,6 @@ object MinhashSigsExpr {
 }
 
 object MinhashSigs {
-  /** Register `graft_minhash_sigs(hashes)`; idempotent via
-    * [[Registration]]. */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_minhash_sigs")(exprs => MinhashSigsExpr(exprs.head))
-
-  /** Column API; requires `ensure(spark)` (or GraftExtensions). */
   def sigs(hashes: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_minhash_sigs", hashes)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -73,18 +73,6 @@ object NgramsExpr {
 }
 
 object Ngrams {
-  /** Register `graft_ngrams(str, n)` (n a positive literal int);
-    * idempotent via [[Registration]]. */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_ngrams") { exprs =>
-      val n = exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) if v >= 1 => v
-        case other => sys.error(s"graft_ngrams: n must be a positive int literal, got $other")
-      }
-      NgramsExpr(exprs.head, n)
-    }
-
-  /** Column API; requires `ensure(spark)` (or GraftExtensions). */
   def ngrams(c: Column, n: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "graft_ngrams", c, org.apache.spark.sql.functions.lit(n))

@@ -3,7 +3,6 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.math.{BigDecimal => JBigDecimal, BigInteger}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -207,10 +206,4 @@ object OuterSumDec {
     def add(k: Int, v: JBigDecimal): Unit =
       if (v != null) sums(k) = if (sums(k) == null) v else sums(k).add(v)
   }
-
-  /** Register `graft_outer_sum_dec(v)`; idempotent via [[Registration]]. */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_outer_sum_dec") { exprs =>
-      OuterSumDec(exprs.head).toAggregateExpression()
-    }
 }

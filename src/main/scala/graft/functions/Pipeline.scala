@@ -513,7 +513,7 @@ object Pipeline {
     * native `graft_word_shingles`; rows with < k tokens drop out. */
   private def corpusShingleRows(s: org.apache.spark.sql.SparkSession, d: String,
       out: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.WordShingles.ensure(s)
+    Natives.ensure(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         graft.functions.WordShingles.hashes(normText(col("text")), DecontaminationShingle).as("shs"))
@@ -612,7 +612,7 @@ object Pipeline {
       bench: org.apache.spark.sql.DataFrame)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): org.apache.spark.sql.DataFrame = {
     val spark = corpusSh.sparkSession
-    graft.functions.Bloom.ensure(spark)
+    Natives.ensure(spark)
     val benchP = bench.transform(scope.persist)
     // metadata-scale sizing pre-pass: one count over the bench side
     val nBench = math.max(64L, benchP.count())
@@ -800,7 +800,7 @@ object Pipeline {
         !isBench)
     // r5: shingles hash through the native graft_word_shingles (the
     // corpus_decontaminate change, same shared-md5 exactness argument)
-    graft.functions.WordShingles.ensure(docs.sparkSession)
+    Natives.ensure(docs.sparkSession)
     val benchSh = docs
       .filter(isBench)
       .select(explode(graft.functions.WordShingles.hashes(normText(col("text")), k)).as("h"))

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -44,21 +43,8 @@ object RollingHashExpr {
 }
 
 object RollingHash {
-  /** Register `graft_rolling_hash(str, mod)` in the session's function
-    * registry (idempotent via [[Registration]]). */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_rolling_hash") { exprs =>
-      val mod = exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, LongType) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toLong
-        case other => sys.error(s"graft_rolling_hash: mod must be a literal, got $other")
-      }
-      RollingHashExpr(exprs.head, mod)
-    }
-
-  /** Column API; requires `ensure(spark)` to have been called. Routed
-    * through the registered function name — keeps us off the
-    * non-public Column(Expression) constructors in Spark 4. */
+  /** Column API, routed through the registered function name — keeps
+    * us off the non-public Column(Expression) constructors in Spark 4. */
   def rollingHash(c: Column, mod: Long): Column =
     org.apache.spark.sql.functions.call_function(
       "graft_rolling_hash", c, org.apache.spark.sql.functions.lit(mod))

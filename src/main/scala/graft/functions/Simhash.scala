@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -64,18 +64,6 @@ object SimhashExpr {
 }
 
 object Simhash {
-  /** Register `graft_simhash(hashes, bits)` (bits a literal int in
-    * [1,63]); idempotent via [[Registration]]. */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_simhash") { exprs =>
-      val bits = exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) if v >= 1 && v <= 63 => v
-        case other => sys.error(s"graft_simhash: bits must be a literal int in [1,63], got $other")
-      }
-      SimhashExpr(exprs.head, bits)
-    }
-
-  /** Column API; requires `ensure(spark)` (or GraftExtensions). */
   def simhash(hashes: Column, bits: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "graft_simhash", hashes, org.apache.spark.sql.functions.lit(bits))

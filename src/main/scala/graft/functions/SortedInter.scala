@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -103,14 +103,6 @@ object SortedInterSizeExpr {
 }
 
 object SortedInter {
-  /** Register `graft_sorted_inter_size(a, b)`; idempotent via
-    * [[Registration]]. */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_sorted_inter_size") { exprs =>
-      SortedInterSizeExpr(exprs(0), exprs(1))
-    }
-
-  /** Column API; requires `ensure(spark)` (or GraftExtensions). */
   def interSize(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_sorted_inter_size", a, b)
 }

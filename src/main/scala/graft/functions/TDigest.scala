@@ -3,9 +3,8 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -183,22 +182,4 @@ case class TDigestQuantile(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): TDigestQuantile =
     copy(left = newLeft, right = newRight)
   override def prettyName: String = "graft_tdigest_quantile"
-}
-
-object TDigest {
-  /** Register `graft_tdigest(col, delta)` (delta a positive literal
-    * int) and `graft_tdigest_quantile(centroids, q)`; idempotent via
-    * [[Registration]]. */
-  def ensure(spark: SparkSession): Unit = {
-    Registration.ensure(spark, "graft_tdigest") { exprs =>
-      val d = exprs(1) match {
-        case Literal(v: Int, IntegerType) if v >= 10 => v
-        case other => sys.error(s"graft_tdigest: delta must be an int literal >= 10, got $other")
-      }
-      TDigestAgg(exprs.head, d).toAggregateExpression()
-    }
-    Registration.ensure(spark, "graft_tdigest_quantile") { exprs =>
-      TDigestQuantile(exprs.head, exprs(1))
-    }
-  }
 }

@@ -173,7 +173,7 @@ object TextAnalysis {
           (acc, x) -> (acc * 31 + x) % $RollMod) AS fp_roll
       FROM n ORDER BY doc_id"""),
     (s, d) => {
-      RollingHash.ensure(s)
+      Natives.ensure(s)
       Tables.documents(s, d)
         .select(col("doc_id"), normText(col("text")).as("s"))
         .select(col("doc_id"), md5(col("s")).as("fp_md5"),
@@ -236,7 +236,7 @@ object TextAnalysis {
       // h60) expressions measured 26.5 s vs the string form's 19.3 s
       // at sf0.1 — interpreted md5/conv per window costs more than the
       // exchange saves; only the native kernel wins both sides.
-      graft.functions.WordShingles.ensure(s)
+      Natives.ensure(s)
       val base = Tables.documents(s, d)
         .select(col("doc_id"), normText(col("text")).as("txt"))
         .select(col("doc_id"), graft.functions.WordShingles.hashes(col("txt"), k).as("shs"))
@@ -370,7 +370,7 @@ object TextAnalysis {
         min(CASE WHEN c = mc THEN tok END) AS top_token
       FROM m GROUP BY doc_id ORDER BY doc_id"""),
     (s, d) => {
-      graft.functions.TokenStats.ensure(s)
+      Natives.ensure(s)
       Tables.documents(s, d)
         .select(col("doc_id"), graft.functions.TokenStats.of(normText(col("text"))).as("st"))
         .select(col("doc_id"),
@@ -698,7 +698,7 @@ object TextAnalysis {
   def noveltyCurveOf(docs: DataFrame): DataFrame =
     graft.CacheScope.withScope { implicit scope =>
       val k = DupShingleK
-      graft.functions.WordShingles.ensure(docs.sparkSession)
+      Natives.ensure(docs.sparkSession)
       val bs = scope.persist(docs
         .select(expr(s"doc_id div $NoveltyBatch").as("batch"),
           explode(graft.functions.WordShingles.hashes(normText(col("text")), k)).as("h"))

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -95,11 +95,6 @@ object TokenStatsExpr {
 }
 
 object TokenStats {
-  /** Register `graft_token_stats(str)`; idempotent via [[Registration]]. */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_token_stats")(exprs => TokenStatsExpr(exprs.head))
-
-  /** Column API; requires `ensure(spark)` (or GraftExtensions). */
   def of(c: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_token_stats", c)
 }

@@ -3,9 +3,8 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -102,17 +101,4 @@ case class TopKSketch(
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): TopKSketch =
     copy(child = newChildren.head)
   override def prettyName: String = "graft_topk_sketch"
-}
-
-object TopKSketch {
-  /** Register `graft_topk_sketch(col, k)` (k a positive literal int);
-    * idempotent via [[Registration]]. */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_topk_sketch") { exprs =>
-      val k = exprs(1) match {
-        case Literal(v: Int, IntegerType) if v >= 1 => v
-        case other => sys.error(s"graft_topk_sketch: k must be a positive int literal, got $other")
-      }
-      TopKSketch(exprs.head, k).toAggregateExpression()
-    }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -148,10 +147,4 @@ object VecMinMax {
       }
     }
   }
-
-  /** Register `graft_vecminmax(v)`; idempotent via [[Registration]]. */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_vecminmax") { exprs =>
-      VecMinMax(exprs.head).toAggregateExpression()
-    }
 }

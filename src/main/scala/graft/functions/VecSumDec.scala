@@ -3,7 +3,6 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.math.{BigDecimal => JBigDecimal, BigInteger, RoundingMode}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -182,10 +181,4 @@ object VecSumDec {
     val d = new JBigDecimal(java.lang.Double.toString(x)).setScale(12, RoundingMode.HALF_UP)
     if (d.precision - d.scale > 28 - 12) null else d
   }
-
-  /** Register `graft_vecsum_dec(v)`; idempotent via [[Registration]]. */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_vecsum_dec") { exprs =>
-      VecSumDec(exprs.head).toAggregateExpression()
-    }
 }

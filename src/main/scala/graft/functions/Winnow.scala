@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -110,18 +110,6 @@ object WinnowExpr {
 }
 
 object Winnow {
-  /** Register `graft_winnow(str, k, w)` (k, w positive literal ints);
-    * idempotent via [[Registration]]. */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_winnow") { exprs =>
-      def intLit(e: Expression, name: String): Int = e match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) if v >= 1 => v
-        case other => sys.error(s"graft_winnow: $name must be a positive int literal, got $other")
-      }
-      WinnowExpr(exprs.head, intLit(exprs(1), "k"), intLit(exprs(2), "w"))
-    }
-
-  /** Column API; requires `ensure(spark)` (or GraftExtensions). */
   def fingerprints(c: Column, k: Int, w: Int): Column =
     org.apache.spark.sql.functions.call_function("graft_winnow", c,
       org.apache.spark.sql.functions.lit(k), org.apache.spark.sql.functions.lit(w))

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -116,18 +116,6 @@ object WordShinglesExpr {
 }
 
 object WordShingles {
-  /** Register `graft_word_shingles(s, k)` (k a positive literal int);
-    * idempotent via [[Registration]]. */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_word_shingles") { exprs =>
-      val k = exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) if v >= 1 => v
-        case other => sys.error(s"graft_word_shingles: k must be a positive int literal, got $other")
-      }
-      WordShinglesExpr(exprs.head, k)
-    }
-
-  /** Column API; requires `ensure(spark)` (or GraftExtensions). */
   def hashes(c: Column, k: Int): Column =
     org.apache.spark.sql.functions.call_function("graft_word_shingles", c,
       org.apache.spark.sql.functions.lit(k))

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -66,13 +66,6 @@ object ZOrderExpr {
 }
 
 object ZOrder {
-  /** Register `graft_zorder(x, y)`; idempotent via [[Registration]]. */
-  def ensure(spark: SparkSession): Unit =
-    Registration.ensure(spark, "graft_zorder") { exprs =>
-      ZOrderExpr(exprs(0), exprs(1))
-    }
-
-  /** Column API; requires `ensure(spark)` (or GraftExtensions). */
   def zkey(x: Column, y: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_zorder", x, y)
 

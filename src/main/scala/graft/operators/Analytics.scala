@@ -411,43 +411,6 @@ object Analytics {
       .orderBy(col("t"))
   }
 
-  /** Gains/lift deciles over a scored (z, y) frame — the
-    * [[mlLiftDeciles]] readout stage: exact-selection decile edges
-    * broadcast into a map-only binning, then 10-row algebra. */
-  def liftOfScores(zz0: DataFrame)(
-      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
-    val zz = scope.persist(zz0.withColumn("grp", lit(0)))
-    val th = graft.operators.ExactPercentiles.percentiles(zz, "grp", "z",
-        (1 to 9).map(_ / 10.0),
-        // the scored-margin domain is the bounded 6-dp-weight grid
-        // (~550 distinct z at any sf) — value-grain selection (r14)
-        valueGrain = true)
-      .groupBy(col("g"))
-      .agg((1 to 9).map(i =>
-        min(when(col("p") === i / 10.0, col("value"))).as(s"t$i")).head,
-        (1 to 9).map(i =>
-          min(when(col("p") === i / 10.0, col("value"))).as(s"t$i")).tail: _*)
-      .drop("g")
-    val binSum = (1 to 9).map(i => s"(CASE WHEN z > t$i THEN 1 ELSE 0 END)").mkString(" + ")
-    val dd = zz.crossJoin(broadcast(th))
-      .selectExpr(s"1 + $binSum AS decile", "y")
-      .groupBy(col("decile"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("y") > 0.5, 1L).otherwise(0L)).as("pos"))
-      .localCheckpoint(true) // 10 rows feed totals + cumulative
-    val tot = dd.agg(sum(col("n")).cast(DoubleType).as("tn"),
-      sum(col("pos")).cast(DoubleType).as("tp"))
-    val wdesc = Window.orderBy(col("decile").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    dd.withColumn("cpos", sum(col("pos")).over(wdesc).cast(DoubleType))
-      .crossJoin(broadcast(tot))
-      .selectExpr("decile", "n", "pos",
-        "round(CAST(pos AS DOUBLE) / n, 6) AS rate",
-        "round((CAST(pos AS DOUBLE) / n) / (tp / tn), 6) AS lift",
-        "round(cpos / tp, 6) AS cum_gain")
-      .orderBy(col("decile"))
-  }
-
   /** Reliability bins over a scored (z, y) frame — the
     * [[mlCalibration]] readout stage: exp-free z-space bin edges,
     * 12-dp DECIMAL mean prediction, exact-integer empirical rate. */
@@ -506,9 +469,10 @@ object Analytics {
       .orderBy(col("t"))
   }
 
-  /** [[liftOfScores]] over a (z, p, q) value-grain frame: decile edges
-    * ride [[ExactPercentiles.percentilesOfCounts]] on the SAME frame
-    * (no second corpus collapse), binning and the 10-row algebra are
+  /** Gains/lift deciles over a (z, p, q) value-grain frame — the
+    * [[mlLiftDeciles]] readout stage: decile edges ride
+    * [[ExactPercentiles.percentilesOfCounts]] on the SAME frame (no
+    * second corpus collapse), binning and the 10-row algebra are
     * weighted exact counts. */
   def liftOfVg(vg0: DataFrame)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {

@@ -71,7 +71,7 @@ object ExactPercentiles {
   def percentilesOfCounts(grained: DataFrame, group: String, value: String,
       cnt: String, rawPs: Seq[Double])(
       implicit scope: CacheScope = CacheScope.untracked): DataFrame = {
-    graft.functions.DBits.ensure(grained.sparkSession)
+    graft.functions.Natives.ensure(grained.sparkSession)
     val data = grained
       .select(col(group).as("g"), col(value).cast("double").as("x"),
         col(cnt).cast("long").as("cnt"))
@@ -177,7 +177,7 @@ object ExactPercentiles {
     * inputs are bit-identical either way. */
   private def prepare(df: DataFrame, group: String, value: String,
       valueGrain: Boolean)(implicit scope: CacheScope): DataFrame = {
-    graft.functions.DBits.ensure(df.sparkSession)
+    graft.functions.Natives.ensure(df.sparkSession)
     val rows = df.select(col(group).as("g"), col(value).cast("double").as("x"))
       .filter(col("x").isNotNull)
       .withColumn("s", graft.functions.DBits.ordered(col("x")))

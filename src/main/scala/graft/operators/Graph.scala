@@ -176,7 +176,7 @@ object Graph {
   def triangleStats(edges: DataFrame,
       broadcastAdjMaxEdges: Long = 8L * 1000 * 1000)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
-    graft.functions.SortedInter.ensure(edges.sparkSession)
+    graft.functions.Natives.ensure(edges.sparkSession)
     val e = edges.transform(scope.persist)
     val deg = e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("dg"))

@@ -104,7 +104,7 @@ object Sketches {
       FROM r WHERE rk <= 10 ORDER BY rk"""),
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.functions.TopKSketch.ensure(s) // session-robust (not only via GraftExtensions)
+      graft.functions.Natives.ensure(s)
       val toks = Tables.documents(s, d)
         .select(explode(split(graft.Portable.normText(col("text")), " ")).as("tok"))
       val exact = toks.groupBy(col("tok")).agg(count(lit(1)).as("exact_n"))
@@ -213,7 +213,7 @@ object Sketches {
         UNION ALL SELECT l_returnflag, CAST(0.99 AS DOUBLE), q99 FROM a)
       ORDER BY l_returnflag, q"""),
     (s, d) => {
-      graft.functions.TDigest.ensure(s)
+      graft.functions.Natives.ensure(s)
       val qs = Seq(0.5, 0.9, 0.99)
       val eps = 0.01
       // ONE percentile aggregate for all 9 targets (r15, guide §1.2):
@@ -269,7 +269,7 @@ object Sketches {
         TRUE AS a_within, TRUE AS b_within, TRUE AS union_within, TRUE AS inter_within
       FROM a, b, i, u"""),
     (s, d) => {
-      graft.functions.KMinValues.ensure(s)
+      graft.functions.Natives.ensure(s)
       val k = 1024
       val lp = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
         .join(Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority")),

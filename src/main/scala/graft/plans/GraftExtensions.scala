@@ -1,45 +1,18 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 
 /** Session extension point: `SparkSession.builder()
   * .withExtensions(new GraftExtensions)` (or config
   * `spark.sql.extensions=graft.plans.GraftExtensions`) registers the
   * engine's native expressions for SQL use on any session — the
   * deployment path for a shared cluster where users only write SQL.
+  * Spark fills the root session's registry once; clones and child
+  * sessions copy it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // Function registration happens on first session access because
-    // injectFunction needs FunctionIdentifier plumbing that differs
-    // across minor versions; the ensure() helpers are version-stable.
-    ext.injectCheckRule { session =>
-      GraftExtensions.ensureAll(session)
-      _ => ()
-    }
+    graft.functions.Natives.descriptions.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
-  }
-}
-
-object GraftExtensions {
-  /** Idempotently register every graft native function on a session. */
-  def ensureAll(spark: SparkSession): Unit = {
-    graft.functions.RollingHash.ensure(spark)
-    graft.functions.TopKSketch.ensure(spark)
-    graft.functions.Ngrams.ensure(spark)
-    graft.functions.Simhash.ensure(spark)
-    graft.functions.MinhashSigs.ensure(spark)
-    graft.functions.VecSumDec.ensure(spark)
-    graft.functions.SortedInter.ensure(spark)
-    graft.functions.Winnow.ensure(spark)
-    graft.functions.Dot.ensure(spark)
-    graft.functions.DBits.ensure(spark)
-    graft.functions.Bloom.ensure(spark)
-    graft.functions.WordShingles.ensure(spark)
-    graft.functions.ZOrder.ensure(spark)
-    graft.functions.TokenStats.ensure(spark)
-    graft.functions.OuterSumDec.ensure(spark)
-    graft.functions.TDigest.ensure(spark)
-    graft.functions.KMinValues.ensure(spark)
   }
 }

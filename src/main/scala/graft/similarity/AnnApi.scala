@@ -22,7 +22,7 @@ object AnnApi {
 
   /** Normalized view: (id [, passthrough], v double[], nrm). */
   def normalized(df: DataFrame, id: String, vec: String, passthrough: Seq[String] = Nil): DataFrame = {
-    graft.functions.Dot.ensure(df.sparkSession)
+    graft.functions.Natives.ensure(df.sparkSession)
     df.select((col(id) +: passthrough.map(col)) :+
         expr(s"transform($vec, x -> CAST(x AS DOUBLE))").as("v"): _*)
       .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
@@ -352,7 +352,7 @@ object AnnApi {
     * joined or re-shuffled. */
   def silhouette(corpus: DataFrame, id: String, vec: String, label: String)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
-    graft.functions.VecSumDec.ensure(corpus.sparkSession)
+    graft.functions.Natives.ensure(corpus.sparkSession)
     val n = normalized(corpus, id, vec, passthrough = Seq(label))
       .transform(scope.persist)
     val cents = n.groupBy(col(label))
@@ -440,7 +440,7 @@ object AnnApi {
   def kmeansCells(corpus: DataFrame, id: String, vec: String,
       kCells: Int = 8, iters: Int = 2, trainMod: Int = 1)(implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     require(iters >= 1 && kCells >= 1 && trainMod >= 1)
-    graft.functions.VecSumDec.ensure(corpus.sparkSession)
+    graft.functions.Natives.ensure(corpus.sparkSession)
     val n = normalized(corpus, id, vec)
       .transform(scope.persist)
     val train = if (trainMod == 1) n else n.filter(pmod(col(id), lit(trainMod)) === 0)
@@ -544,8 +544,7 @@ object AnnApi {
       kCodes: Int, iters: Int, trainMod: Int)(
       implicit scope: graft.CacheScope): DataFrame = {
     require(kCodes >= 1 && iters >= 1 && trainMod >= 1)
-    graft.functions.VecSumDec.ensure(sub.sparkSession)
-    graft.functions.Dot.ensure(sub.sparkSession)
+    graft.functions.Natives.ensure(sub.sparkSession)
     val train = sub
       .filter(pmod(col(id), lit(trainMod)) === 0)
       .transform(scope.persist)
@@ -662,7 +661,7 @@ object AnnApi {
 
   def ivfTopK(corpus: DataFrame, id: String, vec: String, cell: String,
       probeIds: DataFrame, k: Int = 5, nProbeCells: Int = 2)(implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
-    graft.functions.VecSumDec.ensure(corpus.sparkSession)
+    graft.functions.Natives.ensure(corpus.sparkSession)
     val n = normalized(corpus, id, vec, passthrough = Seq(cell))
       .transform(scope.persist)
     val topCells = probeTopCells(n, id, cell, probeIds, nProbeCells)
@@ -732,8 +731,7 @@ object AnnApi {
       m: Int = 8, subDim: Int = 8, kCodes: Int = 16,
       pqIters: Int = 2, trainMod: Int = 4)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
-    graft.functions.VecSumDec.ensure(corpus.sparkSession)
-    graft.functions.Dot.ensure(corpus.sparkSession)
+    graft.functions.Natives.ensure(corpus.sparkSession)
     val cells = kmeansCells(corpus, id, vec, kCells, kmIters, trainMod)
       .transform(scope.persist)
     val n = normalized(corpus.join(cells, Seq(id)), id, vec, passthrough = Seq("cell"))
@@ -802,7 +800,7 @@ object AnnApi {
     * [[bruteTopK]] is asserted in `PqSpec`. */
   def sq8TopK(corpus: DataFrame, id: String, vec: String, probeIds: DataFrame,
       k: Int = 5)(implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
-    graft.functions.VecMinMax.ensure(corpus.sparkSession)
+    graft.functions.Natives.ensure(corpus.sparkSession)
     val pnv = normalized(corpus, id, vec)
       .select(col(id), expr("transform(v, x -> x / nrm)").as("v"))
       .transform(scope.persist)
@@ -860,8 +858,7 @@ object AnnApi {
     * (metadata scale: one d-vector + d(d+1)/2 triangle rows). */
   private def covarianceMoments(corpus: DataFrame, vec: String): (Array[Array[Double]], Array[Double], Double) = {
     val spark = corpus.sparkSession
-    graft.functions.VecSumDec.ensure(spark)
-    graft.functions.OuterSumDec.ensure(spark)
+    graft.functions.Natives.ensure(spark)
     val row = corpus
       .select(expr(s"transform($vec, x -> CAST(x AS DOUBLE))").as("v"))
       .agg(call_function("graft_vecsum_dec", col("v")).as("sv"),
@@ -931,7 +928,7 @@ object AnnApi {
       iters: Int = 100): DataFrame = {
     val (cov, mean, _) = covarianceMoments(corpus, vec)
     val (e, _) = powerIterate(cov, iters)
-    graft.functions.Dot.ensure(corpus.sparkSession)
+    graft.functions.Natives.ensure(corpus.sparkSession)
     val meanA = array(mean.map(lit): _*)
     val eA = array(e.map(lit): _*)
     corpus.select(col(id), expr(s"transform($vec, x -> CAST(x AS DOUBLE))").as("vv"))

@@ -41,7 +41,7 @@ object Similarity {
     (0 until Planes).map(p => (0 until Dim).map(i => sign(p, i)))
 
   private def normDf(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Dot.ensure(s)
+    graft.functions.Natives.ensure(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
@@ -144,7 +144,7 @@ object Similarity {
       GROUP BY bru.id_p ORDER BY bru.id_p"""
     },
     (s, d) => {
-      graft.functions.Dot.ensure(s)
+      graft.functions.Natives.ensure(s)
       val emb = Tables.embeddings(s, d)
       val probes = emb.filter(col("vec_id") < 10).select(col("vec_id"))
       val full = AnnApi.bruteTopK(emb, "vec_id", "embedding", probes)
@@ -217,7 +217,7 @@ object Similarity {
       FROM ($union) ORDER BY dims"""
     },
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      graft.functions.Dot.ensure(s)
+      graft.functions.Natives.ensure(s)
       val emb = Tables.embeddings(s, d)
       val probes = emb.filter(col("vec_id") < 10).select(col("vec_id"))
       val full = scope.persist(
@@ -824,8 +824,7 @@ object Similarity {
       FROM p JOIN s sa ON p.i = sa.i JOIN s sb ON p.j = sb.i
       ORDER BY p.i, p.j"""),
     (s, d) => {
-      graft.functions.VecSumDec.ensure(s)
-      graft.functions.OuterSumDec.ensure(s)
+      graft.functions.Natives.ensure(s)
       Tables.embeddings(s, d)
         .select(expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
         .agg(call_function("graft_vecsum_dec", col("v")).as("sv"),
@@ -1025,7 +1024,7 @@ object Similarity {
       SELECT vec_id, $cols FROM nx ORDER BY vec_id"""
     },
     (s, d) => {
-      graft.functions.Dot.ensure(s)
+      graft.functions.Natives.ensure(s)
       val base = Tables.embeddings(s, d)
         .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       val cols = (0 until RpDim).map { j =>
@@ -1159,7 +1158,7 @@ object Similarity {
         CAST(sum(CASE WHEN d > thr THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
       FROM dd, th GROUP BY label ORDER BY label"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      graft.functions.VecSumDec.ensure(s)
+      graft.functions.Natives.ensure(s)
       val n = AnnApi.normalized(Tables.embeddings(s, d), "vec_id", "embedding", Seq("label"))
       val cents = n.agg(call_function("graft_vecsum_dec", col("v")).as("sv"))
         .select(expr("zip_with(sv.sum, sv.cnt, (x, c) -> CAST(x AS DOUBLE) / c)").as("cm"))

@@ -191,7 +191,7 @@ object Sources {
         ${graft.functions.ZOrder.zkeySql("l_partkey", "l_suppkey")} AS zkey
       FROM lineitem ORDER BY zkey, l_orderkey, l_linenumber"""),
     (s, d) => {
-      graft.functions.ZOrder.ensure(s)
+      graft.functions.Natives.ensure(s)
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"),
           graft.functions.ZOrder.zkey(col("l_partkey"), col("l_suppkey")).as("zkey"))

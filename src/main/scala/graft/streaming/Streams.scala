@@ -48,7 +48,7 @@ object Streams {
     * estimates share one implementation (envelope-vs-exact parity
     * pinned in `StreamingSpec`). */
   def quantileStream(events: DataFrame): DataFrame = {
-    events.sparkSession match { case s => graft.functions.TDigest.ensure(s) }
+    graft.functions.Natives.ensure(events.sparkSession)
     events
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
@@ -556,7 +556,7 @@ object Streams {
     * same refresh contract as [[simhashComboKeyTable]]. */
   def corpusShingleTable(corpus: DataFrame, textCol: String = "text",
       k: Int = graft.functions.TextAnalysis.DupShingleK): DataFrame = {
-    graft.functions.WordShingles.ensure(corpus.sparkSession)
+    graft.functions.Natives.ensure(corpus.sparkSession)
     corpus.select(explode(
         graft.functions.WordShingles.hashes(graft.Portable.normText(col(textCol)), k)).as("h"))
       .distinct()
@@ -584,7 +584,7 @@ object Streams {
       tsCol: String = "ts", textCol: String = "text",
       k: Int = graft.functions.TextAnalysis.DupShingleK,
       watermarkDelay: String = "2 hours"): DataFrame = {
-    graft.functions.WordShingles.ensure(docs.sparkSession)
+    graft.functions.Natives.ensure(docs.sparkSession)
     val sh = docs
       .withWatermark(tsCol, watermarkDelay)
       .select(col(tsCol), explode(
@@ -960,7 +960,7 @@ object Streams {
       vec: String = "embedding",
       maxBucketSize: Int = graft.similarity.Similarity.KnnGraphMaxBucket): DataFrame = {
     import graft.similarity.Similarity
-    graft.functions.Dot.ensure(staticVecs.sparkSession)
+    graft.functions.Natives.ensure(staticVecs.sparkSession)
     val n = staticVecs
       .select(col(id).as("static_id"),
         expr(s"transform($vec, x -> CAST(x AS DOUBLE))").as("v"))
@@ -1088,7 +1088,7 @@ object Streams {
       staticVecSide: Option[DataFrame] = None)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     import graft.similarity.Similarity
-    graft.functions.Dot.ensure(vecs.sparkSession)
+    graft.functions.Natives.ensure(vecs.sparkSession)
     val staticColSet = staticVecs.columns.toSet
     val slimSideCols = Set("static_id", "sv", "snrm")
     val staticJoin: DataFrame => DataFrame = staticVecSide match {
@@ -1180,8 +1180,7 @@ object Streams {
     require(bloomBlob.columns.toSet == Set("bloom"),
       s"bloomBlob must be (bloom) — got ${bloomBlob.columns.mkString(", ")}")
     val spark = docs.sparkSession
-    graft.functions.WordShingles.ensure(spark)
-    graft.functions.Bloom.ensure(spark)
+    graft.functions.Natives.ensure(spark)
     docs.withWatermark(tsCol, watermarkDelay)
       .select(col(id), col(tsCol),
         explode(graft.functions.WordShingles.hashes(
@@ -1222,8 +1221,7 @@ object Streams {
     require(bloomBlob.columns.toSet == Set("bloom"),
       s"bloomBlob must be (bloom) — got ${bloomBlob.columns.mkString(", ")}")
     val spark = docs.sparkSession
-    graft.functions.WordShingles.ensure(spark)
-    graft.functions.Bloom.ensure(spark)
+    graft.functions.Natives.ensure(spark)
     val benchArr = benchHashes.agg(sort_array(collect_set(col("hk"))).as("bench_arr"))
     val toks = split(graft.Portable.normText(col(textCol)), " ")
     val gated = docs
@@ -1253,8 +1251,7 @@ object Streams {
       k: Int = graft.functions.Pipeline.DecontaminationShingle)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): (DataFrame, DataFrame) = {
     val spark = bench.sparkSession
-    graft.functions.WordShingles.ensure(spark)
-    graft.functions.Bloom.ensure(spark)
+    graft.functions.Natives.ensure(spark)
     val hashes = scope.persist(bench
       .select(explode(graft.functions.WordShingles.hashes(
         graft.Portable.normText(col(text)), k)).as("hk"))

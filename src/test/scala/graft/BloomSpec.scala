@@ -13,7 +13,6 @@ class BloomSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def buildBlob(keys: Seq[Long], parts: Int, mBits: Long = 4096L, k: Int = 7): Array[Byte] = {
-    functions.Bloom.ensure(spark)
     import spark.implicits._
     keys.toDF("hk").repartition(parts)
       .agg(expr(s"graft_bloom_agg(hk, ${mBits}L, $k)"))
@@ -59,7 +58,6 @@ class BloomSpec extends AnyFunSuite {
   }
 
   test("type gates: non-bigint agg key and non-binary probe blob fail analysis") {
-    functions.Bloom.ensure(spark)
     import spark.implicits._
     val df = Seq(("x", 1L)).toDF("s", "hk")
     val e1 = intercept[Exception](df.agg(expr("graft_bloom_agg(s, 1024L, 7)")).collect())

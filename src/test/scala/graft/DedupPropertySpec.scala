@@ -34,7 +34,6 @@ class DedupPropertySpec extends AnyFunSuite {
 
   test("native graft_ngrams equals the composed substring/distinct form") {
     import spark.implicits._
-    functions.Ngrams.ensure(spark)
     val rnd = new scala.util.Random(11)
     val alphabet = "abc déφñ xyz" // 2-byte UTF-8 chars mixed in
     val strs = (0 until 200).map { i =>
@@ -57,7 +56,6 @@ class DedupPropertySpec extends AnyFunSuite {
 
   test("native graft_sorted_inter_size equals array_intersect size on sorted distinct arrays") {
     import spark.implicits._
-    functions.SortedInter.ensure(spark)
     val rnd = new scala.util.Random(17)
     val vocab = Vector.tabulate(60)(i => f"g$i%02d") ++ Vector("déφ", "ñx", "") // non-ASCII + empty string
     val rows = (0 until 300).map { i =>
@@ -77,7 +75,6 @@ class DedupPropertySpec extends AnyFunSuite {
 
   test("native graft_ngrams output is sorted ascending (SortedInter contract)") {
     import spark.implicits._
-    functions.Ngrams.ensure(spark)
     val rnd = new scala.util.Random(19)
     val alphabet = "abc déφñ xyz"
     val strs = (0 until 100).map { i =>
@@ -99,9 +96,6 @@ class DedupPropertySpec extends AnyFunSuite {
     // must fail ANALYSIS (like graft_dot/graft_vecsum_dec), not read
     // garbage offsets or throw ClassCastException mid-query.
     import spark.implicits._
-    functions.SortedInter.ensure(spark)
-    functions.Winnow.ensure(spark)
-    functions.DBits.ensure(spark)
     val df = Seq((Array(1.5, 2.5), 1.5, "abc", 7)).toDF("da", "d", "s", "i")
     val cases = Seq(
       // array<double> is in NEITHER supported family (string / bigint)
@@ -126,7 +120,6 @@ class DedupPropertySpec extends AnyFunSuite {
 
   test("native graft_dot is bit-identical to the zip_with/aggregate fold") {
     import spark.implicits._
-    functions.Dot.ensure(spark)
     val rnd = new scala.util.Random(31)
     val rows = (0 until 300).map { i =>
       (i.toLong, Array.fill(64)(rnd.nextDouble() * 2e3 - 1e3),
@@ -165,7 +158,6 @@ class DedupPropertySpec extends AnyFunSuite {
 
   test("native graft_winnow equals the composed window-minima form") {
     import spark.implicits._
-    functions.Winnow.ensure(spark)
     val rnd = new scala.util.Random(29)
     val alphabet = "abcd efg déφñ hij" // multibyte chars in the gram windows
     val strs = (0 until 120).map { i =>
@@ -217,7 +209,6 @@ class DedupPropertySpec extends AnyFunSuite {
   test("native graft_word_shingles equals the composed distinct/concat/h60 form") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    functions.WordShingles.ensure(spark)
     val rnd = new scala.util.Random(59)
     // multibyte tokens + heavy repetition so dedup and UTF-8 offsets
     // are both exercised
@@ -244,7 +235,6 @@ class DedupPropertySpec extends AnyFunSuite {
 
   test("native graft_simhash equals the composed per-bit aggregate form") {
     import spark.implicits._
-    functions.Simhash.ensure(spark)
     val rnd = new scala.util.Random(13)
     val rows = (0 until 300).map { i =>
       (i.toLong, Seq.fill(rnd.nextInt(40))(rnd.nextLong() & ((1L << 60) - 1)))
@@ -262,7 +252,6 @@ class DedupPropertySpec extends AnyFunSuite {
 
   test("native graft_minhash_sigs equals the composed array_min/transform form") {
     import spark.implicits._
-    functions.MinhashSigs.ensure(spark)
     val rnd = new scala.util.Random(17)
     val rows = (0 until 300).map { i =>
       (i.toLong, Seq.fill(1 + rnd.nextInt(30))(math.abs(rnd.nextLong()) % Portable.P))

@@ -56,7 +56,6 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("native rolling-hash expression matches an independent fold") {
-    functions.RollingHash.ensure(spark)
     import spark.implicits._
     val texts = Seq("hello world", "", "héllo ünïcode ☃", "a" * 1000)
     val df = texts.toDF("s")
@@ -68,7 +67,6 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("rolling hash participates in codegen (no fallback errors) and works in SQL") {
-    functions.RollingHash.ensure(spark)
     val n = spark.sql("SELECT graft_rolling_hash('abc', 1000000007) AS h").collect()(0).getLong(0)
     assert(n == (((('a'.toLong * 31) + 'b') * 31 + 'c') % 1000000007L))
   }

@@ -35,7 +35,6 @@ class ExactPercentilesSpec extends AnyFunSuite {
     // thus this selection) ranks by: −0.0 < +0.0 strictly, NaN largest.
     // (SQL ORDER BY differs — it treats ±0.0 as equal.)
     import spark.implicits._
-    functions.DBits.ensure(spark)
     val rnd = new scala.util.Random(43)
     val specials = Seq(0.0, -0.0, Double.MinPositiveValue, -Double.MinPositiveValue,
       Double.MaxValue, Double.MinValue, Double.PositiveInfinity, Double.NegativeInfinity,

@@ -12,7 +12,6 @@ class KmvSpec extends AnyFunSuite {
   private val Mask = 9223372036854775807L
 
   test("under capacity the sketch IS the value set and the estimate is exact") {
-    functions.KMinValues.ensure(spark)
     val df = spark.range(0, 500)
       .selectExpr(s"xxhash64(id) & $Mask AS h")
     val r = df.agg(expr("graft_kmv(h, 1024)").as("sk"))
@@ -22,7 +21,6 @@ class KmvSpec extends AnyFunSuite {
   }
 
   test("estimate lands within 3 sigma (~10%) of 50k true distinct at k=1024") {
-    functions.KMinValues.ensure(spark)
     val df = spark.range(0, 50000)
       .selectExpr(s"xxhash64(id) & $Mask AS h")
     val est = df.agg(expr("graft_kmv(h, 1024)").as("sk"))
@@ -32,7 +30,6 @@ class KmvSpec extends AnyFunSuite {
   }
 
   test("sketch is bit-identical under any partitioning (unique k-min set)") {
-    functions.KMinValues.ensure(spark)
     def sk(parts: Int): Seq[Long] = spark.range(0, 30000)
       .selectExpr(s"xxhash64(id) & $Mask AS h").repartition(parts)
       .agg(expr("graft_kmv(h, 256)").as("sk"))
@@ -43,7 +40,6 @@ class KmvSpec extends AnyFunSuite {
   }
 
   test("union of two sketches equals the sketch of the union (both regimes)") {
-    functions.KMinValues.ensure(spark)
     import spark.implicits._
     def build(ids: Seq[Long], k: Int): Seq[Long] = ids.toDF("id")
       .selectExpr(s"xxhash64(id) & $Mask AS h")
@@ -62,7 +58,6 @@ class KmvSpec extends AnyFunSuite {
   }
 
   test("theta intersection recovers a planted overlap within bound") {
-    functions.KMinValues.ensure(spark)
     import spark.implicits._
     // A = 0..20000, B = 10000..30000: true intersection 10000
     val k = 1024

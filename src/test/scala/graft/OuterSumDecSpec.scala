@@ -28,7 +28,6 @@ class OuterSumDecSpec extends AnyFunSuite {
   }
 
   private def viaNative(df: org.apache.spark.sql.DataFrame) = {
-    functions.OuterSumDec.ensure(spark)
     df.groupBy(col("g"))
       .agg(call_function("graft_outer_sum_dec", col("v")).as("so"))
       .select(col("g"), explode(col("so")).as("c"))
@@ -73,7 +72,6 @@ class OuterSumDecSpec extends AnyFunSuite {
   }
 
   test("rejects non-double arrays at analysis time") {
-    functions.OuterSumDec.ensure(spark)
     import spark.implicits._
     val e = intercept[Exception] {
       Seq((1L, Array(1.0f))).toDF("g", "v")

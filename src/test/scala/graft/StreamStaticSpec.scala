@@ -76,7 +76,6 @@ class StreamStaticSpec extends AnyFunSuite {
     assert(!rows.contains("2024-01-01 20:00:00.0"), "open window must not emit")
     // batch parity: the same computation over the union of all batches
     val batchDocs = spark.read.parquet(s"$in/*")
-    functions.WordShingles.ensure(spark)
     val batch = batchDocs
       .select(date_trunc("hour", col("ts")).as("w"), explode(
         functions.WordShingles.hashes(Portable.normText(col("text")), 5)).as("h"))

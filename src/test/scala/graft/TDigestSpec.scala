@@ -17,7 +17,6 @@ class TDigestSpec extends AnyFunSuite {
   }
 
   test("uniform 0..9999: quantile estimates land within 1% rank of exact") {
-    functions.TDigest.ensure(spark)
     val df = spark.range(0, 10000).selectExpr("CAST(id AS DOUBLE) AS x")
     val dig = df.agg(expr("graft_tdigest(x, 200)").as("d"))
     val qs = Seq(0.01, 0.1, 0.5, 0.9, 0.99, 0.999)
@@ -31,7 +30,6 @@ class TDigestSpec extends AnyFunSuite {
   }
 
   test("partitioning cannot push an estimate outside the envelope; weights conserve") {
-    functions.TDigest.ensure(spark)
     // lognormal-ish skew from a deterministic hash (no Random in tests)
     val df = spark.range(0, 20000)
       .selectExpr("exp(CAST(pmod(hash(id), 1000) AS DOUBLE) / 120.0) AS x")
@@ -54,7 +52,6 @@ class TDigestSpec extends AnyFunSuite {
   }
 
   test("centroid count stays bounded (the fixed-size-summary contract)") {
-    functions.TDigest.ensure(spark)
     val df = spark.range(0, 50000).selectExpr("CAST(id AS DOUBLE) AS x")
     val n = df.repartition(32).agg(expr("size(graft_tdigest(x, 200))").as("n"))
       .collect().head.getInt(0)
@@ -63,7 +60,6 @@ class TDigestSpec extends AnyFunSuite {
   }
 
   test("single-value and tiny inputs are exact") {
-    functions.TDigest.ensure(spark)
     import spark.implicits._
     val one = Seq(42.0).toDF("x")
     assert(one.agg(expr("graft_tdigest_quantile(graft_tdigest(x, 200), 0.5)"))
@@ -78,7 +74,6 @@ class TDigestSpec extends AnyFunSuite {
     // regression (r9 advice): Spark's Decimal is not a java.lang.Number,
     // so aggregating a raw DECIMAL column (e.g. l_extendedprice without
     // the gated query's CAST AS DOUBLE) used to throw ClassCastException
-    functions.TDigest.ensure(spark)
     val df = spark.range(1, 101).selectExpr("CAST(id AS DECIMAL(12,2)) AS x")
     val med = df.agg(expr("graft_tdigest_quantile(graft_tdigest(x, 200), 0.5)"))
       .collect().head.getDouble(0)

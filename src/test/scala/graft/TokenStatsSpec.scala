@@ -13,7 +13,6 @@ class TokenStatsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def viaNative(texts: Seq[String]) = {
-    functions.TokenStats.ensure(spark)
     import spark.implicits._
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "s")
       .select(col("id"), call_function("graft_token_stats", col("s")).as("st"))
@@ -63,7 +62,6 @@ class TokenStatsSpec extends AnyFunSuite {
   }
 
   test("rejects non-string input at analysis time") {
-    functions.TokenStats.ensure(spark)
     import spark.implicits._
     val e = intercept[Exception] {
       Seq(1L).toDF("v").select(call_function("graft_token_stats", col("v"))).collect()

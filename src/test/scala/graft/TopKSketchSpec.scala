@@ -7,7 +7,6 @@ class TopKSketchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("sketch top-k equals exact top-k when vocabulary fits capacity") {
-    functions.TopKSketch.ensure(spark)
     val toks = Tables.documents(spark, TestSpark.sfDir)
       .select(explode(split(Portable.normText(col("text")), " ")).as("tok"))
     toks.createOrReplaceTempView("graft_toks")
@@ -25,7 +24,6 @@ class TopKSketchSpec extends AnyFunSuite {
   }
 
   test("sketch stays bounded and merges under repartition") {
-    functions.TopKSketch.ensure(spark)
     import spark.implicits._
     // skewed stream: token i appears i times, 200 distinct > capacity path
     val data = (1 to 200).flatMap(i => Seq.fill(i)(s"t$i")).toDF("tok").repartition(8)

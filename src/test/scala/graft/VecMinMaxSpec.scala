@@ -19,7 +19,6 @@ class VecMinMaxSpec extends AnyFunSuite {
       .collect().map(r => ((r.getLong(0), r.getInt(1)), (r.getDouble(2), r.getDouble(3)))).toMap
 
   private def viaNative(df: org.apache.spark.sql.DataFrame) = {
-    functions.VecMinMax.ensure(spark)
     df.groupBy(col("g"))
       .agg(call_function("graft_vecminmax", col("v")).as("mm"))
       .select(col("g"), posexplode(expr("zip_with(mm.mins, mm.maxs, (a, b) -> struct(a AS mn, b AS mx))"))
@@ -48,7 +47,6 @@ class VecMinMaxSpec extends AnyFunSuite {
       (0L, Seq[Option[Double]](Some(0.0), Some(-1.0), Some(5.0))),
       (0L, Seq[Option[Double]](None, Some(2.0)))
     ).toDF("g", "v").select(col("g"), col("v").cast("array<double>").as("v"))
-    functions.VecMinMax.ensure(spark)
     val r = df.groupBy(col("g"))
       .agg(call_function("graft_vecminmax", col("v")).as("mm"))
       .select(col("mm.mins").as("mns"), col("mm.maxs").as("mxs"))
@@ -63,7 +61,6 @@ class VecMinMaxSpec extends AnyFunSuite {
   }
 
   test("array<float> input is an analysis error with a cast hint, never reinterpreted") {
-    functions.VecMinMax.ensure(spark)
     import spark.implicits._
     val df = Seq((1L, Seq(1.0f, 2.0f))).toDF("g", "v")
     val e = intercept[Exception] {

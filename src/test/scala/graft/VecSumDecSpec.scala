@@ -21,7 +21,6 @@ class VecSumDecSpec extends AnyFunSuite {
       .collect().map(r => ((r.getLong(0), r.getInt(1)), (r.getDecimal(2), r.getLong(3)))).toMap
 
   private def viaNative(df: org.apache.spark.sql.DataFrame) = {
-    functions.VecSumDec.ensure(spark)
     df.groupBy(col("g"))
       .agg(call_function("graft_vecsum_dec", col("v")).as("sv"))
       .select(col("g"), posexplode(expr("zip_with(sv.sum, sv.cnt, (x, c) -> struct(x AS s, c AS c))"))
@@ -74,7 +73,6 @@ class VecSumDecSpec extends AnyFunSuite {
     // the mean built the library way equals the posexplode mean: the
     // per-POSITION count divides, never the row count (the bug a
     // count(lit(1)) divisor would reintroduce: 1.75/2, not 1.75/3)
-    functions.VecSumDec.ensure(spark)
     val mean = df.groupBy(col("g"))
       .agg(call_function("graft_vecsum_dec", col("v")).as("sv"))
       .select(col("g"), expr("zip_with(sv.sum, sv.cnt, (x, c) -> CAST(x AS DOUBLE) / c)").as("m"))
@@ -85,7 +83,6 @@ class VecSumDecSpec extends AnyFunSuite {
 
   test("array<float> input is an analysis error with a cast hint, never reinterpreted") {
     import spark.implicits._
-    functions.VecSumDec.ensure(spark)
     val floats = Seq((0L, Array(1.5f, 2.5f)), (0L, Array(0.5f, 1.0f))).toDF("g", "v")
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       floats.groupBy(col("g"))

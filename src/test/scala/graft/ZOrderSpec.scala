@@ -42,7 +42,6 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("native expression equals the generated DuckDB-twin SQL") {
     import spark.implicits._
-    functions.ZOrder.ensure(spark)
     val rnd = new scala.util.Random(71)
     val df = (0 until 300).map(_ => (rnd.nextInt(1 << 20).toLong, rnd.nextInt(1 << 10).toLong))
       .toDF("x", "y")
@@ -56,7 +55,6 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("type gate: non-bigint inputs fail analysis with a cast hint") {
     import spark.implicits._
-    functions.ZOrder.ensure(spark)
     val e = intercept[Exception](
       Seq(("a", 1L)).toDF("x", "y").selectExpr("graft_zorder(x, y)").collect())
     assert(e.getMessage.contains("bigint"), e.getMessage)
@@ -64,7 +62,6 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("zkey layout prunes point predicates on BOTH dims; 1-D sort only on its own") {
     import spark.implicits._
-    functions.ZOrder.ensure(spark)
     // uniform synthetic grid: equal 12-bit domains, so neither layout
     // wins by domain skinniness. The pruning metric is the real one:
     // for a point predicate on a dim, how many files' [min, max]
