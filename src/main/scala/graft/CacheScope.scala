@@ -22,7 +22,16 @@ import org.apache.spark.storage.StorageLevel
   * [[Harness.dropAllBlocks]] between queries (what Verify/Bench
   * do). Results must be materialized before the scope closes —
   * unpersist is lazy-safe (recompute, not failure) but forfeits the
-  * reuse the persist paid for.
+  * reuse the persist paid for. Hence the two rules for code in this
+  * project:
+  *  - a library function that persists takes the CALLER's scope,
+  *    `(implicit scope: CacheScope = CacheScope.untracked)`, and
+  *    never opens its own: it returns a lazy frame, so a scope it
+  *    opened would release every intermediate before the caller runs
+  *    the plan;
+  *  - a query builder that opens a scope ends its last expression in
+  *    `.localCheckpoint(true)` inside it, so the result is
+  *    materialized while the intermediates are still cached.
   */
 final class CacheScope private[graft] (track: Boolean) {
   private val acquired = scala.collection.mutable.ArrayBuffer.empty[DataFrame]

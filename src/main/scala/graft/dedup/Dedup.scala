@@ -69,26 +69,60 @@ object Dedup {
     * unchanged. The oracle applies the identical cap. */
   val LshBucketCap = 15
 
-  /** `kept` = bands minus over-cap buckets — the one definition both
-    * capped oracles (lsh, clusters) share, so the cap semantics can
+  /** `kept` = bands minus over-cap buckets, and `cand` = the banded
+    * candidate pairs (doc_a < doc_b sharing a kept bucket) — the one
+    * definition every capped oracle shares, so the cap semantics can
     * never silently diverge between them. */
-  private def cappedBandsSqlCte: String =
+  private def cappedCandSqlCte: String =
     s"""ovs AS (SELECT band_idx, band_key FROM bands
         GROUP BY band_idx, band_key HAVING count(*) > $LshBucketCap),
       kept AS (SELECT b.* FROM bands b WHERE NOT EXISTS (
-        SELECT 1 FROM ovs o WHERE o.band_idx = b.band_idx AND o.band_key = b.band_key))"""
+        SELECT 1 FROM ovs o WHERE o.band_idx = b.band_idx AND o.band_key = b.band_key)),
+      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM kept a JOIN kept b
+        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id)"""
+
+  /** `pairs(doc_a, doc_b, inter, la, lb)`: each candidate's shingle
+    * intersection size and both set sizes. */
+  private def candOverlapSqlCte: String =
+    """pairs AS (SELECT c.doc_a, c.doc_b,
+          len(list_filter(s1.sh, x -> list_contains(s2.sh, x))) AS inter,
+          len(s1.sh) AS la, len(s2.sh) AS lb
+        FROM cand c JOIN shx s1 ON s1.doc_id = c.doc_a JOIN shx s2 ON s2.doc_id = c.doc_b)"""
+
+  /** Oracle of the near-dup cluster assignment the cluster gates
+    * compose (`DedupApi.nearDupClusters` over the capped banded pairs
+    * verified at J ≥ 0.6): a recursive `reach(node, label)` whose
+    * per-node min label is the cluster. Opens the query's
+    * `WITH RECURSIVE`. */
+  private def nearDupReachSql: String =
+    s"""WITH RECURSIVE $bandsSqlCte,
+      $cappedCandSqlCte,
+      pairs AS (SELECT c.doc_a, c.doc_b FROM cand c
+        JOIN shx s1 ON s1.doc_id = c.doc_a JOIN shx s2 ON s2.doc_id = c.doc_b
+        WHERE CAST(len(list_filter(s1.sh, x -> list_contains(s2.sh, x))) AS DOUBLE)
+          / (len(s1.sh) + len(s2.sh) - len(list_filter(s1.sh, x -> list_contains(s2.sh, x)))) >= 0.6),
+      edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+        UNION ALL SELECT doc_b, doc_a FROM pairs),
+      reach AS (
+        SELECT doc_id AS node, doc_id AS label FROM documents
+        UNION
+        SELECT e.dst, r.label FROM reach r JOIN edges e ON r.node = e.src)"""
+
+  /** The Spark side of [[nearDupReachSql]]: (node, cluster) for every
+    * document. */
+  private def nearDupAssignment(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
+    val pairs = DedupApi.minhashPairs(Tables.documents(s, d), "doc_id", "text",
+      threshold = 0.6, maxBucketSize = LshBucketCap)
+    DedupApi.nearDupClusters(Tables.documents(s, d), "doc_id", pairs)
+      .select(col("node"), col("cluster"))
+  }
 
   val minhashLsh = QueryDef(
     "dedup_minhash_lsh",
     Some(s"""WITH $bandsSqlCte,
-      $cappedBandsSqlCte,
-      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM kept a JOIN kept b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-      pairs AS (SELECT c.doc_a, c.doc_b,
-          len(list_filter(s1.sh, x -> list_contains(s2.sh, x))) AS inter,
-          len(s1.sh) AS la, len(s2.sh) AS lb
-        FROM cand c JOIN shx s1 ON s1.doc_id = c.doc_a JOIN shx s2 ON s2.doc_id = c.doc_b)
+      $cappedCandSqlCte,
+      $candOverlapSqlCte
       SELECT doc_a, doc_b, round(CAST(inter AS DOUBLE) / (la + lb - inter), 6) AS jaccard
       FROM pairs WHERE CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.6
       ORDER BY doc_a, doc_b"""),
@@ -109,14 +143,8 @@ object Dedup {
       val matchSum = (0 until Portable.NumHashes)
         .map(j => s"(CASE WHEN sa.m$j = sb.m$j THEN 1 ELSE 0 END)").mkString(" + ")
       s"""WITH $bandsSqlCte,
-      $cappedBandsSqlCte,
-      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM kept a JOIN kept b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-      pairs AS (SELECT c.doc_a, c.doc_b,
-          len(list_filter(s1.sh, x -> list_contains(s2.sh, x))) AS inter,
-          len(s1.sh) AS la, len(s2.sh) AS lb
-        FROM cand c JOIN shx s1 ON s1.doc_id = c.doc_a JOIN shx s2 ON s2.doc_id = c.doc_b),
+      $cappedCandSqlCte,
+      $candOverlapSqlCte,
       mm AS (SELECT p.doc_a, p.doc_b, CAST($matchSum AS BIGINT) AS n_match, inter, la, lb
         FROM pairs p JOIN sig sa ON sa.doc_id = p.doc_a JOIN sig sb ON sb.doc_id = p.doc_b)
       SELECT doc_a, doc_b, n_match,
@@ -148,10 +176,7 @@ object Dedup {
   val thresholdSweep = QueryDef(
     "dedup_threshold_sweep",
     Some(s"""WITH $bandsSqlCte,
-      $cappedBandsSqlCte,
-      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM kept a JOIN kept b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
+      $cappedCandSqlCte,
       pairs AS (SELECT CAST(len(list_filter(s1.sh, x -> list_contains(s2.sh, x))) AS DOUBLE)
           / (len(s1.sh) + len(s2.sh) - len(list_filter(s1.sh, x -> list_contains(s2.sh, x)))) AS j
         FROM cand c JOIN shx s1 ON s1.doc_id = c.doc_a JOIN shx s2 ON s2.doc_id = c.doc_b),
@@ -441,6 +466,19 @@ object Dedup {
       .orderBy(col("id_a"), col("id_b")))
 
   // ------------------------------------------------ semantic dedup
+  /** Oracle head of the semantic gates: the verified k-means CTEs and
+    * `nc(vec_id, v, nrm, cell)`, each vector with its cell. */
+  private def semanticCellsSql: String = {
+    import graft.similarity.Similarity
+    val (ctes, ka) = Similarity.kmeansSqlCtes(
+      Similarity.KmeansCells, Similarity.KmeansIters, Similarity.KmeansTrainMod)
+    s"""${Similarity.normSqlCte}, $ctes,
+      nc AS (SELECT n.vec_id, n.v, n.nrm, k.cell FROM nx n JOIN $ka k ON k.vec_id = n.vec_id)"""
+  }
+  /** The dot product of two `nc` rows `a`, `b`. */
+  private val dotAbSql =
+    "list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)"
+
   /** SemDeDup (Abbas et al. 2023): cosine near-dup pairs found only
     * INSIDE k-means cells (see [[DedupApi.semanticPairs]]) — the
     * embedding-dedup recipe that scales, because the pair scan is
@@ -451,20 +489,12 @@ object Dedup {
     * relation is auditable across the two gates. */
   val semantic = QueryDef(
     "dedup_semantic",
-    Some {
-      import graft.similarity.Similarity
-      val (ctes, ka) = Similarity.kmeansSqlCtes(
-        Similarity.KmeansCells, Similarity.KmeansIters, Similarity.KmeansTrainMod)
-      val dotAb =
-        "list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)"
-      s"""WITH ${Similarity.normSqlCte}, $ctes,
-      nc AS (SELECT n.vec_id, n.v, n.nrm, k.cell FROM nx n JOIN $ka k ON k.vec_id = n.vec_id)
+    Some(s"""WITH $semanticCellsSql
       SELECT a.cell, a.vec_id AS id_a, b.vec_id AS id_b,
-        round($dotAb / (a.nrm * b.nrm), 6) AS cos
+        round($dotAbSql / (a.nrm * b.nrm), 6) AS cos
       FROM nc a JOIN nc b ON a.cell = b.cell AND a.vec_id < b.vec_id
-      WHERE $dotAb / (a.nrm * b.nrm) >= 0.4
-      ORDER BY id_a, id_b"""
-    },
+      WHERE $dotAbSql / (a.nrm * b.nrm) >= 0.4
+      ORDER BY id_a, id_b"""),
     (s, d) => {
       import graft.similarity.Similarity
       DedupApi.semanticPairs(Tables.embeddings(s, d), "vec_id", "embedding", threshold = 0.4,
@@ -481,17 +511,10 @@ object Dedup {
     * recursive-CTE component labeling of `dedup_clusters`. */
   val semanticDedupPipeline = QueryDef(
     "pipeline_semantic_dedup",
-    Some {
-      import graft.similarity.Similarity
-      val (ctes, ka) = Similarity.kmeansSqlCtes(
-        Similarity.KmeansCells, Similarity.KmeansIters, Similarity.KmeansTrainMod)
-      val dotAb =
-        "list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]), (x, y) -> x + y)"
-      s"""WITH ${Similarity.normSqlCte}, $ctes,
-      nc AS (SELECT n.vec_id, n.v, n.nrm, k.cell FROM nx n JOIN $ka k ON k.vec_id = n.vec_id),
+    Some(s"""WITH RECURSIVE $semanticCellsSql,
       pr AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM nc a JOIN nc b ON a.cell = b.cell AND a.vec_id < b.vec_id
-        WHERE $dotAb / (a.nrm * b.nrm) >= 0.4),
+        WHERE $dotAbSql / (a.nrm * b.nrm) >= 0.4),
       edges AS (SELECT id_a AS src, id_b AS dst FROM pr
         UNION ALL SELECT id_b, id_a FROM pr),
       reach AS (
@@ -500,8 +523,7 @@ object Dedup {
         SELECT e.dst, r.label FROM reach r JOIN edges e ON r.node = e.src)
       SELECT node AS vec_id, min(label) AS cluster,
         (min(label) = node) AS kept
-      FROM reach GROUP BY node ORDER BY vec_id""".replaceFirst("WITH ", "WITH RECURSIVE ")
-    },
+      FROM reach GROUP BY node ORDER BY vec_id"""),
     (s, d) => {
       import graft.similarity.Similarity
       val pairs = DedupApi.semanticPairs(Tables.embeddings(s, d), "vec_id", "embedding",
@@ -525,30 +547,12 @@ object Dedup {
     * oracle. */
   val clusters = QueryDef(
     "dedup_clusters",
-    Some(s"""WITH $bandsSqlCte,
-      $cappedBandsSqlCte,
-      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM kept a JOIN kept b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-      pairs AS (SELECT c.doc_a, c.doc_b FROM cand c
-        JOIN shx s1 ON s1.doc_id = c.doc_a JOIN shx s2 ON s2.doc_id = c.doc_b
-        WHERE CAST(len(list_filter(s1.sh, x -> list_contains(s2.sh, x))) AS DOUBLE)
-          / (len(s1.sh) + len(s2.sh) - len(list_filter(s1.sh, x -> list_contains(s2.sh, x)))) >= 0.6),
-      edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL SELECT doc_b, doc_a FROM pairs),
-      reach AS (
-        SELECT doc_id AS node, doc_id AS label FROM documents
-        UNION
-        SELECT e.dst, r.label FROM reach r JOIN edges e ON r.node = e.src)
+    Some(s"""$nearDupReachSql
       SELECT node AS doc_id, min(label) AS cluster FROM reach
-      GROUP BY node ORDER BY doc_id""".replaceFirst("WITH ", "WITH RECURSIVE ")),
-    (s, d) => {
-      val pairs = DedupApi.minhashPairs(Tables.documents(s, d), "doc_id", "text",
-        threshold = 0.6, maxBucketSize = LshBucketCap)
-      DedupApi.nearDupClusters(Tables.documents(s, d), "doc_id", pairs)
-        .select(col("node").as("doc_id"), col("cluster"))
-        .orderBy(col("doc_id"))
-    })
+      GROUP BY node ORDER BY doc_id"""),
+    (s, d) => nearDupAssignment(s, d)
+      .select(col("node").as("doc_id"), col("cluster"))
+      .orderBy(col("doc_id")))
 
   // ------------------------------------------------- cluster stats
   /** dedup_cluster_stats (r8): the near-dup cluster SIZE distribution
@@ -563,21 +567,7 @@ object Dedup {
     * divisions over exact counts. */
   val clusterStats = QueryDef(
     "dedup_cluster_stats",
-    Some(s"""WITH $bandsSqlCte,
-      $cappedBandsSqlCte,
-      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM kept a JOIN kept b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-      pairs AS (SELECT c.doc_a, c.doc_b FROM cand c
-        JOIN shx s1 ON s1.doc_id = c.doc_a JOIN shx s2 ON s2.doc_id = c.doc_b
-        WHERE CAST(len(list_filter(s1.sh, x -> list_contains(s2.sh, x))) AS DOUBLE)
-          / (len(s1.sh) + len(s2.sh) - len(list_filter(s1.sh, x -> list_contains(s2.sh, x)))) >= 0.6),
-      edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL SELECT doc_b, doc_a FROM pairs),
-      reach AS (
-        SELECT doc_id AS node, doc_id AS label FROM documents
-        UNION
-        SELECT e.dst, r.label FROM reach r JOIN edges e ON r.node = e.src),
+    Some(s"""$nearDupReachSql,
       asg AS (SELECT node, min(label) AS cluster FROM reach GROUP BY node),
       cs AS (SELECT cluster, CAST(count(*) AS BIGINT) AS sz FROM asg GROUP BY cluster),
       nn AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM asg)
@@ -585,13 +575,9 @@ object Dedup {
         CAST(sum(cs.sz) AS BIGINT) AS n_docs,
         CAST(sum(cs.sz - 1) AS BIGINT) AS n_removable,
         CAST(sum(cs.sz) AS DOUBLE) / nn.n_docs AS doc_share
-      FROM cs, nn GROUP BY cs.sz, nn.n_docs ORDER BY cluster_size"""
-      .replaceFirst("WITH ", "WITH RECURSIVE ")),
+      FROM cs, nn GROUP BY cs.sz, nn.n_docs ORDER BY cluster_size"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val pairs = DedupApi.minhashPairs(Tables.documents(s, d), "doc_id", "text",
-        threshold = 0.6, maxBucketSize = LshBucketCap)
-      val asg = DedupApi.nearDupClusters(Tables.documents(s, d), "doc_id", pairs)
-        .select(col("node"), col("cluster"))
+      val asg = nearDupAssignment(s, d)
       DedupApi.clusterSizeStats(asg).localCheckpoint(true)
     })
 
@@ -613,21 +599,7 @@ object Dedup {
     * — all keyed shuffles on ids, nothing quadratic. */
   val sourceStats = QueryDef(
     "dedup_source_stats",
-    Some(s"""WITH $bandsSqlCte,
-      $cappedBandsSqlCte,
-      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM kept a JOIN kept b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-      pairs AS (SELECT c.doc_a, c.doc_b FROM cand c
-        JOIN shx s1 ON s1.doc_id = c.doc_a JOIN shx s2 ON s2.doc_id = c.doc_b
-        WHERE CAST(len(list_filter(s1.sh, x -> list_contains(s2.sh, x))) AS DOUBLE)
-          / (len(s1.sh) + len(s2.sh) - len(list_filter(s1.sh, x -> list_contains(s2.sh, x)))) >= 0.6),
-      edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL SELECT doc_b, doc_a FROM pairs),
-      reach AS (
-        SELECT doc_id AS node, doc_id AS label FROM documents
-        UNION
-        SELECT e.dst, r.label FROM reach r JOIN edges e ON r.node = e.src),
+    Some(s"""$nearDupReachSql,
       asg AS (SELECT node, min(label) AS cluster FROM reach GROUP BY node),
       kp AS (SELECT cluster, min(node) AS keep FROM asg GROUP BY cluster),
       at AS (SELECT d.source, CASE WHEN a.node <> kp.keep THEN 1 ELSE 0 END AS rm
@@ -638,13 +610,9 @@ object Dedup {
         FROM at GROUP BY source)
       SELECT source, n_docs, n_removable,
         ${graft.Portable.round6RatioDuck("n_removable", "n_docs")} AS dup_rate
-      FROM st ORDER BY source"""
-      .replaceFirst("WITH ", "WITH RECURSIVE ")),
+      FROM st ORDER BY source"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val pairs = DedupApi.minhashPairs(Tables.documents(s, d), "doc_id", "text",
-        threshold = 0.6, maxBucketSize = LshBucketCap)
-      val asg = DedupApi.nearDupClusters(Tables.documents(s, d), "doc_id", pairs)
-        .select(col("node"), col("cluster"))
+      val asg = nearDupAssignment(s, d)
       sourceDedupStats(asg,
         Tables.documents(s, d).select(col("doc_id"), col("source")))
         .localCheckpoint(true)
@@ -694,14 +662,8 @@ object Dedup {
           FROM lx, unnest(range(1, len(segs) + 1)) AS r(i)
           WHERE ${normTextSql("segs[i]")} <> ''),
         ${bandsSqlCteOver("pr", "pid", "para")},
-        $cappedBandsSqlCte,
-        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM kept a JOIN kept b
-          ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-        pairs AS (SELECT c.doc_a, c.doc_b,
-            len(list_filter(s1.sh, x -> list_contains(s2.sh, x))) AS inter,
-            len(s1.sh) AS la, len(s2.sh) AS lb
-          FROM cand c JOIN shx s1 ON s1.doc_id = c.doc_a JOIN shx s2 ON s2.doc_id = c.doc_b)
+        $cappedCandSqlCte,
+        $candOverlapSqlCte
         SELECT doc_a // $m AS doc_a, doc_a % $m AS para_a,
           doc_b // $m AS doc_b, doc_b % $m AS para_b,
           round(CAST(inter AS DOUBLE) / (la + lb - inter), 6) AS jaccard
@@ -739,21 +701,7 @@ object Dedup {
     * the corpus, no new quadratic term. */
   val keepBest = QueryDef(
     "dedup_keep_best",
-    Some(s"""WITH $bandsSqlCte,
-      $cappedBandsSqlCte,
-      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM kept a JOIN kept b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-      pairs AS (SELECT c.doc_a, c.doc_b FROM cand c
-        JOIN shx s1 ON s1.doc_id = c.doc_a JOIN shx s2 ON s2.doc_id = c.doc_b
-        WHERE CAST(len(list_filter(s1.sh, x -> list_contains(s2.sh, x))) AS DOUBLE)
-          / (len(s1.sh) + len(s2.sh) - len(list_filter(s1.sh, x -> list_contains(s2.sh, x)))) >= 0.6),
-      edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL SELECT doc_b, doc_a FROM pairs),
-      reach AS (
-        SELECT doc_id AS node, doc_id AS label FROM documents
-        UNION
-        SELECT e.dst, r.label FROM reach r JOIN edges e ON r.node = e.src),
+    Some(s"""$nearDupReachSql,
       comp AS (SELECT node AS doc_id, min(label) AS cluster FROM reach GROUP BY node),
       q AS (SELECT doc_id,
           (len(list_distinct(string_split(${normTextSql("text")}, ' '))) * 1000000)
@@ -763,13 +711,10 @@ object Dedup {
         FROM comp c JOIN q ON q.doc_id = c.doc_id GROUP BY c.cluster)
       SELECT c.doc_id, c.cluster, q.q, (c.doc_id = b.keep_id) AS kept
       FROM comp c JOIN q ON q.doc_id = c.doc_id JOIN best b ON b.cluster = c.cluster
-      ORDER BY c.doc_id""".replaceFirst("WITH ", "WITH RECURSIVE ")),
+      ORDER BY c.doc_id"""),
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val pairs = DedupApi.minhashPairs(docs, "doc_id", "text",
-        threshold = 0.6, maxBucketSize = LshBucketCap)
-      val comp = DedupApi.nearDupClusters(docs.select(col("doc_id")), "doc_id", pairs)
-        .select(col("node").as("doc_id"), col("cluster"))
+      val comp = nearDupAssignment(s, d).withColumnRenamed("node", "doc_id")
       val toks = split(normText(col("text")), " ")
       val qInt = docs
         .select(col("doc_id"), toks.as("toks"))

@@ -312,7 +312,7 @@ object Pipeline {
       ffdStats(Tables.documents(s, d)
         .select(col("doc_id"),
           size(split(normText(col("text")), " ")).cast("long").as("n")),
-        FfdCapacity, FfdSalts)
+        FfdCapacity, FfdSalts).localCheckpoint(true)
     })
 
   /** The [[packFfd]] per-class fill report over ANY (doc_id, n) unit-
@@ -1048,7 +1048,7 @@ object Pipeline {
     },
     (s, d) => graft.CacheScope.withScope { implicit scope =>
       mixturePackStats(Tables.documents(s, d), "lang",
-        capacity = FfdCapacity, salts = FfdSalts)
+        capacity = FfdCapacity, salts = FfdSalts).localCheckpoint(true)
     })
 
   // ------------------------------------- composed crawl→train data card

@@ -695,28 +695,28 @@ object TextAnalysis {
     (s, d) => noveltyCurveOf(Tables.documents(s, d).select(col("doc_id"), col("text"))))
 
   /** Novelty curve over a (doc_id, text) frame — [[noveltyCurve]]. */
-  def noveltyCurveOf(docs: DataFrame): DataFrame =
-    graft.CacheScope.withScope { implicit scope =>
-      val k = DupShingleK
-      Natives.ensure(docs.sparkSession)
-      val bs = scope.persist(docs
-        .select(expr(s"doc_id div $NoveltyBatch").as("batch"),
-          explode(graft.functions.WordShingles.hashes(normText(col("text")), k)).as("h"))
-        .distinct())
-      val fb = bs.groupBy(col("h")).agg(min(col("batch")).as("fbatch"))
-      val tot = bs.groupBy(col("batch")).agg(count(lit(1)).cast("long").as("n_shingles"))
-      val nw = fb.groupBy(col("fbatch").as("batch")).agg(count(lit(1)).cast("long").as("n_new"))
-      val nd = docs.select(expr(s"doc_id div $NoveltyBatch").as("batch"))
-        .groupBy(col("batch")).agg(count(lit(1)).cast("long").as("n_docs"))
-      nd.join(broadcast(tot), Seq("batch"), "left")
-        .join(broadcast(nw), Seq("batch"), "left")
-        .selectExpr("batch", "n_docs",
-          "coalesce(n_shingles, CAST(0 AS BIGINT)) AS n_shingles",
-          "coalesce(n_new, CAST(0 AS BIGINT)) AS n_new",
-          s"""CASE WHEN coalesce(n_shingles, CAST(0 AS BIGINT)) > 0
-            THEN ${graft.Portable.round6RatioSpark("coalesce(n_new, CAST(0 AS BIGINT))", "n_shingles")} END AS novelty_rate""")
-        .orderBy(col("batch"))
-    }
+  def noveltyCurveOf(docs: DataFrame)(
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
+    val k = DupShingleK
+    Natives.ensure(docs.sparkSession)
+    val bs = scope.persist(docs
+      .select(expr(s"doc_id div $NoveltyBatch").as("batch"),
+        explode(graft.functions.WordShingles.hashes(normText(col("text")), k)).as("h"))
+      .distinct())
+    val fb = bs.groupBy(col("h")).agg(min(col("batch")).as("fbatch"))
+    val tot = bs.groupBy(col("batch")).agg(count(lit(1)).cast("long").as("n_shingles"))
+    val nw = fb.groupBy(col("fbatch").as("batch")).agg(count(lit(1)).cast("long").as("n_new"))
+    val nd = docs.select(expr(s"doc_id div $NoveltyBatch").as("batch"))
+      .groupBy(col("batch")).agg(count(lit(1)).cast("long").as("n_docs"))
+    nd.join(broadcast(tot), Seq("batch"), "left")
+      .join(broadcast(nw), Seq("batch"), "left")
+      .selectExpr("batch", "n_docs",
+        "coalesce(n_shingles, CAST(0 AS BIGINT)) AS n_shingles",
+        "coalesce(n_new, CAST(0 AS BIGINT)) AS n_new",
+        s"""CASE WHEN coalesce(n_shingles, CAST(0 AS BIGINT)) > 0
+          THEN ${graft.Portable.round6RatioSpark("coalesce(n_new, CAST(0 AS BIGINT))", "n_shingles")} END AS novelty_rate""")
+      .orderBy(col("batch"))
+  }
 
   // --------------------------------------------- boilerplate fraction
   /** A sentence is boilerplate when it appears in at least this many
@@ -755,25 +755,25 @@ object TextAnalysis {
 
   /** Sentence-level boilerplate readout over (doc_id, text) —
     * see [[boilerplateFraction]]. */
-  def boilerplateOf(docs: DataFrame): DataFrame =
-    graft.CacheScope.withScope { implicit scope =>
-      val sn = scope.persist(docs
-        .select(col("doc_id"), explode(split(col("text"), "[.!?]+")).as("s"))
-        .select(col("doc_id"), normText(col("s")).as("ns"))
-        .filter(col("ns") =!= "")
-        .select(col("doc_id"), Portable.h60(col("ns")).as("h"))
-        .distinct())
-      val hot = sn.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .filter(col("df") >= BoilerplateDf)
-        .select(col("h"), lit(1L).as("hit"))
-      sn.join(hot, Seq("h"), "left")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).cast("long").as("n_sent"),
-          sum(coalesce(col("hit"), lit(0L))).cast("long").as("n_boiler"))
-        .selectExpr("doc_id", "n_sent", "n_boiler",
-          s"${graft.Portable.round6RatioSpark("n_boiler", "n_sent")} AS boiler_fraction")
-        .orderBy(col("doc_id"))
-    }
+  def boilerplateOf(docs: DataFrame)(
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
+    val sn = scope.persist(docs
+      .select(col("doc_id"), explode(split(col("text"), "[.!?]+")).as("s"))
+      .select(col("doc_id"), normText(col("s")).as("ns"))
+      .filter(col("ns") =!= "")
+      .select(col("doc_id"), Portable.h60(col("ns")).as("h"))
+      .distinct())
+    val hot = sn.groupBy(col("h")).agg(count(lit(1)).as("df"))
+      .filter(col("df") >= BoilerplateDf)
+      .select(col("h"), lit(1L).as("hit"))
+    sn.join(hot, Seq("h"), "left")
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).cast("long").as("n_sent"),
+        sum(coalesce(col("hit"), lit(0L))).cast("long").as("n_boiler"))
+      .selectExpr("doc_id", "n_sent", "n_boiler",
+        s"${graft.Portable.round6RatioSpark("n_boiler", "n_sent")} AS boiler_fraction")
+      .orderBy(col("doc_id"))
+  }
 
   // ------------------------------------------------ span-dedup rewrite
   /** A sentence span is excised when it appears in at least this many
@@ -799,30 +799,30 @@ object TextAnalysis {
     * aggregate. The corpus text is shuffled exactly once (the
     * reassembly), which any rewrite owes; everything else carries
     * longs. */
-  def dedupSpans(docs: DataFrame, textCol: String = "text", k: Int = SpanDf): DataFrame =
-    graft.CacheScope.withScope { implicit scope =>
-      val segs = scope.persist(docs
-        .select(col("doc_id"), posexplode(split(col(textCol), "[.!?]+")).as(Seq("pos", "seg")))
-        .withColumn("ns", normText(col("seg")))
-        .filter(col("ns") =!= "")
-        .select(col("doc_id"), col("pos"), col("seg"), Portable.h60(col("ns")).as("h")))
-      val hot = segs.select(col("doc_id"), col("h")).distinct()
-        .groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .filter(col("df") >= k)
-        .select(col("h"), lit(1L).as("hit"))
-      segs.join(hot, Seq("h"), "left")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).cast("long").as("n_sent"),
-          sum(when(col("hit").isNotNull, 1L).otherwise(0L)).cast("long").as("n_dropped"),
-          // collect_list skips nulls → survivors only; array_sort on the
-          // (pos, seg) struct restores original order (collect order is
-          // shuffle-dependent — the text_keyphrases discipline)
-          array_join(
-            transform(
-              array_sort(collect_list(when(col("hit").isNull, struct(col("pos"), col("seg"))))),
-              x => x.getField("seg")),
-            ".").as("rewritten"))
-    }
+  def dedupSpans(docs: DataFrame, textCol: String = "text", k: Int = SpanDf)(
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
+    val segs = scope.persist(docs
+      .select(col("doc_id"), posexplode(split(col(textCol), "[.!?]+")).as(Seq("pos", "seg")))
+      .withColumn("ns", normText(col("seg")))
+      .filter(col("ns") =!= "")
+      .select(col("doc_id"), col("pos"), col("seg"), Portable.h60(col("ns")).as("h")))
+    val hot = segs.select(col("doc_id"), col("h")).distinct()
+      .groupBy(col("h")).agg(count(lit(1)).as("df"))
+      .filter(col("df") >= k)
+      .select(col("h"), lit(1L).as("hit"))
+    segs.join(hot, Seq("h"), "left")
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).cast("long").as("n_sent"),
+        sum(when(col("hit").isNotNull, 1L).otherwise(0L)).cast("long").as("n_dropped"),
+        // collect_list skips nulls → survivors only; array_sort on the
+        // (pos, seg) struct restores original order (collect order is
+        // shuffle-dependent — the text_keyphrases discipline)
+        array_join(
+          transform(
+            array_sort(collect_list(when(col("hit").isNull, struct(col("pos"), col("seg"))))),
+            x => x.getField("seg")),
+          ".").as("rewritten"))
+  }
 
   /** The gate's footer plant (two high-df footers: every doc / every
     * even doc) — engine-portable SQL shared by `text_dedup_spans`,

@@ -181,6 +181,53 @@ object Analytics {
       f: String, g: String, h: String, i: String): String =
     s"($a * ($e * $i - $f * $h) - $b * ($d * $i - $f * $g) + $c * ($d * $h - $e * $g))"
 
+  /** The Gram moments of (1, l_quantity, l_discount) against
+    * l_extendedprice that the regression gates solve from: each name
+    * with the product it sums, as a 6-dp DECIMAL (plain columns) or an
+    * 8-dp one (products), so the sums are merge-order-free. `syy` is
+    * taken only where a readout needs the total sum of squares. */
+  private val gramTerms: Seq[(String, String)] = Seq(
+    "s1" -> "l_quantity", "s2" -> "l_discount", "sy" -> "l_extendedprice",
+    "s11" -> "l_quantity * l_quantity", "s12" -> "l_quantity * l_discount",
+    "s22" -> "l_discount * l_discount", "s1y" -> "l_quantity * l_extendedprice",
+    "s2y" -> "l_discount * l_extendedprice", "syy" -> "l_extendedprice * l_extendedprice")
+  private def gramDecimal(t: String): (Int, Int) = if (t.contains("*")) (28, 8) else (18, 6)
+  private def gramTermsOf(yy: Boolean) = if (yy) gramTerms else gramTerms.init
+
+  /** The one-row moment aggregate `(n, s1, …)` of a lineitem frame. */
+  private def gramMoments(li: DataFrame, yy: Boolean): DataFrame = {
+    val sums = gramTermsOf(yy).map { case (name, t) =>
+      val (p, sc) = gramDecimal(t)
+      sum(expr(t).cast(DecimalType(p, sc))).cast(DoubleType).as(name)
+    }
+    li.agg(count(lit(1)).cast(DoubleType).as("n"), sums: _*)
+  }
+
+  /** Oracle twin of [[gramMoments]]: the select list of the moment row. */
+  private def gramMomentsSql(yy: Boolean): String =
+    ("CAST(count(*) AS DOUBLE) AS n" +: gramTermsOf(yy).map { case (name, t) =>
+      val (p, sc) = gramDecimal(t)
+      s"CAST(sum(CAST($t AS DECIMAL($p,$sc))) AS DOUBLE) AS $name"
+    }).mkString(",\n        ")
+
+  /** Per-fold moments `(fold, cnt, d1, …)` of a frame with a `fold`
+    * column: the [[gramTerms]] kept as exact DECIMAL sums (renamed
+    * s → d), so train and total moments can be summed from them. */
+  private def foldMoments(li: DataFrame, yy: Boolean): DataFrame = {
+    val sums = gramTermsOf(yy).map { case (name, t) =>
+      val (p, sc) = gramDecimal(t)
+      sum(expr(t).cast(DecimalType(p, sc))).as("d" + name.drop(1))
+    }
+    li.groupBy(col("fold")).agg(count(lit(1)).as("cnt"), sums: _*)
+  }
+
+  /** Oracle twin of [[foldMoments]]: its select list after `fold`. */
+  private def foldMomentsSql(yy: Boolean): String =
+    ("count(*) AS cnt" +: gramTermsOf(yy).map { case (name, t) =>
+      val (p, sc) = gramDecimal(t)
+      s"sum(CAST($t AS DECIMAL($p,$sc))) AS d${name.drop(1)}"
+    }).mkString(",\n        ")
+
   private val detA  = det3("n", "s1", "s2", "s1", "s11", "s12", "s2", "s12", "s22")
   private val detA0 = det3("sy", "s1", "s2", "s1y", "s11", "s12", "s2y", "s12", "s22")
   private val detA1 = det3("n", "sy", "s2", "s1", "s1y", "s12", "s2", "s2y", "s22")
@@ -202,16 +249,7 @@ object Analytics {
     * aggregate is also merge-order-free. */
   val linearProbe = QueryDef(
     "ml_linear_probe",
-    Some(s"""WITH m AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS s1,
-        CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) AS s2,
-        CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-        CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(28,8))) AS DOUBLE) AS s11,
-        CAST(sum(CAST(l_quantity * l_discount AS DECIMAL(28,8))) AS DOUBLE) AS s12,
-        CAST(sum(CAST(l_discount * l_discount AS DECIMAL(28,8))) AS DOUBLE) AS s22,
-        CAST(sum(CAST(l_quantity * l_extendedprice AS DECIMAL(28,8))) AS DOUBLE) AS s1y,
-        CAST(sum(CAST(l_discount * l_extendedprice AS DECIMAL(28,8))) AS DOUBLE) AS s2y,
-        CAST(sum(CAST(l_extendedprice * l_extendedprice AS DECIMAL(28,8))) AS DOUBLE) AS syy
+    Some(s"""WITH m AS (SELECT ${gramMomentsSql(yy = true)}
         FROM lineitem),
       w AS (SELECT n, sy, syy,
         $detA0 / $detA AS w0, $detA1 / $detA AS w1, $detA2 / $detA AS w2 FROM m),
@@ -227,17 +265,7 @@ object Analytics {
     (s, d) => {
       val li = Tables.fanout(Tables.lineitem(s, d)
         .select(col("l_quantity"), col("l_discount"), col("l_extendedprice")))
-      val m = li.agg(
-        count(lit(1)).cast(DoubleType).as("n"),
-        sum(col("l_quantity").cast(DecimalType(18, 6))).cast(DoubleType).as("s1"),
-        sum(col("l_discount").cast(DecimalType(18, 6))).cast(DoubleType).as("s2"),
-        sum(col("l_extendedprice").cast(DecimalType(18, 6))).cast(DoubleType).as("sy"),
-        sum((col("l_quantity") * col("l_quantity")).cast(DecimalType(28, 8))).cast(DoubleType).as("s11"),
-        sum((col("l_quantity") * col("l_discount")).cast(DecimalType(28, 8))).cast(DoubleType).as("s12"),
-        sum((col("l_discount") * col("l_discount")).cast(DecimalType(28, 8))).cast(DoubleType).as("s22"),
-        sum((col("l_quantity") * col("l_extendedprice")).cast(DecimalType(28, 8))).cast(DoubleType).as("s1y"),
-        sum((col("l_discount") * col("l_extendedprice")).cast(DecimalType(28, 8))).cast(DoubleType).as("s2y"),
-        sum((col("l_extendedprice") * col("l_extendedprice")).cast(DecimalType(28, 8))).cast(DoubleType).as("syy"))
+      val m = gramMoments(li, yy = true)
       // ONE row — eager checkpoint so the moment scan runs once, not
       // once per consumer (the residual pass and the final select)
       val w = m.selectExpr("n", "sy", "syy",
@@ -292,15 +320,7 @@ object Analytics {
         s"SELECT CAST($l AS DOUBLE) AS lambda, n, ${rdetA0(lam)} / ${rdetA(lam)} AS w0, " +
           s"${rdetA1(lam)} / ${rdetA(lam)} AS w1, ${rdetA2(lam)} / ${rdetA(lam)} AS w2 FROM m"
       }.mkString(" UNION ALL ")
-      Some(s"""WITH m AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS s1,
-        CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) AS s2,
-        CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-        CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(28,8))) AS DOUBLE) AS s11,
-        CAST(sum(CAST(l_quantity * l_discount AS DECIMAL(28,8))) AS DOUBLE) AS s12,
-        CAST(sum(CAST(l_discount * l_discount AS DECIMAL(28,8))) AS DOUBLE) AS s22,
-        CAST(sum(CAST(l_quantity * l_extendedprice AS DECIMAL(28,8))) AS DOUBLE) AS s1y,
-        CAST(sum(CAST(l_discount * l_extendedprice AS DECIMAL(28,8))) AS DOUBLE) AS s2y
+      Some(s"""WITH m AS (SELECT ${gramMomentsSql(yy = false)}
         FROM lineitem),
       w AS ($wRows),
       r AS (SELECT w.lambda, CAST(sum(CAST(round(
@@ -314,16 +334,7 @@ object Analytics {
     (s, d) => {
       val li = Tables.fanout(Tables.lineitem(s, d)
         .select(col("l_quantity"), col("l_discount"), col("l_extendedprice")))
-      val m = li.agg(
-        count(lit(1)).cast(DoubleType).as("n"),
-        sum(col("l_quantity").cast(DecimalType(18, 6))).cast(DoubleType).as("s1"),
-        sum(col("l_discount").cast(DecimalType(18, 6))).cast(DoubleType).as("s2"),
-        sum(col("l_extendedprice").cast(DecimalType(18, 6))).cast(DoubleType).as("sy"),
-        sum((col("l_quantity") * col("l_quantity")).cast(DecimalType(28, 8))).cast(DoubleType).as("s11"),
-        sum((col("l_quantity") * col("l_discount")).cast(DecimalType(28, 8))).cast(DoubleType).as("s12"),
-        sum((col("l_discount") * col("l_discount")).cast(DecimalType(28, 8))).cast(DoubleType).as("s22"),
-        sum((col("l_quantity") * col("l_extendedprice")).cast(DecimalType(28, 8))).cast(DoubleType).as("s1y"),
-        sum((col("l_discount") * col("l_extendedprice")).cast(DecimalType(28, 8))).cast(DoubleType).as("s2y"))
+      val m = gramMoments(li, yy = false)
         .localCheckpoint(true)
       // |λ| rows of weights — one Cramer select per λ on the SAME
       // moment row, unioned (metadata scale)
@@ -392,48 +403,12 @@ object Analytics {
     s.range(1).selectExpr(s"CAST($wa AS DOUBLE) AS wa",
       s"CAST($wb AS DOUBLE) AS wb", s"CAST($wc AS DOUBLE) AS wc")
 
-  /** Threshold sweep over a scored (z, y) frame — the
-    * [[mlThresholdSweep]] readout stage: 9-row logit-edge grid rides
-    * a broadcast, counts are exact integers off ONE scan. */
-  def sweepOfScores(zz: DataFrame): DataFrame = {
-    val edges = calibEdges.map(e => s"CAST($e AS DOUBLE)").mkString("array(", ", ", ")")
-    val th = zz.sparkSession.range(1, 10)
-      .selectExpr("CAST(id AS DOUBLE) / 10 AS t",
-        s"element_at($edges, CAST(id AS INT)) AS e")
-    zz.crossJoin(broadcast(th))
-      .groupBy(col("t")).agg(
-        expr("CAST(sum(CASE WHEN z > e AND y > 0.5 THEN 1 ELSE 0 END) AS BIGINT)").as("tp"),
-        expr("CAST(sum(CASE WHEN z > e AND y < 0.5 THEN 1 ELSE 0 END) AS BIGINT)").as("fp"),
-        expr("CAST(sum(CASE WHEN NOT (z > e) AND y > 0.5 THEN 1 ELSE 0 END) AS BIGINT)").as("fn"))
-      .selectExpr("t", "tp", "fp", "fn",
-        "CASE WHEN tp + fp > 0 THEN round(CAST(tp AS DOUBLE) / (tp + fp), 6) END AS prec",
-        "CASE WHEN tp + fn > 0 THEN round(CAST(tp AS DOUBLE) / (tp + fn), 6) END AS rec")
-      .orderBy(col("t"))
-  }
-
-  /** Reliability bins over a scored (z, y) frame — the
-    * [[mlCalibration]] readout stage: exp-free z-space bin edges,
-    * 12-dp DECIMAL mean prediction, exact-integer empirical rate. */
-  def calibOfScores(zz: DataFrame): DataFrame = {
-    val binExpr = calibEdges.map(e =>
-      s"(CASE WHEN z >= CAST($e AS DOUBLE) THEN 1 ELSE 0 END)").mkString(" + ")
-    zz.selectExpr(s"$binExpr AS bin",
-        "CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-z)) AS p", "y")
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("y") > 0.5, 1L).otherwise(0L)).as("pos"),
-        sum(round(col("p"), 12).cast(DecimalType(28, 12))).as("sp"))
-      .selectExpr("bin", "n", "pos", "CAST(sp AS DOUBLE) / n AS avg_pred",
-        s"${graft.Portable.round6RatioSpark("pos", "n")} AS emp_rate")
-      .orderBy(col("bin"))
-  }
-
   // ------------------- value-grain readout surface (r15, guide §2.3)
   /** (z, p, q) value-grain collapse of a scored (z, y) frame — ONE
-    * corpus pass feeding every threshold/decile/bin readout below at
+    * corpus pass feeding every threshold/decile/bin/rank readout at
     * distinct-score grain (the gate's 6-dp weight grid keeps it ~550
     * rows at ANY sf). Counts are exact BIGINTs; every readout over
-    * this frame is bit-identical to its row-grain twin: integer
+    * this frame equals its row-grain definition bit for bit: integer
     * conditional counts distribute over the collapse, and per-row
     * DECIMAL terms are constant within a z group, so cnt·term equals
     * the repeated decimal sum exactly. The z grain is the
@@ -450,9 +425,10 @@ object Analytics {
       sum(when(col("y") > 0.5, 1L).otherwise(0L)).cast(LongType).as("p"),
       sum(when(col("y") < 0.5, 1L).otherwise(0L)).cast(LongType).as("q"))
 
-  /** [[sweepOfScores]] over a (z, p, q) value-grain frame — identical
-    * exact counts (tp = Σ_v p_v·[v > e] = the row-grain conditional
-    * count), identical readout expressions. */
+  /** Threshold sweep over a (z, p, q) value-grain frame — the
+    * [[mlThresholdSweep]] readout stage: the 9-row logit-edge grid
+    * rides a broadcast, and each count is exact (tp = Σ_v p_v·[v > e]
+    * is the row-grain conditional count). */
   def sweepOfVg(vg: DataFrame): DataFrame = {
     val edges = calibEdges.map(e => s"CAST($e AS DOUBLE)").mkString("array(", ", ", ")")
     val th = vg.sparkSession.range(1, 10)
@@ -467,6 +443,21 @@ object Analytics {
         "CASE WHEN tp + fp > 0 THEN round(CAST(tp AS DOUBLE) / (tp + fp), 6) END AS prec",
         "CASE WHEN tp + fn > 0 THEN round(CAST(tp AS DOUBLE) / (tp + fn), 6) END AS rec")
       .orderBy(col("t"))
+  }
+
+  /** The decile (1–10) of margin z against edges t1 … t9. */
+  private val decileSql = "1 + " + (1 to 9).map(i => s"(CASE WHEN z > t$i THEN 1 ELSE 0 END)").mkString(" + ")
+
+  /** Oracle of the decile binning over `zz`: the exact decile edges
+    * `th`, each row's decile `binned`, and per-decile counts `dd`. */
+  private def decileCountsSql(th: String): String = {
+    val ths = (1 to 9).map(i =>
+      s"percentile_cont(0.${i}) WITHIN GROUP (ORDER BY z) AS t$i").mkString(", ")
+    s"""$th AS (SELECT $ths FROM zz),
+        binned AS (SELECT $decileSql AS decile, y FROM zz, $th),
+        dd AS (SELECT decile, count(*) AS n,
+            CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS pos
+          FROM binned GROUP BY decile)"""
   }
 
   /** Gains/lift deciles over a (z, p, q) value-grain frame — the
@@ -486,9 +477,8 @@ object Analytics {
         (1 to 9).map(i =>
           min(when(col("p") === i / 10.0, col("value"))).as(s"t$i")).tail: _*)
       .drop("g")
-    val binSum = (1 to 9).map(i => s"(CASE WHEN z > t$i THEN 1 ELSE 0 END)").mkString(" + ")
     val dd = vg.crossJoin(broadcast(th))
-      .selectExpr(s"1 + $binSum AS decile", "p", "q")
+      .selectExpr(s"$decileSql AS decile", "p", "q")
       .groupBy(col("decile"))
       .agg(sum(col("p") + col("q")).as("n"), sum(col("p")).as("pos"))
       .localCheckpoint(true) // 10 rows feed totals + cumulative
@@ -505,13 +495,13 @@ object Analytics {
       .orderBy(col("decile"))
   }
 
-  /** [[calibOfScores]] over a (z, p, q) value-grain frame: the per-row
-    * 12-dp DECIMAL prediction term is constant within a z group, so
+  /** Reliability bins over a (z, p, q) value-grain frame — the
+    * [[mlCalibration]] readout stage: exp-free z-space bin edges, the
+    * exact-integer empirical rate, and the 12-dp DECIMAL mean
+    * prediction. That per-row term is constant within a z group, so
     * cnt·round(σ(z), 12) is exactly the repeated decimal sum. */
   def calibOfVg(vg: DataFrame): DataFrame = {
-    val binExpr = calibEdges.map(e =>
-      s"(CASE WHEN z >= CAST($e AS DOUBLE) THEN 1 ELSE 0 END)").mkString(" + ")
-    vg.selectExpr(s"$binExpr AS bin",
+    vg.selectExpr(s"${calibBinSql("z")} AS bin",
         "CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-z)) AS pr", "p", "q")
       .groupBy(col("bin"))
       .agg(sum(col("p") + col("q")).as("n"),
@@ -543,34 +533,23 @@ object Analytics {
     * what the first gate run caught.) */
   lazy val mlCalibration: QueryDef = QueryDef(
     "ml_calibration",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      val binExpr = calibEdges.map(e =>
-        s"(CASE WHEN (wa + wb * x1 + wc * x2) >= CAST($e AS DOUBLE) THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        bz AS (SELECT $binExpr AS bin,
-            CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-(wa + wb * x1 + wc * x2))) AS p, y
-          FROM b, w6),
+    Some(s"""$trainedSql,
+        ${bzSql(MarginSql, "b, w6")},
         c AS (SELECT bin, count(*) AS n,
             CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS pos,
             sum(CAST(round(p, 12) AS DECIMAL(28,12))) AS sp
           FROM bz GROUP BY bin)
         SELECT bin, n, pos, CAST(sp AS DOUBLE) / n AS avg_pred,
           ${graft.Portable.round6RatioDuck("pos", "n")} AS emp_rate
-        FROM c ORDER BY bin""")
-      sb.toString
-    },
+        FROM c ORDER BY bin"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      calibOfScores(scoreWith(b, logregWeights6(b))).localCheckpoint(true)
+      calibOfVg(vgOfScores(gateScores(s, d))).localCheckpoint(true)
     })
 
   // ------------------------------------- ml_brier_decomposition
   /** Murphy decomposition of the Brier score over the calibration
     * bins — the proper-scoring-rule readout next to
-    * [[calibOfScores]]' reliability diagram: the diagram SHOWS
+    * [[calibOfVg]]'s reliability diagram: the diagram SHOWS
     * per-bin miscalibration, the decomposition prices it —
     * BS* = REL − RES + UNC, where UNC = ȳ(1−ȳ) is the task's
     * irreducible base-rate variance, RES = (1/N)·Σ_k n_k·(ȳ_k−ȳ)²
@@ -588,9 +567,7 @@ object Analytics {
     * aggregate over the scored scan; everything after runs at bin
     * grain (10 rows + one broadcast totals row). */
   def brierOfScores(zz: DataFrame): DataFrame = {
-    val binExpr = calibEdges.map(e =>
-      s"(CASE WHEN z >= CAST($e AS DOUBLE) THEN 1 ELSE 0 END)").mkString(" + ")
-    val bins = zz.selectExpr(s"$binExpr AS bin",
+    val bins = zz.selectExpr(s"${calibBinSql("z")} AS bin",
         "CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-z)) AS p", "y")
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"),
@@ -634,41 +611,18 @@ object Analytics {
     * gates. (lazy — see [[mlCalibration]].) */
   lazy val mlBrierDecomposition: QueryDef = QueryDef(
     "ml_brier_decomposition",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      val binExpr = calibEdges.map(e =>
-        s"(CASE WHEN (wa + wb * x1 + wc * x2) >= CAST($e AS DOUBLE) THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        bz AS (SELECT $binExpr AS bin,
-            CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-(wa + wb * x1 + wc * x2))) AS p, y
-          FROM b, w6),
-        c AS (SELECT bin, CAST(count(*) AS BIGINT) AS n,
-            CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS pos,
-            sum(CAST(round(p, 12) AS DECIMAL(28,12))) AS sp,
-            sum(CAST(round((p - y) * (p - y), 12) AS DECIMAL(28,12))) AS sbs
-          FROM bz GROUP BY bin),
-        t AS (SELECT CAST(sum(n) AS BIGINT) AS nt, CAST(sum(pos) AS BIGINT) AS post,
-            sum(sbs) AS sbst FROM c),
-        terms AS (SELECT nt, post, sbst,
-            CAST(round(CAST(n AS DOUBLE) * (CAST(sp AS DOUBLE) / CAST(n AS DOUBLE) - CAST(pos AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sp AS DOUBLE) / CAST(n AS DOUBLE) - CAST(pos AS DOUBLE) / CAST(n AS DOUBLE)), 12) AS DECIMAL(28,12)) AS relt,
-            CAST(round(CAST(n AS DOUBLE) * (CAST(pos AS DOUBLE) / CAST(n AS DOUBLE) - CAST(post AS DOUBLE) / CAST(nt AS DOUBLE)) * (CAST(pos AS DOUBLE) / CAST(n AS DOUBLE) - CAST(post AS DOUBLE) / CAST(nt AS DOUBLE)), 12) AS DECIMAL(28,12)) AS rest
-          FROM c, t),
-        s AS (SELECT nt, post, sbst, sum(relt) AS srel, sum(rest) AS sres
-          FROM terms GROUP BY nt, post, sbst)
+    Some(s"""$trainedSql,
+        ${bzSql(MarginSql, "b, w6")},
+        $brierCtesSql
         SELECT nt AS n, post AS pos,
           CAST(sbst AS DOUBLE) / CAST(nt AS DOUBLE) AS bs,
           (CAST(post AS DOUBLE) / CAST(nt AS DOUBLE)) * (CAST(1 AS DOUBLE) - CAST(post AS DOUBLE) / CAST(nt AS DOUBLE)) AS unc,
           CAST(srel AS DOUBLE) / CAST(nt AS DOUBLE) AS rel,
           CAST(sres AS DOUBLE) / CAST(nt AS DOUBLE) AS res,
           CAST(srel AS DOUBLE) / CAST(nt AS DOUBLE) - CAST(sres AS DOUBLE) / CAST(nt AS DOUBLE) + (CAST(post AS DOUBLE) / CAST(nt AS DOUBLE)) * (CAST(1 AS DOUBLE) - CAST(post AS DOUBLE) / CAST(nt AS DOUBLE)) AS bs_binned
-        FROM s""")
-      sb.toString
-    },
+        FROM s"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      brierOfScores(scoreWith(b, logregWeights6(b))).localCheckpoint(true)
+      brierOfScores(gateScores(s, d)).localCheckpoint(true)
     })
 
   // ------------------------------------------- pipeline_ml_readouts
@@ -688,32 +642,14 @@ object Analytics {
     * persisted margins). (lazy — see [[mlCalibration]].) */
   lazy val pipelineMlReadouts: QueryDef = QueryDef(
     "pipeline_ml_readouts",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      val edges = calibEdges.map(e => s"CAST($e AS DOUBLE)").mkString("[", ", ", "]")
-      val ths = (1 to 9).map(i =>
-        s"percentile_cont(0.${i}) WITHIN GROUP (ORDER BY z) AS t$i").mkString(", ")
-      val binSum = (1 to 9).map(i => s"(CASE WHEN z > t$i THEN 1 ELSE 0 END)").mkString(" + ")
-      val calibBins = calibEdges.map(e =>
-        s"(CASE WHEN z >= CAST($e AS DOUBLE) THEN 1 ELSE 0 END)").mkString(" + ")
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        zz AS (SELECT (wa + wb * x1 + wc * x2) AS z, y FROM b, w6),
-        th AS (SELECT CAST(i AS DOUBLE) / 10 AS t, $edges[i] AS e FROM (SELECT unnest(range(1, 10)) AS i)),
-        sw AS (SELECT th.t AS k,
-            CAST(sum(CASE WHEN z > th.e AND y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-            CAST(sum(CASE WHEN z > th.e AND y < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-            CAST(sum(CASE WHEN NOT (z > th.e) AND y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_c
-          FROM zz, th GROUP BY th.t),
+    Some(s"""$scoredSql,
+        $thresholdGridSql,
+        ${sweepCountsSql("sw", "th.t AS k", "z", "zz", "n_a", "n_b", "n_c")},
         swf AS (SELECT 'sweep' AS readout, k, n_a, n_b, n_c,
             CASE WHEN n_a + n_b > 0 THEN round(CAST(n_a AS DOUBLE) / (n_a + n_b), 6) END AS v1,
             CASE WHEN n_a + n_c > 0 THEN round(CAST(n_a AS DOUBLE) / (n_a + n_c), 6) END AS v2
           FROM sw),
-        lth AS (SELECT $ths FROM zz),
-        binned AS (SELECT 1 + $binSum AS decile, y FROM zz, lth),
-        dd AS (SELECT decile, count(*) AS n,
-            CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS pos
-          FROM binned GROUP BY decile),
+        ${decileCountsSql("lth")},
         ltot AS (SELECT CAST(sum(n) AS DOUBLE) AS tn, CAST(sum(pos) AS DOUBLE) AS tp FROM dd),
         lcum AS (SELECT decile, n, pos,
             CAST(sum(pos) OVER (ORDER BY decile DESC ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS cpos
@@ -723,8 +659,7 @@ object Analytics {
             round((CAST(c.pos AS DOUBLE) / c.n) / (ltot.tp / ltot.tn), 6) AS v1,
             round(c.cpos / ltot.tp, 6) AS v2
           FROM lcum c, ltot),
-        bz AS (SELECT $calibBins AS bin,
-            CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-z)) AS p, y FROM zz),
+        ${bzSql("z", "zz")},
         cbins AS (SELECT bin, count(*) AS n,
             CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS pos,
             sum(CAST(round(p, 12) AS DECIMAL(28,12))) AS sp
@@ -735,9 +670,7 @@ object Analytics {
             ${graft.Portable.round6RatioDuck("pos", "n")} AS v2
           FROM cbins)
         SELECT * FROM swf UNION ALL SELECT * FROM lif UNION ALL SELECT * FROM cal
-        ORDER BY readout, k""")
-      sb.toString
-    },
+        ORDER BY readout, k"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
       val b = scope.persist(mlFeatures(s, d))
       val w = logregWeights6(b)               // ONE training pass
@@ -783,18 +716,9 @@ object Analytics {
     * corpus scan past it. (lazy — see [[mlCalibration]].) */
   lazy val mlPrAuc: QueryDef = QueryDef(
     "ml_pr_auc",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      val edges = calibEdges.map(e => s"CAST($e AS DOUBLE)").mkString("[", ", ", "]")
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        zz AS (SELECT (wa + wb * x1 + wc * x2) AS z, y FROM b, w6),
-        th AS (SELECT CAST(i AS DOUBLE) / 10 AS t, $edges[i] AS e FROM (SELECT unnest(range(1, 10)) AS i)),
-        sw AS (SELECT th.t AS t,
-            CAST(sum(CASE WHEN z > th.e AND y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-            CAST(sum(CASE WHEN z > th.e AND y < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-            CAST(sum(CASE WHEN NOT (z > th.e) AND y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS fn
-          FROM zz, th GROUP BY th.t),
+    Some(s"""$scoredSql,
+        $thresholdGridSql,
+        ${sweepCountsSql("sw", "th.t AS t", "z", "zz", "tp", "fp", "fn")},
         ep AS (SELECT CAST(0 AS DOUBLE) AS t,
             CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
             CAST(sum(CASE WHEN y < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
@@ -810,16 +734,11 @@ object Analytics {
               THEN CAST(round((lrec - rec) * (lprec + prec) / 2, 12) AS DECIMAL(28,12)) END) AS DOUBLE) AS auc_pr
           FROM lg)
         SELECT su.n_points, CAST(ep.tp AS DOUBLE) / (ep.tp + ep.fp) AS base_rate, su.auc_pr
-        FROM su, ep""")
-      sb.toString
-    },
+        FROM su, ep"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      val zz = scope.persist(scoreWith(b, logregWeights6(b)))
-      val sw = sweepOfScores(zz).select(col("t"), col("tp"), col("fp"), col("fn"))
-      val ep = zz.agg(
-          sum(when(col("y") > 0.5, 1L).otherwise(0L)).cast(LongType).as("tp"),
-          sum(when(col("y") < 0.5, 1L).otherwise(0L)).cast(LongType).as("fp"))
+      val vg = scope.persist(vgOfScores(gateScores(s, d)))
+      val sw = sweepOfVg(vg).select(col("t"), col("tp"), col("fp"), col("fn"))
+      val ep = vg.agg(sum(col("p")).cast(LongType).as("tp"), sum(col("q")).cast(LongType).as("fp"))
         .selectExpr("CAST(0 AS DOUBLE) AS t", "tp", "fp", "CAST(0 AS BIGINT) AS fn")
         .localCheckpoint(true) // one row, reused for the base rate
       val pts = ep.unionAll(sw)
@@ -855,9 +774,7 @@ object Analytics {
   def rocAucOfScores(zz: DataFrame)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     import org.apache.spark.sql.functions.spark_partition_id
-    val vg = zz.groupBy(col("z")).agg(
-      sum(when(col("y") > 0.5, 1L).otherwise(0L)).cast(LongType).as("p"),
-      sum(when(col("y") < 0.5, 1L).otherwise(0L)).cast(LongType).as("q"))
+    val vg = vgOfScores(zz)
     val ranked = scope.persist(vg
       .repartitionByRange(col("z"))
       .withColumn("pid", spark_partition_id())
@@ -890,27 +807,13 @@ object Analytics {
     * gates. */
   lazy val mlRocAuc: QueryDef = QueryDef(
     "ml_roc_auc",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        zz AS (SELECT (wa + wb * x1 + wc * x2) AS z, y FROM b, w6),
-        vg AS (SELECT z, CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS p,
-            CAST(sum(CASE WHEN y < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS q
-          FROM zz GROUP BY z),
-        cum AS (SELECT z, p, q,
-            CAST(sum(q) OVER (ORDER BY z ROWS UNBOUNDED PRECEDING) AS BIGINT) AS lq FROM vg),
-        cn AS (SELECT CAST(sum(p) AS BIGINT) AS n1, CAST(sum(q) AS BIGINT) AS n0,
-            CAST(count(*) AS BIGINT) AS n_values FROM vg),
-        uu AS (SELECT CAST(sum(CAST(p AS DECIMAL(19,0)) * (2 * (lq - q) + q)) AS DECIMAL(38,0)) AS u2 FROM cum)
-        SELECT n1, n0, n_values,
-          CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)) AS auc_roc
-        FROM cn, uu""")
-      sb.toString
-    },
+    Some(s"""$scoredSql,
+        $vgSql,
+        $rocCtesSql
+        SELECT n1, n0, n_values, $aucSql AS auc_roc
+        FROM cn, uu"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      rocAucOfScores(scoreWith(b, logregWeights6(b))).localCheckpoint(true)
+      rocAucOfScores(gateScores(s, d)).localCheckpoint(true)
     })
 
   // -------------------------------------------------- C2ST drift test
@@ -940,23 +843,12 @@ object Analytics {
     "ml_c2st_drift",
     Some {
       val ySql = s"CASE WHEN CAST(l_shipdate AS DATE) >= DATE '$C2stCutDate' THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END"
-      val sb = new StringBuilder(logregCtesFor(ySql, GdRounds))
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        zz AS (SELECT (wa + wb * x1 + wc * x2) AS z, y FROM b, w6),
-        vg AS (SELECT z, CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS p,
-            CAST(sum(CASE WHEN y < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS q
-          FROM zz GROUP BY z),
-        cum AS (SELECT z, p, q,
-            CAST(sum(q) OVER (ORDER BY z ROWS UNBOUNDED PRECEDING) AS BIGINT) AS lq FROM vg),
-        cn AS (SELECT CAST(sum(p) AS BIGINT) AS n1, CAST(sum(q) AS BIGINT) AS n0,
-            CAST(count(*) AS BIGINT) AS n_values FROM vg),
-        uu AS (SELECT CAST(sum(CAST(p AS DECIMAL(19,0)) * (2 * (lq - q) + q)) AS DECIMAL(38,0)) AS u2 FROM cum)
-        SELECT n1, n0, n_values,
-          CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)) AS auc_roc,
-          CAST(CASE WHEN abs(CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)) - 0.5) > $C2stAucBand THEN 1 ELSE 0 END AS BIGINT) AS drift
-        FROM cn, uu""")
-      sb.toString
+      s"""${scoredSql(logregCtesFor(ySql, GdRounds))},
+        $vgSql,
+        $rocCtesSql
+        SELECT n1, n0, n_values, $aucSql AS auc_roc,
+          CAST(CASE WHEN abs($aucSql - 0.5) > $C2stAucBand THEN 1 ELSE 0 END AS BIGINT) AS drift
+        FROM cn, uu"""
     },
     (s, d) => graft.CacheScope.withScope { implicit scope =>
       val b = scope.persist(Tables.fanout(Tables.lineitem(s, d).selectExpr(
@@ -984,23 +876,7 @@ object Analytics {
     * exact operands once. */
   def averagePrecisionOfScores(zz: DataFrame)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
-    import org.apache.spark.sql.functions.spark_partition_id
-    val vg = zz.groupBy(col("z")).agg(
-      sum(when(col("y") > 0.5, 1L).otherwise(0L)).cast(LongType).as("p"),
-      sum(when(col("y") < 0.5, 1L).otherwise(0L)).cast(LongType).as("q"))
-    val wloc = Window.partitionBy(col("pid")).orderBy(col("z").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = scope.persist(vg
-      .repartitionByRange(col("z").desc)
-      .withColumn("pid", spark_partition_id())
-      .withColumn("lp", sum(col("p")).over(wloc))
-      .withColumn("lq", sum(col("q")).over(wloc)))
-    val wo = Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = ranked.groupBy(col("pid"))
-      .agg(max(col("lp")).as("pp"), max(col("lq")).as("pq"))
-      .select(col("pid"),
-        coalesce(sum(col("pp")).over(wo), lit(0L)).as("basep"),
-        coalesce(sum(col("pq")).over(wo), lit(0L)).as("baseq"))
+    val (ranked, offsets) = runningCounts(zz, col("z").desc)
     val nn = ranked.agg(sum(col("p")).cast(LongType).as("n1"),
       sum(col("q")).cast(LongType).as("n0"),
       count(lit(1)).cast(LongType).as("n_values")).localCheckpoint(true)
@@ -1011,6 +887,32 @@ object Analytics {
       .agg(sum(col("t")).as("ap_num")).localCheckpoint(true)
     nn.crossJoin(broadcast(ap)).selectExpr("n1", "n0", "n_values",
       "CAST(ap_num AS DOUBLE) / CAST(n1 AS DOUBLE) AS avg_precision")
+  }
+
+  /** The value grain (z, p, q) of a scored frame with its running
+    * positive/negative counts along `order` (z ascending or
+    * descending), by the two-level range-partition scan: `ranked`
+    * (persisted) carries each range partition's local cumsums
+    * `lp`/`lq`, and `offsets` each partition `pid`'s preceding totals
+    * `basep`/`baseq`, so `base + l` is the global running count — no
+    * global sort, no single-task window. */
+  private def runningCounts(zz: DataFrame, order: org.apache.spark.sql.Column)(
+      implicit scope: graft.CacheScope): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.functions.spark_partition_id
+    val wloc = Window.partitionBy(col("pid")).orderBy(order)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ranked = scope.persist(vgOfScores(zz)
+      .repartitionByRange(order)
+      .withColumn("pid", spark_partition_id())
+      .withColumn("lp", sum(col("p")).over(wloc))
+      .withColumn("lq", sum(col("q")).over(wloc)))
+    val wo = Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = ranked.groupBy(col("pid"))
+      .agg(max(col("lp")).as("pp"), max(col("lq")).as("pq"))
+      .select(col("pid"),
+        coalesce(sum(col("pp")).over(wo), lit(0L)).as("basep"),
+        coalesce(sum(col("pq")).over(wo), lit(0L)).as("baseq"))
+    (ranked, offsets)
   }
 
   /** ml_average_precision: EXACT average precision of the gate's
@@ -1024,30 +926,17 @@ object Analytics {
     * sibling gates. */
   lazy val mlAveragePrecision: QueryDef = QueryDef(
     "ml_average_precision",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        zz AS (SELECT (wa + wb * x1 + wc * x2) AS z, y FROM b, w6),
-        vg AS (SELECT z, CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS p,
-            CAST(sum(CASE WHEN y < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS q
-          FROM zz GROUP BY z),
-        cum AS (SELECT z, p, q,
-            CAST(sum(p) OVER (ORDER BY z DESC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS ctp,
-            CAST(sum(q) OVER (ORDER BY z DESC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cfp FROM vg),
+    Some(s"""$scoredSql,
+        $vgSql,
+        ${apCumSql("cum")},
         cn AS (SELECT CAST(sum(p) AS BIGINT) AS n1, CAST(sum(q) AS BIGINT) AS n0,
             CAST(count(*) AS BIGINT) AS n_values FROM vg),
-        tm AS (SELECT CAST(round(CAST(p AS DOUBLE) * CAST(ctp AS DOUBLE)
-            / CAST(ctp + cfp AS DOUBLE), 12) AS DECIMAL(28,12)) AS t FROM cum WHERE p > 0),
-        ap AS (SELECT sum(t) AS ap_num FROM tm)
+        ${apSumSql("cum", "ap")}
         SELECT n1, n0, n_values,
           CAST(ap_num AS DOUBLE) / CAST(n1 AS DOUBLE) AS avg_precision
-        FROM cn, ap""")
-      sb.toString
-    },
+        FROM cn, ap"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      averagePrecisionOfScores(scoreWith(b, logregWeights6(b))).localCheckpoint(true)
+      averagePrecisionOfScores(gateScores(s, d)).localCheckpoint(true)
     })
 
   // ------------------------------------------------- DeLong variance
@@ -1084,23 +973,7 @@ object Analytics {
     * these ascending ones (see [[apFromDelongCum]]). */
   private def delongCumScal(zz: DataFrame)(
       implicit scope: graft.CacheScope): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.spark_partition_id
-    val vg = zz.groupBy(col("z")).agg(
-      sum(when(col("y") > 0.5, 1L).otherwise(0L)).cast(LongType).as("p"),
-      sum(when(col("y") < 0.5, 1L).otherwise(0L)).cast(LongType).as("q"))
-    val wloc = Window.partitionBy(col("pid")).orderBy(col("z"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = scope.persist(vg
-      .repartitionByRange(col("z"))
-      .withColumn("pid", spark_partition_id())
-      .withColumn("lp", sum(col("p")).over(wloc))
-      .withColumn("lq", sum(col("q")).over(wloc)))
-    val wo = Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = ranked.groupBy(col("pid"))
-      .agg(max(col("lp")).as("pp"), max(col("lq")).as("pq"))
-      .select(col("pid"),
-        coalesce(sum(col("pp")).over(wo), lit(0L)).as("basep"),
-        coalesce(sum(col("pq")).over(wo), lit(0L)).as("baseq"))
+    val (ranked, offsets) = runningCounts(zz, col("z"))
     val cum = scope.persist(ranked.join(broadcast(offsets), Seq("pid"))
       .select(col("z"), col("p"), col("q"),
         (col("basep") + col("lp")).as("cp"), (col("baseq") + col("lq")).as("cq")))
@@ -1158,38 +1031,15 @@ object Analytics {
     * real). Same one-training-pass isolation as the sibling gates. */
   lazy val mlAucDelong: QueryDef = QueryDef(
     "ml_auc_delong",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        zz AS (SELECT (wa + wb * x1 + wc * x2) AS z, y FROM b, w6),
-        vg AS (SELECT z, CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS p,
-            CAST(sum(CASE WHEN y < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS q
-          FROM zz GROUP BY z),
-        cum AS (SELECT z, p, q,
-            CAST(sum(p) OVER (ORDER BY z ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cp,
-            CAST(sum(q) OVER (ORDER BY z ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cq FROM vg),
-        scal AS (SELECT CAST(sum(p) AS BIGINT) AS n1, CAST(sum(q) AS BIGINT) AS n0,
-            CAST(sum(CAST(p AS DECIMAL(19,0)) * (2 * (cq - q) + q)) AS DECIMAL(38,0)) AS u2
-          FROM cum),
-        sums AS (SELECT
-            sum(CAST(round(CAST(p AS DOUBLE) * ((CAST(2 * (cq - q) + q AS DOUBLE) / (2.0 * CAST(n0 AS DOUBLE)) - CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE))) * (CAST(2 * (cq - q) + q AS DOUBLE) / (2.0 * CAST(n0 AS DOUBLE)) - CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)))), 12) AS DECIMAL(28,12))) AS s10n,
-            sum(CAST(round(CAST(q AS DOUBLE) * ((CAST(2 * (n1 - cp) + p AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE)) - CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE))) * (CAST(2 * (n1 - cp) + p AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE)) - CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)))), 12) AS DECIMAL(28,12))) AS s01n
-          FROM cum, scal),
-        va AS (SELECT n1, n0,
-            CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)) AS auc_roc,
-            CAST(s10n AS DOUBLE) / CAST(n1 - 1 AS DOUBLE) / CAST(n1 AS DOUBLE) + CAST(s01n AS DOUBLE) / CAST(n0 - 1 AS DOUBLE) / CAST(n0 AS DOUBLE) AS var_auc
-          FROM scal, sums),
-        sev AS (SELECT n1, n0, auc_roc, sqrt(var_auc) AS se_delong FROM va)
+    Some(s"""$scoredSql,
+        $vgSql,
+        $delongCtesSql
         SELECT n1, n0, auc_roc, se_delong,
           auc_roc - 1.96 * se_delong AS ci_lo,
           auc_roc + 1.96 * se_delong AS ci_hi
-        FROM sev""")
-      sb.toString
-    },
+        FROM sev"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      delongOfScores(scoreWith(b, logregWeights6(b))).localCheckpoint(true)
+      delongOfScores(gateScores(s, d)).localCheckpoint(true)
     })
 
   // --------------------------------------------------- linear SHAP
@@ -1240,19 +1090,8 @@ object Analytics {
     * (lazy — see [[mlCalibration]].) */
   lazy val mlShapLinear: QueryDef = QueryDef(
     "ml_shap_linear",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        mo AS (SELECT CAST(count(*) AS BIGINT) AS n,
-            sum(CAST(round(x1, 12) AS DECIMAL(28,12))) AS sx1,
-            sum(CAST(round(x2, 12) AS DECIMAL(28,12))) AS sx2 FROM b),
-        mm AS (SELECT CAST(sx1 AS DOUBLE) / CAST(n AS DOUBLE) AS m1,
-            CAST(sx2 AS DOUBLE) / CAST(n AS DOUBLE) AS m2 FROM mo),
-        ag AS (SELECT
-            sum(CAST(round(abs(wb * (x1 - m1)), 12) AS DECIMAL(28,12))) AS a1,
-            sum(CAST(round(abs(wc * (x2 - m2)), 12) AS DECIMAL(28,12))) AS a2
-          FROM b, mm, w6)
+    Some(s"""$trainedSql,
+        $shapCtesSql
         SELECT 'x1' AS feature, wb AS weight,
           CAST(a1 AS DOUBLE) / CAST(n AS DOUBLE) AS mean_abs_contrib,
           CAST(a1 AS DOUBLE) / CAST(a1 + a2 AS DOUBLE) AS share
@@ -1262,9 +1101,7 @@ object Analytics {
           CAST(a2 AS DOUBLE) / CAST(n AS DOUBLE) AS mean_abs_contrib,
           CAST(a2 AS DOUBLE) / CAST(a1 + a2 AS DOUBLE) AS share
         FROM ag, mo, w6
-        ORDER BY feature""")
-      sb.toString
-    },
+        ORDER BY feature"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
       val b = scope.persist(mlFeatures(s, d))
       shapLinear(b, logregWeights6(b)).localCheckpoint(true)
@@ -1318,62 +1155,15 @@ object Analytics {
     * the persisted margins. (lazy — see [[mlCalibration]].) */
   lazy val pipelineMlScorecard: QueryDef = QueryDef(
     "pipeline_ml_scorecard",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      val binExpr = calibEdges.map(e =>
-        s"(CASE WHEN z >= CAST($e AS DOUBLE) THEN 1 ELSE 0 END)").mkString(" + ")
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        zz AS (SELECT (wa + wb * x1 + wc * x2) AS z, y FROM b, w6),
-        vg AS (SELECT z, CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS p,
-            CAST(sum(CASE WHEN y < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS q
-          FROM zz GROUP BY z),
-        cum AS (SELECT z, p, q,
-            CAST(sum(p) OVER (ORDER BY z ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cp,
-            CAST(sum(q) OVER (ORDER BY z ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cq FROM vg),
-        scal AS (SELECT CAST(sum(p) AS BIGINT) AS n1, CAST(sum(q) AS BIGINT) AS n0,
-            CAST(sum(CAST(p AS DECIMAL(19,0)) * (2 * (cq - q) + q)) AS DECIMAL(38,0)) AS u2
-          FROM cum),
-        sums AS (SELECT
-            sum(CAST(round(CAST(p AS DOUBLE) * ((CAST(2 * (cq - q) + q AS DOUBLE) / (2.0 * CAST(n0 AS DOUBLE)) - CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE))) * (CAST(2 * (cq - q) + q AS DOUBLE) / (2.0 * CAST(n0 AS DOUBLE)) - CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)))), 12) AS DECIMAL(28,12))) AS s10n,
-            sum(CAST(round(CAST(q AS DOUBLE) * ((CAST(2 * (n1 - cp) + p AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE)) - CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE))) * (CAST(2 * (n1 - cp) + p AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE)) - CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)))), 12) AS DECIMAL(28,12))) AS s01n
-          FROM cum, scal),
-        va AS (SELECT n1, n0,
-            CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)) AS auc_roc,
-            CAST(s10n AS DOUBLE) / CAST(n1 - 1 AS DOUBLE) / CAST(n1 AS DOUBLE) + CAST(s01n AS DOUBLE) / CAST(n0 - 1 AS DOUBLE) / CAST(n0 AS DOUBLE) AS var_auc
-          FROM scal, sums),
-        sev AS (SELECT n1, n0, auc_roc, sqrt(var_auc) AS se_delong FROM va),
-        cumd AS (SELECT z, p, q,
-            CAST(sum(p) OVER (ORDER BY z DESC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS ctp,
-            CAST(sum(q) OVER (ORDER BY z DESC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cfp FROM vg),
-        tm AS (SELECT CAST(round(CAST(p AS DOUBLE) * CAST(ctp AS DOUBLE)
-            / CAST(ctp + cfp AS DOUBLE), 12) AS DECIMAL(28,12)) AS t FROM cumd WHERE p > 0),
-        apx AS (SELECT sum(t) AS ap_num FROM tm),
+    Some(s"""$scoredSql,
+        $vgSql,
+        $delongCtesSql,
+        ${apCumSql("cumd")},
+        ${apSumSql("cumd", "apx")},
         apv AS (SELECT CAST(ap_num AS DOUBLE) / CAST(n1 AS DOUBLE) AS avg_precision FROM apx, scal),
-        bz AS (SELECT $binExpr AS bin,
-            CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-z)) AS p, y FROM zz),
-        c AS (SELECT bin, CAST(count(*) AS BIGINT) AS n,
-            CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS pos,
-            sum(CAST(round(p, 12) AS DECIMAL(28,12))) AS sp,
-            sum(CAST(round((p - y) * (p - y), 12) AS DECIMAL(28,12))) AS sbs
-          FROM bz GROUP BY bin),
-        t AS (SELECT CAST(sum(n) AS BIGINT) AS nt, CAST(sum(pos) AS BIGINT) AS post,
-            sum(sbs) AS sbst FROM c),
-        terms AS (SELECT nt, post, sbst,
-            CAST(round(CAST(n AS DOUBLE) * (CAST(sp AS DOUBLE) / CAST(n AS DOUBLE) - CAST(pos AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sp AS DOUBLE) / CAST(n AS DOUBLE) - CAST(pos AS DOUBLE) / CAST(n AS DOUBLE)), 12) AS DECIMAL(28,12)) AS relt,
-            CAST(round(CAST(n AS DOUBLE) * (CAST(pos AS DOUBLE) / CAST(n AS DOUBLE) - CAST(post AS DOUBLE) / CAST(nt AS DOUBLE)) * (CAST(pos AS DOUBLE) / CAST(n AS DOUBLE) - CAST(post AS DOUBLE) / CAST(nt AS DOUBLE)), 12) AS DECIMAL(28,12)) AS rest
-          FROM c, t),
-        s AS (SELECT nt, post, sbst, sum(relt) AS srel, sum(rest) AS sres
-          FROM terms GROUP BY nt, post, sbst),
-        mo AS (SELECT CAST(count(*) AS BIGINT) AS n,
-            sum(CAST(round(x1, 12) AS DECIMAL(28,12))) AS sx1,
-            sum(CAST(round(x2, 12) AS DECIMAL(28,12))) AS sx2 FROM b),
-        mm AS (SELECT CAST(sx1 AS DOUBLE) / CAST(n AS DOUBLE) AS m1,
-            CAST(sx2 AS DOUBLE) / CAST(n AS DOUBLE) AS m2 FROM mo),
-        ag AS (SELECT
-            sum(CAST(round(abs(wb * (x1 - m1)), 12) AS DECIMAL(28,12))) AS a1,
-            sum(CAST(round(abs(wc * (x2 - m2)), 12) AS DECIMAL(28,12))) AS a2
-          FROM b, mm, w6)
+        ${bzSql("z", "zz")},
+        $brierCtesSql,
+        $shapCtesSql
         SELECT metric, value FROM (
           SELECT 'n1' AS metric, CAST(n1 AS DOUBLE) AS value FROM scal
           UNION ALL SELECT 'n0', CAST(n0 AS DOUBLE) FROM scal
@@ -1388,9 +1178,7 @@ object Analytics {
           UNION ALL SELECT 'brier_res', CAST(sres AS DOUBLE) / CAST(nt AS DOUBLE) FROM s
           UNION ALL SELECT 'shap_share_x1', CAST(a1 AS DOUBLE) / CAST(a1 + a2 AS DOUBLE) FROM ag
           UNION ALL SELECT 'shap_share_x2', CAST(a2 AS DOUBLE) / CAST(a1 + a2 AS DOUBLE) FROM ag
-        ) ORDER BY metric""")
-      sb.toString
-    },
+        ) ORDER BY metric"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
       val b = scope.persist(mlFeatures(s, d))
       scorecardOfScores(b, logregWeights6(b)).localCheckpoint(true)
@@ -1417,6 +1205,46 @@ object Analytics {
     "CASE WHEN n01 + n10 > 0 THEN CAST(CAST(abs(n01 - n10) - 1 AS DECIMAL(19,0)) * (abs(n01 - n10) - 1) AS DOUBLE) / CAST(n01 + n10 AS DOUBLE) END AS mcnemar_stat",
     "CAST(CASE WHEN n01 + n10 > 0 AND CAST(CAST(abs(n01 - n10) - 1 AS DECIMAL(19,0)) * (abs(n01 - n10) - 1) AS DOUBLE) / CAST(n01 + n10 AS DOUBLE) > 3.841 THEN 1 ELSE 0 END AS BIGINT) AS significant")
 
+  /** The paired-comparison gates score models off ONE training chain:
+    * model i (0, 1, 2 → za, zb, zc) is the 6-dp weights after
+    * GdRounds − i rounds, columns suffixed with that round count. */
+  private def pairedMargin(i: Int): String = {
+    val r = GdRounds - i
+    s"(wa$r + wb$r * x1 + wc$r * x2)"
+  }
+
+  /** The (za, zb(, zc), y) margins of the first `models` chain prefixes
+    * over a feature frame `b`. */
+  private def pairedScores(b: DataFrame, models: Int): DataFrame = {
+    val chain = logregWeightsChain(b)
+    (0 until models).map { i =>
+      val r = GdRounds - i
+      round6(chain(r)).selectExpr(s"wa AS wa$r", s"wb AS wb$r", s"wc AS wc$r")
+    }.foldLeft(b)((acc, w) => acc.crossJoin(broadcast(w)))
+      .selectExpr((0 until models).map(i => s"${pairedMargin(i)} AS z${"abc"(i)}") :+ "y": _*)
+  }
+
+  /** Oracle twin of [[pairedScores]]' weights: `w6a`, `w6b`(, `w6c`). */
+  private def pairedW6Sql(models: Int): String = (0 until models).map { i =>
+    val r = GdRounds - i
+    s"w6${"abc"(i)} AS (SELECT round(wa, 6) AS wa$r, round(wb, 6) AS wb$r, round(wc, 6) AS wc$r FROM w$r)"
+  }.mkString(",\n        ")
+  private def pairedFromSql(models: Int): String =
+    ("b" +: (0 until models).map(i => s"w6${"abc"(i)}")).mkString(", ")
+
+  /** Oracle twin of [[pairedScores]]: the weights and `zz`, with or
+    * without the label column. */
+  private def pairedZzSql(models: Int, y: Boolean): String = {
+    val zs = (0 until models).map(i => s"${pairedMargin(i)} AS z${"abc"(i)}")
+    s"""${pairedW6Sql(models)},
+        zz AS (SELECT ${(if (y) zs :+ "y" else zs).mkString(",\n            ")} FROM ${pairedFromSql(models)})"""
+  }
+
+  /** 1 when margin `z` decides row y correctly, else 0. */
+  private def correctSql(z: String): String = s"(CASE WHEN (($z > 0) = (y > 0.5)) THEN 1 ELSE 0 END)"
+  /** How many of (za, zb, zc) decide the row correctly. */
+  private def nCorrectSql: String = s"(${correctSql("za")} + ${correctSql("zb")} + ${correctSql("zc")})"
+
   def mcnemarOfScores(zz: DataFrame): DataFrame =
     zz.agg(
         count(lit(1)).cast(LongType).as("n_pairs"),
@@ -1438,13 +1266,8 @@ object Analytics {
     * sibling gates. (lazy — see [[mlCalibration]].) */
   lazy val mlMcnemarTest: QueryDef = QueryDef(
     "ml_mcnemar_test",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      sb.append(s""",
-        w6a AS (SELECT round(wa, 6) AS wa3, round(wb, 6) AS wb3, round(wc, 6) AS wc3 FROM w$GdRounds),
-        w6b AS (SELECT round(wa, 6) AS wa2, round(wb, 6) AS wb2, round(wc, 6) AS wc2 FROM w${GdRounds - 1}),
-        zz AS (SELECT (wa3 + wb3 * x1 + wc3 * x2) AS za,
-            (wa2 + wb2 * x1 + wc2 * x2) AS zb, y FROM b, w6a, w6b),
+    Some(s"""${logregCtes(GdRounds)},
+        ${pairedZzSql(2, y = true)},
         cc AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs,
             CAST(sum(CASE WHEN ((za > 0) = (y > 0.5)) THEN 1 ELSE 0 END) AS BIGINT) AS n_correct_a,
             CAST(sum(CASE WHEN ((zb > 0) = (y > 0.5)) THEN 1 ELSE 0 END) AS BIGINT) AS n_correct_b,
@@ -1454,20 +1277,9 @@ object Analytics {
         SELECT n_pairs, n_correct_a, n_correct_b, n01, n10,
           CASE WHEN n01 + n10 > 0 THEN CAST(CAST(abs(n01 - n10) - 1 AS DECIMAL(19,0)) * (abs(n01 - n10) - 1) AS DOUBLE) / CAST(n01 + n10 AS DOUBLE) END AS mcnemar_stat,
           CAST(CASE WHEN n01 + n10 > 0 AND CAST(CAST(abs(n01 - n10) - 1 AS DECIMAL(19,0)) * (abs(n01 - n10) - 1) AS DOUBLE) / CAST(n01 + n10 AS DOUBLE) > 3.841 THEN 1 ELSE 0 END AS BIGINT) AS significant
-        FROM cc""")
-      sb.toString
-    },
+        FROM cc"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      // ONE training chain: w3 and w2 are prefixes of the same run
-      val chain = logregWeightsChain(b)
-      val wA = round6(chain(GdRounds))
-        .selectExpr("wa AS wa3", "wb AS wb3", "wc AS wc3")
-      val wB = round6(chain(GdRounds - 1))
-        .selectExpr("wa AS wa2", "wb AS wb2", "wc AS wc2")
-      mcnemarOfScores(b.crossJoin(broadcast(wA)).crossJoin(broadcast(wB))
-        .selectExpr("(wa3 + wb3 * x1 + wc3 * x2) AS za",
-          "(wa2 + wb2 * x1 + wc2 * x2) AS zb", "y")).localCheckpoint(true)
+      mcnemarOfScores(pairedScores(scope.persist(mlFeatures(s, d)), 2)).localCheckpoint(true)
     })
 
   // ------------------------------------------------- Cohen's kappa
@@ -1486,6 +1298,14 @@ object Analytics {
     s"""CASE WHEN $kappaNSq <> $kappaPeNum
        THEN CAST(CAST(n_pairs AS DECIMAL(19,0)) * (n11 + n00) - $kappaPeNum AS DOUBLE)
           / CAST($kappaNSq - $kappaPeNum AS DOUBLE) END AS kappa""")
+
+  /** Oracle twin of [[kappaOfScores]]' 2×2 contingency counts. */
+  private val kappaCountsSql =
+    """CAST(count(*) AS BIGINT) AS n_pairs,
+            CAST(sum(CASE WHEN za > 0 AND zb > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n11,
+            CAST(sum(CASE WHEN za > 0 AND NOT (zb > 0) THEN 1 ELSE 0 END) AS BIGINT) AS n10,
+            CAST(sum(CASE WHEN NOT (za > 0) AND zb > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n01,
+            CAST(sum(CASE WHEN NOT (za > 0) AND NOT (zb > 0) THEN 1 ELSE 0 END) AS BIGINT) AS n00"""
 
   /** Cohen's kappa over two scored margin columns (za, zb) — the
     * chance-corrected AGREEMENT between two classifiers' decisions,
@@ -1513,35 +1333,14 @@ object Analytics {
     * unrolled training chain). (lazy — see [[mlCalibration]].) */
   lazy val mlCohensKappa: QueryDef = QueryDef(
     "ml_cohens_kappa",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      sb.append(s""",
-        w6a AS (SELECT round(wa, 6) AS wa3, round(wb, 6) AS wb3, round(wc, 6) AS wc3 FROM w$GdRounds),
-        w6b AS (SELECT round(wa, 6) AS wa2, round(wb, 6) AS wb2, round(wc, 6) AS wc2 FROM w${GdRounds - 1}),
-        zz AS (SELECT (wa3 + wb3 * x1 + wc3 * x2) AS za,
-            (wa2 + wb2 * x1 + wc2 * x2) AS zb FROM b, w6a, w6b),
-        cc AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-            CAST(sum(CASE WHEN za > 0 AND zb > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n11,
-            CAST(sum(CASE WHEN za > 0 AND NOT (zb > 0) THEN 1 ELSE 0 END) AS BIGINT) AS n10,
-            CAST(sum(CASE WHEN NOT (za > 0) AND zb > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n01,
-            CAST(sum(CASE WHEN NOT (za > 0) AND NOT (zb > 0) THEN 1 ELSE 0 END) AS BIGINT) AS n00
-          FROM zz)
+    Some(s"""${logregCtes(GdRounds)},
+        ${pairedZzSql(2, y = false)},
+        cc AS (SELECT $kappaCountsSql FROM zz)
         SELECT n_pairs, n11, n10, n01, n00,
           ${kappaReadoutSql.mkString(",\n          ")}
-        FROM cc""")
-      sb.toString
-    },
+        FROM cc"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      // ONE training chain: w3 and w2 are prefixes of the same run
-      val chain = logregWeightsChain(b)
-      val wA = round6(chain(GdRounds))
-        .selectExpr("wa AS wa3", "wb AS wb3", "wc AS wc3")
-      val wB = round6(chain(GdRounds - 1))
-        .selectExpr("wa AS wa2", "wb AS wb2", "wc AS wc2")
-      kappaOfScores(b.crossJoin(broadcast(wA)).crossJoin(broadcast(wB))
-        .selectExpr("(wa3 + wb3 * x1 + wc3 * x2) AS za",
-          "(wa2 + wb2 * x1 + wc2 * x2) AS zb")).localCheckpoint(true)
+      kappaOfScores(pairedScores(scope.persist(mlFeatures(s, d)), 2)).localCheckpoint(true)
     })
 
   // --------------------------------------------------- Cochran's Q
@@ -1560,6 +1359,15 @@ object Analytics {
     s"CASE WHEN $cochranDen > 0 THEN CAST($cochranNum AS DOUBLE) / CAST($cochranDen AS DOUBLE) END AS q_stat",
     s"CAST(CASE WHEN $cochranDen > 0 AND CAST($cochranNum AS DOUBLE) / CAST($cochranDen AS DOUBLE) > 5.991 THEN 1 ELSE 0 END AS BIGINT) AS significant")
 
+  /** Oracle twin of [[cochranQOfScores]]' counts over (za, zb, zc, y). */
+  private def cochranCountsSql: String =
+    s"""CAST(count(*) AS BIGINT) AS n_rows,
+            CAST(sum(${correctSql("za")}) AS BIGINT) AS ga,
+            CAST(sum(${correctSql("zb")}) AS BIGINT) AS gb,
+            CAST(sum(${correctSql("zc")}) AS BIGINT) AS gc,
+            CAST(sum($nCorrectSql) AS BIGINT) AS sum_l,
+            CAST(sum($nCorrectSql * $nCorrectSql) AS BIGINT) AS sum_l2"""
+
   /** Cochran's Q over THREE scored margin columns (za, zb, zc) and the
     * shared outcome y — [[mcnemarOfScores]] generalized from 2 paired
     * classifiers to k = 3 (Cochran 1950; the omnibus "do ANY of these
@@ -1570,15 +1378,13 @@ object Analytics {
     * 3.841 discipline). NULL — not 0 — when every row is decided
     * identically by all three (3T = ΣL², zero discordance). */
   def cochranQOfScores(zz: DataFrame): DataFrame = {
-    def c(z: String) = s"(CASE WHEN (($z > 0) = (y > 0.5)) THEN 1 ELSE 0 END)"
-    val l = s"(${c("za")} + ${c("zb")} + ${c("zc")})"
     zz.agg(
         count(lit(1)).cast(LongType).as("n_rows"),
-        sum(expr(c("za"))).cast(LongType).as("ga"),
-        sum(expr(c("zb"))).cast(LongType).as("gb"),
-        sum(expr(c("zc"))).cast(LongType).as("gc"),
-        sum(expr(l)).cast(LongType).as("sum_l"),
-        sum(expr(s"$l * $l")).cast(LongType).as("sum_l2"))
+        sum(expr(correctSql("za"))).cast(LongType).as("ga"),
+        sum(expr(correctSql("zb"))).cast(LongType).as("gb"),
+        sum(expr(correctSql("zc"))).cast(LongType).as("gc"),
+        sum(expr(nCorrectSql)).cast(LongType).as("sum_l"),
+        sum(expr(s"$nCorrectSql * $nCorrectSql")).cast(LongType).as("sum_l2"))
       .selectExpr("n_rows" +: "ga" +: "gb" +: "gc" +: "sum_l" +: "sum_l2" +:
         cochranReadoutSql: _*)
   }
@@ -1591,44 +1397,14 @@ object Analytics {
     * (lazy — see [[mlCalibration]].) */
   lazy val mlCochranQ: QueryDef = QueryDef(
     "ml_cochran_q",
-    Some {
-      def c(z: String) = s"(CASE WHEN (($z > 0) = (y > 0.5)) THEN 1 ELSE 0 END)"
-      val l = s"(${c("za")} + ${c("zb")} + ${c("zc")})"
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      sb.append(s""",
-        w6a AS (SELECT round(wa, 6) AS wa3, round(wb, 6) AS wb3, round(wc, 6) AS wc3 FROM w$GdRounds),
-        w6b AS (SELECT round(wa, 6) AS wa2, round(wb, 6) AS wb2, round(wc, 6) AS wc2 FROM w${GdRounds - 1}),
-        w6c AS (SELECT round(wa, 6) AS wa1, round(wb, 6) AS wb1, round(wc, 6) AS wc1 FROM w${GdRounds - 2}),
-        zz AS (SELECT (wa3 + wb3 * x1 + wc3 * x2) AS za,
-            (wa2 + wb2 * x1 + wc2 * x2) AS zb,
-            (wa1 + wb1 * x1 + wc1 * x2) AS zc, y FROM b, w6a, w6b, w6c),
-        cc AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-            CAST(sum(${c("za")}) AS BIGINT) AS ga,
-            CAST(sum(${c("zb")}) AS BIGINT) AS gb,
-            CAST(sum(${c("zc")}) AS BIGINT) AS gc,
-            CAST(sum($l) AS BIGINT) AS sum_l,
-            CAST(sum($l * $l) AS BIGINT) AS sum_l2
-          FROM zz)
+    Some(s"""${logregCtes(GdRounds)},
+        ${pairedZzSql(3, y = true)},
+        cc AS (SELECT $cochranCountsSql FROM zz)
         SELECT n_rows, ga, gb, gc, sum_l, sum_l2,
           ${cochranReadoutSql.mkString(",\n          ")}
-        FROM cc""")
-      sb.toString
-    },
+        FROM cc"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      // ONE training chain: w3, w2, w1 are prefixes of the same run
-      val chain = logregWeightsChain(b)
-      val wA = round6(chain(GdRounds))
-        .selectExpr("wa AS wa3", "wb AS wb3", "wc AS wc3")
-      val wB = round6(chain(GdRounds - 1))
-        .selectExpr("wa AS wa2", "wb AS wb2", "wc AS wc2")
-      val wC = round6(chain(GdRounds - 2))
-        .selectExpr("wa AS wa1", "wb AS wb1", "wc AS wc1")
-      cochranQOfScores(b.crossJoin(broadcast(wA)).crossJoin(broadcast(wB))
-        .crossJoin(broadcast(wC))
-        .selectExpr("(wa3 + wb3 * x1 + wc3 * x2) AS za",
-          "(wa2 + wb2 * x1 + wc2 * x2) AS zb",
-          "(wa1 + wb1 * x1 + wc1 * x2) AS zc", "y")).localCheckpoint(true)
+      cochranQOfScores(pairedScores(scope.persist(mlFeatures(s, d)), 3)).localCheckpoint(true)
     })
 
   // --------------------------------------------- Spearman correlation
@@ -1669,6 +1445,33 @@ object Analytics {
       .selectExpr(c,
         s"CAST(2 * (base + lc - cnt) + cnt + 1 AS DOUBLE) / (2.0 * CAST(nt AS DOUBLE)) AS $out"),
       keys)
+  }
+
+  /** Oracle twin of [[fracRanks]] over `zz`: the value-grain counts
+    * `g` of column `c` and their normalized midranks `${out}r(c, out)`. */
+  private def rankCteSql(c: String, out: String, g: String): String =
+    s"""$g AS (SELECT $c, CAST(count(*) AS BIGINT) AS cnt FROM zz GROUP BY $c),
+        ${out}r AS (SELECT $c, CAST(2 * (CAST(sum(cnt) OVER (ORDER BY $c ROWS UNBOUNDED PRECEDING) AS BIGINT) - cnt) + cnt + 1 AS DOUBLE)
+            / (2.0 * CAST((SELECT sum(cnt) FROM $g) AS DOUBLE)) AS $out
+          FROM $g)"""
+
+  /** Oracle: the 12-dp moment sums of the joined midranks (u, v). */
+  private val spearmanMomentsSql =
+    """SELECT CAST(count(*) AS BIGINT) AS n,
+            sum(CAST(round(u, 12) AS DECIMAL(28,12))) AS su,
+            sum(CAST(round(v, 12) AS DECIMAL(28,12))) AS sv,
+            sum(CAST(round(u * v, 12) AS DECIMAL(28,12))) AS suv,
+            sum(CAST(round(u * u, 12) AS DECIMAL(28,12))) AS su2,
+            sum(CAST(round(v * v, 12) AS DECIMAL(28,12))) AS sv2
+          FROM zz JOIN ur ON zz.za = ur.za JOIN vr ON zz.zb = vr.zb"""
+
+  /** Spearman's ρ over the moment sums; NULL when either column is
+    * constant. The same string in both engines. */
+  private val spearmanRhoSql = {
+    val covN = "(CAST(n AS DOUBLE) * CAST(suv AS DOUBLE) - CAST(su AS DOUBLE) * CAST(sv AS DOUBLE))"
+    val varU = "(CAST(n AS DOUBLE) * CAST(su2 AS DOUBLE) - CAST(su AS DOUBLE) * CAST(su AS DOUBLE))"
+    val varV = "(CAST(n AS DOUBLE) * CAST(sv2 AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE))"
+    s"CASE WHEN $varU > 0 AND $varV > 0 THEN $covN / sqrt($varU * $varV) END"
   }
 
   /** Default broadcast ceiling for value-grain rank maps: 10⁶ keys ×
@@ -1721,11 +1524,7 @@ object Analytics {
       .agg(count(lit(1)).cast(LongType).as("n"),
         dsum("u", "su"), dsum("v", "sv"), dsum("u * v", "suv"),
         dsum("u * u", "su2"), dsum("v * v", "sv2"))
-    val covN = "(CAST(n AS DOUBLE) * CAST(suv AS DOUBLE) - CAST(su AS DOUBLE) * CAST(sv AS DOUBLE))"
-    val varU = "(CAST(n AS DOUBLE) * CAST(su2 AS DOUBLE) - CAST(su AS DOUBLE) * CAST(su AS DOUBLE))"
-    val varV = "(CAST(n AS DOUBLE) * CAST(sv2 AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE))"
-    m.selectExpr("n",
-      s"CASE WHEN $varU > 0 AND $varV > 0 THEN $covN / sqrt($varU * $varV) END AS rho")
+    m.selectExpr("n", s"$spearmanRhoSql AS rho")
   }
 
   /** ml_spearman_corr: Spearman ρ between the gate's 3-round and
@@ -1734,47 +1533,14 @@ object Analytics {
     * [[mlCalibration]].) */
   lazy val mlSpearmanCorr: QueryDef = QueryDef(
     "ml_spearman_corr",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      def rankCte(src: String, c: String, out: String) =
-        s"""${out}g AS (SELECT $c, CAST(count(*) AS BIGINT) AS cnt FROM $src GROUP BY $c),
-        ${out}r AS (SELECT $c, CAST(2 * (CAST(sum(cnt) OVER (ORDER BY $c ROWS UNBOUNDED PRECEDING) AS BIGINT) - cnt) + cnt + 1 AS DOUBLE)
-            / (2.0 * CAST((SELECT sum(cnt) FROM ${out}g) AS DOUBLE)) AS $out
-          FROM ${out}g)"""
-      sb.append(s""",
-        w6a AS (SELECT round(wa, 6) AS wa3, round(wb, 6) AS wb3, round(wc, 6) AS wc3 FROM w$GdRounds),
-        w6b AS (SELECT round(wa, 6) AS wa2, round(wb, 6) AS wb2, round(wc, 6) AS wc2 FROM w${GdRounds - 1}),
-        zz AS (SELECT (wa3 + wb3 * x1 + wc3 * x2) AS za,
-            (wa2 + wb2 * x1 + wc2 * x2) AS zb FROM b, w6a, w6b),
-        ${rankCte("zz", "za", "u")},
-        ${rankCte("zz", "zb", "v")},
-        m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-            sum(CAST(round(u, 12) AS DECIMAL(28,12))) AS su,
-            sum(CAST(round(v, 12) AS DECIMAL(28,12))) AS sv,
-            sum(CAST(round(u * v, 12) AS DECIMAL(28,12))) AS suv,
-            sum(CAST(round(u * u, 12) AS DECIMAL(28,12))) AS su2,
-            sum(CAST(round(v * v, 12) AS DECIMAL(28,12))) AS sv2
-          FROM zz JOIN ur ON zz.za = ur.za JOIN vr ON zz.zb = vr.zb)
-        SELECT n,
-          CASE WHEN (CAST(n AS DOUBLE) * CAST(su2 AS DOUBLE) - CAST(su AS DOUBLE) * CAST(su AS DOUBLE)) > 0
-                AND (CAST(n AS DOUBLE) * CAST(sv2 AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE)) > 0
-            THEN (CAST(n AS DOUBLE) * CAST(suv AS DOUBLE) - CAST(su AS DOUBLE) * CAST(sv AS DOUBLE))
-               / sqrt((CAST(n AS DOUBLE) * CAST(su2 AS DOUBLE) - CAST(su AS DOUBLE) * CAST(su AS DOUBLE))
-                    * (CAST(n AS DOUBLE) * CAST(sv2 AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE))) END AS rho
-        FROM m""")
-      sb.toString
-    },
+    Some(s"""${logregCtes(GdRounds)},
+        ${pairedZzSql(2, y = false)},
+        ${rankCteSql("za", "u", "ug")},
+        ${rankCteSql("zb", "v", "vg")},
+        m AS ($spearmanMomentsSql)
+        SELECT n, $spearmanRhoSql AS rho FROM m"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      // ONE training chain: w3 and w2 are prefixes of the same run
-      val chain = logregWeightsChain(b)
-      val wA = round6(chain(GdRounds))
-        .selectExpr("wa AS wa3", "wb AS wb3", "wc AS wc3")
-      val wB = round6(chain(GdRounds - 1))
-        .selectExpr("wa AS wa2", "wb AS wb2", "wc AS wc2")
-      spearmanOfScores(b.crossJoin(broadcast(wA)).crossJoin(broadcast(wB))
-        .selectExpr("(wa3 + wb3 * x1 + wc3 * x2) AS za",
-          "(wa2 + wb2 * x1 + wc2 * x2) AS zb")).localCheckpoint(true)
+      spearmanOfScores(pairedScores(scope.persist(mlFeatures(s, d)), 2)).localCheckpoint(true)
     })
 
   /** ml_spearman_shuffle (r13): [[spearmanOfScores]] over CONTINUOUS
@@ -1792,31 +1558,12 @@ object Analytics {
     * midranks, 12-dp DECIMAL moment sums, one IEEE tree. */
   lazy val mlSpearmanShuffle: QueryDef = QueryDef(
     "ml_spearman_shuffle",
-    Some {
-      def rankCte(c: String, out: String) =
-        s"""${out}g AS (SELECT $c, CAST(count(*) AS BIGINT) AS cnt FROM zz GROUP BY $c),
-        ${out}r AS (SELECT $c, CAST(2 * (CAST(sum(cnt) OVER (ORDER BY $c ROWS UNBOUNDED PRECEDING) AS BIGINT) - cnt) + cnt + 1 AS DOUBLE)
-            / (2.0 * CAST((SELECT sum(cnt) FROM ${out}g) AS DOUBLE)) AS $out
-          FROM ${out}g)"""
-      s"""WITH zz AS (SELECT (l_quantity * l_extendedprice - l_discount) AS za,
+    Some(s"""WITH zz AS (SELECT (l_quantity * l_extendedprice - l_discount) AS za,
             (l_extendedprice * (1 - l_discount) + l_quantity) AS zb FROM lineitem),
-        ${rankCte("za", "u")},
-        ${rankCte("zb", "v")},
-        m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-            sum(CAST(round(u, 12) AS DECIMAL(28,12))) AS su,
-            sum(CAST(round(v, 12) AS DECIMAL(28,12))) AS sv,
-            sum(CAST(round(u * v, 12) AS DECIMAL(28,12))) AS suv,
-            sum(CAST(round(u * u, 12) AS DECIMAL(28,12))) AS su2,
-            sum(CAST(round(v * v, 12) AS DECIMAL(28,12))) AS sv2
-          FROM zz JOIN ur ON zz.za = ur.za JOIN vr ON zz.zb = vr.zb)
-        SELECT n,
-          CASE WHEN (CAST(n AS DOUBLE) * CAST(su2 AS DOUBLE) - CAST(su AS DOUBLE) * CAST(su AS DOUBLE)) > 0
-                AND (CAST(n AS DOUBLE) * CAST(sv2 AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE)) > 0
-            THEN (CAST(n AS DOUBLE) * CAST(suv AS DOUBLE) - CAST(su AS DOUBLE) * CAST(sv AS DOUBLE))
-               / sqrt((CAST(n AS DOUBLE) * CAST(su2 AS DOUBLE) - CAST(su AS DOUBLE) * CAST(su AS DOUBLE))
-                    * (CAST(n AS DOUBLE) * CAST(sv2 AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE))) END AS rho
-        FROM m"""
-    },
+        ${rankCteSql("za", "u", "ug")},
+        ${rankCteSql("zb", "v", "vg")},
+        m AS ($spearmanMomentsSql)
+        SELECT n, $spearmanRhoSql AS rho FROM m"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
       spearmanOfScores(Tables.fanout(Tables.lineitem(s, d)
         .selectExpr("(l_quantity * l_extendedprice - l_discount) AS za",
@@ -1842,17 +1589,8 @@ object Analytics {
     * SAME expression tree as its single. */
   lazy val pipelineModelCompare: QueryDef = QueryDef(
     "pipeline_model_compare",
-    Some {
-      def c(z: String) = s"(CASE WHEN (($z > 0) = (y > 0.5)) THEN 1 ELSE 0 END)"
-      val l = s"(${c("za")} + ${c("zb")} + ${c("zc")})"
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      sb.append(s""",
-        w6a AS (SELECT round(wa, 6) AS wa3, round(wb, 6) AS wb3, round(wc, 6) AS wc3 FROM w$GdRounds),
-        w6b AS (SELECT round(wa, 6) AS wa2, round(wb, 6) AS wb2, round(wc, 6) AS wc2 FROM w${GdRounds - 1}),
-        w6c AS (SELECT round(wa, 6) AS wa1, round(wb, 6) AS wb1, round(wc, 6) AS wc1 FROM w${GdRounds - 2}),
-        zz AS (SELECT (wa3 + wb3 * x1 + wc3 * x2) AS za,
-            (wa2 + wb2 * x1 + wc2 * x2) AS zb,
-            (wa1 + wb1 * x1 + wc1 * x2) AS zc, y FROM b, w6a, w6b, w6c),
+    Some(s"""${logregCtes(GdRounds)},
+        ${pairedZzSql(3, y = true)},
         mcc AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs,
             CAST(sum(CASE WHEN NOT ((za > 0) = (y > 0.5)) AND ((zb > 0) = (y > 0.5)) THEN 1 ELSE 0 END) AS BIGINT) AS n01,
             CAST(sum(CASE WHEN ((za > 0) = (y > 0.5)) AND NOT ((zb > 0) = (y > 0.5)) THEN 1 ELSE 0 END) AS BIGINT) AS n10
@@ -1860,54 +1598,16 @@ object Analytics {
         mcs AS (SELECT n_pairs,
             CASE WHEN n01 + n10 > 0 THEN CAST(CAST(abs(n01 - n10) - 1 AS DECIMAL(19,0)) * (abs(n01 - n10) - 1) AS DOUBLE) / CAST(n01 + n10 AS DOUBLE) END AS mcnemar_stat
           FROM mcc),
-        kcc AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-            CAST(sum(CASE WHEN za > 0 AND zb > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n11,
-            CAST(sum(CASE WHEN za > 0 AND NOT (zb > 0) THEN 1 ELSE 0 END) AS BIGINT) AS n10,
-            CAST(sum(CASE WHEN NOT (za > 0) AND zb > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n01,
-            CAST(sum(CASE WHEN NOT (za > 0) AND NOT (zb > 0) THEN 1 ELSE 0 END) AS BIGINT) AS n00
-          FROM zz),
+        kcc AS (SELECT $kappaCountsSql FROM zz),
         kps AS (SELECT ${kappaReadoutSql.mkString(", ")} FROM kcc),
-        qcc AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-            CAST(sum(${c("za")}) AS BIGINT) AS ga,
-            CAST(sum(${c("zb")}) AS BIGINT) AS gb,
-            CAST(sum(${c("zc")}) AS BIGINT) AS gc,
-            CAST(sum($l) AS BIGINT) AS sum_l,
-            CAST(sum($l * $l) AS BIGINT) AS sum_l2
-          FROM zz),
+        qcc AS (SELECT $cochranCountsSql FROM zz),
         qs AS (SELECT ${cochranReadoutSql.head} FROM qcc),
-        ug AS (SELECT za, CAST(count(*) AS BIGINT) AS cnt FROM zz GROUP BY za),
-        ur AS (SELECT za, CAST(2 * (CAST(sum(cnt) OVER (ORDER BY za ROWS UNBOUNDED PRECEDING) AS BIGINT) - cnt) + cnt + 1 AS DOUBLE)
-            / (2.0 * CAST((SELECT sum(cnt) FROM ug) AS DOUBLE)) AS u FROM ug),
-        vg2 AS (SELECT zb, CAST(count(*) AS BIGINT) AS cnt FROM zz GROUP BY zb),
-        vr AS (SELECT zb, CAST(2 * (CAST(sum(cnt) OVER (ORDER BY zb ROWS UNBOUNDED PRECEDING) AS BIGINT) - cnt) + cnt + 1 AS DOUBLE)
-            / (2.0 * CAST((SELECT sum(cnt) FROM vg2) AS DOUBLE)) AS v FROM vg2),
-        sm AS (SELECT CAST(count(*) AS BIGINT) AS n,
-            sum(CAST(round(u, 12) AS DECIMAL(28,12))) AS su,
-            sum(CAST(round(v, 12) AS DECIMAL(28,12))) AS sv,
-            sum(CAST(round(u * v, 12) AS DECIMAL(28,12))) AS suv,
-            sum(CAST(round(u * u, 12) AS DECIMAL(28,12))) AS su2,
-            sum(CAST(round(v * v, 12) AS DECIMAL(28,12))) AS sv2
-          FROM zz JOIN ur ON zz.za = ur.za JOIN vr ON zz.zb = vr.zb),
-        sps AS (SELECT CASE WHEN (CAST(n AS DOUBLE) * CAST(su2 AS DOUBLE) - CAST(su AS DOUBLE) * CAST(su AS DOUBLE)) > 0
-                AND (CAST(n AS DOUBLE) * CAST(sv2 AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE)) > 0
-            THEN (CAST(n AS DOUBLE) * CAST(suv AS DOUBLE) - CAST(su AS DOUBLE) * CAST(sv AS DOUBLE))
-               / sqrt((CAST(n AS DOUBLE) * CAST(su2 AS DOUBLE) - CAST(su AS DOUBLE) * CAST(su AS DOUBLE))
-                    * (CAST(n AS DOUBLE) * CAST(sv2 AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE))) END AS rho
-          FROM sm),
+        ${rankCteSql("za", "u", "ug")},
+        ${rankCteSql("zb", "v", "vg2")},
+        sm AS ($spearmanMomentsSql),
+        sps AS (SELECT $spearmanRhoSql AS rho FROM sm),
         wnz AS (SELECT za - zb AS dv FROM zz WHERE za - zb <> 0),
-        wvg AS (SELECT abs(dv) AS a,
-            CAST(sum(CASE WHEN dv > 0 THEN 1 ELSE 0 END) AS BIGINT) AS p,
-            CAST(count(*) AS BIGINT) AS t
-          FROM wnz GROUP BY abs(dv)),
-        wcum AS (SELECT a, p, t,
-            CAST(sum(t) OVER (ORDER BY a ROWS UNBOUNDED PRECEDING) AS BIGINT) AS lt FROM wvg),
-        wag AS (SELECT CAST(sum(t) AS BIGINT) AS n_nonzero,
-            CAST(sum(CAST(p AS HUGEINT) * (2 * (lt - t) + t + 1)) AS HUGEINT) AS w2,
-            CAST(sum(CAST(t AS HUGEINT) * t * t - t) AS HUGEINT) AS tiesum
-          FROM wcum),
-        wrd AS (SELECT n_nonzero, CAST(w2 AS DOUBLE) / 2.0 AS w_plus, w2,
-            2 * CAST(n_nonzero AS HUGEINT) * (n_nonzero + 1) * (2 * n_nonzero + 1) - tiesum AS var48
-          FROM wag),
+        ${wilcoxonCtesSql("w")},
         wzz AS (SELECT n_nonzero, $wilcoxonZSql AS z_stat FROM wrd)
         SELECT metric, value FROM (
           SELECT 'n' AS metric, CAST(n_pairs AS DOUBLE) AS value FROM mcs
@@ -1918,23 +1618,9 @@ object Analytics {
           UNION ALL SELECT 'cochran_q', q_stat FROM qs
           UNION ALL SELECT 'spearman_rho', rho FROM sps
           UNION ALL SELECT 'wilcoxon_z', z_stat FROM wzz
-        ) ORDER BY metric""")
-      sb.toString
-    },
+        ) ORDER BY metric"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      // ONE training chain: w3, w2, w1 are prefixes of the same run
-      val chain = logregWeightsChain(b)
-      val wA = round6(chain(GdRounds)).selectExpr("wa AS wa3", "wb AS wb3", "wc AS wc3")
-      val wB = round6(chain(GdRounds - 1))
-        .selectExpr("wa AS wa2", "wb AS wb2", "wc AS wc2")
-      val wC = round6(chain(GdRounds - 2))
-        .selectExpr("wa AS wa1", "wb AS wb1", "wc AS wc1")
-      val zz = b.crossJoin(broadcast(wA)).crossJoin(broadcast(wB)).crossJoin(broadcast(wC))
-        .selectExpr("(wa3 + wb3 * x1 + wc3 * x2) AS za",
-          "(wa2 + wb2 * x1 + wc2 * x2) AS zb",
-          "(wa1 + wb1 * x1 + wc1 * x2) AS zc", "y")
-      modelCompareOfScores(zz).localCheckpoint(true)
+      modelCompareOfScores(pairedScores(scope.persist(mlFeatures(s, d)), 3)).localCheckpoint(true)
     })
 
   /** The composed readout over a (za, zb, zc, y) frame — every metric
@@ -1957,8 +1643,6 @@ object Analytics {
     // kappa's n01 (za≤0 ∧ zb>0); each readout then applies the SAME
     // shared expression fragment as its single gate, so every surfaced
     // value is bit-identical to the unfused form.
-    def cExpr(z: String) = s"(CASE WHEN (($z > 0) = (y > 0.5)) THEN 1 ELSE 0 END)"
-    val lExpr = s"(${cExpr("za")} + ${cExpr("zb")} + ${cExpr("zc")})"
     // the three independent readout chains (fused contingency pass,
     // Spearman's rank maps, Wilcoxon's |d| selection) each interleave
     // eager barriers with lazy building — overlap them (guide §2.6);
@@ -1976,11 +1660,11 @@ object Analytics {
           sum(when(expr("za > 0 AND NOT (zb > 0)"), 1L).otherwise(0L)).cast(LongType).as("k_n10"),
           sum(when(expr("NOT (za > 0) AND zb > 0"), 1L).otherwise(0L)).cast(LongType).as("k_n01"),
           sum(when(expr("NOT (za > 0) AND NOT (zb > 0)"), 1L).otherwise(0L)).cast(LongType).as("k_n00"),
-          sum(expr(cExpr("za"))).cast(LongType).as("q_ga"),
-          sum(expr(cExpr("zb"))).cast(LongType).as("q_gb"),
-          sum(expr(cExpr("zc"))).cast(LongType).as("q_gc"),
-          sum(expr(lExpr)).cast(LongType).as("q_sum_l"),
-          sum(expr(s"$lExpr * $lExpr")).cast(LongType).as("q_sum_l2"))
+          sum(expr(correctSql("za"))).cast(LongType).as("q_ga"),
+          sum(expr(correctSql("zb"))).cast(LongType).as("q_gb"),
+          sum(expr(correctSql("zc"))).cast(LongType).as("q_gc"),
+          sum(expr(nCorrectSql)).cast(LongType).as("q_sum_l"),
+          sum(expr(s"$nCorrectSql * $nCorrectSql")).cast(LongType).as("q_sum_l2"))
         .localCheckpoint(true),
       spearmanOfScores(zz.select(col("za"), col("zb"))).localCheckpoint(true),
       wilcoxonOfScores(zz.select(col("za"), col("zb"))).localCheckpoint(true))
@@ -2017,6 +1701,24 @@ object Analytics {
           / sqrt(CAST(var48 AS DOUBLE) / 48.0) END"""
   private val wilcoxonVerdictSql =
     "CASE WHEN z_stat IS NULL THEN CAST(NULL AS BIGINT) WHEN abs(z_stat) > 1.96 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+
+  /** Oracle twin of [[wilcoxonOfScores]] from the nonzero differences
+    * `${p}nz(dv)`: the |d| value grain, its running counts, the exact
+    * 2·W⁺ and tie sums, and `${p}rd(n_nonzero, w_plus, w2, var48)`. */
+  private def wilcoxonCtesSql(p: String): String =
+    s"""${p}vg AS (SELECT abs(dv) AS a,
+            CAST(sum(CASE WHEN dv > 0 THEN 1 ELSE 0 END) AS BIGINT) AS p,
+            CAST(count(*) AS BIGINT) AS t
+          FROM ${p}nz GROUP BY abs(dv)),
+        ${p}cum AS (SELECT a, p, t,
+            CAST(sum(t) OVER (ORDER BY a ROWS UNBOUNDED PRECEDING) AS BIGINT) AS lt FROM ${p}vg),
+        ${p}ag AS (SELECT CAST(sum(t) AS BIGINT) AS n_nonzero,
+            CAST(sum(CAST(p AS HUGEINT) * (2 * (lt - t) + t + 1)) AS HUGEINT) AS w2,
+            CAST(sum(CAST(t AS HUGEINT) * t * t - t) AS HUGEINT) AS tiesum
+          FROM ${p}cum),
+        ${p}rd AS (SELECT n_nonzero, CAST(w2 AS DOUBLE) / 2.0 AS w_plus, w2,
+            2 * CAST(n_nonzero AS HUGEINT) * (n_nonzero + 1) * (2 * n_nonzero + 1) - tiesum AS var48
+          FROM ${p}ag)"""
 
   /** Wilcoxon signed-rank test over two scored margin columns
     * (za, zb) — the NONPARAMETRIC paired location test completing the
@@ -2069,43 +1771,17 @@ object Analytics {
     * (lazy — see [[mlCalibration]].) */
   lazy val mlWilcoxonSignedRank: QueryDef = QueryDef(
     "ml_wilcoxon_signed_rank",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      sb.append(s""",
-        w6a AS (SELECT round(wa, 6) AS wa3, round(wb, 6) AS wb3, round(wc, 6) AS wc3 FROM w$GdRounds),
-        w6b AS (SELECT round(wa, 6) AS wa2, round(wb, 6) AS wb2, round(wc, 6) AS wc2 FROM w${GdRounds - 1}),
-        dd AS (SELECT (wa3 + wb3 * x1 + wc3 * x2) - (wa2 + wb2 * x1 + wc2 * x2) AS dv
-          FROM b, w6a, w6b),
+    Some(s"""${logregCtes(GdRounds)},
+        ${pairedW6Sql(2)},
+        dd AS (SELECT ${pairedMargin(0)} - ${pairedMargin(1)} AS dv
+          FROM ${pairedFromSql(2)}),
         nz AS (SELECT dv FROM dd WHERE dv <> 0),
-        vg AS (SELECT abs(dv) AS a,
-            CAST(sum(CASE WHEN dv > 0 THEN 1 ELSE 0 END) AS BIGINT) AS p,
-            CAST(count(*) AS BIGINT) AS t
-          FROM nz GROUP BY abs(dv)),
-        cum AS (SELECT a, p, t,
-            CAST(sum(t) OVER (ORDER BY a ROWS UNBOUNDED PRECEDING) AS BIGINT) AS lt FROM vg),
-        ag AS (SELECT CAST(sum(t) AS BIGINT) AS n_nonzero,
-            CAST(sum(CAST(p AS HUGEINT) * (2 * (lt - t) + t + 1)) AS HUGEINT) AS w2,
-            CAST(sum(CAST(t AS HUGEINT) * t * t - t) AS HUGEINT) AS tiesum
-          FROM cum),
-        rd AS (SELECT n_nonzero, CAST(w2 AS DOUBLE) / 2.0 AS w_plus, w2,
-            2 * CAST(n_nonzero AS HUGEINT) * (n_nonzero + 1) * (2 * n_nonzero + 1) - tiesum AS var48
-          FROM ag),
+        ${wilcoxonCtesSql("")},
         zz2 AS (SELECT n_nonzero, w_plus, $wilcoxonZSql AS z_stat FROM rd)
         SELECT n_nonzero, w_plus, z_stat, $wilcoxonVerdictSql AS significant
-        FROM zz2""")
-      sb.toString
-    },
+        FROM zz2"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      // ONE training chain: w3 and w2 are prefixes of the same run
-      val chain = logregWeightsChain(b)
-      val wA = round6(chain(GdRounds))
-        .selectExpr("wa AS wa3", "wb AS wb3", "wc AS wc3")
-      val wB = round6(chain(GdRounds - 1))
-        .selectExpr("wa AS wa2", "wb AS wb2", "wc AS wc2")
-      wilcoxonOfScores(b.crossJoin(broadcast(wA)).crossJoin(broadcast(wB))
-        .selectExpr("(wa3 + wb3 * x1 + wc3 * x2) AS za",
-          "(wa2 + wb2 * x1 + wc2 * x2) AS zb")).localCheckpoint(true)
+      wilcoxonOfScores(pairedScores(scope.persist(mlFeatures(s, d)), 2)).localCheckpoint(true)
     })
 
   // -------------------------------------------- Hosmer–Lemeshow test
@@ -2119,6 +1795,11 @@ object Analytics {
     "CASE " + chi2Crit05.zipWithIndex.map { case (c, i) =>
       s"WHEN ($df) = ${i + 1} THEN CAST($c AS DOUBLE)" }.mkString(" ") + " END"
 
+  /** A bin's HL term (O−E)²/(E(1−E/n)), 12-dp DECIMAL, and the test
+    * for a usable bin (0 < E < n) — shared by both engines. */
+  private val hlTermSql = "CAST(round((CAST(pos AS DOUBLE) - CAST(sp AS DOUBLE)) * (CAST(pos AS DOUBLE) - CAST(sp AS DOUBLE)) / (CAST(sp AS DOUBLE) * (CAST(1 AS DOUBLE) - CAST(sp AS DOUBLE) / CAST(n AS DOUBLE))), 12) AS DECIMAL(28,12))"
+  private val hlUsedSql = "CAST(sp AS DOUBLE) > 0 AND CAST(sp AS DOUBLE) < CAST(n AS DOUBLE)"
+
   /** HL significance verdict over (n_bins_used, hl_stat) — NULL, not
     * 0, when the test is UNDEFINED (df = n_bins_used − 2 < 1, or
     * hl_stat NULL because every bin degenerated): a fake "not
@@ -2129,7 +1810,7 @@ object Analytics {
     s"CAST(CASE WHEN n_bins_used - 2 < 1 OR hl_stat IS NULL THEN NULL WHEN hl_stat > ${chi2CritSql("n_bins_used - 2")} THEN 1 ELSE 0 END AS BIGINT)"
 
   /** Hosmer–Lemeshow goodness-of-fit over a scored (z, y) frame — the
-    * SIGNIFICANCE companion to [[calibOfScores]]' reliability diagram
+    * SIGNIFICANCE companion to [[calibOfVg]]'s reliability diagram
     * (the diagram shows the miscalibration; HL decides whether it is
     * beyond chance): per z-space decile bin, observed positives O vs
     * expected E = Σσ(z), statistic Σ (O−E)²/(E(1−E/n)), df = used
@@ -2143,11 +1824,7 @@ object Analytics {
     * ([[hlVerdictSql]]). ONE corpus scan past training, then 10-row
     * algebra. */
   def hosmerLemeshowOfScores(zz: DataFrame): DataFrame = {
-    val binExpr = calibEdges.map(e =>
-      s"(CASE WHEN z >= CAST($e AS DOUBLE) THEN 1 ELSE 0 END)").mkString(" + ")
-    val term = "CAST(round((CAST(pos AS DOUBLE) - CAST(sp AS DOUBLE)) * (CAST(pos AS DOUBLE) - CAST(sp AS DOUBLE)) / (CAST(sp AS DOUBLE) * (CAST(1 AS DOUBLE) - CAST(sp AS DOUBLE) / CAST(n AS DOUBLE))), 12) AS DECIMAL(28,12))"
-    val used = "CAST(sp AS DOUBLE) > 0 AND CAST(sp AS DOUBLE) < CAST(n AS DOUBLE)"
-    zz.selectExpr(s"$binExpr AS bin",
+    zz.selectExpr(s"${calibBinSql("z")} AS bin",
         "CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-z)) AS p", "y")
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"),
@@ -2157,8 +1834,8 @@ object Analytics {
         sum(col("n")).cast(LongType).as("n"),
         sum(col("pos")).cast(LongType).as("pos"),
         count(lit(1)).cast(LongType).as("n_bins"),
-        sum(expr(s"CASE WHEN $used THEN 1 ELSE 0 END")).cast(LongType).as("n_bins_used"),
-        expr(s"CAST(sum(CASE WHEN $used THEN $term END) AS DOUBLE)").as("hl_stat"))
+        sum(expr(s"CASE WHEN $hlUsedSql THEN 1 ELSE 0 END")).cast(LongType).as("n_bins_used"),
+        expr(s"CAST(sum(CASE WHEN $hlUsedSql THEN $hlTermSql END) AS DOUBLE)").as("hl_stat"))
       .selectExpr("n", "pos", "n_bins", "n_bins_used",
         "n_bins_used - 2 AS df", "hl_stat",
         s"$hlVerdictSql AS significant")
@@ -2171,35 +1848,22 @@ object Analytics {
     * (lazy — see [[mlCalibration]].) */
   lazy val mlHosmerLemeshow: QueryDef = QueryDef(
     "ml_hosmer_lemeshow",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      val binExpr = calibEdges.map(e =>
-        s"(CASE WHEN (wa + wb * x1 + wc * x2) >= CAST($e AS DOUBLE) THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      val term = "CAST(round((CAST(pos AS DOUBLE) - CAST(sp AS DOUBLE)) * (CAST(pos AS DOUBLE) - CAST(sp AS DOUBLE)) / (CAST(sp AS DOUBLE) * (CAST(1 AS DOUBLE) - CAST(sp AS DOUBLE) / CAST(n AS DOUBLE))), 12) AS DECIMAL(28,12))"
-      val used = "CAST(sp AS DOUBLE) > 0 AND CAST(sp AS DOUBLE) < CAST(n AS DOUBLE)"
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        bz AS (SELECT $binExpr AS bin,
-            CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-(wa + wb * x1 + wc * x2))) AS p, y
-          FROM b, w6),
+    Some(s"""$trainedSql,
+        ${bzSql(MarginSql, "b, w6")},
         c AS (SELECT bin, CAST(count(*) AS BIGINT) AS n,
             CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS pos,
             sum(CAST(round(p, 12) AS DECIMAL(28,12))) AS sp
           FROM bz GROUP BY bin),
         t AS (SELECT CAST(sum(n) AS BIGINT) AS n, CAST(sum(pos) AS BIGINT) AS pos,
             CAST(count(*) AS BIGINT) AS n_bins,
-            CAST(sum(CASE WHEN $used THEN 1 ELSE 0 END) AS BIGINT) AS n_bins_used,
-            CAST(sum(CASE WHEN $used THEN $term END) AS DOUBLE) AS hl_stat
+            CAST(sum(CASE WHEN $hlUsedSql THEN 1 ELSE 0 END) AS BIGINT) AS n_bins_used,
+            CAST(sum(CASE WHEN $hlUsedSql THEN $hlTermSql END) AS DOUBLE) AS hl_stat
           FROM c)
         SELECT n, pos, n_bins, n_bins_used, n_bins_used - 2 AS df, hl_stat,
           $hlVerdictSql AS significant
-        FROM t""")
-      sb.toString
-    },
+        FROM t"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      hosmerLemeshowOfScores(scoreWith(b, logregWeights6(b))).localCheckpoint(true)
+      hosmerLemeshowOfScores(gateScores(s, d)).localCheckpoint(true)
     })
 
   // -------------------------------------------- isotonic calibration
@@ -2232,9 +1896,7 @@ object Analytics {
     * IEEE comparisons of rounded rationals. Output is monotone
     * non-decreasing by construction. */
   def isotonicOfScores(zz: DataFrame): DataFrame = {
-    val binExpr = calibEdges.map(e =>
-      s"(CASE WHEN z >= CAST($e AS DOUBLE) THEN 1 ELSE 0 END)").mkString(" + ")
-    val c = zz.selectExpr(s"$binExpr AS bin", "y")
+    val c = zz.selectExpr(s"${calibBinSql("z")} AS bin", "y")
       .groupBy(col("bin"))
       .agg(count(lit(1)).cast(LongType).as("n"),
         sum(when(col("y") > 0.5, 1L).otherwise(0L)).cast(LongType).as("pos"))
@@ -2267,14 +1929,8 @@ object Analytics {
     * SAME bins. (lazy — see [[mlCalibration]].) */
   lazy val mlIsotonicCalibration: QueryDef = QueryDef(
     "ml_isotonic_calibration",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      val binExpr = calibEdges.map(e =>
-        s"(CASE WHEN (wa + wb * x1 + wc * x2) >= CAST($e AS DOUBLE) THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        bz AS (SELECT $binExpr AS bin, y FROM b, w6),
+    Some(s"""$trainedSql,
+        bz AS (SELECT ${calibBinSql(MarginSql)} AS bin, y FROM b, w6),
         c AS (SELECT bin, CAST(count(*) AS BIGINT) AS n,
             CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS pos
           FROM bz GROUP BY bin),
@@ -2290,12 +1946,9 @@ object Analytics {
         SELECT c.bin, c.n, c.pos,
           CAST(${rate12KeyDuck("c.pos", "c.n")} AS DOUBLE) / 1000000000000.0 AS raw_rate,
           CAST(fitted AS DOUBLE) / 1000000000000.0 AS iso_rate
-        FROM c JOIN ft ON c.bin = ft.bin ORDER BY c.bin""")
-      sb.toString
-    },
+        FROM c JOIN ft ON c.bin = ft.bin ORDER BY c.bin"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      isotonicOfScores(scoreWith(b, logregWeights6(b))).localCheckpoint(true)
+      isotonicOfScores(gateScores(s, d)).localCheckpoint(true)
     })
 
   // ------------------------------------------------ Poisson bootstrap
@@ -2429,23 +2082,16 @@ object Analytics {
     * grain. (lazy — see [[mlCalibration]].) */
   lazy val mlConfusionMcc: QueryDef = QueryDef(
     "ml_confusion_mcc",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        zz AS (SELECT (wa + wb * x1 + wc * x2) AS z, y FROM b, w6),
+    Some(s"""$scoredSql,
         cm AS (SELECT
             CAST(sum(CASE WHEN z > 0 AND y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
             CAST(sum(CASE WHEN z > 0 AND y < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
             CAST(sum(CASE WHEN NOT (z > 0) AND y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
             CAST(sum(CASE WHEN NOT (z > 0) AND y < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS tn
           FROM zz)
-        SELECT tp, fp, fn, tn, $f1Expr AS f1, $mccExpr AS mcc FROM cm""")
-      sb.toString
-    },
+        SELECT tp, fp, fn, tn, $f1Expr AS f1, $mccExpr AS mcc FROM cm"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      confusionReadout(confusionOfScores(scoreWith(b, logregWeights6(b))))
+      confusionReadout(confusionOfScores(gateScores(s, d)))
         .localCheckpoint(true)
     })
 
@@ -2480,15 +2126,7 @@ object Analytics {
   val mlConformal = QueryDef(
     "ml_conformal_interval",
     Some(s"""WITH li AS (SELECT l_orderkey % 4 AS s, l_quantity, l_discount, l_extendedprice FROM lineitem),
-      m AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS s1,
-        CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) AS s2,
-        CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-        CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(28,8))) AS DOUBLE) AS s11,
-        CAST(sum(CAST(l_quantity * l_discount AS DECIMAL(28,8))) AS DOUBLE) AS s12,
-        CAST(sum(CAST(l_discount * l_discount AS DECIMAL(28,8))) AS DOUBLE) AS s22,
-        CAST(sum(CAST(l_quantity * l_extendedprice AS DECIMAL(28,8))) AS DOUBLE) AS s1y,
-        CAST(sum(CAST(l_discount * l_extendedprice AS DECIMAL(28,8))) AS DOUBLE) AS s2y
+      m AS (SELECT ${gramMomentsSql(yy = false)}
         FROM li WHERE s <= 1),
       w AS (SELECT CAST(n AS BIGINT) AS n_train,
         $detA0 / $detA AS w0, $detA1 / $detA AS w1, $detA2 / $detA AS w2 FROM m),
@@ -2509,51 +2147,44 @@ object Analytics {
         ${graft.Portable.round6RatioDuck("t.covered", "t.n_test")} AS coverage,
         (${graft.Portable.round6RatioDuck("t.covered", "t.n_test")} >= 0.88) AS ok
       FROM w, q, t"""),
-    (s, d) => conformalInterval(Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_quantity"), col("l_discount"), col("l_extendedprice"))))
+    (s, d) => graft.CacheScope.withScope { implicit scope =>
+      conformalInterval(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity"),
+        col("l_discount"), col("l_extendedprice"))).localCheckpoint(true)
+    })
 
   /** Split-conformal readout over a lineitem-shaped frame — see
     * [[mlConformal]]. Splits on `l_orderkey % 4`: {0,1} train, 2
     * calibration, 3 held-out. */
-  def conformalInterval(raw: DataFrame): DataFrame =
-    graft.CacheScope.withScope { implicit scope =>
-      val li = raw.select(expr("l_orderkey % 4").as("s"),
-        col("l_quantity"), col("l_discount"), col("l_extendedprice"))
-      val m = li.filter(col("s") <= 1).agg(
-        count(lit(1)).cast(DoubleType).as("n"),
-        sum(col("l_quantity").cast(DecimalType(18, 6))).cast(DoubleType).as("s1"),
-        sum(col("l_discount").cast(DecimalType(18, 6))).cast(DoubleType).as("s2"),
-        sum(col("l_extendedprice").cast(DecimalType(18, 6))).cast(DoubleType).as("sy"),
-        sum((col("l_quantity") * col("l_quantity")).cast(DecimalType(28, 8))).cast(DoubleType).as("s11"),
-        sum((col("l_quantity") * col("l_discount")).cast(DecimalType(28, 8))).cast(DoubleType).as("s12"),
-        sum((col("l_discount") * col("l_discount")).cast(DecimalType(28, 8))).cast(DoubleType).as("s22"),
-        sum((col("l_quantity") * col("l_extendedprice")).cast(DecimalType(28, 8))).cast(DoubleType).as("s1y"),
-        sum((col("l_discount") * col("l_extendedprice")).cast(DecimalType(28, 8))).cast(DoubleType).as("s2y"))
-      val w = m.selectExpr("CAST(n AS BIGINT) AS n_train",
-        s"$detA0 / $detA AS w0", s"$detA1 / $detA AS w1", s"$detA2 / $detA AS w2")
-        .localCheckpoint(true)
-      val ar = scope.persist(li.filter(col("s") >= 2).crossJoin(broadcast(w.drop("n_train")))
-        .select(col("s"),
-          expr("abs(l_extendedprice - (w0 + w1 * l_quantity + w2 * l_discount))").as("ar")))
-      val kk = ar.filter(col("s") === 2)
-        .agg(count(lit(1)).cast(LongType).as("n_cal"))
-        .selectExpr("n_cal", "(9 * (n_cal + 1) + 9) div 10 AS k_cal")
-        .localCheckpoint(true)
-      val ranks = kk.select(lit("cal").as("g"), (col("k_cal") - 1).as("k"))
-      val qv = ExactPercentiles.orderStatistics(
-        ar.filter(col("s") === 2).withColumn("g", lit("cal")), "g", "ar", ranks)
-        .select(col("value").as("qhat"))
-      val q = kk.crossJoin(broadcast(qv)).localCheckpoint(true)
-      val t = ar.filter(col("s") === 3).crossJoin(broadcast(q.select(col("qhat"))))
-        .agg(count(lit(1)).cast(LongType).as("n_test"),
-          sum(when(col("ar") <= col("qhat"), 1L).otherwise(0L)).cast(LongType).as("covered"))
-        .localCheckpoint(true)
-      w.select(col("n_train")).crossJoin(broadcast(q)).crossJoin(broadcast(t))
-        .selectExpr("n_train", "n_cal", "n_test", "k_cal", "qhat",
-          "2 * qhat AS width",
-          s"${graft.Portable.round6RatioSpark("covered", "n_test")} AS coverage",
-          s"(${graft.Portable.round6RatioSpark("covered", "n_test")} >= 0.88) AS ok")
-    }
+  def conformalInterval(raw: DataFrame)(
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
+    val li = raw.select(expr("l_orderkey % 4").as("s"),
+      col("l_quantity"), col("l_discount"), col("l_extendedprice"))
+    val m = gramMoments(li.filter(col("s") <= 1), yy = false)
+    val w = m.selectExpr("CAST(n AS BIGINT) AS n_train",
+      s"$detA0 / $detA AS w0", s"$detA1 / $detA AS w1", s"$detA2 / $detA AS w2")
+      .localCheckpoint(true)
+    val ar = scope.persist(li.filter(col("s") >= 2).crossJoin(broadcast(w.drop("n_train")))
+      .select(col("s"),
+        expr("abs(l_extendedprice - (w0 + w1 * l_quantity + w2 * l_discount))").as("ar")))
+    val kk = ar.filter(col("s") === 2)
+      .agg(count(lit(1)).cast(LongType).as("n_cal"))
+      .selectExpr("n_cal", "(9 * (n_cal + 1) + 9) div 10 AS k_cal")
+      .localCheckpoint(true)
+    val ranks = kk.select(lit("cal").as("g"), (col("k_cal") - 1).as("k"))
+    val qv = ExactPercentiles.orderStatistics(
+      ar.filter(col("s") === 2).withColumn("g", lit("cal")), "g", "ar", ranks)
+      .select(col("value").as("qhat"))
+    val q = kk.crossJoin(broadcast(qv)).localCheckpoint(true)
+    val t = ar.filter(col("s") === 3).crossJoin(broadcast(q.select(col("qhat"))))
+      .agg(count(lit(1)).cast(LongType).as("n_test"),
+        sum(when(col("ar") <= col("qhat"), 1L).otherwise(0L)).cast(LongType).as("covered"))
+      .localCheckpoint(true)
+    w.select(col("n_train")).crossJoin(broadcast(q)).crossJoin(broadcast(t))
+      .selectExpr("n_train", "n_cal", "n_test", "k_cal", "qhat",
+        "2 * qhat AS width",
+        s"${graft.Portable.round6RatioSpark("covered", "n_test")} AS coverage",
+        s"(${graft.Portable.round6RatioSpark("covered", "n_test")} >= 0.88) AS ok")
+  }
 
   // ------------------------------------------ ml_feature_importance
   /** Leave-one-out sub-model fragments over the 10 Gram moments —
@@ -2575,18 +2206,6 @@ object Analytics {
   private val fiDQty = s"($fiR2Full - $fiR2DropQty)"
   private val fiDDisc = s"($fiR2Full - $fiR2DropDisc)"
 
-  /** The 10-moment CTE body shared by the oracle (DuckDB dialect ==
-    * Spark dialect for these tokens). */
-  private val fiMomentsSql = """SELECT CAST(count(*) AS DOUBLE) AS n,
-      CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS s1,
-      CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) AS s2,
-      CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-      CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(28,8))) AS DOUBLE) AS s11,
-      CAST(sum(CAST(l_quantity * l_discount AS DECIMAL(28,8))) AS DOUBLE) AS s12,
-      CAST(sum(CAST(l_discount * l_discount AS DECIMAL(28,8))) AS DOUBLE) AS s22,
-      CAST(sum(CAST(l_quantity * l_extendedprice AS DECIMAL(28,8))) AS DOUBLE) AS s1y,
-      CAST(sum(CAST(l_discount * l_extendedprice AS DECIMAL(28,8))) AS DOUBLE) AS s2y,
-      CAST(sum(CAST(l_extendedprice * l_extendedprice AS DECIMAL(28,8))) AS DOUBLE) AS syy"""
 
   /** ml_feature_importance: leave-one-out ΔR² per feature of the
     * [[linearProbe]] OLS — "how much fit does each signal actually
@@ -2604,7 +2223,7 @@ object Analytics {
     * moment-arithmetic trick taken to its logical end). */
   val mlFeatureImportance = QueryDef(
     "ml_feature_importance",
-    Some(s"""WITH m AS ($fiMomentsSql FROM lineitem)
+    Some(s"""WITH m AS (SELECT ${gramMomentsSql(yy = true)} FROM lineitem)
       SELECT * FROM (
         SELECT 'l_discount' AS feature, round($detA2 / $detA, 6) AS w_full,
           round($fiR2Full, 6) AS r2_full, round($fiR2DropDisc, 6) AS r2_drop,
@@ -2622,17 +2241,7 @@ object Analytics {
   /** LOO ΔR² readout over a (l_quantity, l_discount, l_extendedprice)
     * frame — see [[mlFeatureImportance]]. */
   def featureImportance(li: DataFrame): DataFrame = {
-    val m = li.agg(
-      count(lit(1)).cast(DoubleType).as("n"),
-      sum(col("l_quantity").cast(DecimalType(18, 6))).cast(DoubleType).as("s1"),
-      sum(col("l_discount").cast(DecimalType(18, 6))).cast(DoubleType).as("s2"),
-      sum(col("l_extendedprice").cast(DecimalType(18, 6))).cast(DoubleType).as("sy"),
-      sum((col("l_quantity") * col("l_quantity")).cast(DecimalType(28, 8))).cast(DoubleType).as("s11"),
-      sum((col("l_quantity") * col("l_discount")).cast(DecimalType(28, 8))).cast(DoubleType).as("s12"),
-      sum((col("l_discount") * col("l_discount")).cast(DecimalType(28, 8))).cast(DoubleType).as("s22"),
-      sum((col("l_quantity") * col("l_extendedprice")).cast(DecimalType(28, 8))).cast(DoubleType).as("s1y"),
-      sum((col("l_discount") * col("l_extendedprice")).cast(DecimalType(28, 8))).cast(DoubleType).as("s2y"),
-      sum((col("l_extendedprice") * col("l_extendedprice")).cast(DecimalType(28, 8))).cast(DoubleType).as("syy"))
+    val m = gramMoments(li, yy = true)
     m.selectExpr(s"""stack(2,
         'l_discount', round($detA2 / $detA, 6), round($fiR2Full, 6),
           round($fiR2DropDisc, 6), round($fiDDisc, 6),
@@ -2672,16 +2281,7 @@ object Analytics {
   val mlLearningCurve = QueryDef(
     "ml_learning_curve",
     Some(s"""WITH li AS (SELECT l_orderkey % 5 AS fold, l_quantity, l_discount, l_extendedprice FROM lineitem),
-      fm AS (SELECT fold, count(*) AS cnt,
-        sum(CAST(l_quantity AS DECIMAL(18,6))) AS d1,
-        sum(CAST(l_discount AS DECIMAL(18,6))) AS d2,
-        sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS dy,
-        sum(CAST(l_quantity * l_quantity AS DECIMAL(28,8))) AS d11,
-        sum(CAST(l_quantity * l_discount AS DECIMAL(28,8))) AS d12,
-        sum(CAST(l_discount * l_discount AS DECIMAL(28,8))) AS d22,
-        sum(CAST(l_quantity * l_extendedprice AS DECIMAL(28,8))) AS d1y,
-        sum(CAST(l_discount * l_extendedprice AS DECIMAL(28,8))) AS d2y,
-        sum(CAST(l_extendedprice * l_extendedprice AS DECIMAL(28,8))) AS dyy
+      fm AS (SELECT fold, ${foldMomentsSql(yy = true)}
         FROM li GROUP BY fold),
       ks AS (SELECT 1 AS k UNION ALL SELECT 2 UNION ALL SELECT 3 UNION ALL SELECT 4),
       tr AS (SELECT ks.k, CAST(sum(cnt) AS DOUBLE) AS n,
@@ -2712,17 +2312,7 @@ object Analytics {
   def learningCurve(s: SparkSession, raw: DataFrame): DataFrame = {
     val li = raw.select(expr("l_orderkey % 5").as("fold"),
       col("l_quantity"), col("l_discount"), col("l_extendedprice"))
-    val fm = li.groupBy(col("fold")).agg(
-      count(lit(1)).as("cnt"),
-      sum(col("l_quantity").cast(DecimalType(18, 6))).as("d1"),
-      sum(col("l_discount").cast(DecimalType(18, 6))).as("d2"),
-      sum(col("l_extendedprice").cast(DecimalType(18, 6))).as("dy"),
-      sum((col("l_quantity") * col("l_quantity")).cast(DecimalType(28, 8))).as("d11"),
-      sum((col("l_quantity") * col("l_discount")).cast(DecimalType(28, 8))).as("d12"),
-      sum((col("l_discount") * col("l_discount")).cast(DecimalType(28, 8))).as("d22"),
-      sum((col("l_quantity") * col("l_extendedprice")).cast(DecimalType(28, 8))).as("d1y"),
-      sum((col("l_discount") * col("l_extendedprice")).cast(DecimalType(28, 8))).as("d2y"),
-      sum((col("l_extendedprice") * col("l_extendedprice")).cast(DecimalType(28, 8))).as("dyy"))
+    val fm = foldMoments(li, yy = true)
       .localCheckpoint(true) // 5 rows; the one corpus scan runs once
     import s.implicits._
     val ks = Seq(1, 2, 3, 4).toDF("k")
@@ -3073,6 +2663,139 @@ object Analytics {
   private def w6Cte(rounds: Int): String =
     s"w6 AS (SELECT round(wa, 6) AS wa, round(wb, 6) AS wb, round(wc, 6) AS wc FROM w$rounds)"
 
+  /** Oracle head of the single-model ML gates: the unrolled returnflag
+    * training ([[logregCtes]]) and its published 6-dp weights `w6`. */
+  private def trainedSql: String = s"${logregCtes(GdRounds)},\n        ${w6Cte(GdRounds)}"
+
+  /** The single-model gates' scored margins: the shared feature frame
+    * (persisted — training and scoring both read it), trained once
+    * ([[logregWeights6]]) and scored ([[scoreWith]]). */
+  private def gateScores(s: SparkSession, d: String)(implicit scope: graft.CacheScope): DataFrame = {
+    val b = scope.persist(mlFeatures(s, d))
+    scoreWith(b, logregWeights6(b))
+  }
+
+  /** Oracle twin of [[gateScores]]: training, `w6`
+    * and the scored margins `zz(z, y)`; `ctes` swaps in another label
+    * ([[logregCtesFor]]). */
+  private def scoredSql(ctes: String): String =
+    s"""$ctes,
+        ${w6Cte(GdRounds)},
+        zz AS (SELECT $MarginSql AS z, y FROM b, w6)"""
+  private def scoredSql: String = scoredSql(logregCtes(GdRounds))
+
+  /** The linear margin of a (x1, x2) row under weights (wa, wb, wc). */
+  private val MarginSql = "(wa + wb * x1 + wc * x2)"
+
+  /** Oracle twin of [[vgOfScores]]: `vg(z, p, q)` off `zz`. */
+  private val vgSql =
+    """vg AS (SELECT z, CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS p,
+            CAST(sum(CASE WHEN y < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS q
+          FROM zz GROUP BY z)"""
+
+  /** Exact ROC-AUC of the one-row (n1, n0, u2) totals. */
+  private val aucSql = "CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE))"
+
+  /** Oracle twin of [[rocAucOfScores]] off `vg`: the ascending running
+    * negatives `cum`, the totals `cn(n1, n0, n_values)` and `uu(u2)`. */
+  private val rocCtesSql =
+    """cum AS (SELECT z, p, q,
+            CAST(sum(q) OVER (ORDER BY z ROWS UNBOUNDED PRECEDING) AS BIGINT) AS lq FROM vg),
+        cn AS (SELECT CAST(sum(p) AS BIGINT) AS n1, CAST(sum(q) AS BIGINT) AS n0,
+            CAST(count(*) AS BIGINT) AS n_values FROM vg),
+        uu AS (SELECT CAST(sum(CAST(p AS DECIMAL(19,0)) * (2 * (lq - q) + q)) AS DECIMAL(38,0)) AS u2 FROM cum)"""
+
+  /** Oracle twin of [[delongCumScal]] + [[delongReadout]] off `vg`:
+    * `cum(z, p, q, cp, cq)`, `scal(n1, n0, u2)`, the placement sums and
+    * `sev(n1, n0, auc_roc, se_delong)`. */
+  private def delongCtesSql: String =
+    s"""cum AS (SELECT z, p, q,
+            CAST(sum(p) OVER (ORDER BY z ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cp,
+            CAST(sum(q) OVER (ORDER BY z ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cq FROM vg),
+        scal AS (SELECT CAST(sum(p) AS BIGINT) AS n1, CAST(sum(q) AS BIGINT) AS n0,
+            CAST(sum(CAST(p AS DECIMAL(19,0)) * (2 * (cq - q) + q)) AS DECIMAL(38,0)) AS u2
+          FROM cum),
+        sums AS (SELECT
+            sum(CAST(round(CAST(p AS DOUBLE) * ((CAST(2 * (cq - q) + q AS DOUBLE) / (2.0 * CAST(n0 AS DOUBLE)) - $aucSql) * (CAST(2 * (cq - q) + q AS DOUBLE) / (2.0 * CAST(n0 AS DOUBLE)) - $aucSql)), 12) AS DECIMAL(28,12))) AS s10n,
+            sum(CAST(round(CAST(q AS DOUBLE) * ((CAST(2 * (n1 - cp) + p AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE)) - $aucSql) * (CAST(2 * (n1 - cp) + p AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE)) - $aucSql)), 12) AS DECIMAL(28,12))) AS s01n
+          FROM cum, scal),
+        va AS (SELECT n1, n0,
+            $aucSql AS auc_roc,
+            CAST(s10n AS DOUBLE) / CAST(n1 - 1 AS DOUBLE) / CAST(n1 AS DOUBLE) + CAST(s01n AS DOUBLE) / CAST(n0 - 1 AS DOUBLE) / CAST(n0 AS DOUBLE) AS var_auc
+          FROM scal, sums),
+        sev AS (SELECT n1, n0, auc_roc, sqrt(var_auc) AS se_delong FROM va)"""
+
+  /** Oracle twin of [[averagePrecisionOfScores]] off `vg`: descending
+    * running counts `cum` ([[apCumSql]]), then the 12-dp term sum
+    * `ap(ap_num)` ([[apSumSql]]). */
+  private def apCumSql(cum: String): String =
+    s"""$cum AS (SELECT z, p, q,
+            CAST(sum(p) OVER (ORDER BY z DESC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS ctp,
+            CAST(sum(q) OVER (ORDER BY z DESC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cfp FROM vg)"""
+  private def apSumSql(cum: String, ap: String): String =
+    s"""tm AS (SELECT CAST(round(CAST(p AS DOUBLE) * CAST(ctp AS DOUBLE)
+            / CAST(ctp + cfp AS DOUBLE), 12) AS DECIMAL(28,12)) AS t FROM $cum WHERE p > 0),
+        $ap AS (SELECT sum(t) AS ap_num FROM tm)"""
+
+  /** The z-space calibration bin (0–9) of margin `z`: exp-free
+    * comparisons against the shared logit edges, in both engines. */
+  private def calibBinSql(z: String): String =
+    calibEdges.map(e => s"(CASE WHEN $z >= CAST($e AS DOUBLE) THEN 1 ELSE 0 END)").mkString(" + ")
+
+  /** Oracle: `bz(bin, p, y)` — each row's calibration bin and σ(z). */
+  private def bzSql(z: String, from: String): String =
+    s"""bz AS (SELECT ${calibBinSql(z)} AS bin,
+            CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-$z)) AS p, y FROM $from)"""
+
+  /** Oracle twin of [[brierOfScores]] off `bz`: bins `c`, totals `t`,
+    * per-bin terms and their sums `s(nt, post, sbst, srel, sres)`. */
+  private val brierCtesSql =
+    """c AS (SELECT bin, CAST(count(*) AS BIGINT) AS n,
+            CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS pos,
+            sum(CAST(round(p, 12) AS DECIMAL(28,12))) AS sp,
+            sum(CAST(round((p - y) * (p - y), 12) AS DECIMAL(28,12))) AS sbs
+          FROM bz GROUP BY bin),
+        t AS (SELECT CAST(sum(n) AS BIGINT) AS nt, CAST(sum(pos) AS BIGINT) AS post,
+            sum(sbs) AS sbst FROM c),
+        terms AS (SELECT nt, post, sbst,
+            CAST(round(CAST(n AS DOUBLE) * (CAST(sp AS DOUBLE) / CAST(n AS DOUBLE) - CAST(pos AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sp AS DOUBLE) / CAST(n AS DOUBLE) - CAST(pos AS DOUBLE) / CAST(n AS DOUBLE)), 12) AS DECIMAL(28,12)) AS relt,
+            CAST(round(CAST(n AS DOUBLE) * (CAST(pos AS DOUBLE) / CAST(n AS DOUBLE) - CAST(post AS DOUBLE) / CAST(nt AS DOUBLE)) * (CAST(pos AS DOUBLE) / CAST(n AS DOUBLE) - CAST(post AS DOUBLE) / CAST(nt AS DOUBLE)), 12) AS DECIMAL(28,12)) AS rest
+          FROM c, t),
+        s AS (SELECT nt, post, sbst, sum(relt) AS srel, sum(rest) AS sres
+          FROM terms GROUP BY nt, post, sbst)"""
+
+  /** Oracle twin of [[shapLinear]] over `b` and `w6`: means `mo`/`mm`
+    * and the attribution sums `ag(a1, a2)`. */
+  private val shapCtesSql =
+    """mo AS (SELECT CAST(count(*) AS BIGINT) AS n,
+            sum(CAST(round(x1, 12) AS DECIMAL(28,12))) AS sx1,
+            sum(CAST(round(x2, 12) AS DECIMAL(28,12))) AS sx2 FROM b),
+        mm AS (SELECT CAST(sx1 AS DOUBLE) / CAST(n AS DOUBLE) AS m1,
+            CAST(sx2 AS DOUBLE) / CAST(n AS DOUBLE) AS m2 FROM mo),
+        ag AS (SELECT
+            sum(CAST(round(abs(wb * (x1 - m1)), 12) AS DECIMAL(28,12))) AS a1,
+            sum(CAST(round(abs(wc * (x2 - m2)), 12) AS DECIMAL(28,12))) AS a2
+          FROM b, mm, w6)"""
+
+  /** Oracle: the 9-row threshold grid `th(t, e)` of [[sweepOfVg]] —
+    * t = 0.1 … 0.9 with its logit edge as a driver-computed literal
+    * (NOT a per-engine ln(): libm ln can differ in the last ulp), the
+    * same list the calibration bins use. */
+  private def thresholdGridSql: String = {
+    val edges = calibEdges.map(e => s"CAST($e AS DOUBLE)").mkString("[", ", ", "]")
+    s"th AS (SELECT CAST(i AS DOUBLE) / 10 AS t, $edges[i] AS e FROM (SELECT unnest(range(1, 10)) AS i))"
+  }
+
+  /** Oracle: exact per-threshold (tp, fp, fn) of margin `z` over `from`
+    * and `th`, as CTE `name` with the given key and count names. */
+  private def sweepCountsSql(name: String, key: String, z: String, from: String,
+      tp: String, fp: String, fn: String): String =
+    s"""$name AS (SELECT $key,
+            CAST(sum(CASE WHEN $z > th.e AND y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS $tp,
+            CAST(sum(CASE WHEN $z > th.e AND y < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS $fp,
+            CAST(sum(CASE WHEN NOT ($z > th.e) AND y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS $fn
+          FROM $from, th GROUP BY th.t)"""
+
   def logregGd(b0: DataFrame, lr: Double = GdLr, rounds: Int = GdRounds): DataFrame = {
     val b = b0 // (x1, x2, y) rows
     val w = logregWeights(b, lr, rounds)
@@ -3120,17 +2843,13 @@ object Analytics {
 
   val mlLogregGd = QueryDef(
     "ml_logreg_gd",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      sb.append(s"""
+    Some(s"""${logregCtes(GdRounds)}
         SELECT CAST(nn.n AS BIGINT) AS n,
           round(wa, 6) AS w0, round(wb, 6) AS w1, round(wc, 6) AS w2,
           round(CAST(sum(CAST(round(-(y * ln(CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-(wa + wb * x1 + wc * x2))))
              + (CAST(1 AS DOUBLE) - y) * ln(CAST(1 AS DOUBLE) - CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-(wa + wb * x1 + wc * x2))))), 12) AS DECIMAL(28,12))) AS DOUBLE) / nn.n, 6) AS logloss,
           round(CAST(sum(CASE WHEN ((wa + wb * x1 + wc * x2) > 0) = (y > 0.5) THEN 1 ELSE 0 END) AS DOUBLE) / nn.n, 6) AS accuracy
-        FROM b, w$GdRounds, nn GROUP BY nn.n, wa, wb, wc""")
-      sb.toString
-    },
+        FROM b, w$GdRounds, nn GROUP BY nn.n, wa, wb, wc"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
       logregGd(scope.persist(mlFeatures(s, d))).localCheckpoint(true)
     })
@@ -3291,15 +3010,7 @@ object Analytics {
   val mlKfoldCv = QueryDef(
     "ml_kfold_cv",
     Some(s"""WITH li AS (SELECT l_orderkey % 5 AS fold, l_quantity, l_discount, l_extendedprice FROM lineitem),
-      fm AS (SELECT fold, count(*) AS cnt,
-          sum(CAST(l_quantity AS DECIMAL(18,6))) AS d1,
-          sum(CAST(l_discount AS DECIMAL(18,6))) AS d2,
-          sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS dy,
-          sum(CAST(l_quantity * l_quantity AS DECIMAL(28,8))) AS d11,
-          sum(CAST(l_quantity * l_discount AS DECIMAL(28,8))) AS d12,
-          sum(CAST(l_discount * l_discount AS DECIMAL(28,8))) AS d22,
-          sum(CAST(l_quantity * l_extendedprice AS DECIMAL(28,8))) AS d1y,
-          sum(CAST(l_discount * l_extendedprice AS DECIMAL(28,8))) AS d2y
+      fm AS (SELECT fold, ${foldMomentsSql(yy = false)}
         FROM li GROUP BY fold),
       tot AS (SELECT sum(cnt) AS tcnt, sum(d1) AS t1, sum(d2) AS t2, sum(dy) AS ty,
           sum(d11) AS t11, sum(d12) AS t12, sum(d22) AS t22,
@@ -3326,16 +3037,7 @@ object Analytics {
         col("l_quantity"), col("l_discount"), col("l_extendedprice")))
       // 5 rows of exact DECIMAL sums — totals and train moments derive
       // from them without touching the corpus again
-      val fm = li.groupBy(col("fold")).agg(
-        count(lit(1)).as("cnt"),
-        sum(col("l_quantity").cast(DecimalType(18, 6))).as("d1"),
-        sum(col("l_discount").cast(DecimalType(18, 6))).as("d2"),
-        sum(col("l_extendedprice").cast(DecimalType(18, 6))).as("dy"),
-        sum((col("l_quantity") * col("l_quantity")).cast(DecimalType(28, 8))).as("d11"),
-        sum((col("l_quantity") * col("l_discount")).cast(DecimalType(28, 8))).as("d12"),
-        sum((col("l_discount") * col("l_discount")).cast(DecimalType(28, 8))).as("d22"),
-        sum((col("l_quantity") * col("l_extendedprice")).cast(DecimalType(28, 8))).as("d1y"),
-        sum((col("l_discount") * col("l_extendedprice")).cast(DecimalType(28, 8))).as("d2y"))
+      val fm = foldMoments(li, yy = false)
         .localCheckpoint(true)
       val tot = fm.agg(sum(col("cnt")).as("tcnt"), sum(col("d1")).as("t1"),
         sum(col("d2")).as("t2"), sum(col("dy")).as("ty"),
@@ -3524,30 +3226,15 @@ object Analytics {
     * the ml_logreg_gd gate, so both gates verify the SAME weights. */
   val mlThresholdSweep = QueryDef(
     "ml_threshold_sweep",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      // logit edges as driver-computed literals (NOT per-engine ln():
-      // libm ln can differ in the last ulp) — same list the
-      // calibration bins use; decisions score the PUBLISHED w6
-      // weights (see logregWeights6)
-      val edges = calibEdges.map(e => s"CAST($e AS DOUBLE)").mkString("[", ", ", "]")
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        th AS (SELECT CAST(i AS DOUBLE) / 10 AS t, $edges[i] AS e FROM (SELECT unnest(range(1, 10)) AS i)),
-        sc AS (SELECT th.t,
-            CAST(sum(CASE WHEN (wa + wb * x1 + wc * x2) > th.e AND y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-            CAST(sum(CASE WHEN (wa + wb * x1 + wc * x2) > th.e AND y < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-            CAST(sum(CASE WHEN NOT ((wa + wb * x1 + wc * x2) > th.e) AND y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS fn
-          FROM b, w6, th GROUP BY th.t)
+    Some(s"""$trainedSql,
+        $thresholdGridSql,
+        ${sweepCountsSql("sc", "th.t", MarginSql, "b, w6", "tp", "fp", "fn")}
         SELECT t, tp, fp, fn,
           CASE WHEN tp + fp > 0 THEN round(CAST(tp AS DOUBLE) / (tp + fp), 6) END AS prec,
           CASE WHEN tp + fn > 0 THEN round(CAST(tp AS DOUBLE) / (tp + fn), 6) END AS rec
-        FROM sc ORDER BY t""")
-      sb.toString
-    },
+        FROM sc ORDER BY t"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      sweepOfScores(scoreWith(b, logregWeights6(b))).localCheckpoint(true)
+      sweepOfVg(vgOfScores(gateScores(s, d))).localCheckpoint(true)
     })
 
   // ------------------------------------------- cost-optimal threshold
@@ -3558,7 +3245,7 @@ object Analytics {
   val CostFn = 5L
 
   /** Cost-optimal operating point over a scored (z, y) frame — the
-    * decision [[sweepOfScores]]'s grid exists FOR (a threshold sweep
+    * decision [[sweepOfVg]]'s grid exists FOR (a threshold sweep
     * is only an intermediate; production picks the point minimizing
     * expected cost under the business's asymmetric error prices —
     * Elkan 2001, "The Foundations of Cost-Sensitive Learning"): per
@@ -3567,7 +3254,7 @@ object Analytics {
     * tiebreak. Grid algebra at 9-row grain past the ONE sweep scan. */
   def costOptOfScores(zz: DataFrame)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
-    val grid = sweepOfScores(zz)
+    val grid = sweepOfVg(vgOfScores(zz))
       .selectExpr("t", "tp", "fp", "fn", s"$CostFp * fp + $CostFn * fn AS cost")
       .localCheckpoint(true) // 9 rows feed the argmin and the output
     val best = grid.agg(min(col("cost")).as("min_cost"))
@@ -3586,28 +3273,17 @@ object Analytics {
     * (lazy — see [[mlCalibration]].) */
   lazy val mlThresholdCostOpt: QueryDef = QueryDef(
     "ml_threshold_cost_opt",
-    Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      val edges = calibEdges.map(e => s"CAST($e AS DOUBLE)").mkString("[", ", ", "]")
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        th AS (SELECT CAST(i AS DOUBLE) / 10 AS t, $edges[i] AS e FROM (SELECT unnest(range(1, 10)) AS i)),
-        sc AS (SELECT th.t,
-            CAST(sum(CASE WHEN (wa + wb * x1 + wc * x2) > th.e AND y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-            CAST(sum(CASE WHEN (wa + wb * x1 + wc * x2) > th.e AND y < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-            CAST(sum(CASE WHEN NOT ((wa + wb * x1 + wc * x2) > th.e) AND y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS fn
-          FROM b, w6, th GROUP BY th.t),
+    Some(s"""$trainedSql,
+        $thresholdGridSql,
+        ${sweepCountsSql("sc", "th.t", MarginSql, "b, w6", "tp", "fp", "fn")},
         cg AS (SELECT t, tp, fp, fn, $CostFp * fp + $CostFn * fn AS cost FROM sc),
         mn AS (SELECT min(cost) AS min_cost FROM cg),
         bt AS (SELECT min(t) AS best_t FROM cg, mn WHERE cg.cost = mn.min_cost)
         SELECT t, tp, fp, fn, cost,
           CAST(CASE WHEN t = best_t THEN 1 ELSE 0 END AS BIGINT) AS is_best
-        FROM cg, bt ORDER BY t""")
-      sb.toString
-    },
+        FROM cg, bt ORDER BY t"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      costOptOfScores(scoreWith(b, logregWeights6(b))).localCheckpoint(true)
+      costOptOfScores(gateScores(s, d)).localCheckpoint(true)
     })
 
   // ----------------------------------------------------------- q65
@@ -3784,22 +3460,12 @@ object Analytics {
   val mlLiftDeciles = QueryDef(
     "ml_lift_deciles",
     Some {
-      val sb = new StringBuilder(logregCtes(GdRounds))
-      val ths = (1 to 9).map(i =>
-        s"percentile_cont(0.${i}) WITHIN GROUP (ORDER BY z) AS t$i").mkString(", ")
-      val binSum = (1 to 9).map(i => s"(CASE WHEN z > t$i THEN 1 ELSE 0 END)").mkString(" + ")
       // z from the PUBLISHED w6 weights (logregWeights6): decile
       // thresholds sit in the densest z region by construction, so
       // the raw weights' cross-engine ulp noise moves whole tied
       // groups — the sf0.1 gate caught exactly that
-      sb.append(s""",
-        ${w6Cte(GdRounds)},
-        zz AS (SELECT (wa + wb * x1 + wc * x2) AS z, y FROM b, w6),
-        th AS (SELECT $ths FROM zz),
-        binned AS (SELECT 1 + $binSum AS decile, y FROM zz, th),
-        dd AS (SELECT decile, count(*) AS n,
-            CAST(sum(CASE WHEN y > 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS pos
-          FROM binned GROUP BY decile),
+      s"""$scoredSql,
+        ${decileCountsSql("th")},
         tot AS (SELECT CAST(sum(n) AS DOUBLE) AS tn, CAST(sum(pos) AS DOUBLE) AS tp FROM dd),
         cum AS (SELECT decile, n, pos,
             CAST(sum(pos) OVER (ORDER BY decile DESC ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS cpos
@@ -3808,16 +3474,13 @@ object Analytics {
           round(CAST(c.pos AS DOUBLE) / c.n, 6) AS rate,
           round((CAST(c.pos AS DOUBLE) / c.n) / (tot.tp / tot.tn), 6) AS lift,
           round(c.cpos / tot.tp, 6) AS cum_gain
-        FROM cum c, tot ORDER BY c.decile""")
-      sb.toString
+        FROM cum c, tot ORDER BY c.decile"""
     },
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
       // value-grain collapse before the readout (r15): the decile
       // edges' selection passes and the binning then run at ~550-row
       // grain off one corpus pass (see [[vgOfScores]])
-      liftOfVg(vgOfScores(scoreWith(b, logregWeights6(b))))
-        .localCheckpoint(true)
+      liftOfVg(vgOfScores(gateScores(s, d))).localCheckpoint(true)
     })
 
   // ----------------------------------------------------------- q68

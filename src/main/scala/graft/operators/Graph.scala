@@ -39,14 +39,25 @@ object Graph {
     * so every node has outdeg ≥ 1 and no dangling-mass handling is
     * needed. */
   private def edges(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val co = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("c"), (col("l_suppkey") + SuppOffset).as("p"))
-      .distinct()
+    val co = purchases(s, d).distinct()
     co.select(col("c").as("src"), col("p").as("dst"))
       .union(co.select(col("p").as("src"), col("c").as("dst")))
   }
+
+  /** (c, p) customer–supplier purchase rows, one per lineitem. */
+  private def purchases(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
+      .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
+        col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").as("c"), (col("l_suppkey") + SuppOffset).as("p"))
+
+  /** Oracle twin of [[edges]]: the head `WITH co AS (...)` holds the
+    * distinct purchase relation, and [[undirectedSql]] doubles it. */
+  private def coSql: String =
+    s"""WITH co AS (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey + $SuppOffset AS p
+      FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey)"""
+  private def undirectedSql: String =
+    "SELECT c AS src, p AS dst FROM co UNION ALL SELECT p, c FROM co"
 
   /** Checkpoint cadence for long pagerank runs: every this many
     * rounds the rank lineage is truncated via eager
@@ -96,9 +107,8 @@ object Graph {
     "graph_pagerank",
     Some {
       val sb = new StringBuilder(
-        s"""WITH co AS (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey + $SuppOffset AS p
-          FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-        e AS (SELECT c AS src, p AS dst FROM co UNION ALL SELECT p, c FROM co),
+        s"""$coSql,
+        e AS ($undirectedSql),
         deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
         r0 AS (SELECT src AS node, CAST(1000000 AS BIGINT) AS rank FROM deg)""")
       for (it <- 1 to PrIters) {
@@ -148,10 +158,7 @@ object Graph {
     * coefficient is one IEEE division. */
   val triangles = QueryDef(
     "graph_triangles",
-    Some("""WITH co AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-      e AS (SELECT DISTINCT a.p AS u, b.p AS v FROM co a JOIN co b ON a.o = b.o AND a.p < b.p),
-      deg AS (SELECT node, count(*) AS dg
-        FROM (SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e) t GROUP BY node),
+    Some(s"""${partEdgesSql("count(*)")},
       ne AS (SELECT count(*) AS n_edges FROM e),
       wed AS (SELECT CAST(sum((dg * (dg - 1)) // 2) AS BIGINT) AS n_wedges FROM deg),
       tri AS (SELECT count(*) AS n_triangles
@@ -159,24 +166,45 @@ object Graph {
       SELECT n_edges, n_wedges, n_triangles,
         round(3.0 * n_triangles / n_wedges, 6) AS clustering
       FROM ne, wed, tri"""),
-    (s, d) => {
-      graft.CacheScope.withScope { implicit scope =>
-        val co = Tables.lineitem(s, d)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-        val e = co.as("a").join(co.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-          .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
-        triangleStats(e).localCheckpoint(true)
-      }
+    (s, d) => graft.CacheScope.withScope { implicit scope =>
+      triangleStats(partEdges(s, d)).localCheckpoint(true)
     })
 
-  /** Degree-ordered triangle statistics over a distinct undirected
-    * edge set given as (u, v) rows with u < v. See [[triangles]] for
-    * the algorithm and scale argument. Returns one row:
-    * (n_edges, n_wedges, n_triangles, clustering). */
-  def triangleStats(edges: DataFrame,
-      broadcastAdjMaxEdges: Long = 8L * 1000 * 1000)(
-      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
-    graft.functions.Natives.ensure(edges.sparkSession)
+  /** The part co-purchase graph of [[triangles]] and [[clusteringCoeff]]:
+    * distinct (u, v) part pairs with u < v sharing an order. */
+  private def partEdges(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
+    val co = Tables.lineitem(s, d)
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
+    co.as("a").join(co.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+      .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
+  }
+
+  /** Oracle twin of [[partEdges]] (`co`, `e`) plus the degree table
+    * `deg(node, dg)`, `dg` being the given aggregate over the
+    * endpoint multiset. */
+  private def partEdgesSql(dg: String): String =
+    s"""WITH co AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+      e AS (SELECT DISTINCT a.p AS u, b.p AS v FROM co a JOIN co b ON a.o = b.o AND a.p < b.p),
+      deg AS (SELECT node, $dg AS dg
+        FROM (SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e) t GROUP BY node)"""
+
+  /** The degree orientation shared by [[triangleStats]] and
+    * [[localClustering]] over a distinct (u, v) edge set, u < v.
+    * Returns the node degrees `(node, dg)` and one row per oriented
+    * edge `(src, dst)` carrying both endpoints' SORTED out-neighbor
+    * lists `nu`, `nv`.
+    *
+    * The adjacency is built with ONE shuffle; its total payload is |E|
+    * longs regardless of degree skew (each edge appears in exactly one
+    * list), and sort_array gives the merge walk its contract. The two
+    * list joins carry no hint: AQE's runtime size statistics turn them
+    * into broadcast joins when the adjacency (≈8 B/edge) is under
+    * `spark.sql.adaptive.autoBroadcastJoinThreshold`, and beyond that
+    * they stay shuffle joins with per-edge list replication as the
+    * cost (the MapReduce edge-iterator trade). `ori` is persisted
+    * because the adjacency build and the list joins both read it. */
+  private def orientedLists(edges: DataFrame)(
+      implicit scope: graft.CacheScope): (DataFrame, DataFrame) = {
     val e = edges.transform(scope.persist)
     val deg = e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("dg"))
@@ -191,31 +219,29 @@ object Graph {
           .otherwise(struct(col("v").as("src"), col("u").as("dst"))).as("r"))
       .select(col("r.src"), col("r.dst"))
       .transform(scope.persist)
-    // sorted oriented adjacency: ONE shuffle; total payload is |E|
-    // longs regardless of degree skew (each edge appears in exactly
-    // one list). sort_array gives the merge walk its contract.
     val adj = ori.groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
       .transform(scope.persist)
-    // adjacency payload ≈ 8 B/edge: broadcast when the whole graph's
-    // lists fit comfortably in an executor (≲64 MB), making the count
-    // map-only over the persisted edges; beyond that, plain joins —
-    // AQE picks the strategy — with per-edge list replication as the
-    // documented shuffle cost (the MapReduce edge-iterator trade).
-    // The decision reads one count off the already-persisted edges:
-    // metadata-scale, same discipline as DedupApi's bucket caps.
-    val hint: DataFrame => DataFrame =
-      if (e.count() <= broadcastAdjMaxEdges) broadcast else identity
-    val tri = ori
-      .join(hint(adj.select(col("src").as("u_"), col("nbrs").as("nu"))),
-        col("src") === col("u_"))
-      .join(hint(adj.select(col("src").as("v_"), col("nbrs").as("nv"))),
-        col("dst") === col("v_"))
+    val lists = ori
+      .join(adj.select(col("src").as("u_"), col("nbrs").as("nu")), col("src") === col("u_"))
+      .join(adj.select(col("src").as("v_"), col("nbrs").as("nv")), col("dst") === col("v_"))
+    (deg, lists)
+  }
+
+  /** Degree-ordered triangle statistics over a distinct undirected
+    * edge set given as (u, v) rows with u < v. See [[triangles]] for
+    * the algorithm and scale argument. Returns one row:
+    * (n_edges, n_wedges, n_triangles, clustering). */
+  def triangleStats(edges: DataFrame)(
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
+    graft.functions.Natives.ensure(edges.sparkSession)
+    val (deg, lists) = orientedLists(edges)
+    val tri = lists
       // coalesce: a triangle-free graph can drop EVERY edge at the
       // inner joins (no dst has out-neighbors), leaving sum() = null
       .agg(coalesce(sum(graft.functions.SortedInter.interSize(col("nu"), col("nv"))
         .cast("long")), lit(0L)).as("n_triangles"))
-    val ne = e.agg(count(lit(1)).as("n_edges"))
+    val ne = edges.agg(count(lit(1)).as("n_edges"))
     val wed = deg.agg(sum(expr("(dg * (dg - 1)) div 2")).as("n_wedges"))
     ne.crossJoin(broadcast(wed)).crossJoin(broadcast(tri))
       .select(col("n_edges"), col("n_wedges"), col("n_triangles"),
@@ -243,47 +269,11 @@ object Graph {
     * cc = tri/(deg choose 2) as an exact half-up MICRO-unit integer
     * (the round6Ratio construction), so the per-bucket average is ONE
     * IEEE division of exact sums. */
-  def localClustering(edges: DataFrame,
-      forceBroadcast: Boolean = false)(
+  def localClustering(edges: DataFrame)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
-    val e = edges.transform(scope.persist)
-    val deg = e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("dg"))
-      .transform(scope.persist)
-    // persisted: consumed by the adjacency build AND the corner join
-    // (r15 — it was recomputed for each before)
-    val ori = e
-      .join(deg.withColumnRenamed("node", "u").withColumnRenamed("dg", "du"), Seq("u"))
-      .join(deg.withColumnRenamed("node", "v").withColumnRenamed("dg", "dv"), Seq("v"))
-      .select(
-        when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")),
-          struct(col("u").as("src"), col("v").as("dst")))
-          .otherwise(struct(col("v").as("src"), col("u").as("dst"))).as("r"))
-      .select(col("r.src"), col("r.dst"))
-      .transform(scope.persist)
-    val adj = ori.groupBy(col("src"))
-      .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-      .transform(scope.persist)
-    // no eager e.count() just to pick a join strategy (a full extra
-    // job at scale): the caller who KNOWS the graph fits hints with
-    // forceBroadcast = true; otherwise AQE's runtime size stats
-    // convert the shuffle join to broadcast exactly when the
-    // adjacency payload (≈8 B/edge) is actually small — the decision
-    // the count was approximating, made from measured sizes for
-    // free. NOTE the trade (r12 ADVICE): under AQE the adjacency
-    // join stays a shuffle join whenever AQE's size estimate exceeds
-    // spark.sql.autoBroadcastJoinThreshold — correctness-identical
-    // (Round12Spec pins both paths bit-equal), perf governed by the
-    // session's AQE thresholds rather than an extra count job.
-    val hint: DataFrame => DataFrame =
-      if (forceBroadcast) broadcast else identity
-    val corners = ori
-      .join(hint(adj.select(col("src").as("u_"), col("nbrs").as("nu"))),
-        col("src") === col("u_"))
-      .join(hint(adj.select(col("src").as("v_"), col("nbrs").as("nv"))),
-        col("dst") === col("v_"))
-      .select(col("src"), col("dst"),
-        explode(expr("array_intersect(nu, nv)")).as("w"))
+    val (deg, lists) = orientedLists(edges)
+    val corners = lists.select(col("src"), col("dst"),
+      explode(expr("array_intersect(nu, nv)")).as("w"))
     // ONE pass over the corner rows: the r11–r14 form unioned three
     // projections of `corners`, re-running the heaviest join (adjacency
     // intersect + explode) THREE times — exploding the 3-corner array
@@ -316,10 +306,7 @@ object Graph {
     "graph_clustering_coeff",
     Some {
       val tri3 = "FROM e e1 JOIN e e2 ON e2.u = e1.v JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v"
-      s"""WITH co AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-      e AS (SELECT DISTINCT a.p AS u, b.p AS v FROM co a JOIN co b ON a.o = b.o AND a.p < b.p),
-      deg AS (SELECT node, CAST(count(*) AS BIGINT) AS dg
-        FROM (SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e) t GROUP BY node),
+      s"""${partEdgesSql("CAST(count(*) AS BIGINT)")},
       tc AS (SELECT node, CAST(count(*) AS BIGINT) AS tri FROM (
           SELECT e1.u AS node $tri3
           UNION ALL SELECT e1.v $tri3
@@ -336,11 +323,7 @@ object Graph {
       FROM per GROUP BY deg_bucket ORDER BY deg_bucket"""
     },
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val co = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      val e = co.as("a").join(co.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
-      localClustering(e).localCheckpoint(true)
+      localClustering(partEdges(s, d)).localCheckpoint(true)
     })
 
   /** Default mega-order cap for [[nodeSimilarityTopK]]: orders with
@@ -523,9 +506,8 @@ object Graph {
     "graph_kcore",
     Some {
       val sb = new StringBuilder(
-        s"""WITH co AS (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey + $SuppOffset AS p
-          FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-        e0 AS MATERIALIZED (SELECT c AS src, p AS dst FROM co UNION ALL SELECT p, c FROM co)""")
+        s"""$coSql,
+        e0 AS MATERIALIZED ($undirectedSql)""")
       // MATERIALIZED is load-bearing: each round references the prior
       // round three times (once directly, twice through k), so inlined
       // CTEs would expand the base scan 3^rounds times
@@ -596,9 +578,8 @@ object Graph {
     "graph_bfs",
     Some {
       val sb = new StringBuilder(
-        s"""WITH co AS (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey + $SuppOffset AS p
-          FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-        e AS MATERIALIZED (SELECT c AS src, p AS dst FROM co UNION ALL SELECT p, c FROM co),
+        s"""$coSql,
+        e AS MATERIALIZED ($undirectedSql),
         nodes AS MATERIALIZED (SELECT DISTINCT src AS n FROM e),
         d0 AS MATERIALIZED (SELECT n AS node, CAST(0 AS BIGINT) AS dist FROM nodes
           WHERE n < $SuppOffset AND n % $BfsSeedModulus = 0)""")
@@ -740,16 +721,19 @@ object Graph {
     val mapDf = seedIds.zipWithIndex.toSeq.map { case (id, i) => (i, id) }
       .toDF("sb", "seed")
     counts.join(broadcast(mapDf), Seq("sb"))
-      .selectExpr(Seq("seed", closenessReachedSql(rounds),
-        closenessHarmonicSql(rounds)): _*)
+      .selectExpr("seed", s"${closenessReachedSql(rounds)} AS reached",
+        s"${closenessHarmonicSql(rounds)} AS closeness")
       .orderBy(col("seed"))
   }
+
+  /** The distinct seed ids, sorted: the bit order of [[bitmaskBfsNews]]. */
+  private def seedIdsOf(seeds: DataFrame): Array[Long] =
+    seeds.select(col("node")).distinct().collect().map(_.getLong(0)).sorted
 
   def closeness(edges0: DataFrame, seeds: DataFrame, rounds: Int = BfsRounds): DataFrame = {
     val sp = edges0.sparkSession
     import sp.implicits._
-    val seedIds = seeds.select(col("node")).distinct()
-      .collect().map(_.getLong(0)).sorted
+    val seedIds = seedIdsOf(seeds)
     if (seedIds.isEmpty)
       return Seq.empty[(Long, Long, Double)].toDF("seed", "reached", "closeness")
     closenessFromNews(bitmaskBfsNews(edges0, seedIds, rounds), seedIds, rounds)
@@ -792,8 +776,7 @@ object Graph {
   def anf(edges0: DataFrame, seeds: DataFrame, rounds: Int = BfsRounds): DataFrame = {
     val sp = edges0.sparkSession
     import sp.implicits._
-    val seedIds = seeds.select(col("node")).distinct()
-      .collect().map(_.getLong(0)).sorted
+    val seedIds = seedIdsOf(seeds)
     if (seedIds.isEmpty)
       return Seq.empty[(Long, Long, Double, Boolean)]
         .toDF("radius", "n_pairs", "frac", "reaches_90pct")
@@ -814,8 +797,7 @@ object Graph {
       rounds: Int = BfsRounds): DataFrame = {
     val sp = edges0.sparkSession
     import sp.implicits._
-    val seedIds = seeds.select(col("node")).distinct()
-      .collect().map(_.getLong(0)).sorted
+    val seedIds = seedIdsOf(seeds)
     if (seedIds.isEmpty)
       return Seq.empty[(String, String, Long, Double)]
         .toDF("readout", "k", "n", "v")
@@ -833,138 +815,89 @@ object Graph {
     an.unionAll(cl).orderBy(col("readout"), col("k"))
   }
 
-  /** `reached` / `closeness` output fragments shared with the oracle
-    * (identical fixed-order IEEE sum over the exact distance counts). */
-  private[graft] def closenessReachedSql(rounds: Int): String =
-    (1 to rounds).map(k => s"c$k").mkString("", " + ", " AS reached")
-  private[graft] def closenessHarmonicSql(rounds: Int): String =
-    (1 to rounds).map(k => s"CAST(c$k AS DOUBLE) / $k").mkString("", " + ", " AS closeness")
+  /** `reached` / `closeness` sums shared with the oracle (identical
+    * fixed-order IEEE sum over the exact distance counts). */
+  private def closenessReachedSql(rounds: Int): String =
+    (1 to rounds).map(k => s"c$k").mkString(" + ")
+  private def closenessHarmonicSql(rounds: Int): String =
+    (1 to rounds).map(k => s"CAST(c$k AS DOUBLE) / $k").mkString(" + ")
+
+  /** Oracle of the sampled-seed BFS behind [[closeness]], [[anf]] and
+    * [[pipelineGraphCentrality]]: the labeled relaxation the bitmask
+    * engine's fixpoint equals, as `e`, `cust`, the size-derived seed
+    * modulus `m` of [[closenessSeeds]], and rounds `d0` … `d`BfsRounds
+    * of (seed, node, dist). */
+  private def labeledBfsSql: String =
+    s"""$coSql,
+        e AS MATERIALIZED ($undirectedSql),
+        cust AS MATERIALIZED (SELECT DISTINCT src AS node FROM e WHERE src < $SuppOffset),
+        m AS (SELECT greatest(CAST(1 AS BIGINT), count(*) // $ClosenessSeedTarget) AS mm FROM cust),
+        d0 AS MATERIALIZED (SELECT node AS seed, node, CAST(0 AS BIGINT) AS dist
+          FROM cust WHERE node % (SELECT mm FROM m) = 0)""" +
+      (1 to BfsRounds).map(it => s""",
+        d$it AS MATERIALIZED (SELECT seed, node, min(dist) AS dist FROM (
+          SELECT seed, node, dist FROM d${it - 1}
+          UNION ALL
+          SELECT d.seed, e.dst, d.dist + 1 FROM d${it - 1} d JOIN e ON d.node = e.src) GROUP BY seed, node)""").mkString
+
+  /** Oracle: per-seed distance counts `counts(seed, c1 … c`BfsRounds`)`
+    * off [[labeledBfsSql]]. */
+  private def seedCountsSql: String = {
+    val cs = (1 to BfsRounds)
+      .map(k => s"CAST(sum(CASE WHEN dist = $k THEN 1 ELSE 0 END) AS BIGINT) AS c$k")
+      .mkString(", ")
+    s"counts AS (SELECT seed, $cs FROM d$BfsRounds WHERE dist > 0 GROUP BY seed)"
+  }
+
+  /** Oracle: radius-cumulative pair counts `anf(r, n_pairs)` and their
+    * total `tot(t)` off [[labeledBfsSql]]. */
+  private def anfCtesSql: String =
+    s"""cnts AS (SELECT dist AS r, CAST(count(*) AS BIGINT) AS c FROM d$BfsRounds GROUP BY dist),
+        tot AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM cnts),
+        anf AS (SELECT r, CAST(sum(c) OVER (ORDER BY r ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_pairs FROM cnts)"""
+
+  /** The customer–supplier edges, checkpointed ONCE, and the sampled
+    * seeds of [[closenessSeeds]]: the seed-modulus count, the seed
+    * collect and the BFS all read the one edge build, and `cust` the
+    * count and the collect. */
+  private def seededEdges(s: org.apache.spark.sql.SparkSession, d: String): (DataFrame, DataFrame) = {
+    val e = edges(s, d).localCheckpoint(true)
+    val cust = e.select(col("src").as("node")).distinct()
+      .filter(col("node") < SuppOffset).localCheckpoint(true)
+    (e, closenessSeeds(cust))
+  }
 
   val closenessQuery = QueryDef(
     "graph_closeness",
-    Some {
-      val sb = new StringBuilder(
-        s"""WITH co AS (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey + $SuppOffset AS p
-          FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-        e AS MATERIALIZED (SELECT c AS src, p AS dst FROM co UNION ALL SELECT p, c FROM co),
-        cust AS MATERIALIZED (SELECT DISTINCT src AS node FROM e WHERE src < $SuppOffset),
-        m AS (SELECT greatest(CAST(1 AS BIGINT), count(*) // $ClosenessSeedTarget) AS mm FROM cust),
-        d0 AS MATERIALIZED (SELECT node AS seed, node, CAST(0 AS BIGINT) AS dist
-          FROM cust WHERE node % (SELECT mm FROM m) = 0)""")
-      for (it <- 1 to BfsRounds) {
-        sb.append(s""",
-        d$it AS MATERIALIZED (SELECT seed, node, min(dist) AS dist FROM (
-          SELECT seed, node, dist FROM d${it - 1}
-          UNION ALL
-          SELECT d.seed, e.dst, d.dist + 1 FROM d${it - 1} d JOIN e ON d.node = e.src) GROUP BY seed, node)""")
-      }
-      val cs = (1 to BfsRounds)
-        .map(k => s"CAST(sum(CASE WHEN dist = $k THEN 1 ELSE 0 END) AS BIGINT) AS c$k")
-        .mkString(", ")
-      sb.append(s""",
-        counts AS (SELECT seed, $cs FROM d$BfsRounds WHERE dist > 0 GROUP BY seed)
-        SELECT seed, ${closenessReachedSql(BfsRounds)}, ${closenessHarmonicSql(BfsRounds)}
-        FROM counts ORDER BY seed""")
-      sb.toString
-    },
-    (s, d) => {
-      // ONE materialization of the edge build (r15, guide §1.2): the
-      // seed-modulus count, the seed collect, and the BFS's internal
-      // checkpoint each recomputed the orders⋈lineitem distinct
-      // derivation before; cust is likewise read twice (count + collect)
-      val e = edges(s, d).localCheckpoint(true)
-      val cust = e.select(col("src").as("node")).distinct()
-        .filter(col("node") < SuppOffset).localCheckpoint(true)
-      closeness(e, closenessSeeds(cust))
-    })
+    Some(s"""$labeledBfsSql,
+        $seedCountsSql
+        SELECT seed, ${closenessReachedSql(BfsRounds)} AS reached,
+          ${closenessHarmonicSql(BfsRounds)} AS closeness
+        FROM counts ORDER BY seed"""),
+    (s, d) => { val (e, seeds) = seededEdges(s, d); closeness(e, seeds) })
 
   val anfQuery = QueryDef(
     "graph_anf",
-    Some {
-      // the identical labeled-BFS CTE block as graph_closeness (the
-      // bitmask engine's fixpoint is the same (seed, node, dist)
-      // relation), then radius-cumulative pair counts
-      val sb = new StringBuilder(
-        s"""WITH co AS (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey + $SuppOffset AS p
-          FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-        e AS MATERIALIZED (SELECT c AS src, p AS dst FROM co UNION ALL SELECT p, c FROM co),
-        cust AS MATERIALIZED (SELECT DISTINCT src AS node FROM e WHERE src < $SuppOffset),
-        m AS (SELECT greatest(CAST(1 AS BIGINT), count(*) // $ClosenessSeedTarget) AS mm FROM cust),
-        d0 AS MATERIALIZED (SELECT node AS seed, node, CAST(0 AS BIGINT) AS dist
-          FROM cust WHERE node % (SELECT mm FROM m) = 0)""")
-      for (it <- 1 to BfsRounds) {
-        sb.append(s""",
-        d$it AS MATERIALIZED (SELECT seed, node, min(dist) AS dist FROM (
-          SELECT seed, node, dist FROM d${it - 1}
-          UNION ALL
-          SELECT d.seed, e.dst, d.dist + 1 FROM d${it - 1} d JOIN e ON d.node = e.src) GROUP BY seed, node)""")
-      }
-      sb.append(s""",
-        cnts AS (SELECT dist AS r, CAST(count(*) AS BIGINT) AS c FROM d$BfsRounds GROUP BY dist),
-        tot AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM cnts),
-        anf AS (SELECT r, CAST(sum(c) OVER (ORDER BY r ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_pairs FROM cnts)
+    Some(s"""$labeledBfsSql,
+        $anfCtesSql
         SELECT anf.r AS radius, anf.n_pairs,
           CAST(anf.n_pairs AS DOUBLE) / tot.t AS frac,
           anf.n_pairs * 10 >= tot.t * 9 AS reaches_90pct
-        FROM anf, tot ORDER BY radius""")
-      sb.toString
-    },
-    (s, d) => {
-      // ONE materialization of the edge build (r15, guide §1.2): the
-      // seed-modulus count, the seed collect, and the BFS's internal
-      // checkpoint each recomputed the orders⋈lineitem distinct
-      // derivation before; cust is likewise read twice (count + collect)
-      val e = edges(s, d).localCheckpoint(true)
-      val cust = e.select(col("src").as("node")).distinct()
-        .filter(col("node") < SuppOffset).localCheckpoint(true)
-      anf(e, closenessSeeds(cust))
-    })
+        FROM anf, tot ORDER BY radius"""),
+    (s, d) => { val (e, seeds) = seededEdges(s, d); anf(e, seeds) })
 
   val pipelineGraphCentralityQuery = QueryDef(
     "pipeline_graph_centrality",
-    Some {
-      val sb = new StringBuilder(
-        s"""WITH co AS (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey + $SuppOffset AS p
-          FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-        e AS MATERIALIZED (SELECT c AS src, p AS dst FROM co UNION ALL SELECT p, c FROM co),
-        cust AS MATERIALIZED (SELECT DISTINCT src AS node FROM e WHERE src < $SuppOffset),
-        m AS (SELECT greatest(CAST(1 AS BIGINT), count(*) // $ClosenessSeedTarget) AS mm FROM cust),
-        d0 AS MATERIALIZED (SELECT node AS seed, node, CAST(0 AS BIGINT) AS dist
-          FROM cust WHERE node % (SELECT mm FROM m) = 0)""")
-      for (it <- 1 to BfsRounds) {
-        sb.append(s""",
-        d$it AS MATERIALIZED (SELECT seed, node, min(dist) AS dist FROM (
-          SELECT seed, node, dist FROM d${it - 1}
-          UNION ALL
-          SELECT d.seed, e.dst, d.dist + 1 FROM d${it - 1} d JOIN e ON d.node = e.src) GROUP BY seed, node)""")
-      }
-      val cexprs = (1 to BfsRounds)
-        .map(k => s"CAST(sum(CASE WHEN dist = $k THEN 1 ELSE 0 END) AS BIGINT) AS c$k")
-        .mkString(", ")
-      val reached = (1 to BfsRounds).map(k => s"c$k").mkString(" + ")
-      val harmonic = (1 to BfsRounds).map(k => s"CAST(c$k AS DOUBLE) / $k").mkString(" + ")
-      sb.append(s""",
-        counts AS (SELECT seed, $cexprs FROM d$BfsRounds WHERE dist > 0 GROUP BY seed),
+    Some(s"""$labeledBfsSql,
+        $seedCountsSql,
         cl AS (SELECT 'closeness' AS readout, CAST(seed AS VARCHAR) AS k,
-          CAST($reached AS BIGINT) AS n, $harmonic AS v FROM counts),
-        cnts AS (SELECT dist AS r, CAST(count(*) AS BIGINT) AS c FROM d$BfsRounds GROUP BY dist),
-        tot AS (SELECT CAST(sum(c) AS BIGINT) AS t FROM cnts),
-        anf AS (SELECT r, CAST(sum(c) OVER (ORDER BY r ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_pairs FROM cnts),
+          CAST(${closenessReachedSql(BfsRounds)} AS BIGINT) AS n,
+          ${closenessHarmonicSql(BfsRounds)} AS v FROM counts),
+        $anfCtesSql,
         an AS (SELECT 'anf' AS readout, CAST(anf.r AS VARCHAR) AS k,
           anf.n_pairs AS n, CAST(anf.n_pairs AS DOUBLE) / tot.t AS v FROM anf, tot)
-        SELECT * FROM an UNION ALL SELECT * FROM cl ORDER BY readout, k""")
-      sb.toString
-    },
-    (s, d) => {
-      // ONE materialization of the edge build (r15, guide §1.2): the
-      // seed-modulus count, the seed collect, and the BFS's internal
-      // checkpoint each recomputed the orders⋈lineitem distinct
-      // derivation before; cust is likewise read twice (count + collect)
-      val e = edges(s, d).localCheckpoint(true)
-      val cust = e.select(col("src").as("node")).distinct()
-        .filter(col("node") < SuppOffset).localCheckpoint(true)
-      pipelineGraphCentrality(e, closenessSeeds(cust))
-    })
+        SELECT * FROM an UNION ALL SELECT * FROM cl ORDER BY readout, k"""),
+    (s, d) => { val (e, seeds) = seededEdges(s, d); pipelineGraphCentrality(e, seeds) })
 
   /** Size-derived seed selection over a `node` column: ONE one-row
     * count broadcast into the modulus filter, so the seed count stays
@@ -1031,8 +964,7 @@ object Graph {
     "graph_hits",
     Some {
       val sb = new StringBuilder(
-        s"""WITH co AS (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey + $SuppOffset AS p
-          FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
+        s"""$coSql,
         h0 AS (SELECT DISTINCT c AS node, CAST(1000000 AS BIGINT) AS score FROM co)""")
       for (it <- 1 to HitsIters) {
         sb.append(s""",
@@ -1058,11 +990,7 @@ object Graph {
       sb.toString
     },
     (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val co = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-        .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("c"), (col("l_suppkey") + SuppOffset).as("p"))
-      val (h, a) = hits(co)
+      val (h, a) = hits(purchases(s, d))
       val top = (df: DataFrame, side: String) => df
         .orderBy(col("score").desc, col("node")).limit(10)
         .withColumn("rk", row_number().over(
@@ -1106,21 +1034,22 @@ object Graph {
     l
   }
 
+  /** Oracle: label-propagation rounds `l1` … `l`LpaRounds over `e`
+    * from `l0`, the unrolled [[labelPropagation]]. */
+  private def lpaRoundsSql: String = (1 to LpaRounds).map(it => s""",
+        l$it AS MATERIALIZED (SELECT node, lbl FROM (
+          SELECT e.dst AS node, l.lbl, count(*) AS c,
+            row_number() OVER (PARTITION BY e.dst ORDER BY count(*) DESC, l.lbl) AS rk
+          FROM e JOIN l${it - 1} l ON e.src = l.node GROUP BY e.dst, l.lbl) t WHERE rk = 1)""").mkString
+
   val labelPropQuery = QueryDef(
     "graph_label_prop",
     Some {
       val sb = new StringBuilder(
-        s"""WITH co AS (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey + $SuppOffset AS p
-          FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-        e AS MATERIALIZED (SELECT c AS src, p AS dst FROM co UNION ALL SELECT p, c FROM co),
+        s"""$coSql,
+        e AS MATERIALIZED ($undirectedSql),
         l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lbl FROM e)""")
-      for (it <- 1 to LpaRounds) {
-        sb.append(s""",
-        l$it AS MATERIALIZED (SELECT node, lbl FROM (
-          SELECT e.dst AS node, l.lbl, count(*) AS c,
-            row_number() OVER (PARTITION BY e.dst ORDER BY count(*) DESC, l.lbl) AS rk
-          FROM e JOIN l${it - 1} l ON e.src = l.node GROUP BY e.dst, l.lbl) t WHERE rk = 1)""")
-      }
+      sb.append(lpaRoundsSql)
       sb.append(s"""
         SELECT lbl AS community, count(*) AS n_nodes FROM l$LpaRounds
         GROUP BY lbl ORDER BY n_nodes DESC, community""")
@@ -1142,9 +1071,8 @@ object Graph {
     * nothing else touches the edge list. */
   val degreeStats = QueryDef(
     "graph_degree_stats",
-    Some(s"""WITH co AS (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey + $SuppOffset AS p
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-      e AS (SELECT c AS src, p AS dst FROM co UNION ALL SELECT p, c FROM co),
+    Some(s"""$coSql,
+      e AS ($undirectedSql),
       deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src)
       SELECT CAST(length(bin(deg)) - 1 AS BIGINT) AS bucket, count(*) AS n_nodes,
         CAST(min(deg) AS BIGINT) AS min_deg, CAST(max(deg) AS BIGINT) AS max_deg
@@ -1174,17 +1102,10 @@ object Graph {
     "graph_modularity",
     Some {
       val sb = new StringBuilder(
-        s"""WITH co AS (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey + $SuppOffset AS p
-          FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-        e AS (SELECT c AS src, p AS dst FROM co UNION ALL SELECT p, c FROM co),
+        s"""$coSql,
+        e AS ($undirectedSql),
         l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM e)""")
-      for (it <- 1 to LpaRounds) {
-        sb.append(s""",
-        l$it AS MATERIALIZED (SELECT node, lbl FROM (
-          SELECT e.dst AS node, l.lbl, count(*) AS c,
-            row_number() OVER (PARTITION BY e.dst ORDER BY count(*) DESC, l.lbl) AS rk
-          FROM e JOIN l${it - 1} l ON e.src = l.node GROUP BY e.dst, l.lbl) t WHERE rk = 1)""")
-      }
+      sb.append(lpaRoundsSql)
       sb.append(s""",
         cs AS (SELECT ls.lbl AS community,
             CAST(count(*) AS BIGINT) AS d_c,
@@ -1235,9 +1156,8 @@ object Graph {
     * ordinary suppliers. */
   val assortativity = QueryDef(
     "graph_assortativity",
-    Some(s"""WITH co AS (SELECT DISTINCT o.o_custkey AS c, l.l_suppkey + $SuppOffset AS p
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
-      e AS (SELECT c AS src, p AS dst FROM co UNION ALL SELECT p, c FROM co),
+    Some(s"""$coSql,
+      e AS ($undirectedSql),
       deg AS (SELECT src AS node, count(*) AS dg FROM e GROUP BY src),
       pr AS (SELECT a.dg AS dx, b.dg AS dy
         FROM e JOIN deg a ON e.src = a.node JOIN deg b ON e.dst = b.node),

@@ -23,6 +23,36 @@ import org.apache.spark.sql.types._
 object Insights2 {
 
   // ----------------------------------------------------------- q80
+  /** Oracle of the CUSUM deviation over daily counts `dd`: prefix
+    * sums `w` and each day's exact |t·S_k − k·S_t| in `dev`. */
+  private def cusumDevSql: String =
+    """w AS (SELECT event_type, d, c,
+          CAST(sum(c) OVER (PARTITION BY event_type ORDER BY d ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sk,
+          CAST(row_number() OVER (PARTITION BY event_type ORDER BY d) AS BIGINT) AS k,
+          CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS st,
+          CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS t
+        FROM dd),
+      dev AS (SELECT event_type, d, k, t, st,
+          abs(CAST(t AS DECIMAL(19,0)) * sk - CAST(k AS DECIMAL(19,0)) * st) AS dk
+        FROM w)"""
+
+  /** Oracle of the Theil–Sen pair slopes over daily counts `dd`:
+    * days since each type's first day `dx`, and every pair's slope
+    * `pr`. */
+  private def theilSenPairsSql: String =
+    """dx AS (SELECT event_type,
+        CAST(d - min(d) OVER (PARTITION BY event_type) AS BIGINT) AS x, c FROM dd),
+      pr AS (SELECT a.event_type, (CAST(b.c AS DOUBLE) - a.c) / (b.x - a.x) AS slope
+        FROM dx a JOIN dx b ON a.event_type = b.event_type AND b.x > a.x)"""
+
+  /** Oracle of the Theil–Sen intercept given slopes `sl`: the median
+    * residual `ic(event_type, ts_intercept)`. */
+  private def theilSenInterceptSql: String =
+    """rs AS (SELECT dx.event_type, CAST(dx.c AS DOUBLE) - sl.ts_slope * dx.x AS resid
+        FROM dx JOIN sl ON dx.event_type = sl.event_type),
+      ic AS (SELECT event_type, round(percentile_cont(0.5) WITHIN GROUP (ORDER BY resid), 6) AS ts_intercept
+        FROM rs GROUP BY 1)"""
+
   /** q80: CUSUM changepoint detection on the daily event volume per
     * type — "did the level shift, and when?" (Page 1954's cumulative
     * sum; the at-most-one-changepoint scan every pipeline monitor
@@ -38,17 +68,9 @@ object Insights2 {
     * surfaced relative deviation all run at days-scale. */
   val q80 = QueryDef(
     "q80_cusum_changepoint",
-    Some("""WITH dd AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS d, count(*) AS c
+    Some(s"""WITH dd AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS d, count(*) AS c
         FROM events GROUP BY 1, 2),
-      w AS (SELECT event_type, d, c,
-          CAST(sum(c) OVER (PARTITION BY event_type ORDER BY d ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sk,
-          CAST(row_number() OVER (PARTITION BY event_type ORDER BY d) AS BIGINT) AS k,
-          CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS st,
-          CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS t
-        FROM dd),
-      dev AS (SELECT event_type, d, k, t, st,
-          abs(CAST(t AS DECIMAL(19,0)) * sk - CAST(k AS DECIMAL(19,0)) * st) AS dk
-        FROM w),
+      $cusumDevSql,
       mx AS (SELECT event_type, d AS cp_day, dk, t, st,
           row_number() OVER (PARTITION BY event_type ORDER BY dk DESC, d) AS rk
         FROM dev)
@@ -573,7 +595,7 @@ object Insights2 {
         .groupBy(col("l_suppkey")).agg(count(lit(1)).cast(LongType).as("f"))
         .select(lit("lineitem.l_suppkey").as("kc"), col("f"))
       val freq = scope.persist(ck.unionAll(sk))
-      joinSkewReport(freq)
+      joinSkewReport(freq).localCheckpoint(true)
     })
 
   /** Skew report over a (kc, f) key-frequency frame — see [[q88]]. */
@@ -879,19 +901,12 @@ object Insights2 {
     * selection, never a sort shuffle. */
   val q91 = QueryDef(
     "q91_theil_sen",
-    Some("""WITH dd AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS d,
-          CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-      dx AS (SELECT event_type,
-        CAST(d - min(d) OVER (PARTITION BY event_type) AS BIGINT) AS x, c FROM dd),
-      pr AS (SELECT a.event_type, (CAST(b.c AS DOUBLE) - a.c) / (b.x - a.x) AS slope
-        FROM dx a JOIN dx b ON a.event_type = b.event_type AND b.x > a.x),
+    Some(s"""WITH $dailyCountsSql,
+      $theilSenPairsSql,
       sl AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_pairs,
           round(percentile_cont(0.5) WITHIN GROUP (ORDER BY slope), 6) AS ts_slope
         FROM pr GROUP BY 1),
-      rs AS (SELECT dx.event_type, CAST(dx.c AS DOUBLE) - sl.ts_slope * dx.x AS resid
-        FROM dx JOIN sl ON dx.event_type = sl.event_type),
-      ic AS (SELECT event_type, round(percentile_cont(0.5) WITHIN GROUP (ORDER BY resid), 6) AS ts_intercept
-        FROM rs GROUP BY 1),
+      $theilSenInterceptSql,
       nd AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days FROM dx GROUP BY 1)
       SELECT nd.event_type, nd.n_days, sl.n_pairs, sl.ts_slope, ic.ts_intercept
       FROM nd JOIN sl ON nd.event_type = sl.event_type
@@ -900,48 +915,47 @@ object Insights2 {
     (s, d) => theilSen(Tables.events(s, d).select(col("event_type"), col("ts"))))
 
   /** Theil–Sen trend over (event_type, ts) rows — see [[q91]]. */
-  def theilSen(ev: DataFrame): DataFrame =
-    theilSenFromDaily(ev
-      .groupBy(col("event_type"), date_trunc("day", col("ts")).cast("date").as("d"))
-      .agg(count(lit(1)).cast(LongType).as("c")))
+  def theilSen(ev: DataFrame)(
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame =
+    theilSenFromDaily(dailyCounts(ev))
 
   /** [[theilSen]] off a prebuilt (event_type, d, c) day-grain frame —
     * the `pipeline_trend_panel` reuse point. */
-  def theilSenFromDaily(dd: DataFrame): DataFrame =
-    graft.CacheScope.withScope { implicit scope =>
-      val dx = dd
-        // x = days since the type's FIRST day (so the intercept reads
-        // as the trend's level at series start, not at the epoch)
-        .withColumn("x", datediff(col("d"),
-          min(col("d")).over(Window.partitionBy(col("event_type")))).cast(LongType))
-        .select(col("event_type"), col("x"), col("c"))
-        .localCheckpoint(true) // days-grain; stats-free → hint joins below
-      val pairs = dx.select(col("event_type"), col("x").as("ax"), col("c").as("ac"))
-        .join(broadcast(dx.select(col("event_type").as("et2"), col("x").as("bx"), col("c").as("bc"))),
-          col("event_type") === col("et2") && col("bx") > col("ax"))
-        // try_divide, not `/`: Catalyst infers isnotnull(slope) from the
-        // percentile pass's null filter and can evaluate the division
-        // inside the join before the bx > ax condition — under ANSI
-        // mode a bx = ax probe row then throws. The joined rows all
-        // have bx > ax, so try_divide's values equal plain division's.
-        .select(col("event_type"),
-          expr("try_divide(CAST(bc AS DOUBLE) - ac, bx - ax)").as("slope"))
-      val sl = ExactPercentiles.percentiles(pairs, "event_type", "slope", Seq(0.5))
-        .select(col("g").as("event_type"), round(col("value"), 6).as("ts_slope"))
-      val np = pairs.groupBy(col("event_type")).agg(count(lit(1)).cast(LongType).as("n_pairs"))
-      val rs = dx.join(broadcast(sl), Seq("event_type"))
-        .select(col("event_type"),
-          (col("c").cast(DoubleType) - col("ts_slope") * col("x")).as("resid"))
-      val ic = ExactPercentiles.percentiles(rs, "event_type", "resid", Seq(0.5))
-        .select(col("g").as("event_type"), round(col("value"), 6).as("ts_intercept"))
-      val nd = dx.groupBy(col("event_type")).agg(count(lit(1)).cast(LongType).as("n_days"))
-      nd.join(broadcast(np), Seq("event_type"))
-        .join(broadcast(sl), Seq("event_type"))
-        .join(broadcast(ic), Seq("event_type"))
-        .select(col("event_type"), col("n_days"), col("n_pairs"),
-          col("ts_slope"), col("ts_intercept"))
-        .orderBy(col("event_type"))
-    }
+  def theilSenFromDaily(dd: DataFrame)(
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
+    val dx = dd
+      // x = days since the type's FIRST day (so the intercept reads
+      // as the trend's level at series start, not at the epoch)
+      .withColumn("x", datediff(col("d"),
+        min(col("d")).over(Window.partitionBy(col("event_type")))).cast(LongType))
+      .select(col("event_type"), col("x"), col("c"))
+      .localCheckpoint(true) // days-grain; stats-free → hint joins below
+    val pairs = dx.select(col("event_type"), col("x").as("ax"), col("c").as("ac"))
+      .join(broadcast(dx.select(col("event_type").as("et2"), col("x").as("bx"), col("c").as("bc"))),
+        col("event_type") === col("et2") && col("bx") > col("ax"))
+      // try_divide, not `/`: Catalyst infers isnotnull(slope) from the
+      // percentile pass's null filter and can evaluate the division
+      // inside the join before the bx > ax condition — under ANSI
+      // mode a bx = ax probe row then throws. The joined rows all
+      // have bx > ax, so try_divide's values equal plain division's.
+      .select(col("event_type"),
+        expr("try_divide(CAST(bc AS DOUBLE) - ac, bx - ax)").as("slope"))
+    val sl = ExactPercentiles.percentiles(pairs, "event_type", "slope", Seq(0.5))
+      .select(col("g").as("event_type"), round(col("value"), 6).as("ts_slope"))
+    val np = pairs.groupBy(col("event_type")).agg(count(lit(1)).cast(LongType).as("n_pairs"))
+    val rs = dx.join(broadcast(sl), Seq("event_type"))
+      .select(col("event_type"),
+        (col("c").cast(DoubleType) - col("ts_slope") * col("x")).as("resid"))
+    val ic = ExactPercentiles.percentiles(rs, "event_type", "resid", Seq(0.5))
+      .select(col("g").as("event_type"), round(col("value"), 6).as("ts_intercept"))
+    val nd = dx.groupBy(col("event_type")).agg(count(lit(1)).cast(LongType).as("n_days"))
+    nd.join(broadcast(np), Seq("event_type"))
+      .join(broadcast(sl), Seq("event_type"))
+      .join(broadcast(ic), Seq("event_type"))
+      .select(col("event_type"), col("n_days"), col("n_pairs"),
+        col("ts_slope"), col("ts_intercept"))
+      .orderBy(col("event_type"))
+  }
 
   // ------------------------------------------- pipeline_trend_panel
   /** pipeline_trend_panel: the time-series PANEL a monitoring
@@ -962,17 +976,8 @@ object Insights2 {
     * (map-combinable); everything after is ≤ days²-grain. */
   val pipelineTrendPanel = QueryDef(
     "pipeline_trend_panel",
-    Some("""WITH dd AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS d,
-          CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-      w AS (SELECT event_type, d, c,
-          CAST(sum(c) OVER (PARTITION BY event_type ORDER BY d ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sk,
-          CAST(row_number() OVER (PARTITION BY event_type ORDER BY d) AS BIGINT) AS k,
-          CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS st,
-          CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS t
-        FROM dd),
-      dev AS (SELECT event_type, d, k, t, st,
-          abs(CAST(t AS DECIMAL(19,0)) * sk - CAST(k AS DECIMAL(19,0)) * st) AS dk
-        FROM w),
+    Some(s"""WITH $dailyCountsSql,
+      $cusumDevSql,
       cus AS (SELECT event_type, d AS cp_day, t AS n_days, st AS n_events,
           CAST(dk AS DOUBLE) / (CAST(t AS DOUBLE) * CAST(st AS DOUBLE)) AS rel_dev
         FROM (SELECT event_type, d, k, t, st, dk,
@@ -985,17 +990,11 @@ object Insights2 {
           CAST(sum(CAST(round(CAST(abs(n - fc) AS DOUBLE) / n, 12) AS DECIMAL(28,12))) AS DOUBLE) AS mape_sum,
           CAST(count(*) AS BIGINT) AS n_scored
         FROM f GROUP BY event_type),
-      dx AS (SELECT event_type,
-          CAST(d - min(d) OVER (PARTITION BY event_type) AS BIGINT) AS x, c FROM dd),
-      pr AS (SELECT a.event_type, (CAST(b.c AS DOUBLE) - a.c) / (b.x - a.x) AS slope
-        FROM dx a JOIN dx b ON a.event_type = b.event_type AND b.x > a.x),
+      $theilSenPairsSql,
       sl AS (SELECT event_type,
           round(percentile_cont(0.5) WITHIN GROUP (ORDER BY slope), 6) AS ts_slope
         FROM pr GROUP BY 1),
-      rs AS (SELECT dx.event_type, CAST(dx.c AS DOUBLE) - sl.ts_slope * dx.x AS resid
-        FROM dx JOIN sl ON dx.event_type = sl.event_type),
-      ic AS (SELECT event_type, round(percentile_cont(0.5) WITHIN GROUP (ORDER BY resid), 6) AS ts_intercept
-        FROM rs GROUP BY 1)
+      $theilSenInterceptSql
       SELECT cus.event_type, cus.n_days, cus.n_events, cus.cp_day, cus.rel_dev,
         CAST(sn.sae AS DOUBLE) / sn.sa AS wape,
         sn.mape_sum / sn.n_scored AS mape,
@@ -1010,10 +1009,7 @@ object Insights2 {
     * see [[pipelineTrendPanel]]. */
   def trendPanel(ev: DataFrame): DataFrame = {
     // the ONE corpus scan+shuffle — every readout below is days-grain
-    val dd = ev
-      .groupBy(col("event_type"), date_trunc("day", col("ts")).cast("date").as("d"))
-      .agg(count(lit(1)).cast(LongType).as("c"))
-      .localCheckpoint(true)
+    val dd = dailyCounts(ev).localCheckpoint(true)
     val cus = cusumFromDaily(dd)
     val sn = snaiveFromDaily(dd.withColumnRenamed("c", "n"))
       .selectExpr("event_type", "wape", "mape")
@@ -1070,37 +1066,37 @@ object Insights2 {
 
   /** Equi-depth histogram over a single-column (x DOUBLE) frame —
     * see [[q92]]. */
-  def equidepthHistogram(v: DataFrame, k: Int = EquidepthK): DataFrame =
-    graft.CacheScope.withScope { implicit scope =>
-      val s = v.sparkSession
-      import s.implicits._
-      val nn = v.agg(count(lit(1)).cast(LongType).as("n")).localCheckpoint(true)
-      // 0-based rank of bucket i's upper boundary: ceil(i*n/k) - 1
-      val ranks = broadcast(nn).crossJoin(broadcast((1 to k).toDF("bucket")))
-        .selectExpr("'x' AS g", "bucket", s"(bucket * n + $k - 1) div $k - 1 AS k")
-      val bd = ExactPercentiles.orderStatistics(
-        v.withColumn("g", lit("x")), "g", "x", ranks.select(col("g"), col("k")))
-      // map rank back to bucket index (ranks are strictly increasing
-      // in bucket, so a sort-free join on k suffices)
-      val withB = ranks.join(broadcast(bd), Seq("g", "k"))
-        .select(col("bucket"), col("value").as("hi"))
-      val bb = withB
-        .withColumn("lo", lag(col("hi"), 1).over(
-          org.apache.spark.sql.expressions.Window.orderBy(col("bucket"))))
-        .select(col("bucket"), col("lo"), col("hi"))
-        .localCheckpoint(true) // k rows; also silences the single-partition window warn
-      // left-join the counts back so a bucket emptied by tied
-      // boundaries (lo = hi) still surfaces with n_rows = 0, exactly
-      // as the oracle's sum(CASE) over all k buckets does
-      val counts = v.crossJoin(broadcast(bb))
-        .filter((col("lo").isNull || col("x") > col("lo")) && col("x") <= col("hi"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).cast(LongType).as("c"))
-      bb.join(broadcast(counts), Seq("bucket"), "left")
-        .select(col("bucket"), col("lo"), col("hi"),
-          coalesce(col("c"), lit(0L)).as("n_rows"))
-        .orderBy(col("bucket"))
-    }
+  def equidepthHistogram(v: DataFrame, k: Int = EquidepthK)(
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
+    val s = v.sparkSession
+    import s.implicits._
+    val nn = v.agg(count(lit(1)).cast(LongType).as("n")).localCheckpoint(true)
+    // 0-based rank of bucket i's upper boundary: ceil(i*n/k) - 1
+    val ranks = broadcast(nn).crossJoin(broadcast((1 to k).toDF("bucket")))
+      .selectExpr("'x' AS g", "bucket", s"(bucket * n + $k - 1) div $k - 1 AS k")
+    val bd = ExactPercentiles.orderStatistics(
+      v.withColumn("g", lit("x")), "g", "x", ranks.select(col("g"), col("k")))
+    // map rank back to bucket index (ranks are strictly increasing
+    // in bucket, so a sort-free join on k suffices)
+    val withB = ranks.join(broadcast(bd), Seq("g", "k"))
+      .select(col("bucket"), col("value").as("hi"))
+    val bb = withB
+      .withColumn("lo", lag(col("hi"), 1).over(
+        org.apache.spark.sql.expressions.Window.orderBy(col("bucket"))))
+      .select(col("bucket"), col("lo"), col("hi"))
+      .localCheckpoint(true) // k rows; also silences the single-partition window warn
+    // left-join the counts back so a bucket emptied by tied
+    // boundaries (lo = hi) still surfaces with n_rows = 0, exactly
+    // as the oracle's sum(CASE) over all k buckets does
+    val counts = v.crossJoin(broadcast(bb))
+      .filter((col("lo").isNull || col("x") > col("lo")) && col("x") <= col("hi"))
+      .groupBy(col("bucket"))
+      .agg(count(lit(1)).cast(LongType).as("c"))
+    bb.join(broadcast(counts), Seq("bucket"), "left")
+      .select(col("bucket"), col("lo"), col("hi"),
+        coalesce(col("c"), lit(0L)).as("n_rows"))
+      .orderBy(col("bucket"))
+  }
 
   // ----------------------------------------------------------- q93
   /** q93: join-SIZE estimate from key histograms — predict
@@ -1173,6 +1169,77 @@ object Insights2 {
   }
 
   // ----------------------------------------------------------- q94
+  /** (event_type, d, c) daily event counts — the one corpus
+    * aggregate the day-grain trend and calendar readouts start from. */
+  private def dailyCounts(ev: DataFrame): DataFrame =
+    ev.groupBy(col("event_type"), date_trunc("day", col("ts")).cast("date").as("d"))
+      .agg(count(lit(1)).cast(LongType).as("c"))
+  /** Oracle twin of [[dailyCounts]]: `dd(event_type, d, c)`. */
+  private def dailyCountsSql: String =
+    """dd AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS d,
+        CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2)"""
+
+  /** Every calendar day of each type's [first, last] span in a
+    * (event_type, d, …) day frame, as (event_type, d) rows. */
+  private def calendarOf(dd: DataFrame): DataFrame =
+    dd.groupBy(col("event_type"))
+      .agg(min(col("d")).as("dmin"), max(col("d")).as("dmax"))
+      .select(col("event_type"),
+        explode(sequence(col("dmin"), col("dmax"), expr("INTERVAL 1 DAY"))).as("d"))
+  /** Oracle twin of [[calendarOf]] over `dd`: the span `sp` and the
+    * calendar `cal`. */
+  private def calendarSql: String =
+    """sp AS (SELECT event_type, min(d) AS dmin, max(d) AS dmax FROM dd GROUP BY 1),
+      cal AS (SELECT sp.event_type, CAST(g.d0 AS DATE) AS d
+        FROM sp, unnest(generate_series(CAST(sp.dmin AS TIMESTAMP), CAST(sp.dmax AS TIMESTAMP), INTERVAL 1 DAY)) AS g(d0))"""
+
+  /** (event_type, n_days, s, ss) exact totals of a zero-filled
+    * (event_type, x) day frame. */
+  private def dayTotals(fl: DataFrame): DataFrame =
+    fl.groupBy(col("event_type"))
+      .agg(count(lit(1)).cast(LongType).as("n_days"),
+        sum(col("x")).cast(LongType).as("s"),
+        sum(expr("CAST(x AS DECIMAL(19,0)) * x")).cast(DecimalType(38, 0)).as("ss"))
+  /** Oracle twin of [[dayTotals]] over `fl`: `tt`. */
+  private def dayTotalsSql: String =
+    """tt AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
+          CAST(sum(x) AS BIGINT) AS s, CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS ss
+        FROM fl GROUP BY 1)"""
+
+  /** The calendar gates' deterministically SPARSE event series: days
+    * of month ≡ 0 mod 3 dropped, so the fills have real holes. */
+  private def sparseEvents(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    Tables.events(s, d).filter(expr("dayofmonth(ts) % 3 <> 0"))
+      .select(col("event_type"), col("ts"), col("value"))
+  /** A day's exact DECIMAL value sum `sv`. */
+  private val dailyValue = sum(col("value").cast(DecimalType(18, 2))).cast(DecimalType(28, 2)).as("sv")
+  private def dailyValueSql: String = "CAST(sum(CAST(value AS DECIMAL(18,2))) AS DECIMAL(28,2)) AS sv"
+  /** Oracle twin of [[sparseEvents]] aggregated by (event_type, day)
+    * to the given columns (`dd`), and its calendar. */
+  private def sparseDailySql(aggs: String): String =
+    s"""dd AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS d,
+          $aggs
+        FROM events WHERE date_part('day', ts) % 3 <> 0 GROUP BY 1, 2),
+      $calendarSql"""
+
+  /** (event_type, d, sv) daily value sums over the dense calendar with
+    * holes as exact 0 — the series the rolling windows of [[q95]] and
+    * [[q98]] run over. */
+  private def zeroFilledValues(ev: DataFrame): DataFrame = {
+    val dd = ev.groupBy(col("event_type"),
+        date_trunc("day", col("ts")).cast("date").as("d"))
+      .agg(dailyValue)
+    calendarOf(dd).join(dd, Seq("event_type", "d"), "left")
+      .select(col("event_type"), col("d"),
+        coalesce(col("sv"), lit(0).cast(DecimalType(28, 2))).as("sv"))
+  }
+  /** Oracle twin of [[zeroFilledValues]] over [[sparseEvents]]: `fl`. */
+  private def zeroFilledValuesSql: String =
+    s"""${sparseDailySql(dailyValueSql)},
+      fl AS (SELECT cal.event_type, cal.d,
+          coalesce(dd.sv, CAST(0 AS DECIMAL(28,2))) AS sv
+        FROM cal LEFT JOIN dd ON cal.event_type = dd.event_type AND cal.d = dd.d)"""
+
   /** q94: calendar gap-fill + forward-fill — the time-series
     * RESAMPLING step every daily-metrics consumer needs before
     * window math (a missing day silently shifts every rolling
@@ -1194,13 +1261,7 @@ object Insights2 {
     * never by event volume). */
   val q94 = QueryDef(
     "q94_calendar_fill",
-    Some("""WITH dd AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS d,
-          CAST(count(*) AS BIGINT) AS n,
-          CAST(sum(CAST(value AS DECIMAL(18,2))) AS DECIMAL(28,2)) AS sv
-        FROM events WHERE date_part('day', ts) % 3 <> 0 GROUP BY 1, 2),
-      sp AS (SELECT event_type, min(d) AS dmin, max(d) AS dmax FROM dd GROUP BY 1),
-      cal AS (SELECT sp.event_type, CAST(g.d0 AS DATE) AS d
-        FROM sp, unnest(generate_series(CAST(sp.dmin AS TIMESTAMP), CAST(sp.dmax AS TIMESTAMP), INTERVAL 1 DAY)) AS g(d0)),
+    Some(s"""WITH ${sparseDailySql("CAST(count(*) AS BIGINT) AS n,\n          " + dailyValueSql)},
       fl AS (SELECT cal.event_type, cal.d,
           coalesce(dd.n, 0) AS n,
           CASE WHEN dd.d IS NULL THEN 0 ELSE 1 END AS observed,
@@ -1210,24 +1271,17 @@ object Insights2 {
       SELECT event_type, CAST(d AS VARCHAR) AS day, n, observed,
         CAST(carry AS DOUBLE) AS carry_value
       FROM fl ORDER BY event_type, day"""),
-    (s, d) => calendarFill(Tables.events(s, d)
-      .filter(expr("dayofmonth(ts) % 3 <> 0"))
-      .select(col("event_type"), col("ts"), col("value"))))
+    (s, d) => calendarFill(sparseEvents(s, d)))
 
   /** Calendar gap-fill + forward-fill over (event_type, ts, value)
     * rows — see [[q94]]. */
   def calendarFill(ev: DataFrame): DataFrame = {
     val dd = ev.groupBy(col("event_type"),
         date_trunc("day", col("ts")).cast("date").as("d"))
-      .agg(count(lit(1)).cast(LongType).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).cast(DecimalType(28, 2)).as("sv"))
-    val cal = dd.groupBy(col("event_type"))
-      .agg(min(col("d")).as("dmin"), max(col("d")).as("dmax"))
-      .select(col("event_type"),
-        explode(sequence(col("dmin"), col("dmax"), expr("INTERVAL 1 DAY"))).as("d"))
+      .agg(count(lit(1)).cast(LongType).as("n"), dailyValue)
     val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cal.join(dd, Seq("event_type", "d"), "left")
+    calendarOf(dd).join(dd, Seq("event_type", "d"), "left")
       .select(col("event_type"), col("d"),
         coalesce(col("n"), lit(0L)).as("n"),
         when(col("sv").isNotNull || col("n").isNotNull, 1).otherwise(0).as("observed"),
@@ -1255,15 +1309,7 @@ object Insights2 {
     * by event volume). */
   val q95 = QueryDef(
     "q95_rolling_metrics",
-    Some("""WITH dd AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS d,
-          CAST(sum(CAST(value AS DECIMAL(18,2))) AS DECIMAL(28,2)) AS sv
-        FROM events WHERE date_part('day', ts) % 3 <> 0 GROUP BY 1, 2),
-      sp AS (SELECT event_type, min(d) AS dmin, max(d) AS dmax FROM dd GROUP BY 1),
-      cal AS (SELECT sp.event_type, CAST(g.d0 AS DATE) AS d
-        FROM sp, unnest(generate_series(CAST(sp.dmin AS TIMESTAMP), CAST(sp.dmax AS TIMESTAMP), INTERVAL 1 DAY)) AS g(d0)),
-      fl AS (SELECT cal.event_type, cal.d,
-          coalesce(dd.sv, CAST(0 AS DECIMAL(28,2))) AS sv
-        FROM cal LEFT JOIN dd ON cal.event_type = dd.event_type AND cal.d = dd.d),
+    Some(s"""WITH $zeroFilledValuesSql,
       rl AS (SELECT event_type, d, sv,
           CAST(sum(sv) OVER w AS DECIMAL(28,2)) AS roll_sum,
           CAST(count(*) OVER w AS BIGINT) AS win_days,
@@ -1276,25 +1322,14 @@ object Insights2 {
         CAST(roll_sum AS DOUBLE) / win_days AS roll_mean,
         CAST(roll_min AS DOUBLE) AS roll_min, CAST(roll_max AS DOUBLE) AS roll_max
       FROM rl ORDER BY event_type, day"""),
-    (s, d) => rollingMetrics(Tables.events(s, d)
-      .filter(expr("dayofmonth(ts) % 3 <> 0"))
-      .select(col("event_type"), col("ts"), col("value"))))
+    (s, d) => rollingMetrics(sparseEvents(s, d)))
 
   /** Rolling 7-day metrics over the zero-filled daily calendar of an
     * (event_type, ts, value) frame — see [[q95]]. */
   def rollingMetrics(ev: DataFrame): DataFrame = {
-    val dd = ev.groupBy(col("event_type"),
-        date_trunc("day", col("ts")).cast("date").as("d"))
-      .agg(sum(col("value").cast(DecimalType(18, 2))).cast(DecimalType(28, 2)).as("sv"))
-    val cal = dd.groupBy(col("event_type"))
-      .agg(min(col("d")).as("dmin"), max(col("d")).as("dmax"))
-      .select(col("event_type"),
-        explode(sequence(col("dmin"), col("dmax"), expr("INTERVAL 1 DAY"))).as("d"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
       .rowsBetween(-6, Window.currentRow)
-    cal.join(dd, Seq("event_type", "d"), "left")
-      .select(col("event_type"), col("d"),
-        coalesce(col("sv"), lit(0).cast(DecimalType(28, 2))).as("sv"))
+    zeroFilledValues(ev)
       .select(col("event_type"), col("d"), col("sv"),
         sum(col("sv")).over(w).cast(DecimalType(28, 2)).as("roll_sum"),
         count(lit(1)).over(w).cast(LongType).as("win_days"),
@@ -1445,18 +1480,9 @@ object Insights2 {
     * Same deterministic sparse derivation (days ≡ 0 mod 3 dropped)
     * so the zero-filled holes participate in the median for real. */
   def rollingRobust(ev: DataFrame): DataFrame = {
-    val dd = ev.groupBy(col("event_type"),
-        date_trunc("day", col("ts")).cast("date").as("d"))
-      .agg(sum(col("value").cast(DecimalType(18, 2))).cast(DecimalType(28, 2)).as("sv"))
-    val cal = dd.groupBy(col("event_type"))
-      .agg(min(col("d")).as("dmin"), max(col("d")).as("dmax"))
-      .select(col("event_type"),
-        explode(sequence(col("dmin"), col("dmax"), expr("INTERVAL 1 DAY"))).as("d"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("d"))
       .rowsBetween(-6, Window.currentRow)
-    cal.join(dd, Seq("event_type", "d"), "left")
-      .select(col("event_type"), col("d"),
-        coalesce(col("sv"), lit(0).cast(DecimalType(28, 2))).as("sv"))
+    zeroFilledValues(ev)
       .withColumn("arr", sort_array(collect_list(col("sv")).over(w)))
       .selectExpr("event_type", "CAST(d AS STRING) AS day",
         "CAST(sv AS DOUBLE) AS day_value",
@@ -1474,15 +1500,7 @@ object Insights2 {
 
   val q98 = QueryDef(
     "q98_rolling_robust",
-    Some("""WITH dd AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS d,
-          CAST(sum(CAST(value AS DECIMAL(18,2))) AS DECIMAL(28,2)) AS sv
-        FROM events WHERE date_part('day', ts) % 3 <> 0 GROUP BY 1, 2),
-      sp AS (SELECT event_type, min(d) AS dmin, max(d) AS dmax FROM dd GROUP BY 1),
-      cal AS (SELECT sp.event_type, CAST(g.d0 AS DATE) AS d
-        FROM sp, unnest(generate_series(CAST(sp.dmin AS TIMESTAMP), CAST(sp.dmax AS TIMESTAMP), INTERVAL 1 DAY)) AS g(d0)),
-      fl AS (SELECT cal.event_type, cal.d,
-          coalesce(dd.sv, CAST(0 AS DECIMAL(28,2))) AS sv
-        FROM cal LEFT JOIN dd ON cal.event_type = dd.event_type AND cal.d = dd.d),
+    Some(s"""WITH $zeroFilledValuesSql,
       rl AS (SELECT event_type, d, sv, list_sort(list(sv) OVER w) AS arr
         FROM fl WINDOW w AS (PARTITION BY event_type ORDER BY d ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)),
       m1 AS (SELECT event_type, CAST(d AS VARCHAR) AS day, CAST(sv AS DOUBLE) AS day_value,
@@ -1499,9 +1517,7 @@ object Insights2 {
       SELECT event_type, day, day_value, win_days, roll_med, roll_mad,
         CAST(CASE WHEN abs(day_value - roll_med) > 3.0 * 1.4826 * roll_mad THEN 1 ELSE 0 END AS BIGINT) AS outlier
       FROM m3 ORDER BY event_type, day"""),
-    (s, d) => rollingRobust(Tables.events(s, d)
-      .filter(expr("dayofmonth(ts) % 3 <> 0"))
-      .select(col("event_type"), col("ts"), col("value"))))
+    (s, d) => rollingRobust(sparseEvents(s, d)))
 
   val q97 = QueryDef(
     "q97_active_users",
@@ -1551,42 +1567,40 @@ object Insights2 {
     * aggregate; the pair scan runs at DAYS grain (≤ days²/2 pairs per
     * type — the calendar, not the data, bounds it; the q91 argument)
     * and ties aggregate at distinct-value grain. */
-  def mannKendall(ev: DataFrame): DataFrame =
-    mannKendallFromDaily(ev
-      .groupBy(col("event_type"), date_trunc("day", col("ts")).cast("date").as("d"))
-      .agg(count(lit(1)).cast(LongType).as("c")))
+  def mannKendall(ev: DataFrame)(
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame =
+    mannKendallFromDaily(dailyCounts(ev))
 
   /** [[mannKendall]] off a prebuilt (event_type, d, c) day-grain frame
     * — the [[theilSenFromDaily]] reuse point for trend panels. */
-  def mannKendallFromDaily(dd0: DataFrame): DataFrame =
-    graft.CacheScope.withScope { implicit scope =>
-      val dd = scope.persist(dd0.select(col("event_type"), col("d"), col("c")))
-      val pr = dd.select(col("event_type"), col("d").as("ad"), col("c").as("ac"))
-        .join(broadcast(dd.select(col("event_type").as("et2"), col("d").as("bd"), col("c").as("bc"))),
-          col("event_type") === col("et2") && col("bd") > col("ad"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).cast(LongType).as("n_pairs"),
-          sum(expr("CASE WHEN bc > ac THEN 1 WHEN bc < ac THEN -1 ELSE 0 END"))
-            .cast(LongType).as("s_stat"))
-      val ti = dd.groupBy(col("event_type"), col("c"))
-        .agg(count(lit(1)).cast(LongType).as("t"))
-        .groupBy(col("event_type"))
-        .agg(sum(expr("t * (t - 1) * (2 * t + 5)")).cast(LongType).as("tie_term"),
-          sum(col("t")).cast(LongType).as("n_days"))
-      ti.join(broadcast(pr), Seq("event_type"))
-        .withColumn("var18",
-          expr("n_days * (n_days - 1) * (2 * n_days + 5) - tie_term"))
-        .selectExpr("event_type", "n_days", "n_pairs", "s_stat",
-          "CAST(var18 AS DOUBLE) / 18.0 AS var_s", s"$mkZSql AS z_stat")
-        .selectExpr("event_type", "n_days", "n_pairs", "s_stat", "var_s",
-          "z_stat", s"$mkTrendSql AS trend")
-        .orderBy(col("event_type"))
-    }
+  def mannKendallFromDaily(dd0: DataFrame)(
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
+    val dd = scope.persist(dd0.select(col("event_type"), col("d"), col("c")))
+    val pr = dd.select(col("event_type"), col("d").as("ad"), col("c").as("ac"))
+      .join(broadcast(dd.select(col("event_type").as("et2"), col("d").as("bd"), col("c").as("bc"))),
+        col("event_type") === col("et2") && col("bd") > col("ad"))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).cast(LongType).as("n_pairs"),
+        sum(expr("CASE WHEN bc > ac THEN 1 WHEN bc < ac THEN -1 ELSE 0 END"))
+          .cast(LongType).as("s_stat"))
+    val ti = dd.groupBy(col("event_type"), col("c"))
+      .agg(count(lit(1)).cast(LongType).as("t"))
+      .groupBy(col("event_type"))
+      .agg(sum(expr("t * (t - 1) * (2 * t + 5)")).cast(LongType).as("tie_term"),
+        sum(col("t")).cast(LongType).as("n_days"))
+    ti.join(broadcast(pr), Seq("event_type"))
+      .withColumn("var18",
+        expr("n_days * (n_days - 1) * (2 * n_days + 5) - tie_term"))
+      .selectExpr("event_type", "n_days", "n_pairs", "s_stat",
+        "CAST(var18 AS DOUBLE) / 18.0 AS var_s", s"$mkZSql AS z_stat")
+      .selectExpr("event_type", "n_days", "n_pairs", "s_stat", "var_s",
+        "z_stat", s"$mkTrendSql AS trend")
+      .orderBy(col("event_type"))
+  }
 
   val q99 = QueryDef(
     "q99_mann_kendall",
-    Some(s"""WITH dd AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS d,
-          CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
+    Some(s"""WITH $dailyCountsSql,
       pr AS (SELECT a.event_type, CAST(count(*) AS BIGINT) AS n_pairs,
           CAST(sum(CASE WHEN b.c > a.c THEN 1 WHEN b.c < a.c THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
         FROM dd a JOIN dd b ON a.event_type = b.event_type AND b.d > a.d GROUP BY 1),
@@ -1637,35 +1651,32 @@ object Insights2 {
     * and all algebra run at calendar grain (the q94 argument). A
     * constant series classifies no days and yields NO row — both
     * engines agree by construction. */
-  def runsTest(ev: DataFrame): DataFrame =
-    graft.CacheScope.withScope { implicit scope =>
-      val dd = scope.persist(
-        ev.groupBy(col("event_type"), date_trunc("day", col("ts")).cast("date").as("d"))
-          .agg(count(lit(1)).cast(LongType).as("c")))
-      val tot = dd.groupBy(col("event_type"))
-        .agg(sum(col("c")).cast(LongType).as("sc"), count(lit(1)).cast(LongType).as("nd"))
-      val wu = Window.partitionBy(col("event_type")).orderBy(col("d"))
-      dd.join(broadcast(tot), Seq("event_type"))
-        .filter(expr("c * nd <> sc"))
-        .select(col("event_type"), col("d"),
-          expr("CASE WHEN c * nd > sc THEN 1 ELSE 0 END").as("sgn"))
-        .withColumn("prev", lag(col("sgn"), 1).over(wu))
-        .groupBy(col("event_type"))
-        .agg(sum(when(col("prev").isNull || col("prev") =!= col("sgn"), 1L).otherwise(0L))
-            .cast(LongType).as("runs"),
-          sum(col("sgn")).cast(LongType).as("n_above"),
-          (count(lit(1)) - sum(col("sgn"))).cast(LongType).as("n_below"))
-        .selectExpr("event_type", s"$rtN AS n_days_used", "n_above", "n_below",
-          "runs", s"$rtESql AS e_runs", s"$rtZSql AS z_stat")
-        .selectExpr("event_type", "n_days_used", "n_above", "n_below", "runs",
-          "e_runs", "z_stat", s"$rtVerdictSql AS random_ok")
-        .orderBy(col("event_type"))
-    }
+  def runsTest(ev: DataFrame)(
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
+    val dd = scope.persist(dailyCounts(ev))
+    val tot = dd.groupBy(col("event_type"))
+      .agg(sum(col("c")).cast(LongType).as("sc"), count(lit(1)).cast(LongType).as("nd"))
+    val wu = Window.partitionBy(col("event_type")).orderBy(col("d"))
+    dd.join(broadcast(tot), Seq("event_type"))
+      .filter(expr("c * nd <> sc"))
+      .select(col("event_type"), col("d"),
+        expr("CASE WHEN c * nd > sc THEN 1 ELSE 0 END").as("sgn"))
+      .withColumn("prev", lag(col("sgn"), 1).over(wu))
+      .groupBy(col("event_type"))
+      .agg(sum(when(col("prev").isNull || col("prev") =!= col("sgn"), 1L).otherwise(0L))
+          .cast(LongType).as("runs"),
+        sum(col("sgn")).cast(LongType).as("n_above"),
+        (count(lit(1)) - sum(col("sgn"))).cast(LongType).as("n_below"))
+      .selectExpr("event_type", s"$rtN AS n_days_used", "n_above", "n_below",
+        "runs", s"$rtESql AS e_runs", s"$rtZSql AS z_stat")
+      .selectExpr("event_type", "n_days_used", "n_above", "n_below", "runs",
+        "e_runs", "z_stat", s"$rtVerdictSql AS random_ok")
+      .orderBy(col("event_type"))
+  }
 
   val q100 = QueryDef(
     "q100_runs_test",
-    Some(s"""WITH dd AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS d,
-          CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
+    Some(s"""WITH $dailyCountsSql,
       tot AS (SELECT event_type, CAST(sum(c) AS BIGINT) AS sc,
           CAST(count(*) AS BIGINT) AS nd FROM dd GROUP BY 1),
       cl AS (SELECT dd.event_type, dd.d,
@@ -1710,22 +1721,13 @@ object Insights2 {
     * banded self-join is bounded by days × 7. */
   private def acfComponents(ev: DataFrame, maxLag: Int)(
       implicit scope: graft.CacheScope): DataFrame = {
-    val dd = ev.groupBy(col("event_type"),
-        date_trunc("day", col("ts")).cast("date").as("d"))
-      .agg(count(lit(1)).cast(LongType).as("c"))
-    val cal = dd.groupBy(col("event_type"))
-      .agg(min(col("d")).as("dmin"), max(col("d")).as("dmax"))
-      .select(col("event_type"),
-        explode(sequence(col("dmin"), col("dmax"), expr("INTERVAL 1 DAY"))).as("d"))
-    val fl = scope.persist(cal.join(dd, Seq("event_type", "d"), "left")
+    val dd = dailyCounts(ev)
+    val fl = scope.persist(calendarOf(dd).join(dd, Seq("event_type", "d"), "left")
       .select(col("event_type"),
         datediff(col("d"), min(col("d")).over(
           Window.partitionBy(col("event_type")))).cast(LongType).as("t"),
         coalesce(col("c"), lit(0L)).as("x")))
-    val tt = fl.groupBy(col("event_type"))
-      .agg(count(lit(1)).cast(LongType).as("n_days"),
-        sum(col("x")).cast(LongType).as("s"),
-        sum(expr("CAST(x AS DECIMAL(19,0)) * x")).cast(DecimalType(38, 0)).as("ss"))
+    val tt = dayTotals(fl)
     val lg = fl.select(col("event_type"), col("t").as("at"), col("x").as("ax"))
       .join(broadcast(fl.select(col("event_type").as("et2"), col("t").as("bt"), col("x").as("bx"))),
         col("event_type") === col("et2") &&
@@ -1740,18 +1742,13 @@ object Insights2 {
 
   /** Oracle twin of [[acfComponents]] — CTE chain ending in `cmp`. */
   private def acfCtesDuck(maxLag: Int): String =
-    s"""dd AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS d,
-        CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-      sp AS (SELECT event_type, min(d) AS dmin, max(d) AS dmax FROM dd GROUP BY 1),
-      cal AS (SELECT sp.event_type, CAST(g.d0 AS DATE) AS d
-        FROM sp, unnest(generate_series(CAST(sp.dmin AS TIMESTAMP), CAST(sp.dmax AS TIMESTAMP), INTERVAL 1 DAY)) AS g(d0)),
+    s"""$dailyCountsSql,
+      $calendarSql,
       fl AS (SELECT cal.event_type, CAST(cal.d - sp.dmin AS BIGINT) AS t,
           coalesce(dd.c, CAST(0 AS BIGINT)) AS x
         FROM cal JOIN sp ON cal.event_type = sp.event_type
         LEFT JOIN dd ON cal.event_type = dd.event_type AND cal.d = dd.d),
-      tt AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-          CAST(sum(x) AS BIGINT) AS s, CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS ss
-        FROM fl GROUP BY 1),
+      $dayTotalsSql,
       lg AS (SELECT a.event_type, a.at - b.bt AS lag,
           CAST(count(*) AS BIGINT) AS n_pairs,
           CAST(sum(CAST(a.ax AS HUGEINT) * b.bx) AS HUGEINT) AS sxy,
@@ -1892,46 +1889,34 @@ object Insights2 {
     *
     * 100 TB: ONE (type, day) count aggregate; everything after at
     * (type × 7)-grain. */
-  def dowAnova(ev: DataFrame): DataFrame =
-    graft.CacheScope.withScope { implicit scope =>
-      val dd = ev.groupBy(col("event_type"),
-          date_trunc("day", col("ts")).cast("date").as("d"))
-        .agg(count(lit(1)).cast(LongType).as("c"))
-      val cal = dd.groupBy(col("event_type"))
-        .agg(min(col("d")).as("dmin"), max(col("d")).as("dmax"))
-        .select(col("event_type"),
-          explode(sequence(col("dmin"), col("dmax"), expr("INTERVAL 1 DAY"))).as("d"))
-      val fl = scope.persist(cal.join(dd, Seq("event_type", "d"), "left")
-        .select(col("event_type"),
-          expr(s"(CAST(datediff(d, DATE '1970-01-01') AS BIGINT) + $DowOffsetDays + 4) % 7").as("dow"),
-          coalesce(col("c"), lit(0L)).as("x")))
-      val byDow = fl.groupBy(col("event_type"), col("dow"))
-        .agg(count(lit(1)).cast(LongType).as("ng"), sum(col("x")).cast(LongType).as("sg"))
-      val pivotAggs =
-        (0 to 6).map(g => sum(when(col("dow") === g, col("ng")).otherwise(0L))
-          .cast(LongType).as(s"n$g")) ++
-        (0 to 6).map(g => sum(when(col("dow") === g, col("sg")).otherwise(0L))
-          .cast(LongType).as(s"s$g"))
-      val pv = byDow.groupBy(col("event_type")).agg(pivotAggs.head, pivotAggs.tail: _*)
-      val tt = fl.groupBy(col("event_type"))
-        .agg(count(lit(1)).cast(LongType).as("n_days"),
-          sum(col("x")).cast(LongType).as("s"),
-          sum(expr("CAST(x AS DECIMAL(19,0)) * x")).cast(DecimalType(38, 0)).as("ss"))
-      tt.join(broadcast(pv), Seq("event_type"))
-        .selectExpr("event_type", "n_days", s"$anK AS k_groups",
-          s"$anFSql AS f_stat", s"$anK - 1 AS df1", s"n_days - $anK AS df2")
-        .selectExpr("event_type", "n_days", "k_groups", "f_stat", "df1", "df2",
-          s"$anVerdictSql AS significant")
-        .orderBy(col("event_type"))
-    }
+  def dowAnova(ev: DataFrame)(
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
+    val dd = dailyCounts(ev)
+    val fl = scope.persist(calendarOf(dd).join(dd, Seq("event_type", "d"), "left")
+      .select(col("event_type"),
+        expr(s"(CAST(datediff(d, DATE '1970-01-01') AS BIGINT) + $DowOffsetDays + 4) % 7").as("dow"),
+        coalesce(col("c"), lit(0L)).as("x")))
+    val byDow = fl.groupBy(col("event_type"), col("dow"))
+      .agg(count(lit(1)).cast(LongType).as("ng"), sum(col("x")).cast(LongType).as("sg"))
+    val pivotAggs =
+      (0 to 6).map(g => sum(when(col("dow") === g, col("ng")).otherwise(0L))
+        .cast(LongType).as(s"n$g")) ++
+      (0 to 6).map(g => sum(when(col("dow") === g, col("sg")).otherwise(0L))
+        .cast(LongType).as(s"s$g"))
+    val pv = byDow.groupBy(col("event_type")).agg(pivotAggs.head, pivotAggs.tail: _*)
+    val tt = dayTotals(fl)
+    tt.join(broadcast(pv), Seq("event_type"))
+      .selectExpr("event_type", "n_days", s"$anK AS k_groups",
+        s"$anFSql AS f_stat", s"$anK - 1 AS df1", s"n_days - $anK AS df2")
+      .selectExpr("event_type", "n_days", "k_groups", "f_stat", "df1", "df2",
+        s"$anVerdictSql AS significant")
+      .orderBy(col("event_type"))
+  }
 
   val q103 = QueryDef(
     "q103_dow_anova",
-    Some(s"""WITH dd AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS d,
-          CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-      sp AS (SELECT event_type, min(d) AS dmin, max(d) AS dmax FROM dd GROUP BY 1),
-      cal AS (SELECT sp.event_type, CAST(g.d0 AS DATE) AS d
-        FROM sp, unnest(generate_series(CAST(sp.dmin AS TIMESTAMP), CAST(sp.dmax AS TIMESTAMP), INTERVAL 1 DAY)) AS g(d0)),
+    Some(s"""WITH $dailyCountsSql,
+      $calendarSql,
       fl AS (SELECT cal.event_type,
           (CAST(cal.d - DATE '1970-01-01' AS BIGINT) + $DowOffsetDays + 4) % 7 AS dow,
           coalesce(dd.c, CAST(0 AS BIGINT)) AS x
@@ -1942,9 +1927,7 @@ object Insights2 {
           ${(0 to 6).map(g => s"CAST(sum(CASE WHEN dow = $g THEN ng ELSE 0 END) AS BIGINT) AS n$g").mkString(",\n          ")},
           ${(0 to 6).map(g => s"CAST(sum(CASE WHEN dow = $g THEN sg ELSE 0 END) AS BIGINT) AS s$g").mkString(",\n          ")}
         FROM bd GROUP BY 1),
-      tt AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-          CAST(sum(x) AS BIGINT) AS s, CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS ss
-        FROM fl GROUP BY 1),
+      $dayTotalsSql,
       rd AS (SELECT tt.event_type, n_days, $anK AS k_groups,
           $anFSql AS f_stat, $anK - 1 AS df1, n_days - $anK AS df2
         FROM tt JOIN pv ON tt.event_type = pv.event_type)

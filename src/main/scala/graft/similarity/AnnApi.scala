@@ -175,6 +175,14 @@ object AnnApi {
     * same-bucket rows over `Similarity.NumTables` sign-code tables. */
   def lshTopK(corpus: DataFrame, id: String, vec: String,
       probeIds: DataFrame, k: Int = 5)(implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
+    rerank(lshProbePairs(corpus, id, vec, probeIds), id, k)
+  }
+
+  /** The LSH candidates of each probe — every other row sharing one of
+    * its buckets in the `Similarity.NumTables` sign-code tables — as
+    * (pid, cid) pairs joined to both normalized rows `a` and `b`. */
+  private def lshProbePairs(corpus: DataFrame, id: String, vec: String,
+      probeIds: DataFrame)(implicit scope: graft.CacheScope): DataFrame = {
     val n = normalized(corpus, id, vec)
       .transform(scope.persist)
     val tables = (0 until Similarity.NumTables).map(t =>
@@ -188,10 +196,9 @@ object AnnApi {
         col(s"ca.$id") =!= col(s"cb.$id"))
       .select(col(s"ca.$id").as("pid"), col(s"cb.$id").as("cid"))
       .distinct()
-    val pairs = cand
+    cand
       .join(n.as("a"), col(s"a.$id") === col("pid"))
       .join(n.as("b"), col(s"b.$id") === col("cid"))
-    rerank(pairs, id, k)
   }
 
   /** Multi-probe LSH top-k (r11 cont.; Lv et al., "Multi-Probe LSH:
@@ -396,22 +403,7 @@ object AnnApi {
   def lshRange(corpus: DataFrame, id: String, vec: String,
       probeIds: DataFrame, tau: Double)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
-    val n = normalized(corpus, id, vec)
-      .transform(scope.persist)
-    val tables = (0 until Similarity.NumTables).map(t =>
-      struct(lit(t).as("t"), expr(Similarity.bucketExprSparkFor(t)).as("bk")))
-    val tb = n.withColumn("tbl", explode(array(tables: _*)))
-      .select(col(id), col("tbl.t").as("t"), col("tbl.bk").as("bk"))
-      .transform(scope.persist)
-    val tbProbes = tb.join(probeIds, Seq(id), "left_semi")
-    val cand = tbProbes.as("ca").join(tb.as("cb"),
-        col("ca.t") === col("cb.t") && col("ca.bk") === col("cb.bk") &&
-        col(s"ca.$id") =!= col(s"cb.$id"))
-      .select(col(s"ca.$id").as("pid"), col(s"cb.$id").as("cid"))
-      .distinct()
-    cand
-      .join(n.as("a"), col(s"a.$id") === col("pid"))
-      .join(n.as("b"), col(s"b.$id") === col("cid"))
+    lshProbePairs(corpus, id, vec, probeIds)
       .select(col("pid").as("id_p"), col("cid").as("id_c"),
         expr(s"$dot / (a.nrm * b.nrm)").as("c"))
       .filter(col("c") >= tau)
@@ -671,6 +663,27 @@ object AnnApi {
     rerank(pairs, id, k)
   }
 
+  /** The IVF half of [[ivfPqTopK]] and [[ivfPqResidualTopK]]: the
+    * normalized corpus carrying its k-means `cell`, each probe's
+    * `nProbeCells` nearest cells (pid, probe_cell), and the candidates
+    * (pid, pcell, id_c) — every other row in those cells, so the
+    * corpus is restricted to the probed cells BEFORE any ADC work. */
+  private def ivfCandidates(corpus: DataFrame, id: String, vec: String, probeIds: DataFrame,
+      nProbeCells: Int, kCells: Int, kmIters: Int, trainMod: Int)(
+      implicit scope: graft.CacheScope): (DataFrame, DataFrame, DataFrame) = {
+    val cells = kmeansCells(corpus, id, vec, kCells, kmIters, trainMod)
+      .transform(scope.persist)
+    val n = normalized(corpus.join(cells, Seq(id)), id, vec, passthrough = Seq("cell"))
+      .transform(scope.persist)
+    val topCells = probeTopCells(n, id, "cell", probeIds, nProbeCells)
+    val cand = topCells
+      .join(cells.select(col(id).as("id_c"), col("cell")),
+        col("cell") === col("probe_cell"))
+      .filter(col("id_c") =!= col("pid"))
+      .select(col("pid"), col("probe_cell").as("pcell"), col("id_c"))
+    (n, topCells, cand)
+  }
+
   /** IVF+PQ — the standard billion-vector index composition (Jégou et
     * al.'s IVFADC, here over raw-vector codebooks rather than
     * residuals — the residual refinement changes the codebook input,
@@ -686,23 +699,13 @@ object AnnApi {
       m: Int = 8, subDim: Int = 8, kCodes: Int = 16,
       pqIters: Int = 2, trainMod: Int = 4)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
-    val cells = kmeansCells(corpus, id, vec, kCells, kmIters, trainMod)
-      .transform(scope.persist)
-    val n = normalized(corpus.join(cells, Seq(id)), id, vec, passthrough = Seq("cell"))
-      .transform(scope.persist)
-    val topCells = probeTopCells(n, id, "cell", probeIds, nProbeCells)
+    val (_, _, cand) = ivfCandidates(corpus, id, vec, probeIds, nProbeCells, kCells, kmIters, trainMod)
     val codebook = pqCodebooks(corpus, id, vec, m, subDim, kCodes, pqIters, trainMod)
       .transform(scope.persist)
     val sub = subVectors(corpus, id, vec, m, subDim)
       .transform(scope.persist)
     val codes = assignCodes(sub, id, codebook)
     val padt = probeDistTable(sub, id, probeIds, codebook)
-    // corpus restricted to the probed cells BEFORE any ADC work
-    val cand = topCells
-      .join(cells.select(col(id).as("id_c"), col("cell")),
-        col("cell") === col("probe_cell"))
-      .filter(col("id_c") =!= col("pid"))
-      .select(col("pid"), col("id_c"))
     adcTopK(
       cand
         .join(codes.select(col(id).as("id_c"), col("s"), col("code")), Seq("id_c"))
@@ -732,11 +735,7 @@ object AnnApi {
       pqIters: Int = 2, trainMod: Int = 4)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     graft.functions.Natives.ensure(corpus.sparkSession)
-    val cells = kmeansCells(corpus, id, vec, kCells, kmIters, trainMod)
-      .transform(scope.persist)
-    val n = normalized(corpus.join(cells, Seq(id)), id, vec, passthrough = Seq("cell"))
-      .transform(scope.persist)
-    val topCells = probeTopCells(n, id, "cell", probeIds, nProbeCells)
+    val (n, topCells, cand) = ivfCandidates(corpus, id, vec, probeIds, nProbeCells, kCells, kmIters, trainMod)
     val unit = n.select(col(id), col("cell"), expr("transform(v, x -> x / nrm)").as("u"))
     // decimal-exact unit-vector centroid per cell (kCells rows)
     val cent = unit.groupBy(col("cell"))
@@ -764,11 +763,6 @@ object AnnApi {
     val padt = pres.join(broadcast(codebook), Seq("s"))
       .select(col("pid").as("id_p"), col("probe_cell").as("pcell"), col("s"), col("code"),
         (col("cn2") - lit(2.0) * expr("graft_dot(vs, cm)")).as("partial"))
-    val cand = topCells
-      .join(cells.select(col(id).as("id_c"), col("cell")),
-        col("cell") === col("probe_cell"))
-      .filter(col("id_c") =!= col("pid"))
-      .select(col("pid"), col("probe_cell").as("pcell"), col("id_c"))
     adcTopK(
       cand
         .join(codes.select(col(id).as("id_c"), col("s"), col("code")), Seq("id_c"))

@@ -132,11 +132,7 @@ object Similarity {
           row_number() OVER (PARTITION BY a.vec_id ORDER BY $dot32 / (a.nrm * b.nrm) DESC, b.vec_id) AS rk
         FROM tn a JOIN tn b ON a.vec_id < 10 AND a.vec_id <> b.vec_id) t
         WHERE rk <= 5),
-      bru AS (SELECT id_p, id_c FROM (
-        SELECT a.vec_id AS id_p, b.vec_id AS id_c,
-          row_number() OVER (PARTITION BY a.vec_id ORDER BY $dotSql / (a.nrm * b.nrm) DESC, b.vec_id) AS rk
-        FROM nx a JOIN nx b ON a.vec_id < 10 AND a.vec_id <> b.vec_id) t
-        WHERE rk <= 5)
+      ${bruteRankSql("id_p, id_c", 5)}
       SELECT bru.id_p, CAST($DimAuditPrefix AS BIGINT) AS dims,
         CAST(count(tr.id_c) AS BIGINT) AS n_hits,
         CAST(count(tr.id_c) AS DOUBLE) / 5.0 AS recall
@@ -206,11 +202,7 @@ object Similarity {
       val blocks = MrlWidths.map(block).mkString(",\n        ")
       val union = MrlWidths.map(w => s"SELECT * FROM h$w").mkString(" UNION ALL ")
       s"""WITH $normSqlCte,
-      bru AS (SELECT id_p, id_c FROM (
-        SELECT a.vec_id AS id_p, b.vec_id AS id_c,
-          row_number() OVER (PARTITION BY a.vec_id ORDER BY $dotSql / (a.nrm * b.nrm) DESC, b.vec_id) AS rk
-        FROM nx a JOIN nx b ON a.vec_id < 10 AND a.vec_id <> b.vec_id) t
-        WHERE rk <= 5),
+      ${bruteRankSql("id_p, id_c", 5)},
       $blocks
       SELECT dims, n_probes, n_hits,
         ${graft.Portable.round6RatioDuck("n_hits", "5 * n_probes")} AS recall
@@ -292,25 +284,63 @@ object Similarity {
     bits.mkString(" + ")
   }
 
-  val lsh = QueryDef(
-    "ann_lsh",
-    Some {
-      val bkCols = (0 until NumTables).map(t => s"${bucketExprSql(t)} AS bk_$t").mkString(", ")
-      val tb = (0 until NumTables)
-        .map(t => s"SELECT vec_id, $t AS t, bk_$t AS bk FROM bk")
-        .mkString(" UNION ALL ")
-      s"""WITH $normSqlCte,
-      bk AS (SELECT vec_id, $bkCols FROM nx),
-      tb AS ($tb),
-      cand AS (SELECT DISTINCT ca.vec_id AS id_p, cb.vec_id AS id_c
+  /** Oracle of the LSH index over `nx`: each vector's bucket per
+    * table (`bk`) and one (vec_id, t, bk) row per table in `tb`. */
+  private def lshBucketsSql(tb: String): String = {
+    val bkCols = (0 until NumTables).map(t => s"${bucketExprSql(t)} AS bk_$t").mkString(", ")
+    val tbs = (0 until NumTables)
+      .map(t => s"SELECT vec_id, $t AS t, bk_$t AS bk FROM bk")
+      .mkString(" UNION ALL ")
+    s"""bk AS (SELECT vec_id, $bkCols FROM nx),
+      $tb AS ($tbs)"""
+  }
+
+  /** Oracle: `cand(id_p, id_c)` — each probe (vec_id < 10) with every
+    * other vector that shares one of its buckets in `tb`. */
+  private def lshCandSql: String =
+    """cand AS (SELECT DISTINCT ca.vec_id AS id_p, cb.vec_id AS id_c
         FROM tb ca JOIN tb cb ON ca.t = cb.t AND ca.bk = cb.bk
-          AND ca.vec_id < 10 AND ca.vec_id <> cb.vec_id)
-      SELECT id_p, rk, id_c, round(c, 6) AS cos FROM (
+          AND ca.vec_id < 10 AND ca.vec_id <> cb.vec_id)"""
+
+  /** Oracle: `lshk` — the top-`k` of `cand` by exact cosine. */
+  private def lshRankSql(cols: String, k: Int): String =
+    s"""lshk AS (SELECT $cols FROM (
+        SELECT cd.id_p, cd.id_c,
+          row_number() OVER (PARTITION BY cd.id_p ORDER BY $dotSql / (a.nrm * b.nrm) DESC, cd.id_c) AS rk
+        FROM cand cd JOIN nx a ON a.vec_id = cd.id_p JOIN nx b ON b.vec_id = cd.id_c) t
+        WHERE rk <= $k)"""
+
+  /** Oracle: the final SELECT of the LSH gates — each probe's top 5
+    * of `cand(id_p, id_c)` by exact cosine. */
+  private def candTop5Sql: String =
+    s"""SELECT id_p, rk, id_c, round(c, 6) AS cos FROM (
         SELECT cd.id_p, cd.id_c, $dotSql / (a.nrm * b.nrm) AS c,
           row_number() OVER (PARTITION BY cd.id_p ORDER BY $dotSql / (a.nrm * b.nrm) DESC, cd.id_c) AS rk
         FROM cand cd JOIN nx a ON a.vec_id = cd.id_p JOIN nx b ON b.vec_id = cd.id_c) t
       WHERE rk <= 5 ORDER BY id_p, rk"""
-    },
+
+  /** Oracle: `bru` — each probe's exact cosine top-`k`. */
+  private def bruteRankSql(cols: String, k: Int, alias: String = "t"): String =
+    s"""bru AS (SELECT $cols FROM (
+        SELECT a.vec_id AS id_p, b.vec_id AS id_c,
+          row_number() OVER (PARTITION BY a.vec_id ORDER BY $dotSql / (a.nrm * b.nrm) DESC, b.vec_id) AS rk
+        FROM nx a JOIN nx b ON a.vec_id < 10 AND a.vec_id <> b.vec_id) $alias
+        WHERE rk <= $k)"""
+
+  /** Oracle twin of [[AnnApi.ndcgReadout]]'s per-hit terms: `tm(id_p,
+    * rel, term)` for a ranked `list(id_p, id_c, rk)` graded against
+    * `bru`'s depth-10 ranks. */
+  private def ndcgTermsSql(list: String): String =
+    s"""tm AS (SELECT l.id_p, CAST(coalesce(11 - b.brk, 0) AS BIGINT) AS rel,
+          CAST(CAST(coalesce(11 - b.brk, 0) AS BIGINT) * ${AnnApi.ndcgCaseSql("l.rk", 10)} AS DECIMAL(28,12)) AS term
+        FROM $list l LEFT JOIN bru b ON b.id_p = l.id_p AND b.id_c = l.id_c)"""
+
+  val lsh = QueryDef(
+    "ann_lsh",
+    Some(s"""WITH $normSqlCte,
+      ${lshBucketsSql("tb")},
+      $lshCandSql
+      $candTop5Sql"""),
     (s, d) => AnnApi.lshTopK(Tables.embeddings(s, d), "vec_id", "embedding",
       Tables.embeddings(s, d).filter(col("vec_id") < 10).select(col("vec_id"))))
 
@@ -333,11 +363,7 @@ object Similarity {
       pb AS (SELECT vec_id, bk AS pbk FROM bkp UNION ALL $flips),
       cand AS (SELECT DISTINCT pb.vec_id AS id_p, cb.vec_id AS id_c
         FROM pb JOIN bk cb ON pb.pbk = cb.bk AND pb.vec_id <> cb.vec_id)
-      SELECT id_p, rk, id_c, round(c, 6) AS cos FROM (
-        SELECT cd.id_p, cd.id_c, $dotSql / (a.nrm * b.nrm) AS c,
-          row_number() OVER (PARTITION BY cd.id_p ORDER BY $dotSql / (a.nrm * b.nrm) DESC, cd.id_c) AS rk
-        FROM cand cd JOIN nx a ON a.vec_id = cd.id_p JOIN nx b ON b.vec_id = cd.id_c) t
-      WHERE rk <= 5 ORDER BY id_p, rk"""
+      $candTop5Sql"""
     },
     (s, d) => graft.CacheScope.withScope { implicit scope =>
       AnnApi.multiProbeTopK(Tables.embeddings(s, d), "vec_id", "embedding",
@@ -359,32 +385,15 @@ object Similarity {
     * one exact IEEE division (n_hits/5.0). */
   val recallAudit = QueryDef(
     "ann_recall_audit",
-    Some {
-      val bkCols = (0 until NumTables).map(t => s"${bucketExprSql(t)} AS bk_$t").mkString(", ")
-      val tb = (0 until NumTables)
-        .map(t => s"SELECT vec_id, $t AS t, bk_$t AS bk FROM bk")
-        .mkString(" UNION ALL ")
-      s"""WITH $normSqlCte,
-      bk AS (SELECT vec_id, $bkCols FROM nx),
-      tb AS ($tb),
-      cand AS (SELECT DISTINCT ca.vec_id AS id_p, cb.vec_id AS id_c
-        FROM tb ca JOIN tb cb ON ca.t = cb.t AND ca.bk = cb.bk
-          AND ca.vec_id < 10 AND ca.vec_id <> cb.vec_id),
-      lshk AS (SELECT id_p, id_c FROM (
-        SELECT cd.id_p, cd.id_c,
-          row_number() OVER (PARTITION BY cd.id_p ORDER BY $dotSql / (a.nrm * b.nrm) DESC, cd.id_c) AS rk
-        FROM cand cd JOIN nx a ON a.vec_id = cd.id_p JOIN nx b ON b.vec_id = cd.id_c) t
-        WHERE rk <= 5),
-      bru AS (SELECT id_p, id_c FROM (
-        SELECT a.vec_id AS id_p, b.vec_id AS id_c,
-          row_number() OVER (PARTITION BY a.vec_id ORDER BY $dotSql / (a.nrm * b.nrm) DESC, b.vec_id) AS rk
-        FROM nx a JOIN nx b ON a.vec_id < 10 AND a.vec_id <> b.vec_id) t
-        WHERE rk <= 5)
+    Some(s"""WITH $normSqlCte,
+      ${lshBucketsSql("tb")},
+      $lshCandSql,
+      ${lshRankSql("id_p, id_c", 5)},
+      ${bruteRankSql("id_p, id_c", 5)}
       SELECT bru.id_p, CAST(5 AS BIGINT) AS k, CAST(count(lshk.id_c) AS BIGINT) AS n_hits,
         CAST(count(lshk.id_c) AS DOUBLE) / 5.0 AS recall
       FROM bru LEFT JOIN lshk ON lshk.id_p = bru.id_p AND lshk.id_c = bru.id_c
-      GROUP BY bru.id_p ORDER BY bru.id_p"""
-    },
+      GROUP BY bru.id_p ORDER BY bru.id_p"""),
     (s, d) => {
       val probes = Tables.embeddings(s, d).filter(col("vec_id") < 10).select(col("vec_id"))
       val brute = AnnApi.bruteTopK(Tables.embeddings(s, d), "vec_id", "embedding", probes)
@@ -588,11 +597,7 @@ object Similarity {
         FROM $codes c JOIN $padt d ON d.s = c.s AND d.code = c.code
         WHERE d.id_p <> c.vec_id
         GROUP BY d.id_p, c.vec_id)
-      SELECT id_p, rk, id_c, round(adc, 6) AS adc FROM (
-        SELECT id_p, id_c, adc,
-          row_number() OVER (PARTITION BY id_p ORDER BY adc ASC, id_c) AS rk
-        FROM adc) t
-      WHERE rk <= 5 ORDER BY id_p, rk"""
+      $adcTop5Sql"""
     },
     (s, d) => AnnApi.pqTopK(Tables.embeddings(s, d), "vec_id", "embedding",
       Tables.embeddings(s, d).filter(col("vec_id") < 10).select(col("vec_id")),
@@ -613,6 +618,35 @@ object Similarity {
         KmeansCells, KmeansIters, KmeansTrainMod)
       .orderBy(col("vec_id")))
 
+  /** Oracle of the k-means cell pruning shared by the IVF gates:
+    * [[AnnApi.ivfTopK]] recomputes DECIMAL centroids and norms from
+    * the final full-corpus assignment `kaFinal` (`kcf`, `krf`, `knf`),
+    * and each probe keeps its 2 nearest cells, `top2(id_p, cell)`. */
+  private def ivfTop2SqlCtes(kaFinal: String): String =
+    s"""kcf AS (SELECT a.cell, p.i, CAST(sum(CAST(p.x AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m
+        FROM kpos p JOIN $kaFinal a ON a.vec_id = p.vec_id GROUP BY a.cell, p.i),
+      krf AS (SELECT cell, list(m ORDER BY i) AS cm FROM kcf GROUP BY cell),
+      knf AS (SELECT cell, sqrt(list_reduce(list_transform(cm, x -> x * x), (a, b) -> a + b)) AS cn
+        FROM krf),
+      pdot AS (SELECT n.vec_id AS id_p, r.cell,
+          list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * r.cm[i]), (a, b) -> a + b) AS dt
+        FROM nx n, krf r WHERE n.vec_id < 10),
+      top2 AS (SELECT id_p, cell FROM (
+          SELECT d.id_p, d.cell,
+            row_number() OVER (PARTITION BY d.id_p
+              ORDER BY d.dt / (n.nrm * cn.cn) DESC, d.cell) AS crk
+          FROM pdot d JOIN nx n ON n.vec_id = d.id_p JOIN knf cn ON cn.cell = d.cell) t
+        WHERE crk <= 2)"""
+
+  /** Oracle: the 5 smallest ADC distances per probe off `adc(id_p,
+    * id_c, adc)` — the final SELECT of the PQ gates. */
+  private def adcTop5Sql: String =
+    """SELECT id_p, rk, id_c, round(adc, 6) AS adc FROM (
+        SELECT id_p, id_c, adc,
+          row_number() OVER (PARTITION BY id_p ORDER BY adc ASC, id_c) AS rk
+        FROM adc) t
+      WHERE rk <= 5 ORDER BY id_p, rk"""
+
   /** IVF search over k-means cells: [[AnnApi.ivfTopK]] recomputes
     * centroids from the final assignment, so the oracle ranks probe
     * cells with iteration `iters+1` centroids over `ka<iters>`
@@ -621,23 +655,8 @@ object Similarity {
     "ann_ivf_kmeans",
     Some {
       val (ctes, kaFinal) = kmeansSqlCtes(KmeansCells, KmeansIters, KmeansTrainMod)
-      // ivfTopK recomputes decimal centroids/norms from the final
-      // full-corpus assignment — mirror that exactly (kcf/knf).
       s"""WITH $normSqlCte, $ctes,
-      kcf AS (SELECT a.cell, p.i, CAST(sum(CAST(p.x AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m
-        FROM kpos p JOIN $kaFinal a ON a.vec_id = p.vec_id GROUP BY a.cell, p.i),
-      krf AS (SELECT cell, list(m ORDER BY i) AS cm FROM kcf GROUP BY cell),
-      knf AS (SELECT cell, sqrt(list_reduce(list_transform(cm, x -> x * x), (a, b) -> a + b)) AS cn
-        FROM krf),
-      pdot AS (SELECT n.vec_id AS id_p, r.cell,
-                 list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * r.cm[i]), (a, b) -> a + b) AS dt
-               FROM nx n, krf r WHERE n.vec_id < 10),
-      top2 AS (SELECT id_p, cell FROM (
-                 SELECT d.id_p, d.cell,
-                   row_number() OVER (PARTITION BY d.id_p
-                     ORDER BY d.dt / (n.nrm * cn.cn) DESC, d.cell) AS crk
-                 FROM pdot d JOIN nx n ON n.vec_id = d.id_p JOIN knf cn ON cn.cell = d.cell) t
-               WHERE crk <= 2)
+      ${ivfTop2SqlCtes(kaFinal)}
       SELECT id_p, rk, id_c, round(c, 6) AS cos FROM (
         SELECT a.vec_id AS id_p, b.vec_id AS id_c, $dotSql / (a.nrm * b.nrm) AS c,
           row_number() OVER (PARTITION BY a.vec_id ORDER BY $dotSql / (a.nrm * b.nrm) DESC, b.vec_id) AS rk
@@ -665,20 +684,7 @@ object Similarity {
       val (kmCtes, kaFinal) = kmeansSqlCtes(KmeansCells, KmeansIters, KmeansTrainMod)
       val (pqCtes, pcodes, padt) = pqSqlCtes(PqSubspaces, PqSubDim, PqCodes, PqIters, PqTrainMod)
       s"""WITH $normSqlCte, $kmCtes,
-      kcf AS (SELECT a.cell, p.i, CAST(sum(CAST(p.x AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m
-        FROM kpos p JOIN $kaFinal a ON a.vec_id = p.vec_id GROUP BY a.cell, p.i),
-      krf AS (SELECT cell, list(m ORDER BY i) AS cm FROM kcf GROUP BY cell),
-      knf AS (SELECT cell, sqrt(list_reduce(list_transform(cm, x -> x * x), (a, b) -> a + b)) AS cn
-        FROM krf),
-      pdot AS (SELECT n.vec_id AS id_p, r.cell,
-          list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * r.cm[i]), (a, b) -> a + b) AS dt
-        FROM nx n, krf r WHERE n.vec_id < 10),
-      top2 AS (SELECT id_p, cell FROM (
-          SELECT d.id_p, d.cell,
-            row_number() OVER (PARTITION BY d.id_p
-              ORDER BY d.dt / (n.nrm * cn.cn) DESC, d.cell) AS crk
-          FROM pdot d JOIN nx n ON n.vec_id = d.id_p JOIN knf cn ON cn.cell = d.cell) t
-        WHERE crk <= 2),
+      ${ivfTop2SqlCtes(kaFinal)},
       $pqCtes,
       cand AS (SELECT t.id_p, kb.vec_id AS id_c
         FROM top2 t JOIN $kaFinal kb ON kb.cell = t.cell AND kb.vec_id <> t.id_p),
@@ -688,11 +694,7 @@ object Similarity {
         JOIN $pcodes pc ON pc.vec_id = c.id_c
         JOIN $padt d ON d.id_p = c.id_p AND d.s = pc.s AND d.code = pc.code
         GROUP BY c.id_p, c.id_c)
-      SELECT id_p, rk, id_c, round(adc, 6) AS adc FROM (
-        SELECT id_p, id_c, adc,
-          row_number() OVER (PARTITION BY id_p ORDER BY adc ASC, id_c) AS rk
-        FROM adc) t
-      WHERE rk <= 5 ORDER BY id_p, rk"""
+      $adcTop5Sql"""
     },
     (s, d) => AnnApi.ivfPqTopK(Tables.embeddings(s, d), "vec_id", "embedding",
       Tables.embeddings(s, d).filter(col("vec_id") < 10).select(col("vec_id")),
@@ -709,20 +711,7 @@ object Similarity {
     Some {
       val (kmCtes, kaFinal) = kmeansSqlCtes(KmeansCells, KmeansIters, KmeansTrainMod)
       s"""WITH $normSqlCte, $kmCtes,
-      kcf AS (SELECT a.cell, p.i, CAST(sum(CAST(p.x AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m
-        FROM kpos p JOIN $kaFinal a ON a.vec_id = p.vec_id GROUP BY a.cell, p.i),
-      krf AS (SELECT cell, list(m ORDER BY i) AS cm FROM kcf GROUP BY cell),
-      knf AS (SELECT cell, sqrt(list_reduce(list_transform(cm, x -> x * x), (a, b) -> a + b)) AS cn
-        FROM krf),
-      pdot AS (SELECT n.vec_id AS id_p, r.cell,
-          list_reduce(list_transform(range(1, len(n.v) + 1), i -> n.v[i] * r.cm[i]), (a, b) -> a + b) AS dt
-        FROM nx n, krf r WHERE n.vec_id < 10),
-      top2 AS (SELECT id_p, cell FROM (
-          SELECT d.id_p, d.cell,
-            row_number() OVER (PARTITION BY d.id_p
-              ORDER BY d.dt / (n.nrm * cn.cn) DESC, d.cell) AS crk
-          FROM pdot d JOIN nx n ON n.vec_id = d.id_p JOIN knf cn ON cn.cell = d.cell) t
-        WHERE crk <= 2),
+      ${ivfTop2SqlCtes(kaFinal)},
       ${pqResidualSqlCtes(kaFinal, PqSubspaces, PqSubDim, PqCodes, PqIters, PqTrainMod)},
       adc AS (SELECT c.id_p, c.id_c,
           CAST(sum(CAST(d.partial AS DECIMAL(28,12))) AS DOUBLE) AS adc
@@ -731,11 +720,7 @@ object Similarity {
         JOIN rpadt d ON d.id_p = c.id_p AND d.pcell = c.pcell
           AND d.s = pc.s AND d.code = pc.code
         GROUP BY c.id_p, c.id_c)
-      SELECT id_p, rk, id_c, round(adc, 6) AS adc FROM (
-        SELECT id_p, id_c, adc,
-          row_number() OVER (PARTITION BY id_p ORDER BY adc ASC, id_c) AS rk
-        FROM adc) t
-      WHERE rk <= 5 ORDER BY id_p, rk"""
+      $adcTop5Sql"""
     },
     (s, d) => AnnApi.ivfPqResidualTopK(Tables.embeddings(s, d), "vec_id", "embedding",
       Tables.embeddings(s, d).filter(col("vec_id") < 10).select(col("vec_id")),
@@ -796,6 +781,17 @@ object Similarity {
     (s, d) => AnnApi.sq8TopK(Tables.embeddings(s, d), "vec_id", "embedding",
       Tables.embeddings(s, d).filter(col("vec_id") < 10).select(col("vec_id"))))
 
+  /** Oracle of the exact covariance moments: embedding coordinates
+    * `x(vec_id, i, x)`, DECIMAL cross sums `p(i, j, n, sxy)` for
+    * i ≤ j, and coordinate sums `s(i, sx)`. */
+  private def covMomentsSql: String =
+    s"""x AS (SELECT vec_id, i, CAST(embedding[i] AS DOUBLE) AS x
+        FROM embeddings, (SELECT unnest(range(1, ${Dim + 1})) AS i)),
+      p AS (SELECT a.i AS i, b.i AS j, count(*) AS n,
+          sum(CAST(a.x * b.x AS DECIMAL(28,12))) AS sxy
+        FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.i <= b.i GROUP BY a.i, b.i),
+      s AS (SELECT i, sum(CAST(x AS DECIMAL(28,12))) AS sx FROM x GROUP BY i)"""
+
   /** Exact corpus covariance matrix (upper triangle, 1-based dims) —
     * the second-moment audit behind whitening/PCA decisions on an
     * embedding corpus. Both moments come from ONE corpus scan via the
@@ -813,12 +809,7 @@ object Similarity {
     * other double. */
   val vecCovariance = QueryDef(
     "vec_covariance",
-    Some(s"""WITH x AS (SELECT vec_id, i, CAST(embedding[i] AS DOUBLE) AS x
-        FROM embeddings, (SELECT unnest(range(1, ${Dim + 1})) AS i)),
-      p AS (SELECT a.i AS i, b.i AS j, count(*) AS n,
-          sum(CAST(a.x * b.x AS DECIMAL(28,12))) AS sxy
-        FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.i <= b.i GROUP BY a.i, b.i),
-      s AS (SELECT i, sum(CAST(x AS DECIMAL(28,12))) AS sx FROM x GROUP BY i)
+    Some(s"""WITH $covMomentsSql
       SELECT p.i, p.j,
         round((CAST(sxy AS DOUBLE) - CAST(sa.sx AS DOUBLE) * CAST(sb.sx AS DOUBLE) / n) / n, 6) + 0.0 AS cov
       FROM p JOIN s sa ON p.i = sa.i JOIN s sb ON p.j = sb.i
@@ -916,12 +907,7 @@ object Similarity {
     * the JVM, not just inside it. */
   val vecPcaProject = QueryDef(
     "vec_pca_project",
-    Some(s"""WITH x AS (SELECT vec_id, i, CAST(embedding[i] AS DOUBLE) AS x
-        FROM embeddings, (SELECT unnest(range(1, ${Dim + 1})) AS i)),
-      p AS (SELECT a.i AS i, b.i AS j, count(*) AS n,
-          sum(CAST(a.x * b.x AS DECIMAL(28,12))) AS sxy
-        FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.i <= b.i GROUP BY a.i, b.i),
-      s AS (SELECT i, sum(CAST(x AS DECIMAL(28,12))) AS sx FROM x GROUP BY i),
+    Some(s"""WITH $covMomentsSql,
       nn AS (SELECT count(*) AS n FROM embeddings),
       cv AS (SELECT p.i AS i, p.j AS j,
           (CAST(sxy AS DOUBLE) - CAST(sa.sx AS DOUBLE) * CAST(sb.sx AS DOUBLE) / p.n) / p.n AS c
@@ -967,22 +953,13 @@ object Similarity {
     * is the documented trade, same as [[lsh]]). */
   val annRange = QueryDef(
     "ann_range_search",
-    Some {
-      val bkCols = (0 until NumTables).map(t => s"${bucketExprSql(t)} AS bk_$t").mkString(", ")
-      val tb = (0 until NumTables)
-        .map(t => s"SELECT vec_id, $t AS t, bk_$t AS bk FROM bk")
-        .mkString(" UNION ALL ")
-      s"""WITH $normSqlCte,
-      bk AS (SELECT vec_id, $bkCols FROM nx),
-      tb AS ($tb),
-      cand AS (SELECT DISTINCT ca.vec_id AS id_p, cb.vec_id AS id_c
-        FROM tb ca JOIN tb cb ON ca.t = cb.t AND ca.bk = cb.bk
-          AND ca.vec_id < 10 AND ca.vec_id <> cb.vec_id)
+    Some(s"""WITH $normSqlCte,
+      ${lshBucketsSql("tb")},
+      $lshCandSql
       SELECT id_p, id_c, round(c, 6) AS cos FROM (
         SELECT cd.id_p, cd.id_c, $dotSql / (a.nrm * b.nrm) AS c
         FROM cand cd JOIN nx a ON a.vec_id = cd.id_p JOIN nx b ON b.vec_id = cd.id_c) t
-      WHERE c >= $RangeTau ORDER BY id_p, c DESC, id_c"""
-    },
+      WHERE c >= $RangeTau ORDER BY id_p, c DESC, id_c"""),
     (s, d) => AnnApi.lshRange(Tables.embeddings(s, d), "vec_id", "embedding",
       Tables.embeddings(s, d).filter(col("vec_id") < 10).select(col("vec_id")),
       tau = RangeTau))
@@ -1062,14 +1039,8 @@ object Similarity {
     * equality pins the full graph. */
   val annKnnGraph = QueryDef(
     "ann_knn_graph",
-    Some {
-      val bkCols = (0 until NumTables).map(t => s"${bucketExprSql(t)} AS bk_$t").mkString(", ")
-      val tb = (0 until NumTables)
-        .map(t => s"SELECT vec_id, $t AS t, bk_$t AS bk FROM bk")
-        .mkString(" UNION ALL ")
-      s"""WITH $normSqlCte,
-      bk AS (SELECT vec_id, $bkCols FROM nx),
-      tb0 AS ($tb),
+    Some(s"""WITH $normSqlCte,
+      ${lshBucketsSql("tb0")},
       bsz AS (SELECT t, bk, count(*) AS bn FROM tb0 GROUP BY t, bk),
       tb AS (SELECT tb0.* FROM tb0 JOIN bsz ON tb0.t = bsz.t AND tb0.bk = bsz.bk
         WHERE bsz.bn <= $KnnGraphMaxBucket),
@@ -1083,8 +1054,7 @@ object Similarity {
       SELECT k.src, k.rk, k.dst, round(k.c, 6) AS cos,
         (r.src IS NOT NULL) AS mutual
       FROM topk k LEFT JOIN topk r ON r.src = k.dst AND r.dst = k.src
-      ORDER BY k.src, k.rk"""
-    },
+      ORDER BY k.src, k.rk"""),
     (s, d) => graft.CacheScope.withScope { implicit scope =>
       AnnApi.knnGraph(Tables.embeddings(s, d), "vec_id", "embedding", KnnGraphK,
           maxBucketSize = KnnGraphMaxBucket)
@@ -1186,6 +1156,22 @@ object Similarity {
   val RrfK = 60
   val HybridTopK = 10
 
+  /** Oracle twin of [[AnnApi.bm25TopK]]'s scoring for the probe docs
+    * (doc_id < 10): `lexsc(id_p, doc_id, s)`, each candidate's exact
+    * DECIMAL BM25 sum over the probe's distinct tokens. */
+  private def bm25ScoresSql: String =
+    s"""t AS (SELECT doc_id, string_split(${Portable.normTextSql("text")}, ' ') AS toks FROM documents),
+      tok AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl, unnest(toks) AS tok FROM t),
+      st AS (SELECT CAST(count(*) AS BIGINT) AS nd, CAST(sum(CAST(len(toks) AS BIGINT)) AS DOUBLE) / count(*) AS avgdl FROM t),
+      qv AS (SELECT DISTINCT doc_id AS id_p, tok FROM tok WHERE doc_id < 10),
+      tf AS (SELECT doc_id, dl, tok, CAST(count(*) AS BIGINT) AS tf FROM tok
+        WHERE tok IN (SELECT tok FROM qv) GROUP BY doc_id, dl, tok),
+      dft AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok),
+      term AS (SELECT qv.id_p, tf.doc_id, CAST(${graft.operators.Insights.bm25Frag} AS DECIMAL(28,12)) AS ts
+        FROM qv JOIN tf ON qv.tok = tf.tok JOIN dft ON tf.tok = dft.tok, st
+        WHERE tf.doc_id <> qv.id_p),
+      lexsc AS (SELECT id_p, doc_id, sum(ts) AS s FROM term GROUP BY id_p, doc_id)"""
+
   /** ann_hybrid_rrf: hybrid lexical+vector retrieval fused by
     * reciprocal rank (r9) — the RAG-stack retrieval shape: per probe
     * document, (a) a BM25 ranking of the corpus against the probe's
@@ -1205,17 +1191,7 @@ object Similarity {
     * (probe, doc)-grain map-combinable aggregate, never a join. */
   val hybridRrf = QueryDef(
     "ann_hybrid_rrf",
-    Some(s"""WITH t AS (SELECT doc_id, string_split(${Portable.normTextSql("text")}, ' ') AS toks FROM documents),
-      tok AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl, unnest(toks) AS tok FROM t),
-      st AS (SELECT CAST(count(*) AS BIGINT) AS nd, CAST(sum(CAST(len(toks) AS BIGINT)) AS DOUBLE) / count(*) AS avgdl FROM t),
-      qv AS (SELECT DISTINCT doc_id AS id_p, tok FROM tok WHERE doc_id < 10),
-      tf AS (SELECT doc_id, dl, tok, CAST(count(*) AS BIGINT) AS tf FROM tok
-        WHERE tok IN (SELECT tok FROM qv) GROUP BY doc_id, dl, tok),
-      dft AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok),
-      term AS (SELECT qv.id_p, tf.doc_id, CAST(${graft.operators.Insights.bm25Frag} AS DECIMAL(28,12)) AS ts
-        FROM qv JOIN tf ON qv.tok = tf.tok JOIN dft ON tf.tok = dft.tok, st
-        WHERE tf.doc_id <> qv.id_p),
-      lexsc AS (SELECT id_p, doc_id, sum(ts) AS s FROM term GROUP BY id_p, doc_id),
+    Some(s"""WITH $bm25ScoresSql,
       lex AS (SELECT id_p, doc_id, rk FROM (SELECT id_p, doc_id,
           row_number() OVER (PARTITION BY id_p ORDER BY s DESC, doc_id) AS rk FROM lexsc) z
         WHERE rk <= $HybridDepth),
@@ -1244,7 +1220,7 @@ object Similarity {
       val vec = AnnApi.bruteTopK(Tables.embeddings(s, d), "vec_id", "embedding",
           probes, HybridDepth)
         .select(col("id_p"), col("id_c").as("doc_id"), col("rk"))
-      AnnApi.rrfFuse(lex, vec, RrfK, HybridTopK)
+      AnnApi.rrfFuse(lex, vec, RrfK, HybridTopK).localCheckpoint(true)
     })
 
   // ---------------------------------------------------- nDCG audit
@@ -1263,31 +1239,13 @@ object Similarity {
   val ndcgAudit = QueryDef(
     "ann_ndcg",
     Some {
-      val bkCols = (0 until NumTables).map(t => s"${bucketExprSql(t)} AS bk_$t").mkString(", ")
-      val tb = (0 until NumTables)
-        .map(t => s"SELECT vec_id, $t AS t, bk_$t AS bk FROM bk")
-        .mkString(" UNION ALL ")
-      val caseSql = AnnApi.ndcgCaseSql("l.rk", 10)
       val idcg = AnnApi.ndcgIdcg(10).toPlainString
       s"""WITH $normSqlCte,
-      bk AS (SELECT vec_id, $bkCols FROM nx),
-      tb AS ($tb),
-      cand AS (SELECT DISTINCT ca.vec_id AS id_p, cb.vec_id AS id_c
-        FROM tb ca JOIN tb cb ON ca.t = cb.t AND ca.bk = cb.bk
-          AND ca.vec_id < 10 AND ca.vec_id <> cb.vec_id),
-      lshk AS (SELECT id_p, id_c, rk FROM (
-        SELECT cd.id_p, cd.id_c,
-          row_number() OVER (PARTITION BY cd.id_p ORDER BY $dotSql / (a.nrm * b.nrm) DESC, cd.id_c) AS rk
-        FROM cand cd JOIN nx a ON a.vec_id = cd.id_p JOIN nx b ON b.vec_id = cd.id_c) t
-        WHERE rk <= 10),
-      bru AS (SELECT id_p, id_c, rk AS brk FROM (
-        SELECT a.vec_id AS id_p, b.vec_id AS id_c,
-          row_number() OVER (PARTITION BY a.vec_id ORDER BY $dotSql / (a.nrm * b.nrm) DESC, b.vec_id) AS rk
-        FROM nx a JOIN nx b ON a.vec_id < 10 AND a.vec_id <> b.vec_id) t
-        WHERE rk <= 10),
-      tm AS (SELECT l.id_p, CAST(coalesce(11 - b.brk, 0) AS BIGINT) AS rel,
-          CAST(CAST(coalesce(11 - b.brk, 0) AS BIGINT) * $caseSql AS DECIMAL(28,12)) AS term
-        FROM lshk l LEFT JOIN bru b ON b.id_p = l.id_p AND b.id_c = l.id_c)
+      ${lshBucketsSql("tb")},
+      $lshCandSql,
+      ${lshRankSql("id_p, id_c, rk", 10)},
+      ${bruteRankSql("id_p, id_c, rk AS brk", 10)},
+      ${ndcgTermsSql("lshk")}
       SELECT id_p, CAST(sum(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
         CAST(sum(term) AS DOUBLE) AS dcg,
         CAST(sum(term) AS DOUBLE) / CAST($idcg AS DOUBLE) AS ndcg
@@ -1298,7 +1256,7 @@ object Similarity {
       val probes = emb.filter(col("vec_id") < 10).select(col("vec_id"))
       val brute = AnnApi.bruteTopK(emb, "vec_id", "embedding", probes, 10)
       val l = AnnApi.lshTopK(emb, "vec_id", "embedding", probes, 10)
-      AnnApi.ndcgReadout(l, brute, 10)
+      AnnApi.ndcgReadout(l, brute, 10).localCheckpoint(true)
     })
 
   /** pipeline_retrieval_eval: the composed index-quality report —
@@ -1339,37 +1297,19 @@ object Similarity {
   val retrievalEval = QueryDef(
     "pipeline_retrieval_eval",
     Some {
-      val bkCols = (0 until NumTables).map(t => s"${bucketExprSql(t)} AS bk_$t").mkString(", ")
-      val tb = (0 until NumTables)
-        .map(t => s"SELECT vec_id, $t AS t, bk_$t AS bk FROM bk")
-        .mkString(" UNION ALL ")
-      val caseSql = AnnApi.ndcgCaseSql("l.rk", 10)
       val idcg = AnnApi.ndcgIdcg(10).toPlainString
       s"""WITH $normSqlCte,
-      bk AS (SELECT vec_id, $bkCols FROM nx),
-      tb AS ($tb),
-      cand AS (SELECT DISTINCT ca.vec_id AS id_p, cb.vec_id AS id_c
-        FROM tb ca JOIN tb cb ON ca.t = cb.t AND ca.bk = cb.bk
-          AND ca.vec_id < 10 AND ca.vec_id <> cb.vec_id),
-      lshk AS (SELECT id_p, id_c, rk FROM (
-        SELECT cd.id_p, cd.id_c,
-          row_number() OVER (PARTITION BY cd.id_p ORDER BY $dotSql / (a.nrm * b.nrm) DESC, cd.id_c) AS rk
-        FROM cand cd JOIN nx a ON a.vec_id = cd.id_p JOIN nx b ON b.vec_id = cd.id_c) t
-        WHERE rk <= 10),
-      bru AS (SELECT id_p, id_c, rk AS brk FROM (
-        SELECT a.vec_id AS id_p, b.vec_id AS id_c,
-          row_number() OVER (PARTITION BY a.vec_id ORDER BY $dotSql / (a.nrm * b.nrm) DESC, b.vec_id) AS rk
-        FROM nx a JOIN nx b ON a.vec_id < 10 AND a.vec_id <> b.vec_id) t
-        WHERE rk <= 10),
+      ${lshBucketsSql("tb")},
+      $lshCandSql,
+      ${lshRankSql("id_p, id_c, rk", 10)},
+      ${bruteRankSql("id_p, id_c, rk AS brk", 10)},
       rec AS (SELECT b.id_p, CAST(count(l.id_c) AS BIGINT) AS n_hits,
           CAST(count(l.id_c) AS DOUBLE) / 5.0 AS value
         FROM (SELECT id_p, id_c FROM bru WHERE brk <= 5) b
         LEFT JOIN (SELECT id_p, id_c FROM lshk WHERE rk <= 5) l
           ON l.id_p = b.id_p AND l.id_c = b.id_c
         GROUP BY b.id_p),
-      tm AS (SELECT l.id_p, CAST(coalesce(11 - b.brk, 0) AS BIGINT) AS rel,
-          CAST(CAST(coalesce(11 - b.brk, 0) AS BIGINT) * $caseSql AS DECIMAL(28,12)) AS term
-        FROM lshk l LEFT JOIN bru b ON b.id_p = l.id_p AND b.id_c = l.id_c),
+      ${ndcgTermsSql("lshk")},
       nd AS (SELECT id_p, CAST(sum(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
           CAST(sum(term) AS DOUBLE) / CAST($idcg AS DOUBLE) AS value
         FROM tm GROUP BY id_p)
@@ -1380,7 +1320,7 @@ object Similarity {
     (s, d) => graft.CacheScope.withScope { implicit scope =>
       val emb = Tables.embeddings(s, d)
       val probes = emb.filter(col("vec_id") < 10).select(col("vec_id"))
-      AnnApi.retrievalEval(emb, "vec_id", "embedding", probes)
+      AnnApi.retrievalEval(emb, "vec_id", "embedding", probes).localCheckpoint(true)
     })
 
   // --------------------------------------------------- BM25 retrieval
@@ -1412,31 +1352,14 @@ object Similarity {
   val bm25TopKQ = QueryDef(
     "text_bm25_topk",
     Some {
-      val caseSql = AnnApi.ndcgCaseSql("l.rk", 10)
       val idcg = AnnApi.ndcgIdcg(10).toPlainString
-      s"""WITH t AS (SELECT doc_id, string_split(${Portable.normTextSql("text")}, ' ') AS toks FROM documents),
-      tok AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl, unnest(toks) AS tok FROM t),
-      st AS (SELECT CAST(count(*) AS BIGINT) AS nd, CAST(sum(CAST(len(toks) AS BIGINT)) AS DOUBLE) / count(*) AS avgdl FROM t),
-      qv AS (SELECT DISTINCT doc_id AS id_p, tok FROM tok WHERE doc_id < 10),
-      tf AS (SELECT doc_id, dl, tok, CAST(count(*) AS BIGINT) AS tf FROM tok
-        WHERE tok IN (SELECT tok FROM qv) GROUP BY doc_id, dl, tok),
-      dft AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok),
-      term AS (SELECT qv.id_p, tf.doc_id, CAST(${graft.operators.Insights.bm25Frag} AS DECIMAL(28,12)) AS ts
-        FROM qv JOIN tf ON qv.tok = tf.tok JOIN dft ON tf.tok = dft.tok, st
-        WHERE tf.doc_id <> qv.id_p),
-      lexsc AS (SELECT id_p, doc_id, sum(ts) AS s FROM term GROUP BY id_p, doc_id),
+      s"""WITH $bm25ScoresSql,
       lexk AS (SELECT id_p, doc_id AS id_c, s, rk FROM (SELECT id_p, doc_id, s,
           row_number() OVER (PARTITION BY id_p ORDER BY s DESC, doc_id) AS rk FROM lexsc) z
         WHERE rk <= 10),
       $normSqlCte,
-      bru AS (SELECT id_p, id_c, rk AS brk FROM (
-        SELECT a.vec_id AS id_p, b.vec_id AS id_c,
-          row_number() OVER (PARTITION BY a.vec_id ORDER BY $dotSql / (a.nrm * b.nrm) DESC, b.vec_id) AS rk
-        FROM nx a JOIN nx b ON a.vec_id < 10 AND a.vec_id <> b.vec_id) z
-        WHERE rk <= 10),
-      tm AS (SELECT l.id_p, CAST(coalesce(11 - b.brk, 0) AS BIGINT) AS rel,
-          CAST(CAST(coalesce(11 - b.brk, 0) AS BIGINT) * $caseSql AS DECIMAL(28,12)) AS term
-        FROM lexk l LEFT JOIN bru b ON b.id_p = l.id_p AND b.id_c = l.id_c),
+      ${bruteRankSql("id_p, id_c, rk AS brk", 10, "z")},
+      ${ndcgTermsSql("lexk")},
       nd AS (SELECT id_p, CAST(sum(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
           CAST(sum(term) AS DOUBLE) / CAST($idcg AS DOUBLE) AS ndcg
         FROM tm GROUP BY id_p)
@@ -1461,6 +1384,7 @@ object Similarity {
       val cmp = nd.select(lit("ndcg10_vs_cosine").as("readout"), col("id_p"),
         lit(0L).as("k"), col("n_hits").as("ref"), col("ndcg").as("value"))
       top.unionAll(cmp).orderBy(col("readout"), col("id_p"), col("k"), col("ref"))
+        .localCheckpoint(true)
     })
 
   val defs: Seq[QueryDef] = Seq(bruteTopK, lsh, ivf, vecKmeans, ivfKmeans, annPq, annIvfPq, annIvfPqResidual, annSq8, vecStats, vecCovariance, annMmr, vecPcaProject, annRange, vecRpProject, annKnnGraph, vecSilhouette, vecOutliers, hardNegatives, recallAudit, mips, dimAudit, hybridRrf, ndcgAudit, retrievalEval, filteredSearch, bm25TopKQ, multiprobeLsh, matryoshkaEval)

@@ -460,8 +460,8 @@ class AnalyticsSpec extends AnyFunSuite {
     val b = Seq((1.0, 0.0, 1.0), (2.0, 0.0, 1.0), (-1.0, 0.0, 0.0), (-2.0, 0.0, 0.0))
       .toDF("x1", "x2", "y")
     val w = operators.Analytics.weightsOf(spark, 0.0, 1.0, 0.0) // z = x1
-    val sweep = operators.Analytics.sweepOfScores(
-      operators.Analytics.scoreWith(b, w)).collect()
+    val sweep = operators.Analytics.sweepOfVg(operators.Analytics.vgOfScores(
+      operators.Analytics.scoreWith(b, w))).collect()
     assert(sweep.length == 9)
     // at t = 0.5 the z edge is logit(0.5) = 0: a perfect separation
     val mid = sweep.find(r => r.getDouble(0) == 0.5).get

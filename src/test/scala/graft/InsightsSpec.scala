@@ -241,4 +241,18 @@ class InsightsSpec extends AnyFunSuite {
     val ok = got("ok")
     assert(math.abs(ok.getDouble(2) - 2.0) < 1e-9 && math.abs(ok.getDouble(3) - 1.0) < 1e-9)
   }
+
+  test("mannKendallFromDaily persists into the caller's scope, and the result reads the cache") {
+    import spark.implicits._
+    val dd = Seq(("a", "2024-01-01", 3L), ("a", "2024-01-02", 5L), ("a", "2024-01-03", 4L),
+        ("a", "2024-01-04", 8L), ("b", "2024-01-01", 2L), ("b", "2024-01-02", 1L))
+      .toDF("event_type", "d", "c").withColumn("d", to_date(col("d")))
+    CacheScope.withScope { implicit scope =>
+      val out = operators.Insights2.mannKendallFromDaily(dd)
+      assert(scope.trackedCount > 0, "the day frame must be persisted in the caller's scope")
+      assert(out.queryExecution.optimizedPlan.toString.contains("InMemoryRelation"),
+        "the returned plan must read the persisted day frame")
+      assert(out.collect().length == 2)
+    }
+  }
 }

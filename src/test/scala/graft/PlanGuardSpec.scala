@@ -261,20 +261,27 @@ class PlanGuardSpec extends AnyFunSuite {
 
   test("triangle count intersects broadcast adjacency lists — wedges never materialize") {
     // the gate query localCheckpoints its one-row result (scan of an
-    // ExistingRDD) — inspect the pre-checkpoint plan instead
+    // ExistingRDD) — run triangleStats itself and read its final plan
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.functions.col
     val co = Tables.lineitem(spark, TestSpark.sfDir)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
     val e = co.as("a").join(co.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
       .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
-    val p = operators.Graph.triangleStats(e).queryExecution.executedPlan.toString
-    assert(p.contains("graft_sorted_inter_size"),
+    val df = operators.Graph.triangleStats(e)
+    df.collect()
+    val fp = df.queryExecution.executedPlan
+    assert(fp.toString.contains("graft_sorted_inter_size"),
       "triangle closure must stay on the merge-walk intersect, not a wedge semi-join")
-    // at gate scale the adjacency payload is KBs: both list joins are
-    // hinted broadcast (the only equi-joins hinted in this query), so
-    // the count is map-only over the persisted edges
-    assert(p.linesIterator.count(_.contains("BroadcastHashJoin")) >= 2,
-      "adjacency lists must reach the edges via broadcast at this scale")
+    // at gate scale the adjacency payload is KBs: AQE turns BOTH list
+    // joins (edge src to its list, edge dst to its list) into
+    // broadcast joins, so the count is map-only over the persisted edges
+    val bhjKeys = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(fp) { case j: BroadcastHashJoinExec =>
+        (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name)).toSet }
+    for (keys <- Seq(Set("src", "u_"), Set("dst", "v_")))
+      assert(bhjKeys.contains(keys),
+        s"the ${keys.mkString("=")} adjacency-list join must be a broadcast join; got $bhjKeys")
     spark.catalog.clearCache()
   }
 

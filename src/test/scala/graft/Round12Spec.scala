@@ -82,15 +82,28 @@ class Round12Spec extends AnyFunSuite {
       (1 to 9).map(k => math.log((k / 10.0) / (1.0 - k / 10.0))))
   }
 
-  test("localClustering: explicit broadcast hint and hint-free AQE path agree exactly") {
+  test("triangleStats and localClustering: broadcast and forced-shuffle list joins agree exactly") {
     import spark.implicits._
-    // triangle 1-2-3 plus pendant 4: cc(1)=cc(2)=cc(3)=1, node 4 drops
-    val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)).toDF("u", "v")
-    def run(h: Boolean) = CacheScope.withScope { implicit s =>
-      operators.Graph.localClustering(e, h).collect().map(_.toString).toSeq
+    // two triangles sharing edge 2-3, a pendant 4-5 and a hub 3
+    val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 6L), (3L, 6L), (3L, 4L), (4L, 5L))
+      .toDF("u", "v")
+    def run() = CacheScope.withScope { implicit s =>
+      (operators.Graph.triangleStats(e).collect().map(_.toString).toSeq,
+        operators.Graph.localClustering(e).collect().map(_.toString).toSeq)
     }
-    val aqe = run(false)
-    assert(aqe == run(true), s"$aqe vs hinted")
+    val default = run()
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    val shuffled = try {
+      keys.foreach(spark.conf.set(_, "-1"))
+      run()
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(default._1 == Seq("[7,12,2,0.5]"), s"triangles ${default._1}")
+    assert(default == shuffled, s"$default vs forced shuffle $shuffled")
   }
 
   test("trainDataCard: every token emitted by the mixture is packed, funnel retention is monotone, fills respect capacity") {
