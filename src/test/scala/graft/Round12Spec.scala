@@ -82,7 +82,7 @@ class Round12Spec extends AnyFunSuite {
       (1 to 9).map(k => math.log((k / 10.0) / (1.0 - k / 10.0))))
   }
 
-  test("triangleStats and localClustering: broadcast and forced-shuffle list joins agree exactly") {
+  test("triangleStats, localClustering: broadcast and forced-shuffle joins agree exactly") {
     import spark.implicits._
     // two triangles sharing edge 2-3, a pendant 4-5 and a hub 3
     val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 6L), (3L, 6L), (3L, 4L), (4L, 5L))
