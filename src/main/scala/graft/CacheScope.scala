@@ -29,9 +29,9 @@ import org.apache.spark.storage.StorageLevel
   *    never opens its own: it returns a lazy frame, so a scope it
   *    opened would release every intermediate before the caller runs
   *    the plan;
-  *  - a query builder that opens a scope ends its last expression in
-  *    `.localCheckpoint(true)` inside it, so the result is
-  *    materialized while the intermediates are still cached.
+  *  - a query builder returns a lazy frame and opens no scope; its
+  *    persists are untracked, and whoever runs the query drops its
+  *    blocks afterwards with [[Harness.dropAllBlocks]].
   */
 final class CacheScope private[graft] (track: Boolean) {
   private val acquired = scala.collection.mutable.ArrayBuffer.empty[DataFrame]

@@ -16,16 +16,17 @@ object Harness {
   /** Builds `df` and forces it through the `noop` sink so the full
     * plan executes (a bare count() would let Catalyst prune every
     * computed column away); returns wall seconds, build included —
-    * builders run eager barriers. */
+    * loop builders run eager barriers. */
   def runNoop(df: => DataFrame): Double = {
     val t0 = System.nanoTime()
     df.write.format("noop").mode("overwrite").save()
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Drops every cached block between queries. clearCache() only drops
-    * catalog-tracked cache entries; the localCheckpoint(true) RDDs
-    * queries materialize would otherwise wait on the GC-driven
+  /** Drops every cached block between queries: the lifetime rule for
+    * query builders, whose persists are untracked. clearCache() only
+    * drops catalog-tracked cache entries; the localCheckpoint(true)
+    * RDDs of loop builders would otherwise wait on the GC-driven
     * ContextCleaner and pile up block-manager memory across a session.
     * blocking = true, so no block removal bleeds into the next timed run. */
   def dropAllBlocks(spark: SparkSession): Unit = {
@@ -37,12 +38,13 @@ object Harness {
     qe.explainString(ExplainMode.fromString("formatted"))
 
   /** Markdown `explain("formatted")` of `df`, built inside the call.
-    * localCheckpoint(true)-terminated gates execute their real plan
-    * eagerly at build time and hand back a Scan ExistingRDD, so the
-    * static plan is blind there. Dataset.checkpoint runs through
+    * Builders return lazy frames, so the static plan is the real one,
+    * except where a loop checkpoints its state while building: those
+    * stages ran eagerly and show as a Scan ExistingRDD, so the static
+    * plan is blind there. Dataset.checkpoint runs through
     * withAction("checkpoint", qe), so a QueryExecutionListener sees
     * every pre-checkpoint QueryExecution; each captured stage follows
-    * the static plan, the last one labelled as the terminal plan. */
+    * the static plan. */
   def explainExecuted(spark: SparkSession, df: => DataFrame): String = {
     val caught = new ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {
@@ -73,8 +75,7 @@ object Harness {
             "this plan's ExistingRDD is RDD-backed without a checkpoint/localCheckpoint " +
             "executed during this build (no pre-checkpoint plan exists to capture)\n"
         stages.zipWithIndex.foreach { case (p, i) =>
-          val terminal = if (i == stages.length - 1) " (terminal plan)" else ""
-          sb ++= s"\n### executed pre-checkpoint stage ${i + 1} of ${stages.length}$terminal\n\n```\n$p```\n"
+          sb ++= s"\n### executed pre-checkpoint stage ${i + 1} of ${stages.length}\n\n```\n$p```\n"
         }
       }
       sb.toString

@@ -3,7 +3,7 @@ package graft
 /** Per-query `.explain("formatted")` dumper for the optimization-round
   * evidence files (`plans/r<N>/<query>_{before,after}.txt`) — the same
   * capture as [[Plans]] ([[Harness.explainExecuted]]: static plan +
-  * executed pre-checkpoint plans for localCheckpoint-terminated gates),
+  * executed pre-checkpoint plans for gates that checkpoint loop state),
   * one file per query instead of one monolithic PLANS.md.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>

@@ -22,10 +22,10 @@ object Plans {
     sb ++= "the rendered Exchange count overstates executed shuffles. The\n"
     sb ++= "BroadcastNestedLoopJoins there are the centroid-array cross joins\n"
     sb ++= "(broadcast side <= kCells rows) — the intended assignment plan.\n"
-    sb ++= "Sections whose gate terminates in localCheckpoint(true) show the\n"
-    sb ++= "checkpoint's Scan ExistingRDD plus the captured PRE-CHECKPOINT plan\n"
-    sb ++= "(the plan that actually executed) as an 'executed pre-checkpoint\n"
-    sb ++= "stage' subsection per checkpoint, the last one the terminal plan.\n"
+    sb ++= "Sections whose gate checkpoints loop state while it builds show a\n"
+    sb ++= "Scan ExistingRDD where each checkpoint sits, plus the captured\n"
+    sb ++= "PRE-CHECKPOINT plan (the plan that actually executed) as an 'executed\n"
+    sb ++= "pre-checkpoint stage' subsection per checkpoint.\n"
     // every query gets a section, in name order, so the file never
     // falls behind the inventory
     qs.keySet.toSeq.sorted.foreach { n =>

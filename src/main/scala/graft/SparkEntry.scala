@@ -39,7 +39,10 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     operators.Relational.q1.build(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each
+    * builder returns a lazy frame whose intermediates may be persisted
+    * untracked; the caller runs it and then frees its blocks with
+    * [[Harness.dropAllBlocks]]. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.build).toMap
 

@@ -152,10 +152,9 @@ object Dedup {
         round(CAST(inter AS DOUBLE) / (la + lb - inter), 6) AS jaccard
       FROM mm ORDER BY doc_a, doc_b"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       DedupApi.minhashFidelity(Tables.documents(s, d), "doc_id", "text",
           maxBucketSize = LshBucketCap)
-        .localCheckpoint(true)
     })
 
   // ------------------------------------------------ threshold sweep
@@ -187,8 +186,8 @@ object Dedup {
       SELECT sw.threshold, sw.n_pairs, tot.n_cand,
         CAST(sw.n_pairs AS DOUBLE) / tot.n_cand AS survival
       FROM sw, tot ORDER BY sw.threshold"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val pairs = scope.persist(DedupApi.minhashPairs(Tables.documents(s, d),
+    (s, d) => {
+      val pairs = graft.CacheScope.untracked.persist(DedupApi.minhashPairs(Tables.documents(s, d),
         "doc_id", "text", threshold = 0.0, maxBucketSize = LshBucketCap,
         roundJaccard = false)
         .select(col("jaccard").as("j")))
@@ -202,7 +201,6 @@ object Dedup {
         .selectExpr("threshold", "n_pairs", "n_cand",
           "CAST(n_pairs AS DOUBLE) / n_cand AS survival")
         .orderBy(col("threshold"))
-        .localCheckpoint(true)
     })
 
   // --------------------------------------------------------- simhash
@@ -576,9 +574,9 @@ object Dedup {
         CAST(sum(cs.sz - 1) AS BIGINT) AS n_removable,
         CAST(sum(cs.sz) AS DOUBLE) / nn.n_docs AS doc_share
       FROM cs, nn GROUP BY cs.sz, nn.n_docs ORDER BY cluster_size"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val asg = nearDupAssignment(s, d)
-      DedupApi.clusterSizeStats(asg).localCheckpoint(true)
+      DedupApi.clusterSizeStats(asg)
     })
 
   // ------------------------------------------- per-source dedup stats
@@ -611,11 +609,10 @@ object Dedup {
       SELECT source, n_docs, n_removable,
         ${graft.Portable.round6RatioDuck("n_removable", "n_docs")} AS dup_rate
       FROM st ORDER BY source"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val asg = nearDupAssignment(s, d)
       sourceDedupStats(asg,
         Tables.documents(s, d).select(col("doc_id"), col("source")))
-        .localCheckpoint(true)
     })
 
   /** Per-source removable attribution over a (node, cluster)

@@ -279,11 +279,7 @@ object Corpus {
       SELECT * FROM (${(1 to BpeRounds).map(t =>
         s"SELECT $t AS step, a AS lhs, b AS rhs, n FROM m$t").mkString(" UNION ALL ")}) z
       ORDER BY step"""),
-    (s, d) => {
-      graft.CacheScope.withScope { implicit scope =>
-        bpeTrain(Tables.documents(s, d), "text").localCheckpoint(true)
-      }
-    })
+    (s, d) => bpeTrain(Tables.documents(s, d), "text"))
 
   /** BPE merge training over `df`'s text column — see [[bpeMerges]]
     * for the algorithm, encoding, and scale shape. Returns one row
@@ -368,21 +364,18 @@ object Corpus {
       FROM dw JOIN enc USING (word)
       GROUP BY doc_id ORDER BY doc_id"""),
     (s, d) => {
-      graft.CacheScope.withScope { implicit scope =>
-        val docs = Tables.documents(s, d)
-        val enc = bpeWordEncoding(docs, "text")
-          .select(col("word"),
-            size(split(expr("substring(rep, 2, length(rep) - 2)"), BSep + BSep)).as("ntok"))
-        docs.select(col("doc_id"), explode(split(normText(col("text")), " ")).as("word"))
-          .filter(col("word") =!= "")
-          .join(enc, Seq("word"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_words"), sum(col("ntok")).as("n_bpe_tokens"))
-          .select(col("doc_id"), col("n_words"), col("n_bpe_tokens"),
-            round(col("n_bpe_tokens").cast(DoubleType) / col("n_words"), 6).as("fertility"))
-          .orderBy(col("doc_id"))
-          .localCheckpoint(true)
-      }
+      val docs = Tables.documents(s, d)
+      val enc = bpeWordEncoding(docs, "text")
+        .select(col("word"),
+          size(split(expr("substring(rep, 2, length(rep) - 2)"), BSep + BSep)).as("ntok"))
+      docs.select(col("doc_id"), explode(split(normText(col("text")), " ")).as("word"))
+        .filter(col("word") =!= "")
+        .join(enc, Seq("word"))
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_words"), sum(col("ntok")).as("n_bpe_tokens"))
+        .select(col("doc_id"), col("n_words"), col("n_bpe_tokens"),
+          round(col("n_bpe_tokens").cast(DoubleType) / col("n_words"), 6).as("fertility"))
+        .orderBy(col("doc_id"))
     })
 
   // ---------------------------------------------------- vocab growth
@@ -556,9 +549,7 @@ object Corpus {
         ORDER BY cluster, rk""")
       sb.toString
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      topicClustersOf(Tables.documents(s, d)).localCheckpoint(true)
-    })
+    (s, d) => topicClustersOf(Tables.documents(s, d)))
 
   /** Engine pipeline for [[topicClusters]] over a (doc_id, text)
     * frame. */

@@ -106,17 +106,14 @@ object LangModel {
       FROM nl, th WHERE nl.nll <= th.thr
       ORDER BY nl.doc_id"""),
     (s, d) => {
-      graft.CacheScope.withScope { implicit scope =>
-        val scored = nllScores(s, d).transform(scope.persist)
-        val thr = graft.operators.ExactPercentiles.percentiles(
-            scored.select(lit(1).as("g"), col("nll").as("q")), "g", "q", Seq(0.75))
-          .select(col("value").as("thr"))
-        scored.crossJoin(broadcast(thr))
-          .filter(col("nll") <= col("thr"))
-          .select(col("doc_id"), col("lang"), col("nll"), round(col("thr"), 6).as("thr"))
-          .orderBy(col("doc_id"))
-          .localCheckpoint(true)
-      }
+      val scored = nllScores(s, d).transform(graft.CacheScope.untracked.persist)
+      val thr = graft.operators.ExactPercentiles.percentiles(
+          scored.select(lit(1).as("g"), col("nll").as("q")), "g", "q", Seq(0.75))
+        .select(col("value").as("thr"))
+      scored.crossJoin(broadcast(thr))
+        .filter(col("nll") <= col("thr"))
+        .select(col("doc_id"), col("lang"), col("nll"), round(col("thr"), 6).as("thr"))
+        .orderBy(col("doc_id"))
     })
 
   /** PMI collocation mining: top-20 bigrams by pointwise mutual

@@ -308,11 +308,11 @@ object Pipeline {
         ${ffdCtesDuck("dl", c, FfdSalts)}
         ${ffdSelectDuck(c)}"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       ffdStats(Tables.documents(s, d)
         .select(col("doc_id"),
           size(split(normText(col("text")), " ")).cast("long").as("n")),
-        FfdCapacity, FfdSalts).localCheckpoint(true)
+        FfdCapacity, FfdSalts)
     })
 
   /** The [[packFfd]] per-class fill report over ANY (doc_id, n) unit-
@@ -321,7 +321,7 @@ object Pipeline {
     * over-capacity units. Shared by the standalone gate and the
     * composed [[mixturePackStats]]. */
   def ffdStats(lengths: DataFrame, capacity: Int, salts: Int)(
-      implicit scope: graft.CacheScope): DataFrame = {
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     val c = capacity
     val dl = scope.persist(lengths)
     val fills = ffdAssignmentsOfLengths(dl, c, salts)
@@ -1008,7 +1008,7 @@ object Pipeline {
   def mixturePackStats(docs: DataFrame, dim: String, idCol: String = "doc_id",
       textCol: String = "text", capacity: Int = 2048, salts: Int = FfdSalts,
       targets: Option[DataFrame] = None)(
-      implicit scope: graft.CacheScope): DataFrame = {
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     val em = scope.persist(mixtureSample(docs, dim, idCol, targets))
     ffdStats(em.crossJoin(broadcast(copyStrideOf(em)))
       .select((col(idCol) * col("stride") + col("copy")).as("doc_id"),
@@ -1046,9 +1046,9 @@ object Pipeline {
         ${ffdCtesDuck("u", c, FfdSalts)}
         ${ffdSelectDuck(c)}"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       mixturePackStats(Tables.documents(s, d), "lang",
-        capacity = FfdCapacity, salts = FfdSalts).localCheckpoint(true)
+        capacity = FfdCapacity, salts = FfdSalts)
     })
 
   // ------------------------------------- composed crawl→train data card
@@ -1081,7 +1081,7 @@ object Pipeline {
   def trainDataCard(docs: DataFrame, capacity: Int = FfdCapacity,
       salts: Int = FfdSalts,
       spanDf: Int = graft.functions.TextAnalysis.SpanDf)(
-      implicit scope: graft.CacheScope): DataFrame = {
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     val base = scope.persist(docs.select(col("doc_id"), col("source"),
       col("lang"), col("text"), col("url")))
     val kp = graft.functions.UrlCanon.withCanonicalUrl(base, "url")
@@ -1201,11 +1201,11 @@ object Pipeline {
         UNION ALL SELECT * FROM tl
         ORDER BY section, k"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val docs = Tables.documents(s, d).selectExpr("doc_id", "source", "lang",
         s"${graft.functions.TextAnalysis.FooterPlantSql} AS text",
         s"${graft.functions.UrlCanon.rawUrlSql("doc_id", "div", "STRING")} AS url")
-      trainDataCard(docs).localCheckpoint(true)
+      trainDataCard(docs)
     })
 
   // ---------------------------------------------- split leakage audit
@@ -1267,22 +1267,19 @@ object Pipeline {
       FROM q, th WHERE CAST(q.q AS DOUBLE) >= th.thr
       ORDER BY q.doc_id"""),
     (s, d) => {
-      graft.CacheScope.withScope { implicit scope =>
-        val toks = split(normText(col("text")), " ")
-        val scored = Tables.documents(s, d)
-          .select(col("doc_id"), toks.as("toks"))
-          .select(col("doc_id"),
-            expr("(size(array_distinct(toks)) * 1000000L) div size(toks)").as("q"))
-          .transform(scope.persist)
-        val thr = graft.operators.ExactPercentiles.percentiles(
-            scored.select(lit(1).as("g"), col("q")), "g", "q", Seq(0.75))
-          .select(col("value").as("thr"))
-        scored.crossJoin(broadcast(thr))
-          .filter(col("q").cast("double") >= col("thr"))
-          .select(col("doc_id"), col("q"), round(col("thr"), 6).as("thr"))
-          .orderBy(col("doc_id"))
-          .localCheckpoint(true)
-      }
+      val toks = split(normText(col("text")), " ")
+      val scored = Tables.documents(s, d)
+        .select(col("doc_id"), toks.as("toks"))
+        .select(col("doc_id"),
+          expr("(size(array_distinct(toks)) * 1000000L) div size(toks)").as("q"))
+        .transform(graft.CacheScope.untracked.persist)
+      val thr = graft.operators.ExactPercentiles.percentiles(
+          scored.select(lit(1).as("g"), col("q")), "g", "q", Seq(0.75))
+        .select(col("value").as("thr"))
+      scored.crossJoin(broadcast(thr))
+        .filter(col("q").cast("double") >= col("thr"))
+        .select(col("doc_id"), col("q"), round(col("thr"), 6).as("thr"))
+        .orderBy(col("doc_id"))
     })
 
   // ------------------------------------------------------- epoch mixing
@@ -1373,35 +1370,32 @@ object Pipeline {
       FROM s2, th WHERE CAST(score_ppm AS DOUBLE) >= th.thr
       ORDER BY doc_id"""),
     (s, d) => {
-      graft.CacheScope.withScope { implicit scope =>
-        val bk = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"),
-            explode(split(normText(col("text")), " ")).as("tok"))
-          .select(col("doc_id"), col("lang"),
-            pmod(h60(col("tok")), lit(DsirBuckets)).as("b"))
-          .transform(scope.persist)
-        val raw = bk.groupBy(col("b")).agg(count(lit(1)).as("rc"))
-        val tgt = bk.filter(col("lang") === "en")
-          .groupBy(col("b")).agg(count(lit(1)).as("tc"))
-        val w = raw.join(tgt, Seq("b"), "left")
-          .select(col("b"),
-            expr("((coalesce(tc, 0) + 1) * 1000000) div (rc + 1)").as("w"))
-        val scored = bk.join(broadcast(w), Seq("b"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_tokens"), sum(col("w")).as("sw"))
-          .select(col("doc_id"), col("n_tokens"),
-            expr("sw div n_tokens").as("score_ppm"))
-          .transform(scope.persist)
-        val thr = graft.operators.ExactPercentiles.percentiles(
-            scored.select(lit(1).as("g"), col("score_ppm")), "g", "score_ppm", Seq(0.75))
-          .select(col("value").as("thr"))
-        scored.crossJoin(broadcast(thr))
-          .filter(col("score_ppm").cast("double") >= col("thr"))
-          .select(col("doc_id"), col("n_tokens"), col("score_ppm"),
-            round(col("thr"), 6).as("thr"))
-          .orderBy(col("doc_id"))
-          .localCheckpoint(true)
-      }
+      val bk = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"),
+          explode(split(normText(col("text")), " ")).as("tok"))
+        .select(col("doc_id"), col("lang"),
+          pmod(h60(col("tok")), lit(DsirBuckets)).as("b"))
+        .transform(graft.CacheScope.untracked.persist)
+      val raw = bk.groupBy(col("b")).agg(count(lit(1)).as("rc"))
+      val tgt = bk.filter(col("lang") === "en")
+        .groupBy(col("b")).agg(count(lit(1)).as("tc"))
+      val w = raw.join(tgt, Seq("b"), "left")
+        .select(col("b"),
+          expr("((coalesce(tc, 0) + 1) * 1000000) div (rc + 1)").as("w"))
+      val scored = bk.join(broadcast(w), Seq("b"))
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_tokens"), sum(col("w")).as("sw"))
+        .select(col("doc_id"), col("n_tokens"),
+          expr("sw div n_tokens").as("score_ppm"))
+        .transform(graft.CacheScope.untracked.persist)
+      val thr = graft.operators.ExactPercentiles.percentiles(
+          scored.select(lit(1).as("g"), col("score_ppm")), "g", "score_ppm", Seq(0.75))
+        .select(col("value").as("thr"))
+      scored.crossJoin(broadcast(thr))
+        .filter(col("score_ppm").cast("double") >= col("thr"))
+        .select(col("doc_id"), col("n_tokens"), col("score_ppm"),
+          round(col("thr"), 6).as("thr"))
+        .orderBy(col("doc_id"))
     })
 
   // ------------------------------------------------ pipeline_data_card
@@ -1444,8 +1438,8 @@ object Pipeline {
       SELECT * FROM tt UNION ALL SELECT * FROM src
       UNION ALL SELECT * FROM lng UNION ALL SELECT * FROM dup
       ORDER BY section, k"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val base = scope.persist(Tables.documents(s, d).select(
+    (s, d) => {
+      val base = graft.CacheScope.untracked.persist(Tables.documents(s, d).select(
         col("source"), col("lang"),
         size(split(normText(col("text")), " ")).cast("long").as("toks"),
         md5(normText(col("text"))).as("h")))
@@ -1471,7 +1465,6 @@ object Pipeline {
           "CAST(dd AS DOUBLE) / CAST(nn AS DOUBLE) AS metric")
       tt.unionAll(src).unionAll(lng).unionAll(dup)
         .orderBy(col("section"), col("k"))
-        .localCheckpoint(true)
     })
 
   // --------------------------------------- semantic decontamination
@@ -1541,12 +1534,12 @@ object Pipeline {
       SELECT cid AS vec_id, CAST(count(*) AS BIGINT) AS n_bench_hits, round(max(c), 6) AS max_cos
       FROM px WHERE c >= 0.4 GROUP BY cid ORDER BY vec_id"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val e = Tables.embeddings(s, d)
       val bench = e.filter(pmod(col("vec_id"), lit(29)) === 0)
       val corpus = e.filter(pmod(col("vec_id"), lit(29)) =!= 0)
       semanticDecontaminate(corpus, bench, "vec_id", "embedding", threshold = 0.4)
-        .orderBy(col("vec_id")).localCheckpoint(true)
+        .orderBy(col("vec_id"))
     })
 
   // ----------------------------------------------- span corruption

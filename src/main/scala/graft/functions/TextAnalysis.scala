@@ -979,9 +979,7 @@ object TextAnalysis {
       SELECT a, b, cab, ca, cb, lift, pmi FROM res
       ORDER BY lift DESC, a, b LIMIT 20"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      collocationsTopK(Tables.documents(s, d).select(col("text"))).localCheckpoint(true)
-    })
+    (s, d) => collocationsTopK(Tables.documents(s, d).select(col("text"))))
 
   /** The [[collocations]] computation over any single-text-column
     * frame — see the QueryDef for semantics and the scale argument. */

@@ -330,11 +330,11 @@ object UrlCanon {
           UNION ALL SELECT '3_exact_dedup', source, CAST(count(*) AS BIGINT) FROM ex GROUP BY source)
         SELECT stage, source, n_docs FROM census ORDER BY stage, source"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val docs = Tables.documents(s, d).selectExpr("doc_id", "source",
         s"${graft.functions.TextAnalysis.FooterPlantSql} AS text",
         s"${rawUrlSql("doc_id", "div", "STRING")} AS url")
-      crawlIngestCensus(docs).localCheckpoint(true)
+      crawlIngestCensus(docs)
     })
 
   val defs: Seq[QueryDef] = Seq(urlDedup, crawlIngest, domainStatsQ)

@@ -660,7 +660,7 @@ object Multimodal {
         FROM cand JOIN hs ha ON ha.img_id = cand.ia JOIN hs hb ON hb.img_id = cand.ib)
       SELECT ia, ib, CAST(ham AS BIGINT) AS hamming FROM pr
       WHERE ham <= $PhashHamT ORDER BY ia, ib"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val path = ImageGate.ensureParquet(s)
       val sp = s
       import sp.implicits._
@@ -668,13 +668,13 @@ object Multimodal {
       // (band-size cap aggregate, band-join build, two hash-lookup
       // joins) — unpersisted, the mapPartitions image decode would
       // recompute per consumer
-      val hs = scope.persist(s.read.parquet(path)
+      val hs = graft.CacheScope.untracked.persist(s.read.parquet(path)
         .select(col("img_id").cast("long"), col("png").cast("binary"))
         .filter(col("img_id").isNotNull && col("png").isNotNull)
         .as[(Long, Array[Byte])]
         .mapPartitions(_.flatMap { case (i, bytes) => decodeAHash(i, bytes) })
         .toDF("img_id", "h1", "h2"))
-      phashPairs(hs).localCheckpoint(true)
+      phashPairs(hs)
     })
 
   // --------------------------------------------- audio fingerprint dedup

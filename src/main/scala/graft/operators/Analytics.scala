@@ -139,13 +139,10 @@ object Analytics {
       WHERE o.o_orderdate = hm.pmax AND (hm.hmax IS NULL OR o.o_orderdate > hm.hmax)
       ORDER BY o_totalprice DESC, o_orderkey"""),
     (s, d) => {
-      graft.CacheScope.withScope { implicit scope =>
-        val o = Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
-        skyline2d(o, col("o_totalprice"), col("o_orderdate"))
-          .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-          .localCheckpoint(true)
-      }
+      val o = Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
+      skyline2d(o, col("o_totalprice"), col("o_orderdate"))
+        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
     })
 
   /** 2-D max-max skyline of `df` over (`price`, `date`) — see [[q57]]
@@ -542,9 +539,7 @@ object Analytics {
         SELECT bin, n, pos, CAST(sp AS DOUBLE) / n AS avg_pred,
           ${graft.Portable.round6RatioDuck("pos", "n")} AS emp_rate
         FROM c ORDER BY bin"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      calibOfVg(vgOfScores(gateScores(s, d))).localCheckpoint(true)
-    })
+    (s, d) => calibOfVg(vgOfScores(gateScores(s, d))))
 
   // ------------------------------------- ml_brier_decomposition
   /** Murphy decomposition of the Brier score over the calibration
@@ -621,9 +616,7 @@ object Analytics {
           CAST(sres AS DOUBLE) / CAST(nt AS DOUBLE) AS res,
           CAST(srel AS DOUBLE) / CAST(nt AS DOUBLE) - CAST(sres AS DOUBLE) / CAST(nt AS DOUBLE) + (CAST(post AS DOUBLE) / CAST(nt AS DOUBLE)) * (CAST(1 AS DOUBLE) - CAST(post AS DOUBLE) / CAST(nt AS DOUBLE)) AS bs_binned
         FROM s"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      brierOfScores(gateScores(s, d)).localCheckpoint(true)
-    })
+    (s, d) => brierOfScores(gateScores(s, d)))
 
   // ------------------------------------------- pipeline_ml_readouts
   /** pipeline_ml_readouts: the composed evaluation suite — ONE
@@ -671,14 +664,14 @@ object Analytics {
           FROM cbins)
         SELECT * FROM swf UNION ALL SELECT * FROM lif UNION ALL SELECT * FROM cal
         ORDER BY readout, k"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
+    (s, d) => {
+      val b = graft.CacheScope.untracked.persist(mlFeatures(s, d))
       val w = logregWeights6(b)               // ONE training pass
       // ONE corpus pass past training (r15): score + collapse to the
       // (z, p, q) value grain — all three readouts (and the decile
       // edges' selection passes) then run at ~550-row grain instead of
       // each re-scanning the persisted corpus-scale margins
-      val vg = scope.persist(vgOfScores(scoreWith(b, w)))
+      val vg = graft.CacheScope.untracked.persist(vgOfScores(scoreWith(b, w)))
       val sweep = sweepOfVg(vg).selectExpr("'sweep' AS readout", "t AS k",
         "tp AS n_a", "fp AS n_b", "fn AS n_c", "prec AS v1", "rec AS v2")
       val lift = liftOfVg(vg).selectExpr("'lift' AS readout",
@@ -689,7 +682,6 @@ object Analytics {
         "CAST(0 AS BIGINT) AS n_c", "avg_pred AS v1", "emp_rate AS v2")
       sweep.unionAll(lift).unionAll(calib)
         .orderBy(col("readout"), col("k"))
-        .localCheckpoint(true)
     })
 
   // ---------------------------------------------------------- pr-auc
@@ -735,8 +727,8 @@ object Analytics {
           FROM lg)
         SELECT su.n_points, CAST(ep.tp AS DOUBLE) / (ep.tp + ep.fp) AS base_rate, su.auc_pr
         FROM su, ep"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val vg = scope.persist(vgOfScores(gateScores(s, d)))
+    (s, d) => {
+      val vg = graft.CacheScope.untracked.persist(vgOfScores(gateScores(s, d)))
       val sw = sweepOfVg(vg).select(col("t"), col("tp"), col("fp"), col("fn"))
       val ep = vg.agg(sum(col("p")).cast(LongType).as("tp"), sum(col("q")).cast(LongType).as("fp"))
         .selectExpr("CAST(0 AS DOUBLE) AS t", "tp", "fp", "CAST(0 AS BIGINT) AS fn")
@@ -753,7 +745,6 @@ object Analytics {
       su.crossJoin(broadcast(ep.selectExpr(
           "CAST(tp AS DOUBLE) / (tp + fp) AS base_rate")))
         .select(col("n_points"), col("base_rate"), col("auc_pr"))
-        .localCheckpoint(true)
     })
 
   // ---------------------------------------------------------- ROC-AUC
@@ -812,9 +803,7 @@ object Analytics {
         $rocCtesSql
         SELECT n1, n0, n_values, $aucSql AS auc_roc
         FROM cn, uu"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      rocAucOfScores(gateScores(s, d)).localCheckpoint(true)
-    })
+    (s, d) => rocAucOfScores(gateScores(s, d)))
 
   // -------------------------------------------------- C2ST drift test
   /** The C2ST time-split cut (lineitem ship-date median at the gate
@@ -850,14 +839,13 @@ object Analytics {
           CAST(CASE WHEN abs($aucSql - 0.5) > $C2stAucBand THEN 1 ELSE 0 END AS BIGINT) AS drift
         FROM cn, uu"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(Tables.fanout(Tables.lineitem(s, d).selectExpr(
+    (s, d) => {
+      val b = graft.CacheScope.untracked.persist(Tables.fanout(Tables.lineitem(s, d).selectExpr(
         "l_quantity AS x1", "l_discount AS x2",
         s"CASE WHEN CAST(l_shipdate AS DATE) >= DATE '$C2stCutDate' THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END AS y")))
       rocAucOfScores(scoreWith(b, logregWeights6(b)))
         .selectExpr("n1", "n0", "n_values", "auc_roc",
           s"CAST(CASE WHEN abs(auc_roc - 0.5) > $C2stAucBand THEN 1 ELSE 0 END AS BIGINT) AS drift")
-        .localCheckpoint(true)
     })
 
   // ---------------------------------------------- average precision
@@ -935,9 +923,7 @@ object Analytics {
         SELECT n1, n0, n_values,
           CAST(ap_num AS DOUBLE) / CAST(n1 AS DOUBLE) AS avg_precision
         FROM cn, ap"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      averagePrecisionOfScores(gateScores(s, d)).localCheckpoint(true)
-    })
+    (s, d) => averagePrecisionOfScores(gateScores(s, d)))
 
   // ------------------------------------------------- DeLong variance
   /** Exact DeLong standard error + 95% CI for the ROC-AUC of a scored
@@ -1038,9 +1024,7 @@ object Analytics {
           auc_roc - 1.96 * se_delong AS ci_lo,
           auc_roc + 1.96 * se_delong AS ci_hi
         FROM sev"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      delongOfScores(gateScores(s, d)).localCheckpoint(true)
-    })
+    (s, d) => delongOfScores(gateScores(s, d)))
 
   // --------------------------------------------------- linear SHAP
   /** Exact per-feature SHAP attribution magnitudes for a linear
@@ -1102,9 +1086,9 @@ object Analytics {
           CAST(a2 AS DOUBLE) / CAST(a1 + a2 AS DOUBLE) AS share
         FROM ag, mo, w6
         ORDER BY feature"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      shapLinear(b, logregWeights6(b)).localCheckpoint(true)
+    (s, d) => {
+      val b = graft.CacheScope.untracked.persist(mlFeatures(s, d))
+      shapLinear(b, logregWeights6(b))
     })
 
   // ---------------------------------------------- pipeline scorecard
@@ -1121,7 +1105,7 @@ object Analytics {
     * oracle); this is the production shape: train once, score once,
     * read everything. */
   def scorecardOfScores(b: DataFrame, w: DataFrame)(
-      implicit scope: graft.CacheScope): DataFrame = {
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     val zz = scope.persist(scoreWith(b, w))
     // ONE value-grain collapse + ONE ascending range scan feed BOTH
     // rank readouts (r15): AP's descending cumulative counts are exact
@@ -1179,26 +1163,12 @@ object Analytics {
           UNION ALL SELECT 'shap_share_x1', CAST(a1 AS DOUBLE) / CAST(a1 + a2 AS DOUBLE) FROM ag
           UNION ALL SELECT 'shap_share_x2', CAST(a2 AS DOUBLE) / CAST(a1 + a2 AS DOUBLE) FROM ag
         ) ORDER BY metric"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val b = scope.persist(mlFeatures(s, d))
-      scorecardOfScores(b, logregWeights6(b)).localCheckpoint(true)
+    (s, d) => {
+      val b = graft.CacheScope.untracked.persist(mlFeatures(s, d))
+      scorecardOfScores(b, logregWeights6(b))
     })
 
   // --------------------------------------------------- McNemar test
-  /** McNemar's paired test over two scored margin columns (za, zb)
-    * and the shared outcome y — the PAIRED model-comparison test
-    * next to [[delongOfScores]]' CI: DeLong bounds ONE model's AUC,
-    * McNemar decides whether two models' DECISIONS differ beyond
-    * chance on the same rows (Dietterich 1998's recommendation for
-    * comparing classifiers without refit resampling). Only the
-    * discordant pairs carry signal: n01 (A wrong, B right) vs n10
-    * (A right, B wrong), continuity-corrected
-    * χ² = (|n01−n10|−1)²/(n01+n10), significant at α = 0.05 against
-    * the LITERAL critical value 3.841 (evaluating the chi-square CDF
-    * cross-engine would put a libm ulp on the verdict). Counts are
-    * exact BIGINTs off ONE scan; the square rides DECIMAL(19,0)
-    * (the q77 wrap lesson); the statistic is one IEEE tree over
-    * exact operands; NULL (not 0) when no discordant pairs exist. */
   /** McNemar readout fragments over the exact contingency counts —
     * shared by the single gate and the fused composite pass (r15). */
   private val mcnemarReadoutSql: Seq[String] = Seq(
@@ -1245,6 +1215,20 @@ object Analytics {
   /** How many of (za, zb, zc) decide the row correctly. */
   private def nCorrectSql: String = s"(${correctSql("za")} + ${correctSql("zb")} + ${correctSql("zc")})"
 
+  /** McNemar's paired test over two scored margin columns (za, zb)
+    * and the shared outcome y — the PAIRED model-comparison test
+    * next to [[delongOfScores]]' CI: DeLong bounds ONE model's AUC,
+    * McNemar decides whether two models' DECISIONS differ beyond
+    * chance on the same rows (Dietterich 1998's recommendation for
+    * comparing classifiers without refit resampling). Only the
+    * discordant pairs carry signal: n01 (A wrong, B right) vs n10
+    * (A right, B wrong), continuity-corrected
+    * χ² = (|n01−n10|−1)²/(n01+n10), significant at α = 0.05 against
+    * the LITERAL critical value 3.841 (evaluating the chi-square CDF
+    * cross-engine would put a libm ulp on the verdict). Counts are
+    * exact BIGINTs off ONE scan; the square rides DECIMAL(19,0)
+    * (the q77 wrap lesson); the statistic is one IEEE tree over
+    * exact operands; NULL (not 0) when no discordant pairs exist. */
   def mcnemarOfScores(zz: DataFrame): DataFrame =
     zz.agg(
         count(lit(1)).cast(LongType).as("n_pairs"),
@@ -1278,8 +1262,8 @@ object Analytics {
           CASE WHEN n01 + n10 > 0 THEN CAST(CAST(abs(n01 - n10) - 1 AS DECIMAL(19,0)) * (abs(n01 - n10) - 1) AS DOUBLE) / CAST(n01 + n10 AS DOUBLE) END AS mcnemar_stat,
           CAST(CASE WHEN n01 + n10 > 0 AND CAST(CAST(abs(n01 - n10) - 1 AS DECIMAL(19,0)) * (abs(n01 - n10) - 1) AS DOUBLE) / CAST(n01 + n10 AS DOUBLE) > 3.841 THEN 1 ELSE 0 END AS BIGINT) AS significant
         FROM cc"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      mcnemarOfScores(pairedScores(scope.persist(mlFeatures(s, d)), 2)).localCheckpoint(true)
+    (s, d) => {
+      mcnemarOfScores(pairedScores(graft.CacheScope.untracked.persist(mlFeatures(s, d)), 2))
     })
 
   // ------------------------------------------------- Cohen's kappa
@@ -1339,9 +1323,7 @@ object Analytics {
         SELECT n_pairs, n11, n10, n01, n00,
           ${kappaReadoutSql.mkString(",\n          ")}
         FROM cc"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      kappaOfScores(pairedScores(scope.persist(mlFeatures(s, d)), 2)).localCheckpoint(true)
-    })
+    (s, d) => kappaOfScores(pairedScores(graft.CacheScope.untracked.persist(mlFeatures(s, d)), 2)))
 
   // --------------------------------------------------- Cochran's Q
   /** Cochran's Q readout fragments over the exact per-classifier
@@ -1403,8 +1385,8 @@ object Analytics {
         SELECT n_rows, ga, gb, gc, sum_l, sum_l2,
           ${cochranReadoutSql.mkString(",\n          ")}
         FROM cc"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      cochranQOfScores(pairedScores(scope.persist(mlFeatures(s, d)), 3)).localCheckpoint(true)
+    (s, d) => {
+      cochranQOfScores(pairedScores(graft.CacheScope.untracked.persist(mlFeatures(s, d)), 3))
     })
 
   // --------------------------------------------- Spearman correlation
@@ -1539,8 +1521,8 @@ object Analytics {
         ${rankCteSql("zb", "v", "vg")},
         m AS ($spearmanMomentsSql)
         SELECT n, $spearmanRhoSql AS rho FROM m"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      spearmanOfScores(pairedScores(scope.persist(mlFeatures(s, d)), 2)).localCheckpoint(true)
+    (s, d) => {
+      spearmanOfScores(pairedScores(graft.CacheScope.untracked.persist(mlFeatures(s, d)), 2))
     })
 
   /** ml_spearman_shuffle (r13): [[spearmanOfScores]] over CONTINUOUS
@@ -1564,11 +1546,10 @@ object Analytics {
         ${rankCteSql("zb", "v", "vg")},
         m AS ($spearmanMomentsSql)
         SELECT n, $spearmanRhoSql AS rho FROM m"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       spearmanOfScores(Tables.fanout(Tables.lineitem(s, d)
         .selectExpr("(l_quantity * l_extendedprice - l_discount) AS za",
           "(l_extendedprice * (1 - l_discount) + l_quantity) AS zb")))
-        .localCheckpoint(true)
     })
 
   // ------------------------------------------ composed model compare
@@ -1619,8 +1600,8 @@ object Analytics {
           UNION ALL SELECT 'spearman_rho', rho FROM sps
           UNION ALL SELECT 'wilcoxon_z', z_stat FROM wzz
         ) ORDER BY metric"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      modelCompareOfScores(pairedScores(scope.persist(mlFeatures(s, d)), 3)).localCheckpoint(true)
+    (s, d) => {
+      modelCompareOfScores(pairedScores(graft.CacheScope.untracked.persist(mlFeatures(s, d)), 3))
     })
 
   /** The composed readout over a (za, zb, zc, y) frame — every metric
@@ -1780,8 +1761,8 @@ object Analytics {
         zz2 AS (SELECT n_nonzero, w_plus, $wilcoxonZSql AS z_stat FROM rd)
         SELECT n_nonzero, w_plus, z_stat, $wilcoxonVerdictSql AS significant
         FROM zz2"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      wilcoxonOfScores(pairedScores(scope.persist(mlFeatures(s, d)), 2)).localCheckpoint(true)
+    (s, d) => {
+      wilcoxonOfScores(pairedScores(graft.CacheScope.untracked.persist(mlFeatures(s, d)), 2))
     })
 
   // -------------------------------------------- Hosmer–Lemeshow test
@@ -1862,9 +1843,7 @@ object Analytics {
         SELECT n, pos, n_bins, n_bins_used, n_bins_used - 2 AS df, hl_stat,
           $hlVerdictSql AS significant
         FROM t"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      hosmerLemeshowOfScores(gateScores(s, d)).localCheckpoint(true)
-    })
+    (s, d) => hosmerLemeshowOfScores(gateScores(s, d)))
 
   // -------------------------------------------- isotonic calibration
   /** Exact 12-dp integer key of the rate sp/sn (both nonneg, sn > 0):
@@ -1947,9 +1926,7 @@ object Analytics {
           CAST(${rate12KeyDuck("c.pos", "c.n")} AS DOUBLE) / 1000000000000.0 AS raw_rate,
           CAST(fitted AS DOUBLE) / 1000000000000.0 AS iso_rate
         FROM c JOIN ft ON c.bin = ft.bin ORDER BY c.bin"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      isotonicOfScores(gateScores(s, d)).localCheckpoint(true)
-    })
+    (s, d) => isotonicOfScores(gateScores(s, d)))
 
   // ------------------------------------------------ Poisson bootstrap
   /** Poisson(1) CDF thresholds in exact ppm (1e6·P(X ≤ k), k = 0..6;
@@ -2090,10 +2067,7 @@ object Analytics {
             CAST(sum(CASE WHEN NOT (z > 0) AND y < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS tn
           FROM zz)
         SELECT tp, fp, fn, tn, $f1Expr AS f1, $mccExpr AS mcc FROM cm"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      confusionReadout(confusionOfScores(gateScores(s, d)))
-        .localCheckpoint(true)
-    })
+    (s, d) => confusionReadout(confusionOfScores(gateScores(s, d))))
 
   // ------------------------------------------- ml_conformal_interval
   /** ml_conformal_interval: SPLIT-CONFORMAL prediction interval for
@@ -2147,9 +2121,9 @@ object Analytics {
         ${graft.Portable.round6RatioDuck("t.covered", "t.n_test")} AS coverage,
         (${graft.Portable.round6RatioDuck("t.covered", "t.n_test")} >= 0.88) AS ok
       FROM w, q, t"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       conformalInterval(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity"),
-        col("l_discount"), col("l_extendedprice"))).localCheckpoint(true)
+        col("l_discount"), col("l_extendedprice")))
     })
 
   /** Split-conformal readout over a lineitem-shaped frame — see
@@ -2670,7 +2644,8 @@ object Analytics {
   /** The single-model gates' scored margins: the shared feature frame
     * (persisted — training and scoring both read it), trained once
     * ([[logregWeights6]]) and scored ([[scoreWith]]). */
-  private def gateScores(s: SparkSession, d: String)(implicit scope: graft.CacheScope): DataFrame = {
+  private def gateScores(s: SparkSession, d: String)(
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     val b = scope.persist(mlFeatures(s, d))
     scoreWith(b, logregWeights6(b))
   }
@@ -2850,9 +2825,7 @@ object Analytics {
              + (CAST(1 AS DOUBLE) - y) * ln(CAST(1 AS DOUBLE) - CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-(wa + wb * x1 + wc * x2))))), 12) AS DECIMAL(28,12))) AS DOUBLE) / nn.n, 6) AS logloss,
           round(CAST(sum(CASE WHEN ((wa + wb * x1 + wc * x2) > 0) = (y > 0.5) THEN 1 ELSE 0 END) AS DOUBLE) / nn.n, 6) AS accuracy
         FROM b, w$GdRounds, nn GROUP BY nn.n, wa, wb, wc"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      logregGd(scope.persist(mlFeatures(s, d))).localCheckpoint(true)
-    })
+    (s, d) => logregGd(graft.CacheScope.untracked.persist(mlFeatures(s, d))))
 
   // ----------------------------------------------------------- q60
   /** q60: PSI drift monitor — the ML-monitoring staple (population
@@ -3173,7 +3146,7 @@ object Analytics {
         FROM cust, th)
       SELECT r_score, f_score, m_score, count(*) AS n_customers
       FROM sc GROUP BY 1, 2, 3 ORDER BY r_score, f_score, m_score"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val o = Tables.orders(s, d).select(col("o_custkey"), col("o_orderdate"), col("o_totalprice"))
       val mx = o.agg(max(col("o_orderdate")).cast("date").as("gmax"))
       val cust = o.groupBy(col("o_custkey"))
@@ -3184,7 +3157,7 @@ object Analytics {
         .select(col("o_custkey"), datediff(col("gmax"), col("last")).cast(DoubleType).as("r"),
           col("f"), col("m"))
         .withColumn("grp", lit(0))
-        .transform(scope.persist)
+        .transform(graft.CacheScope.untracked.persist)
       // ONE selection run for all 12 thresholds: unpivot the three
       // metrics into (metric, value) rows and let the machinery's
       // per-group state carry them together (3 selection passes would
@@ -3211,7 +3184,6 @@ object Analytics {
         .groupBy(col("r_score"), col("f_score"), col("m_score"))
         .agg(count(lit(1)).as("n_customers"))
         .orderBy(col("r_score"), col("f_score"), col("m_score"))
-        .localCheckpoint(true)
     })
 
   // ----------------------------------------------- ml_threshold_sweep
@@ -3233,9 +3205,7 @@ object Analytics {
           CASE WHEN tp + fp > 0 THEN round(CAST(tp AS DOUBLE) / (tp + fp), 6) END AS prec,
           CASE WHEN tp + fn > 0 THEN round(CAST(tp AS DOUBLE) / (tp + fn), 6) END AS rec
         FROM sc ORDER BY t"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      sweepOfVg(vgOfScores(gateScores(s, d))).localCheckpoint(true)
-    })
+    (s, d) => sweepOfVg(vgOfScores(gateScores(s, d))))
 
   // ------------------------------------------- cost-optimal threshold
   /** Business error costs (false-positive, false-negative) — LITERALS
@@ -3282,9 +3252,7 @@ object Analytics {
         SELECT t, tp, fp, fn, cost,
           CAST(CASE WHEN t = best_t THEN 1 ELSE 0 END AS BIGINT) AS is_best
         FROM cg, bt ORDER BY t"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      costOptOfScores(gateScores(s, d)).localCheckpoint(true)
-    })
+    (s, d) => costOptOfScores(gateScores(s, d)))
 
   // ----------------------------------------------------------- q65
   /** q65: week-over-week change report — the KPI-dashboard staple
@@ -3423,13 +3391,13 @@ object Analytics {
       SELECT n AS n_customers, round(sx, 2) AS total_spend,
         round((2 * sw / sx - (n + 1)) / n, 6) AS gini
       FROM s"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val cust = Tables.orders(s, d)
         .groupBy(col("o_custkey"))
         .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("m"))
       // two-level global rank: range partition on the sort key, local
       // row_number, per-partition counts' exclusive scan broadcast
-      val ranked = scope.persist(cust
+      val ranked = graft.CacheScope.untracked.persist(cust
         .repartitionByRange(col("m"), col("o_custkey"))
         .withColumn("pid", spark_partition_id())
         .withColumn("lrk", row_number().over(
@@ -3444,7 +3412,6 @@ object Analytics {
           sum((col("rk") * col("m")).cast(DecimalType(38, 2))).cast(DoubleType).as("sw"))
         .selectExpr("n AS n_customers", "round(sx, 2) AS total_spend",
           "round((2 * sw / sx - (n + 1)) / n, 6) AS gini")
-        .localCheckpoint(true)
     })
 
   // --------------------------------------------------- ml_lift_deciles
@@ -3476,11 +3443,11 @@ object Analytics {
           round(c.cpos / tot.tp, 6) AS cum_gain
         FROM cum c, tot ORDER BY c.decile"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       // value-grain collapse before the readout (r15): the decile
       // edges' selection passes and the binning then run at ~550-row
       // grain off one corpus pass (see [[vgOfScores]])
-      liftOfVg(vgOfScores(gateScores(s, d))).localCheckpoint(true)
+      liftOfVg(vgOfScores(gateScores(s, d)))
     })
 
   // ----------------------------------------------------------- q68
@@ -3553,8 +3520,8 @@ object Analytics {
         round(percentile_cont(0.9) WITHIN GROUP (ORDER BY lead_days), 6) AS p90_days,
         CAST(max(lead_days) AS BIGINT) AS max_days
       FROM lt GROUP BY prio ORDER BY prio"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      val lt = scope.persist(Tables.orders(s, d)
+    (s, d) => {
+      val lt = graft.CacheScope.untracked.persist(Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderpriority"), col("o_orderdate"))
         .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_shipdate")),
           col("o_orderkey") === col("l_orderkey"))
@@ -3575,7 +3542,6 @@ object Analytics {
           round(col("p50"), 6).as("p50_days"), round(col("p90"), 6).as("p90_days"),
           col("mx").cast(LongType).as("max_days"))
         .orderBy(col("prio"))
-        .localCheckpoint(true)
     })
 
   // ----------------------------------------------------------- q70

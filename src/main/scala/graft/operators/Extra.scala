@@ -389,24 +389,20 @@ object Extra {
       FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
     (s, d) => {
       val li = Tables.lineitem(s, d)
-      graft.CacheScope.withScope { implicit scope =>
-        val qty = ExactPercentiles.percentiles(
-          li.select(col("l_returnflag").as("g"), col("l_quantity").as("x")),
-          "g", "x", Seq(0.5, 0.9),
-          valueGrain = true) // 50-level quantity grid (r14)
-        val price = ExactPercentiles.percentiles(
-          li.select(col("l_returnflag").as("g"), col("l_extendedprice").as("x")),
-          "g", "x", Seq(0.99))
-        // pivot the tiny (g, p, value) results into the q13 row shape;
-        // materialization happens inside the scope via the checkpoints
-        qty.groupBy(col("g"))
-          .agg(round(max(when(col("p") === 0.5, col("value"))), 4).as("median_qty"),
-            round(max(when(col("p") === 0.9, col("value"))), 4).as("p90_qty"))
-          .join(price.select(col("g"), round(col("value"), 4).as("p99_price")), Seq("g"))
-          .select(col("g").as("l_returnflag"), col("median_qty"), col("p90_qty"), col("p99_price"))
-          .orderBy(col("l_returnflag"))
-          .localCheckpoint(true)
-      }
+      val qty = ExactPercentiles.percentiles(
+        li.select(col("l_returnflag").as("g"), col("l_quantity").as("x")),
+        "g", "x", Seq(0.5, 0.9),
+        valueGrain = true) // 50-level quantity grid (r14)
+      val price = ExactPercentiles.percentiles(
+        li.select(col("l_returnflag").as("g"), col("l_extendedprice").as("x")),
+        "g", "x", Seq(0.99))
+      // pivot the tiny (g, p, value) results into the q13 row shape
+      qty.groupBy(col("g"))
+        .agg(round(max(when(col("p") === 0.5, col("value"))), 4).as("median_qty"),
+          round(max(when(col("p") === 0.9, col("value"))), 4).as("p90_qty"))
+        .join(price.select(col("g"), round(col("value"), 4).as("p99_price")), Seq("g"))
+        .select(col("g").as("l_returnflag"), col("median_qty"), col("p90_qty"), col("p99_price"))
+        .orderBy(col("l_returnflag"))
     })
 
   // --------------------------------------------------------------- q40
@@ -751,12 +747,7 @@ object Extra {
         FROM pts)
       SELECT CAST(date_trunc('day', pt) AS DATE) AS day, CAST(max(conc) AS BIGINT) AS peak
       FROM c GROUP BY 1 ORDER BY day"""),
-    (s, d) => {
-      graft.CacheScope.withScope { implicit scope =>
-        peakConcurrency(Tables.events(s, d).select(col("event_id"), col("ts")))
-          .localCheckpoint(true)
-      }
-    })
+    (s, d) => peakConcurrency(Tables.events(s, d).select(col("event_id"), col("ts"))))
 
   /** Distributed sweep line over (event_id, ts) rows — see [[q46]]
     * for semantics and the two-level-scan scale argument. Returns one
@@ -1072,29 +1063,26 @@ object Extra {
         round(CAST(sum(CAST(wv AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS mean_winsorized
       FROM w GROUP BY event_type ORDER BY event_type"""),
     (s, d) => {
-      graft.CacheScope.withScope { implicit scope =>
-        val ev = Tables.events(s, d).select(col("event_type"), col("value"))
-          .transform(scope.persist)
-        val th = graft.operators.ExactPercentiles.percentiles(
-            ev, "event_type", "value", Seq(0.05, 0.95))
-          .groupBy(col("g").as("event_type"))
-          .agg(min(when(col("p") === 0.05, col("value"))).as("lo"),
-            min(when(col("p") === 0.95, col("value"))).as("hi"))
-        ev.join(broadcast(th), Seq("event_type"))
-          .select(col("event_type"),
-            when(col("value") < col("lo"), col("lo"))
-              .when(col("value") > col("hi"), col("hi"))
-              .otherwise(col("value")).as("wv"),
-            when(col("value") < col("lo"), 1L).otherwise(0L).as("cl"),
-            when(col("value") > col("hi"), 1L).otherwise(0L).as("ch"))
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("cl")).as("n_clip_lo"), sum(col("ch")).as("n_clip_hi"),
-            round(sum(col("wv").cast(DecimalType(18, 6))).cast(DoubleType)
-              / count(lit(1)), 6).as("mean_winsorized"))
-          .orderBy(col("event_type"))
-          .localCheckpoint(true)
-      }
+      val ev = Tables.events(s, d).select(col("event_type"), col("value"))
+        .transform(graft.CacheScope.untracked.persist)
+      val th = graft.operators.ExactPercentiles.percentiles(
+          ev, "event_type", "value", Seq(0.05, 0.95))
+        .groupBy(col("g").as("event_type"))
+        .agg(min(when(col("p") === 0.05, col("value"))).as("lo"),
+          min(when(col("p") === 0.95, col("value"))).as("hi"))
+      ev.join(broadcast(th), Seq("event_type"))
+        .select(col("event_type"),
+          when(col("value") < col("lo"), col("lo"))
+            .when(col("value") > col("hi"), col("hi"))
+            .otherwise(col("value")).as("wv"),
+          when(col("value") < col("lo"), 1L).otherwise(0L).as("cl"),
+          when(col("value") > col("hi"), 1L).otherwise(0L).as("ch"))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("cl")).as("n_clip_lo"), sum(col("ch")).as("n_clip_hi"),
+          round(sum(col("wv").cast(DecimalType(18, 6))).cast(DoubleType)
+            / count(lit(1)), 6).as("mean_winsorized"))
+        .orderBy(col("event_type"))
     })
 
   // --------------------------------------------------------------- q53
@@ -1169,26 +1157,23 @@ object Extra {
       WHERE abs(d.value - d.med) > 3 * (1.4826 * m.mad)
       ORDER BY d.event_id"""),
     (s, d) => {
-      graft.CacheScope.withScope { implicit scope =>
-        val ev = Tables.events(s, d)
-          .select(col("event_id"), col("event_type"), col("value"))
-          .transform(scope.persist)
-        val med = graft.operators.ExactPercentiles.percentiles(
-            ev, "event_type", "value", Seq(0.5))
-          .select(col("g").as("event_type"), col("value").as("med"))
-        val dev = ev.join(broadcast(med), Seq("event_type"))
-          .withColumn("ad", abs(col("value") - col("med")))
-          .transform(scope.persist)
-        val mad = graft.operators.ExactPercentiles.percentiles(
-            dev, "event_type", "ad", Seq(0.5))
-          .select(col("g").as("event_type"), col("value").as("mad"))
-        dev.join(broadcast(mad), Seq("event_type"))
-          .filter(abs(col("value") - col("med")) > lit(3) * (lit(1.4826) * col("mad")))
-          .select(col("event_id"), col("event_type"), col("value"),
-            round((col("value") - col("med")) / (lit(1.4826) * col("mad")), 6).as("rz"))
-          .orderBy(col("event_id"))
-          .localCheckpoint(true)
-      }
+      val ev = Tables.events(s, d)
+        .select(col("event_id"), col("event_type"), col("value"))
+        .transform(graft.CacheScope.untracked.persist)
+      val med = graft.operators.ExactPercentiles.percentiles(
+          ev, "event_type", "value", Seq(0.5))
+        .select(col("g").as("event_type"), col("value").as("med"))
+      val dev = ev.join(broadcast(med), Seq("event_type"))
+        .withColumn("ad", abs(col("value") - col("med")))
+        .transform(graft.CacheScope.untracked.persist)
+      val mad = graft.operators.ExactPercentiles.percentiles(
+          dev, "event_type", "ad", Seq(0.5))
+        .select(col("g").as("event_type"), col("value").as("mad"))
+      dev.join(broadcast(mad), Seq("event_type"))
+        .filter(abs(col("value") - col("med")) > lit(3) * (lit(1.4826) * col("mad")))
+        .select(col("event_id"), col("event_type"), col("value"),
+          round((col("value") - col("med")) / (lit(1.4826) * col("mad")), 6).as("rz"))
+        .orderBy(col("event_id"))
     })
 
   val defs: Seq[QueryDef] = Seq(q21, q22, q23, q24, q25, q26, q27, q28, q29,

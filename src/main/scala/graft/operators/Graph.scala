@@ -166,9 +166,7 @@ object Graph {
       SELECT n_edges, n_wedges, n_triangles,
         round(3.0 * n_triangles / n_wedges, 6) AS clustering
       FROM ne, wed, tri"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      triangleStats(partEdges(s, d)).localCheckpoint(true)
-    })
+    (s, d) => triangleStats(partEdges(s, d)))
 
   /** The part co-purchase graph of [[triangles]] and [[clusteringCoeff]]:
     * distinct (u, v) part pairs with u < v sharing an order. */
@@ -322,9 +320,7 @@ object Graph {
           / (1000000.0 * CAST(count(*) AS DOUBLE)) AS avg_local_cc
       FROM per GROUP BY deg_bucket ORDER BY deg_bucket"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      localClustering(partEdges(s, d)).localCheckpoint(true)
-    })
+    (s, d) => localClustering(partEdges(s, d)))
 
   /** Default mega-order cap for [[nodeSimilarityTopK]]: orders with
     * more parts than this are excluded from pair generation (gate
@@ -393,11 +389,9 @@ object Graph {
       FROM pr JOIN deg da ON pr.u = da.p JOIN deg db ON pr.v = db.p
       ORDER BY jac DESC, u, v LIMIT 20"""),
     (s, d) => {
-      graft.CacheScope.withScope { implicit scope =>
-        val co = Tables.lineitem(s, d)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-        nodeSimilarityTopK(co).localCheckpoint(true)
-      }
+      val co = Tables.lineitem(s, d)
+        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
+      nodeSimilarityTopK(co)
     })
 
   /** Sparsification predicate for the connected-components gate: the
@@ -630,41 +624,6 @@ object Graph {
   def closenessSeedModulus(nCustomers: Long): Long =
     math.max(1L, nCustomers / ClosenessSeedTarget)
 
-  /** Harmonic closeness per seed over a bounded-radius BFS: the
-    * labeled multi-source relaxation (state = one (seed, node, dist)
-    * row per reached pair, key = (seed, node) — the same `min(d,
-    * d⋈e + 1)` rounds as [[bfs]] carrying the seed identity), then
-    * harmonic centrality Σ_{v≠s} 1/d(s,v) — the standard
-    * disconnected-safe closeness (Boldi–Vigna 2014).
-    *
-    * Determinism: distances are exact integers; the harmonic sum is
-    * computed from the per-distance COUNTS (≤ `rounds` values), so it
-    * is one fixed-order IEEE expression `c1 + c2/2 + … + c_r/r` over
-    * exact integers shared with the oracle — never a float sum whose
-    * order depends on row order.
-    *
-    * r9 engine: SEED-BITMASK multi-source BFS (the HyperBall/
-    * Boldi–Vigna frame, exact here because the sampled seed count is
-    * pinned ≈ [[ClosenessSeedTarget]] ≤ a few machine words). The r8
-    * labeled relaxation carried one (seed, node, dist) row per pair —
-    * |seeds|·|V| state re-shuffled every round (~68M expanded rows in
-    * the worst sf0.1 round); this engine carries one 63-bit word per
-    * (node, word) — |V|·⌈seeds/63⌉ rows — and each round is one
-    * edge-scale join + `bit_or` merge (~2M rows), a ~30× shuffle cut
-    * that GROWS with seed count. Per round only the NEWLY-set bits
-    * propagate (the delta-BFS argument per bit: a bit first set on a
-    * node at round r was offered to all neighbors at round r+1;
-    * re-sending it can only re-mint held bits), and `newbits = cand &
-    * ~mask` recovers first-reach rounds exactly — dist(seed, node) =
-    * the round its bit appears, identical to the labeled fixpoint, so
-    * the oracle (which unrolls the labeled form) and every fixture
-    * are untouched. All ops are exact integer bit-algebra
-    * (merge-order-free ⇒ partition-invariant); the final per-seed
-    * distance counts explode only the news rows (≤ |seeds|·|V| bits
-    * ONCE, keyed-aggregated). The seed list itself is collected to
-    * the driver — metadata-scale BY DESIGN (Eppstein–Wang: the seed
-    * COUNT is the pinned estimator knob), the centroid-collect
-    * discipline. */
   /** Bits per bitmask word; the sign bit stays clear. */
   private val BitW = 63
 
@@ -730,6 +689,41 @@ object Graph {
   private def seedIdsOf(seeds: DataFrame): Array[Long] =
     seeds.select(col("node")).distinct().collect().map(_.getLong(0)).sorted
 
+  /** Harmonic closeness per seed over a bounded-radius BFS: the
+    * labeled multi-source relaxation (state = one (seed, node, dist)
+    * row per reached pair, key = (seed, node) — the same `min(d,
+    * d⋈e + 1)` rounds as [[bfs]] carrying the seed identity), then
+    * harmonic centrality Σ_{v≠s} 1/d(s,v) — the standard
+    * disconnected-safe closeness (Boldi–Vigna 2014).
+    *
+    * Determinism: distances are exact integers; the harmonic sum is
+    * computed from the per-distance COUNTS (≤ `rounds` values), so it
+    * is one fixed-order IEEE expression `c1 + c2/2 + … + c_r/r` over
+    * exact integers shared with the oracle — never a float sum whose
+    * order depends on row order.
+    *
+    * r9 engine: SEED-BITMASK multi-source BFS (the HyperBall/
+    * Boldi–Vigna frame, exact here because the sampled seed count is
+    * pinned ≈ [[ClosenessSeedTarget]] ≤ a few machine words). The r8
+    * labeled relaxation carried one (seed, node, dist) row per pair —
+    * |seeds|·|V| state re-shuffled every round (~68M expanded rows in
+    * the worst sf0.1 round); this engine carries one 63-bit word per
+    * (node, word) — |V|·⌈seeds/63⌉ rows — and each round is one
+    * edge-scale join + `bit_or` merge (~2M rows), a ~30× shuffle cut
+    * that GROWS with seed count. Per round only the NEWLY-set bits
+    * propagate (the delta-BFS argument per bit: a bit first set on a
+    * node at round r was offered to all neighbors at round r+1;
+    * re-sending it can only re-mint held bits), and `newbits = cand &
+    * ~mask` recovers first-reach rounds exactly — dist(seed, node) =
+    * the round its bit appears, identical to the labeled fixpoint, so
+    * the oracle (which unrolls the labeled form) and every fixture
+    * are untouched. All ops are exact integer bit-algebra
+    * (merge-order-free ⇒ partition-invariant); the final per-seed
+    * distance counts explode only the news rows (≤ |seeds|·|V| bits
+    * ONCE, keyed-aggregated). The seed list itself is collected to
+    * the driver — metadata-scale BY DESIGN (Eppstein–Wang: the seed
+    * COUNT is the pinned estimator knob), the centroid-collect
+    * discipline. */
   def closeness(edges0: DataFrame, seeds: DataFrame, rounds: Int = BfsRounds): DataFrame = {
     val sp = edges0.sparkSession
     import sp.implicits._
@@ -739,20 +733,6 @@ object Graph {
     closenessFromNews(bitmaskBfsNews(edges0, seedIds, rounds), seedIds, rounds)
   }
 
-  /** Neighborhood function / effective-radius readout over the
-    * sampled seeds (the ANF of Palmer et al. KDD'02 and HyperANF of
-    * Boldi–Vigna WWW'11 — here EXACT over the pinned ≈64-seed sample
-    * rather than probabilistic over all nodes, the same
-    * Eppstein–Wang sampling contract as [[closeness]]):
-    * N(r) = #(seed, node) pairs with dist ≤ r, the per-radius
-    * coverage fraction, and the 90%-coverage flag whose first TRUE
-    * radius IS the sampled effective diameter — the "how many hops
-    * until everything is reachable" readout capacity planning and
-    * partition-strategy choices read. One `bit_count` popcount per
-    * news row (never a per-bit explode — counts don't need seed
-    * identity), radius-scale algebra after; the 90% test is the exact
-    * integer cross-multiplication `n·10 ≥ tot·9` (no float
-    * threshold). Shares [[bitmaskBfsNews]] with [[closeness]]. */
   /** Radius-cumulative pair counts off a [[bitmaskBfsNews]] frame —
     * see [[closenessFromNews]]. */
   private def anfFromNews(news: DataFrame, nSeeds: Long): DataFrame = {
@@ -773,6 +753,20 @@ object Graph {
       .orderBy(col("radius"))
   }
 
+  /** Neighborhood function / effective-radius readout over the
+    * sampled seeds (the ANF of Palmer et al. KDD'02 and HyperANF of
+    * Boldi–Vigna WWW'11 — here EXACT over the pinned ≈64-seed sample
+    * rather than probabilistic over all nodes, the same
+    * Eppstein–Wang sampling contract as [[closeness]]):
+    * N(r) = #(seed, node) pairs with dist ≤ r, the per-radius
+    * coverage fraction, and the 90%-coverage flag whose first TRUE
+    * radius IS the sampled effective diameter — the "how many hops
+    * until everything is reachable" readout capacity planning and
+    * partition-strategy choices read. One `bit_count` popcount per
+    * news row (never a per-bit explode — counts don't need seed
+    * identity), radius-scale algebra after; the 90% test is the exact
+    * integer cross-multiplication `n·10 ≥ tot·9` (no float
+    * threshold). Shares [[bitmaskBfsNews]] with [[closeness]]. */
   def anf(edges0: DataFrame, seeds: DataFrame, rounds: Int = BfsRounds): DataFrame = {
     val sp = edges0.sparkSession
     import sp.implicits._
@@ -989,7 +983,7 @@ object Graph {
         WHERE rk <= 10 ORDER BY side, rk""")
       sb.toString
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val (h, a) = hits(purchases(s, d))
       val top = (df: DataFrame, side: String) => df
         .orderBy(col("score").desc, col("node")).limit(10)
@@ -998,7 +992,6 @@ object Graph {
         .selectExpr(s"'$side' AS side", "rk", "node", "score")
       top(a, "auth").unionAll(top(h, "hub"))
         .orderBy(col("side"), col("rk"))
-        .localCheckpoint(true)
     })
 
   // ------------------------------------------- label propagation
@@ -1280,17 +1273,17 @@ object Graph {
         FROM nn JOIN deg da ON nn.u = da.nd JOIN deg db ON nn.v = db.nd
         ORDER BY nn.aa DESC, nn.u, nn.v LIMIT 20)
       SELECT u, v, cn, du, dv, jac, CAST(aa AS DOUBLE) AS aa FROM res"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val co0 = Tables.lineitem(s, d).filter(LpPredicate)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      val coP = scope.persist(co0)
+      val coP = graft.CacheScope.untracked.persist(co0)
       val kept = coP.join(
         coP.groupBy(col("o")).agg(count(lit(1)).as("osz"))
           .filter(col("osz") <= MaxOrderSize).select(col("o")), Seq("o"))
       val g = kept.as("a").join(kept.as("b"),
           col("a.o") === col("b.o") && col("a.p") < col("b.p"))
         .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
-      linkPredictionTopK(g).localCheckpoint(true)
+      linkPredictionTopK(g)
     })
 
   val defs: Seq[QueryDef] = Seq(pagerankTop, triangles, nodeSimilarity,

@@ -291,10 +291,10 @@ object Insights {
         percentile_cont(0.9) WITHIN GROUP (ORDER BY gapd) AS p90_days,
         max(gap) AS max_days
       FROM gg GROUP BY prio ORDER BY prio"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
-      val gg = scope.persist(Tables.orders(s, d)
+      val gg = graft.CacheScope.untracked.persist(Tables.orders(s, d)
         .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
           col("o_orderpriority").as("prio"))
         .withColumn("prev", lag(col("o_orderdate"), 1).over(w))
@@ -316,7 +316,6 @@ object Insights {
           s"${Portable.round6RatioSpark("sg", "n_gaps")} AS mean_days",
           "p50 AS p50_days", "p90 AS p90_days", "max_days")
         .orderBy(col("prio"))
-        .localCheckpoint(true)
     })
 
   // ----------------------------------------------------------- q76
@@ -411,14 +410,12 @@ object Insights {
         CAST(CAST(sum(rc) AS BIGINT) AS DOUBLE) / 100.0 AS revenue,
         CAST(CAST(sum(rc) AS BIGINT) AS DOUBLE) / CAST(tc AS DOUBLE) AS share
       FROM cl GROUP BY cls, tc ORDER BY cls"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       abcClassification(Tables.lineitem(s, d)
           .select(col("l_partkey").as("pk"), col("l_extendedprice").as("price")))
-        .localCheckpoint(true)
     })
 
-  /** ABC classes over (pk = item, price) rows — see [[q77]]. Exposed
-    * un-checkpointed so plan guards can inspect the two-level scan. */
+  /** ABC classes over (pk = item, price) rows — see [[q77]]. */
   def abcClassification(rows: DataFrame)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     val pr = rows

@@ -587,15 +587,15 @@ object Insights2 {
         $skewRatioExpr AS skew_ratio,
         $saltExpr AS suggested_salt
       FROM rep ORDER BY key_col"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val ck = Tables.orders(s, d).select(col("o_custkey"))
         .groupBy(col("o_custkey")).agg(count(lit(1)).cast(LongType).as("f"))
         .select(lit("orders.o_custkey").as("kc"), col("f"))
       val sk = Tables.lineitem(s, d).select(col("l_suppkey"))
         .groupBy(col("l_suppkey")).agg(count(lit(1)).cast(LongType).as("f"))
         .select(lit("lineitem.l_suppkey").as("kc"), col("f"))
-      val freq = scope.persist(ck.unionAll(sk))
-      joinSkewReport(freq).localCheckpoint(true)
+      val freq = graft.CacheScope.untracked.persist(ck.unionAll(sk))
+      joinSkewReport(freq)
     })
 
   /** Skew report over a (kc, f) key-frequency frame — see [[q88]]. */
@@ -1362,7 +1362,7 @@ object Insights2 {
     * the group, and the decimal-fold mean surfaced as one unrounded
     * division of exact operands. */
   def percentileBands(df: DataFrame, group: String, value: String)(
-      implicit scope: graft.CacheScope): DataFrame = {
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     val ev = df.select(col(group).as("g"), col(value).cast("double").as("v"))
       .transform(scope.persist)
     val th = ExactPercentiles.percentiles(ev, "g", "v", Seq(0.25, 0.5, 0.75))
@@ -1406,10 +1406,7 @@ object Insights2 {
         ${Portable.round6RatioDuck("n", "n_group")} AS share,
         CAST(sv AS DOUBLE) / n AS mean_value
       FROM bg JOIN tot ON bg.g = tot.g ORDER BY bg.g, band"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      percentileBands(Tables.events(s, d), "event_type", "value")
-        .localCheckpoint(true)
-    })
+    (s, d) => percentileBands(Tables.events(s, d), "event_type", "value"))
 
   // ------------------------------------------ q97 rolling actives
   /** Rolling W-day distinct active users per observed day — the
@@ -1527,10 +1524,7 @@ object Insights2 {
       SELECT d.day, CAST(count(DISTINCT u.u) AS BIGINT) AS n_active_7d
       FROM dd d JOIN ud u ON u.day BETWEEN d.day - 6 AND d.day
       GROUP BY d.day ORDER BY d.day"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      activeUsersRolling(Tables.events(s, d), "ts", "user_id")
-        .localCheckpoint(true)
-    })
+    (s, d) => activeUsersRolling(Tables.events(s, d), "ts", "user_id"))
 
   // ------------------------------------------ q99 Mann–Kendall trend
   /** Shared z/trend fragments over (s_stat, var18) — the SAME strings
@@ -1720,7 +1714,7 @@ object Insights2 {
     * one (type, day) count aggregate runs at calendar grain; the
     * banded self-join is bounded by days × 7. */
   private def acfComponents(ev: DataFrame, maxLag: Int)(
-      implicit scope: graft.CacheScope): DataFrame = {
+      implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     val dd = dailyCounts(ev)
     val fl = scope.persist(calendarOf(dd).join(dd, Seq("event_type", "d"), "left")
       .select(col("event_type"),
@@ -1783,13 +1777,12 @@ object Insights2 {
         CASE WHEN $den <> 0 THEN CAST($num AS DOUBLE) / CAST($den AS DOUBLE) END AS acf
       FROM cmp ORDER BY event_type, lag"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val (num, den) = acfFrags(acfWideSpark)
       acfComponents(Tables.events(s, d).select(col("event_type"), col("ts")), 7)
         .selectExpr("event_type", "lag", "n_days", "n_pairs",
           s"CASE WHEN $den <> 0 THEN CAST($num AS DOUBLE) / CAST($den AS DOUBLE) END AS acf")
         .orderBy(col("event_type"), col("lag"))
-        .localCheckpoint(true)
     })
 
   // ----------------------------------------------- q102 Ljung–Box
@@ -1829,7 +1822,7 @@ object Insights2 {
           WHEN ${ljungBoxSql(7)} <= 14.067 THEN 1 ELSE 0 END AS BIGINT) AS white_noise
       FROM pv ORDER BY event_type"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val (num, den) = acfFrags(acfWideSpark)
       val af = acfComponents(Tables.events(s, d).select(col("event_type"), col("ts")), 7)
         .selectExpr("event_type", "lag", "n_days",
@@ -1843,7 +1836,6 @@ object Insights2 {
           s"""CAST(CASE WHEN ${ljungBoxSql(7)} IS NULL THEN NULL
             WHEN ${ljungBoxSql(7)} <= 14.067 THEN 1 ELSE 0 END AS BIGINT) AS white_noise""")
         .orderBy(col("event_type"))
-        .localCheckpoint(true)
     })
 
   // -------------------------------------------- q103 weekday ANOVA

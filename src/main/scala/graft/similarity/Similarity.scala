@@ -208,11 +208,11 @@ object Similarity {
         ${graft.Portable.round6RatioDuck("n_hits", "5 * n_probes")} AS recall
       FROM ($union) ORDER BY dims"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       graft.functions.Natives.ensure(s)
       val emb = Tables.embeddings(s, d)
       val probes = emb.filter(col("vec_id") < 10).select(col("vec_id"))
-      val full = scope.persist(
+      val full = graft.CacheScope.untracked.persist(
         AnnApi.bruteTopK(emb, "vec_id", "embedding", probes)
           .select(col("id_p"), col("id_c")))
       val rows = MrlWidths.map { w =>
@@ -238,7 +238,6 @@ object Similarity {
         .selectExpr("dims", "n_probes", "n_hits",
           s"${graft.Portable.round6RatioSpark("n_hits", "5 * n_probes")} AS recall")
         .orderBy(col("dims"))
-        .localCheckpoint(true)
     })
 
   // ------------------------------------------------------------- lsh
@@ -365,10 +364,9 @@ object Similarity {
         FROM pb JOIN bk cb ON pb.pbk = cb.bk AND pb.vec_id <> cb.vec_id)
       $candTop5Sql"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       AnnApi.multiProbeTopK(Tables.embeddings(s, d), "vec_id", "embedding",
         Tables.embeddings(s, d).filter(col("vec_id") < 10).select(col("vec_id")))
-        .localCheckpoint(true)
     })
 
   // ----------------------------------------------------- recall audit
@@ -879,12 +877,9 @@ object Similarity {
       SELECT id_p, step, id_c, round(cos, 6) AS cos, round(mmr, 6) AS mmr
       FROM cum$MmrK ORDER BY id_p, step"""),
     (s, d) => {
-      graft.CacheScope.withScope { implicit scope =>
-        AnnApi.mmrTopK(Tables.embeddings(s, d), "vec_id", "embedding",
-            Tables.embeddings(s, d).filter(col("vec_id") < 3).select(col("vec_id")),
-            poolSize = MmrPool, k = MmrK, lambda = 0.5)
-          .localCheckpoint(true)
-      }
+      AnnApi.mmrTopK(Tables.embeddings(s, d), "vec_id", "embedding",
+          Tables.embeddings(s, d).filter(col("vec_id") < 3).select(col("vec_id")),
+          poolSize = MmrPool, k = MmrK, lambda = 0.5)
     })
 
   // ------------------------------------------------------ pca project
@@ -1055,10 +1050,9 @@ object Similarity {
         (r.src IS NOT NULL) AS mutual
       FROM topk k LEFT JOIN topk r ON r.src = k.dst AND r.dst = k.src
       ORDER BY k.src, k.rk"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       AnnApi.knnGraph(Tables.embeddings(s, d), "vec_id", "embedding", KnnGraphK,
           maxBucketSize = KnnGraphMaxBucket)
-        .localCheckpoint(true)
     })
 
   // ------------------------------------------------------ silhouette
@@ -1091,10 +1085,7 @@ object Similarity {
       SELECT label, count(*) AS n,
         round(CAST(sum(CAST(round(s, 12) AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS mean_sil
       FROM sil GROUP BY label ORDER BY label"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
-      AnnApi.silhouette(Tables.embeddings(s, d), "vec_id", "embedding", "label")
-        .localCheckpoint(true)
-    })
+    (s, d) => AnnApi.silhouette(Tables.embeddings(s, d), "vec_id", "embedding", "label"))
 
   // -------------------------------------------------------- outliers
   /** vec_outliers: embedding-corpus outlier audit — per-label counts
@@ -1127,13 +1118,13 @@ object Similarity {
       SELECT label, count(*) AS n,
         CAST(sum(CASE WHEN d > thr THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
       FROM dd, th GROUP BY label ORDER BY label"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       graft.functions.Natives.ensure(s)
       val n = AnnApi.normalized(Tables.embeddings(s, d), "vec_id", "embedding", Seq("label"))
       val cents = n.agg(call_function("graft_vecsum_dec", col("v")).as("sv"))
         .select(expr("zip_with(sv.sum, sv.cnt, (x, c) -> CAST(x AS DOUBLE) / c)").as("cm"))
         .select(col("cm"), expr("graft_dot(cm, cm)").as("c2"))
-      val dd = scope.persist(n.crossJoin(broadcast(cents))
+      val dd = graft.CacheScope.untracked.persist(n.crossJoin(broadcast(cents))
         .select(col("vec_id"), col("label"),
           expr("""sqrt(greatest(graft_dot(v, v) - 2 * graft_dot(v, cm) + c2,
                  CAST(0 AS DOUBLE)))""").as("d")))
@@ -1146,7 +1137,6 @@ object Similarity {
         .agg(count(lit(1)).as("n"),
           sum(when(col("d") > col("thr"), 1L).otherwise(0L)).as("n_outliers"))
         .orderBy(col("label"))
-        .localCheckpoint(true)
     })
 
   // ------------------------------------------------- hybrid RRF
@@ -1211,7 +1201,7 @@ object Similarity {
         SELECT id_p, doc_id, rrf, lex_rk, vec_rk,
           row_number() OVER (PARTITION BY id_p ORDER BY rrf DESC, doc_id) AS rk FROM f) z
       WHERE rk <= $HybridTopK ORDER BY id_p, rk"""),
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val docs = Tables.documents(s, d)
       val lex = AnnApi.bm25TopK(docs, "doc_id", "text",
           docs.filter(col("doc_id") < 10).select(col("doc_id")), HybridDepth)
@@ -1220,7 +1210,7 @@ object Similarity {
       val vec = AnnApi.bruteTopK(Tables.embeddings(s, d), "vec_id", "embedding",
           probes, HybridDepth)
         .select(col("id_p"), col("id_c").as("doc_id"), col("rk"))
-      AnnApi.rrfFuse(lex, vec, RrfK, HybridTopK).localCheckpoint(true)
+      AnnApi.rrfFuse(lex, vec, RrfK, HybridTopK)
     })
 
   // ---------------------------------------------------- nDCG audit
@@ -1251,12 +1241,12 @@ object Similarity {
         CAST(sum(term) AS DOUBLE) / CAST($idcg AS DOUBLE) AS ndcg
       FROM tm GROUP BY id_p ORDER BY id_p"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val emb = Tables.embeddings(s, d)
       val probes = emb.filter(col("vec_id") < 10).select(col("vec_id"))
       val brute = AnnApi.bruteTopK(emb, "vec_id", "embedding", probes, 10)
       val l = AnnApi.lshTopK(emb, "vec_id", "embedding", probes, 10)
-      AnnApi.ndcgReadout(l, brute, 10).localCheckpoint(true)
+      AnnApi.ndcgReadout(l, brute, 10)
     })
 
   /** pipeline_retrieval_eval: the composed index-quality report —
@@ -1317,10 +1307,10 @@ object Similarity {
       UNION ALL SELECT 'recall5', id_p, n_hits, value FROM rec
       ORDER BY readout, id_p"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val emb = Tables.embeddings(s, d)
       val probes = emb.filter(col("vec_id") < 10).select(col("vec_id"))
-      AnnApi.retrievalEval(emb, "vec_id", "embedding", probes).localCheckpoint(true)
+      AnnApi.retrievalEval(emb, "vec_id", "embedding", probes)
     })
 
   // --------------------------------------------------- BM25 retrieval
@@ -1370,9 +1360,9 @@ object Similarity {
           ndcg FROM nd) u
       ORDER BY readout, id_p, k, ref"""
     },
-    (s, d) => graft.CacheScope.withScope { implicit scope =>
+    (s, d) => {
       val docs = Tables.documents(s, d)
-      val lex = scope.persist(AnnApi.bm25TopK(docs, "doc_id", "text",
+      val lex = graft.CacheScope.untracked.persist(AnnApi.bm25TopK(docs, "doc_id", "text",
         docs.filter(col("doc_id") < 10).select(col("doc_id")), 10))
       val emb = Tables.embeddings(s, d)
       val brute = AnnApi.bruteTopK(emb, "vec_id", "embedding",
@@ -1384,7 +1374,6 @@ object Similarity {
       val cmp = nd.select(lit("ndcg10_vs_cosine").as("readout"), col("id_p"),
         lit(0L).as("k"), col("n_hits").as("ref"), col("ndcg").as("value"))
       top.unionAll(cmp).orderBy(col("readout"), col("id_p"), col("k"), col("ref"))
-        .localCheckpoint(true)
     })
 
   val defs: Seq[QueryDef] = Seq(bruteTopK, lsh, ivf, vecKmeans, ivfKmeans, annPq, annIvfPq, annIvfPqResidual, annSq8, vecStats, vecCovariance, annMmr, vecPcaProject, annRange, vecRpProject, annKnnGraph, vecSilhouette, vecOutliers, hardNegatives, recallAudit, mips, dimAudit, hybridRrf, ndcgAudit, retrievalEval, filteredSearch, bm25TopKQ, multiprobeLsh, matryoshkaEval)

@@ -17,8 +17,9 @@ class EngineSpec extends AnyFunSuite {
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, d)
       assert(df.columns.nonEmpty, name)
-      // force a small execution
-      df.limit(1).collect()
+      // builders are lazy: run the full plan, then free its blocks
+      Harness.runNoop(df)
+      Harness.dropAllBlocks(spark)
     }
   }
 

@@ -16,10 +16,45 @@ class HarnessSpec extends AnyFunSuite {
   }
 
   test("dropAllBlocks after runNoop leaves no persistent RDD behind a localCheckpointing query") {
-    Harness.runNoop(SparkEntry.queries("graph_triangles")(spark, TestSpark.sfDir))
-    assert(spark.sparkContext.getPersistentRDDs.nonEmpty, "graph_triangles checkpoints while it builds")
+    Harness.runNoop(SparkEntry.queries("graph_label_prop")(spark, TestSpark.sfDir))
+    assert(spark.sparkContext.getPersistentRDDs.nonEmpty, "graph_label_prop checkpoints every round")
     Harness.dropAllBlocks(spark)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("query builders return lazy frames: no terminal localCheckpoint, the real plan is visible") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val checkpointed = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val sentinel = s"harness_sentinel_${System.nanoTime()}"
+    @volatile var drained = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") checkpointed.add(qe)
+        else if (qe.analyzed.schema.fieldNames.sameElements(Seq(sentinel))) drained = true
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      for (name <- Seq("graph_triangles", "pipeline_ml_scorecard")) {
+        checkpointed.clear(); drained = false
+        val df = SparkEntry.queries(name)(spark, TestSpark.sfDir)
+        // the listener bus delivers in order: once the sentinel action
+        // is seen, every checkpoint the build ran has been seen too
+        spark.range(1).toDF(sentinel).collect()
+        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+        while (!drained && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(drained, "listener bus did not drain within 10s")
+        // loop checkpoints stay; a terminal one checkpoints the result itself
+        val terminal = checkpointed.toArray(Array.empty[QueryExecution])
+          .count(_.analyzed.schema == df.schema)
+        assert(terminal == 0, s"$name checkpointed its result while building")
+        if (name == "graph_triangles")
+          assert(df.queryExecution.executedPlan.toString.contains("graft_sorted_inter_size"),
+            "the static plan must show the merge-walk intersect, not a Scan ExistingRDD")
+        Harness.dropAllBlocks(spark)
+      }
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("Bench.record keeps only the completed sweeps of a budget-truncated sample map") {

@@ -8,8 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * physical plans so a regression fails CI, not a 100 TB run. */
 class PlanGuardSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private def plan(name: String): String =
+  /** Static executed plan of a query. Blocks left by earlier tests are
+    * dropped first, so CacheManager cannot substitute one of their
+    * persisted frames into the plan under test. */
+  private def plan(name: String): String = {
+    Harness.dropAllBlocks(spark)
     SparkEntry.queries(name)(spark, TestSpark.sfDir).queryExecution.executedPlan.toString
+  }
 
   test("q2 pushes filter and projection into the parquet scan") {
     val p = plan("q2_filter_pushdown")
@@ -260,15 +265,10 @@ class PlanGuardSpec extends AnyFunSuite {
   }
 
   test("triangle count intersects broadcast adjacency lists — wedges never materialize") {
-    // the gate query localCheckpoints its one-row result (scan of an
-    // ExistingRDD) — run triangleStats itself and read its final plan
+    // run the gate query and read its final adaptive plan
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    import org.apache.spark.sql.functions.col
-    val co = Tables.lineitem(spark, TestSpark.sfDir)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    val e = co.as("a").join(co.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-      .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
-    val df = operators.Graph.triangleStats(e)
+    Harness.dropAllBlocks(spark)
+    val df = SparkEntry.queries("graph_triangles")(spark, TestSpark.sfDir)
     df.collect()
     val fp = df.queryExecution.executedPlan
     assert(fp.toString.contains("graft_sorted_inter_size"),
@@ -409,8 +409,8 @@ class PlanGuardSpec extends AnyFunSuite {
   }
 
   test("q57 skyline broadcasts the partition offsets, never sorts the orders table globally") {
-    // the QueryDef checkpoints its result (two-consumer persist), so
-    // guard the API's plan directly
+    // the QueryDef's final orderBy adds a range exchange of its own,
+    // so guard the API's plan directly
     import org.apache.spark.sql.functions.col
     val o = Tables.orders(spark, TestSpark.sfDir)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
@@ -450,10 +450,7 @@ class PlanGuardSpec extends AnyFunSuite {
   }
 
   test("vec_silhouette scores map-side against broadcast centroids") {
-    // guard the API plan: the QueryDef checkpoints its tiny result
-    val p = similarity.AnnApi.silhouette(
-        Tables.embeddings(spark, TestSpark.sfDir), "vec_id", "embedding", "label")
-      .queryExecution.executedPlan.toString
+    val p = plan("vec_silhouette")
     assert(p.contains("BroadcastExchange") || p.contains("BroadcastNestedLoopJoin"),
       s"centroid row must broadcast:\n$p")
     assert(!p.contains("SortMergeJoin"), s"silhouette must not sort-merge the corpus:\n$p")
@@ -488,13 +485,8 @@ class PlanGuardSpec extends AnyFunSuite {
 
   test("q77 abc classification never sorts the catalog globally") {
     // the two-level scan replaces the global cumulative sort: range
-    // partition + pid-local windows + broadcast offsets; inspect the
-    // UN-checkpointed API plan (the QueryDef checkpoints 3 rows)
-    val p = operators.Insights.abcClassification(
-        Tables.lineitem(spark, TestSpark.sfDir)
-          .select(org.apache.spark.sql.functions.col("l_partkey").as("pk"),
-            org.apache.spark.sql.functions.col("l_extendedprice").as("price")))
-      .queryExecution.executedPlan.toString
+    // partition + pid-local windows + broadcast offsets
+    val p = plan("q77_abc_classification")
     assert(!p.contains("CartesianProduct"))
     assert(p.contains("rangepartitioning"), s"expected the range-partitioned first level:\n$p")
   }
@@ -614,8 +606,8 @@ class PlanGuardSpec extends AnyFunSuite {
     // doc_id (the per-doc aggregate) — a plan that re-splits the text
     // for the join side would scan the corpus twice
     val p = plan("text_boilerplate_fraction")
-    assert(p.contains("InMemoryTableScan") || p.contains("Scan parquet"),
-      s"expected the persisted sentence frame:\n$p")
+    assert("""InMemoryTableScan \[doc_id#\d+L?, h#\d+L?\]""".r.findFirstIn(p).isDefined,
+      s"expected the persisted (doc_id, h) sentence-hash frame to be read from cache:\n$p")
   }
 
   test("trend panel collapses the corpus to day grain before any window") {

@@ -7,7 +7,9 @@ from change to change:
   code_lines        non-blank, non-comment lines (a line whose first
                     non-space characters are //, /* or * is a comment)
   localCheckpoint   localCheckpoint(true) call sites
-  scope.persist     scope.persist call sites
+  scope.persist     CacheScope persist call sites (scope.persist and
+                    CacheScope.untracked.persist)
+  withScope         withScope occurrences on code lines
   dup_block_lines   lines that sit in a second or later copy of a
                     block of 4 consecutive code lines (trimmed, blank
                     and comment lines skipped) totalling >= 160
@@ -65,10 +67,12 @@ def main():
             dup.update((p, j) for j in range(i, i + BLOCK))
 
     checkpoints = len(re.findall(r"localCheckpoint\(true\)", text))
-    persists = len(re.findall(r"\bscope\.persist\b", text))
+    persists = len(re.findall(r"\b(?:scope|untracked)\.persist\b", text))
+    scopes = len(re.findall(r"\bwithScope\b", text))
     print(f"code_lines       {sum(map(len, lines.values()))}")
     print(f"localCheckpoint  {checkpoints}")
     print(f"scope.persist    {persists}")
+    print(f"withScope        {scopes}")
     print(f"dup_block_lines  {len(dup)}")
 
     if args.dups:
