@@ -1,7 +1,8 @@
 package graft
 
-/** Benchmark entry point: runs the headline queries on
-  * SPARK_GRAFT_SF_DIR and prints one JSON line. Each query is forced
+/** Benchmark entry point: runs the bench set
+  * ([[SparkEntry.benchNames]], every query not marked `bench = false`)
+  * on SPARK_GRAFT_SF_DIR and prints one JSON line. Each query is forced
   * through the `noop` sink so the full plan executes (a bare count()
   * would let Catalyst prune every computed column away).
   *
@@ -23,103 +24,6 @@ package graft
   * suspect.
   */
 object Bench {
-  /** Headline set: the scale-relevant pipelines. The pair scans run
-    * their banded/blocked plans (simhash three-block combos, n-gram
-    * size buckets, cosine LSH buckets), so regressions in the
-    * sub-quadratic paths show up here; only the all-pairs reference
-    * scans (dedup_embed_cosine, banded=false simhash) are excluded. */
-  private[graft] val headline = Seq(
-    "q1_pricing_summary", "q3_top_orders", "q7_window_rank",
-    "q12_join_multi", "q13_percentiles", "q16_events_window",
-    "q17_sessionize", "q19_asof_join",
-    "dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
-    "dedup_simhash_pairs", "dedup_ngram_jaccard", "dedup_substring",
-    "dedup_embed_cosine_lsh", "dedup_clusters", "pipeline_near_dedup",
-    "pipeline_ingest_full",
-    "text_quality", "text_fingerprint", "text_top_tokens",
-    "corpus_decontaminate",
-    "ann_lsh", "ann_ivf", "ann_ivf_kmeans", "mm_features",
-    // round-5 operators
-    "text_dup_ngram_fraction", "text_tfidf_topk", "corpus_decontaminate_bloom",
-    "dedup_incremental", "q40_funnel", "q41_salted_join", "ann_pq",
-    "ann_ivfpq_residual", "graph_pagerank", "dedup_semantic",
-    "text_rarity_score", "ann_sq8", "q42_scd2_merge", "graph_triangles",
-    "corpus_temperature_sample", "q43_stats_suite", "q44_window_frames",
-    "text_diversity", "corpus_pack_sequences", "corpus_budget_select",
-    "vec_covariance", "q45_retention", "graph_node_similarity",
-    // round-6 operators
-    "dedup_keep_best", "ann_mmr", "corpus_split_leakage",
-    "corpus_quality_gate", "text_readability", "vec_pca_project",
-    "corpus_bpe_merges", "corpus_epoch_mix", "q46_peak_concurrency",
-    "q47_anomaly_zscore", "q48_asof_tolerance", "q49_time_weighted_avg",
-    "dedup_containment",
-    // round-6 continuation
-    "graph_connected_components", "corpus_dsir", "q50_session_overlap",
-    "ann_range_search", "mm_phash_dedup", "q51_streaks",
-    "corpus_bpe_encode", "q52_winsorize",
-    // round-6 third session
-    "corpus_ngram_lm", "pipeline_perplexity_filter", "corpus_pmi_bigrams",
-    "corpus_sample_weighted", "corpus_naive_bayes", "graph_kcore",
-    "q53_ewma", "q54_anomaly_mad",
-    // round-6 fourth session
-    "q55_fuzzy_link", "q56_transition_matrix", "q57_skyline",
-    "ml_linear_probe", "graph_bfs", "graph_label_prop",
-    "vec_rp_project", "ann_knn_graph",
-    "text_entropy", "corpus_vocab_growth", "q58_attribution",
-    "vec_silhouette", "q59_ab_test", "graph_degree_stats",
-    "mm_audio_fingerprint", "ml_logreg_gd", "q60_psi_drift",
-    "q61_top_paths", "ml_kfold_cv", "graph_modularity", "q62_histogram2d",
-    "q63_cumulative_reach", "q64_rfm", "ml_threshold_sweep",
-    "corpus_version_diff", "corpus_topic_clusters", "q65_wow_change",
-    "graph_assortativity", "vec_outliers", "q66_seasonality", "q67_gini",
-    "approx_heavy_hitters", "approx_hll_union", "ml_lift_deciles",
-    "q68_zipf_fit", "q69_lead_time", "q70_abandoned_carts",
-    // round-7 operators
-    "q71_basket_lift", "q72_stickiness", "q73_bm25", "q74_cohort_matrix",
-    "ml_ridge_path", "graph_closeness", "text_keyphrases",
-    "vec_hard_negatives", "q75_purchase_intervals",
-    "q76_grouped_regression", "q77_abc_classification", "src_text_roundtrip",
-    "ann_recall_audit", "q78_new_vs_returning", "q79_trend_decompose",
-    "ml_calibration", "text_inverted_index", "pipeline_ml_readouts",
-    "q80_cusum_changepoint", "q81_hhi_concentration", "q82_price_elasticity",
-    "q83_cohort_ltv", "q84_survival_retention", "ann_mips", "ann_dim_audit",
-    "pipeline_data_card", "graph_hits", "ml_pr_auc", "q85_benford_audit",
-    "dedup_minhash_fidelity", "q86_chi2_independence", "corpus_tokenizer_fertility",
-    "dedup_threshold_sweep", "q87_seasonal_naive_backtest",
-    // round-8 snapshot pair (benched since r9 — the r8 verdict's
-    // doc-parity item) and the round-9 operators
-    "dedup_cluster_stats", "ml_confusion_mcc", "approx_tdigest_quantiles",
-    "approx_set_overlap", "graph_anf", "pipeline_graph_centrality",
-    "q88_join_skew_report", "ann_hybrid_rrf", "ann_ndcg",
-    "pipeline_retrieval_eval", "q89_dq_audit", "ml_conformal_interval",
-    "q90_markov_stationary", "q91_theil_sen", "pipeline_trend_panel",
-    "ml_feature_importance", "ml_learning_curve", "ann_filtered_search",
-    "dedup_source_stats", "text_novelty_curve", "q92_equidepth_histogram",
-    "q93_join_size_estimate", "text_boilerplate_fraction", "ml_ks_two_sample",
-    // round-10 operators
-    "corpus_url_dedup", "text_dedup_spans", "dedup_paragraph_minhash",
-    "pipeline_schema_drift", "pipeline_crawl_ingest",
-    "corpus_decontaminate_semantic", "text_repetition", "ml_roc_auc",
-    "q94_calendar_fill", "ml_bootstrap_ci", "q95_rolling_metrics",
-    // round-11 operators
-    "corpus_pack_ffd", "text_bm25_topk", "corpus_mixture_sample",
-    "q96_percentile_bands", "pipeline_mixture_pack", "ml_average_precision",
-    "ml_brier_decomposition", "ml_auc_delong", "corpus_domain_stats",
-    "graph_link_prediction", "ml_shap_linear", "q97_active_users",
-    "pipeline_ml_scorecard", "text_collocations", "q98_rolling_robust",
-    "ml_mcnemar_test", "ml_cohens_kappa", "ml_hosmer_lemeshow",
-    "q99_mann_kendall", "q100_runs_test", "ml_isotonic_calibration",
-    "text_hash_features", "ann_multiprobe_lsh", "ml_cochran_q",
-    "ml_spearman_corr", "q101_autocorrelation", "q102_ljung_box",
-    "corpus_span_corruption", "graph_clustering_coeff", "mm_audio_vad",
-    "corpus_oov_rate", "text_langid_eval", "q103_dow_anova", "ml_c2st_drift",
-    "ml_wilcoxon_signed_rank", "ml_threshold_cost_opt",
-    "pipeline_model_compare", "vec_matryoshka_eval",
-    // round-12 operators
-    "pipeline_train_data_card",
-    // round-13 operators
-    "ml_spearman_shuffle")
-
   /** 1-minute system load average, or -1 where the JMX bean refuses
     * (it never does on Linux). Sampled once per rep sweep: the r4
     * driver host showed noisy-neighbor spikes (one rep 3x slow at
@@ -198,13 +102,10 @@ object Bench {
     val spark = Sessions.local(Harness.cores)
     // JVM/codegen warmup outside the timings (tiny sf, flagship plan)
     try Harness.runNoop(SparkEntry.entry(spark)) catch { case _: Throwable => }
-    val qs = SparkEntry.queries
-    val missing = headline.filterNot(qs.contains)
-    require(missing.isEmpty, s"Bench headline names unknown queries: ${missing.mkString(",")}")
     // SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the set (local iteration)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = headline.filter(n => only.forall(_.contains(n)))
+    val names = SparkEntry.benchNames.filter(n => only.forall(_.contains(n)))
     // one untimed sweep before the timed reps: rep 1 was
     // systematically the spread's top end — cold parquet page cache +
     // per-query JIT, not GC (gc_sec ≈ 0.3 s/rep on an isolated 5-rep
@@ -215,15 +116,13 @@ object Bench {
     // when the budget is tight: it is rep-1 hygiene, not data — capped
     // at 25% of the budget, checked per query.
     var warmupShed = 0
-    for (name <- names) {
+    Harness.eachQuery(spark, names) { (_, q) =>
       if (budgetLeft(0.25) > 0) {
-        try Harness.runNoop(qs(name)(spark, sfDir)) catch { case _: Throwable => }
-        Harness.dropAllBlocks(spark)
+        try Harness.runNoop(q(sfDir)) catch { case _: Throwable => }
       } else warmupShed += 1
     }
     if (warmupShed > 0) System.err.println(
       f"[bench] budget: shed warmup for $warmupShed queries at ${elapsedSec}%.0f s")
-    System.gc()
     // rep-major: time rep 1 of every query, then rep 2 of every query,
     // ... so an ambient-load spike overlaps at most one rep per query.
     // Every attempted run appends one sample (NaN when it failed), so a
@@ -253,16 +152,16 @@ object Bench {
       } else {
         val sweepT0 = System.nanoTime()
         repLoads += loadAvg(); repGcStart += gcMillis() // once per rep sweep
-        for (name <- names if !budgetTruncated) {
-          val elapsed =
-            try Harness.runNoop(qs(name)(spark, sfDir))
-            catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); Double.NaN }
-          // per-query persists must not eat later reps'/queries' memory, and
-          // a GC+settle outside the timed section keeps one query's garbage
-          // from billing the next query's rep
-          Harness.dropAllBlocks(spark)
+        // eachQuery drops each query's blocks after it, so they cannot
+        // eat later reps' or queries' memory; a GC+settle outside the
+        // timed section then keeps one query's garbage from billing the
+        // next query's rep
+        Harness.eachQuery(spark, names) { (name, q) => if (!budgetTruncated) {
           System.gc()
           Thread.sleep(100)
+          val elapsed =
+            try Harness.runNoop(q(sfDir))
+            catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); Double.NaN }
           samples(name) = samples(name) :+ elapsed
           // hard mid-sweep stop: the partial sweep's samples are dropped
           // by `record`, which keeps only the completed sweeps
@@ -271,7 +170,7 @@ object Bench {
             System.err.println(
               f"[bench] budget: abandoning sweep $rep mid-way at ${elapsedSec}%.0f s")
           }
-        }
+        } }
         if (!budgetTruncated) {
           repsDone = rep
           lastSweepSec = (System.nanoTime() - sweepT0) / 1e9

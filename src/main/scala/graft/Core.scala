@@ -12,11 +12,22 @@ import org.apache.spark.sql.types._
   * no money/measure aggregation is done in raw floating point (decimal
   * accumulate, cast to double at the end) so both engines agree
   * bit-for-bit regardless of partitioning / merge order.
+  *
+  * `bench = false` leaves the query out of the bench set
+  * ([[SparkEntry.benchNames]]): [[Bench]] does not time it and the
+  * Harness `scale` mode does not run it unless named. Verify and the
+  * plan dump still cover it. Left out are the queries whose time says
+  * nothing about a scale path: single-feature SQL coverage (filters,
+  * pivots, set ops, string functions), format round trips, the
+  * all-pairs reference scans the banded paths are checked against
+  * (`dedup_embed_cosine`, `ann_brute_topk`), and building blocks that
+  * a benched pipeline already runs.
   */
 final case class QueryDef(
     name: String,
     oracle: Option[String],
-    build: (SparkSession, String) => DataFrame)
+    build: (SparkSession, String) => DataFrame,
+    bench: Boolean = true)
 
 /** Parquet table loaders for the driver test data.
   *
@@ -132,13 +143,13 @@ object Par {
 }
 
 /** Standard local session builder shared by every entry point
-  * (Verify/Bench/Plans/Cli/ScaleProbe): UTC, AQE, ns-as-long events
-  * read, graft extensions registered. `SPARK_MASTER` overrides the
-  * local master for cluster submission. */
+  * (Verify, Bench, the Harness modes, ScaleGen, Cli): UTC, AQE,
+  * ns-as-long events read, graft extensions registered.
+  * `SPARK_MASTER` overrides the local master for cluster submission. */
 object Sessions {
   /** `allowMasterOverride` (Cli only) honors SPARK_MASTER for cluster
     * submission; the other entry points depend on driver-local paths
-    * (Verify dumps, ScaleProbe copies) and stay pinned to local[N]. */
+    * (Verify dumps, ScaleGen's data) and stay pinned to local[N]. */
   def local(cores: String, logLevel: String = "WARN",
       allowMasterOverride: Boolean = false): SparkSession = {
     val master = if (allowMasterOverride)

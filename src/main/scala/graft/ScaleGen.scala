@@ -53,14 +53,16 @@ object ScaleGen {
     spark.stop()
   }
 
-  /** Where a plain `factor`× build goes (also what [[ScaleProbe]] reads). */
+  /** The 1× data every build replicates. */
+  val Base = "/root/testdata/sf0.1"
+
+  /** Where a plain `factor`× build goes (also what the Harness `scale` mode reads). */
   def defaultOut(factor: Int): String = s"target/graft_tmp/sfgen_x$factor"
 
   /** Materializes `factor`× sf0.1 under `out`; the last table written
     * is `part.parquet`, so its presence marks a finished build. */
   def build(spark: org.apache.spark.sql.SparkSession, factor: Int, out: String,
       skewLang: Option[String] = None, skewMod: Int = 16, docMutate: Boolean = false): Unit = {
-    val base = "/root/testdata/sf0.1"
 
     // single FILE per table (the /root/testdata layout): the DuckDB
     // oracle reads '<dir>/<table>.parquet' as one file, not a Spark
@@ -79,7 +81,7 @@ object ScaleGen {
     }
     def replicate(name: String, keyCols: Seq[String],
         extra: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = identity): Unit = {
-      val df = Tables.table(spark, base, name)
+      val df = Tables.table(spark, Base, name)
       val rep = df.crossJoin(spark.range(factor).toDF("__rep"))
       val shifted = keyCols.foldLeft(rep) { (d, k) =>
         d.withColumn(k, col(k) + col("__rep") * 10000000L)
@@ -108,7 +110,7 @@ object ScaleGen {
     replicate("embeddings", Seq("vec_id"))
     replicate("events", Seq("event_id", "user_id"))
     for (dim <- Seq("customer", "region", "nation", "supplier", "part"))
-      writeOne(Tables.table(spark, base, dim), dim)
+      writeOne(Tables.table(spark, Base, dim), dim)
     println(s"done: $out")
   }
 }

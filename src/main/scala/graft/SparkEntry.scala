@@ -46,6 +46,13 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.build).toMap
 
+  /** Every query name, in registry order. */
+  def names: Seq[String] = all.map(_.name)
+
+  /** The bench set, in registry order: every query not marked
+    * `bench = false` (see [[QueryDef]]). */
+  def benchNames: Seq[String] = all.filter(_.bench).map(_.name)
+
   /** DuckDB-runnable equivalent SQL for each hash-checked query. */
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(o => q.name -> o.trim)).toMap

@@ -8,19 +8,15 @@ object Verify {
     // iteration on one gate; the driver always passes two args)
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(',').map(_.trim).toSet))
+      case Array(s, o, f) => (s, o, Some(f.split(',').map(_.trim).filter(_.nonEmpty).toSet))
     }
     val spark = Sessions.local(Harness.cores)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    Harness.eachQuery(spark, only.fold(SparkEntry.names)(_.toSeq)) { (name, q) =>
+      try q(sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally Harness.dropAllBlocks(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

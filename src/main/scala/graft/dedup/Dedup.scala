@@ -58,7 +58,7 @@ object Dedup {
       SELECT doc_id, band_idx, band_key FROM bands ORDER BY doc_id, band_idx"""),
     (s, d) => DedupApi.minhashBands(
         DedupApi.shingleHashes60(Tables.documents(s, d), "doc_id", "text"), "doc_id")
-      .orderBy(col("doc_id"), col("band_idx")))
+      .orderBy(col("doc_id"), col("band_idx")), bench = false)
 
   // ------------------------------------------------------------- lsh
   /** Megabucket guard, on by default in the gated query: a band bucket
@@ -423,7 +423,7 @@ object Dedup {
         FROM n a JOIN n b ON a.vec_id < b.vec_id)
       SELECT id_a, id_b, round(c, 6) AS cos FROM p WHERE c >= 0.4 ORDER BY id_a, id_b"""),
     (s, d) => DedupApi.cosinePairs(Tables.embeddings(s, d), "vec_id", "embedding", threshold = 0.4)
-      .orderBy(col("id_a"), col("id_b")))
+      .orderBy(col("id_a"), col("id_b")), bench = false)
 
   /** Sub-quadratic cosine near-dup: hyperplane-LSH blocked candidates
     * + exact re-verify (see [[DedupApi.cosinePairsLsh]]). The oracle
@@ -533,7 +533,7 @@ object Dedup {
         .select(col("node").as("vec_id"), col("cluster"),
           (col("cluster") === col("node")).as("kept"))
         .orderBy(col("vec_id"))
-    })
+    }, bench = false)
 
   // --------------------------------------------------- clustering
   /** Near-dup clustering: connected components over the MinHash+LSH

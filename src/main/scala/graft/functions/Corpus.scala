@@ -63,7 +63,7 @@ object Corpus {
           posexplode(expr("zip_with(sv.sum, sv.cnt, (x, c) -> round(CAST(x AS DOUBLE) / c, 6))")).as(Seq("pos0", "mean_x")))
         .select(col("label"), (col("pos0") + 1).as("pos"), col("mean_x"))
         .orderBy(col("label"), col("pos"))
-    })
+    }, bench = false)
 
   /** Corpus bigram frequency top-15 (n-gram language statistics —
     * the building block of n-gram LM scoring / contamination checks).
@@ -88,7 +88,7 @@ object Corpus {
         .withColumn("rk", row_number().over(Window.orderBy(col("n").desc, col("bigram"))))
         .select(col("rk"), col("bigram"), col("n"))
         .orderBy(col("rk"))
-    })
+    }, bench = false)
 
   /** Per-document top-5 TF-IDF terms (keyword extraction / RAG index
     * metadata). The idf factor is the LOG-FREE ratio
@@ -208,7 +208,7 @@ object Corpus {
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
           round(sum(size(col("toks"))).cast(DoubleType) / count(lit(1)), 6).as("avg_tokens"))
         .orderBy(col("lang"))
-    })
+    }, bench = false)
 
   // ---------------------------------------------------------- BPE merges
   /** Number of gated BPE merge rounds. */

@@ -38,7 +38,7 @@ object Pipeline {
         .groupBy(col("split"), col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("toks")).cast("long").as("sum_tokens"))
         .orderBy(col("split"), col("lang"))
-    })
+    }, bench = false)
 
   /** Packing parallelism is derived from corpus size, not hardcoded:
     * `ngrp = max(MinPackGroups, ceil(n_docs / PackGroupTargetDocs))`,
@@ -113,7 +113,7 @@ object Pipeline {
           (col("base") + col("shard")).cast("long").as("global_shard"),
           col("n_docs"), col("sum_tokens"), col("first_doc"), col("last_doc"))
         .orderBy(col("grp"), col("shard"))
-    })
+    }, bench = false)
 
   /** Fixed-length training-sequence tokens (GPT-style concat-and-chunk). */
   val SeqTokens = 2048
@@ -435,7 +435,7 @@ object Pipeline {
         .filter(col("rk") <= 50)
         .select(col("lang"), col("rk"), col("doc_id"))
         .orderBy(col("lang"), col("rk"))
-    })
+    }, bench = false)
 
   // --------------------------------------------------------- chunking
   /** Fixed-window document chunking with overlap — the standard
@@ -484,7 +484,7 @@ object Pipeline {
           least(lit(c), col("n") - col("i") * s).cast("long").as("n_tokens"),
           md5(concat_ws(" ", slice(col("toks"), col("i") * s + 1, lit(c)))).as("chunk_md5"))
         .orderBy(col("doc_id"), col("chunk_id"))
-    })
+    }, bench = false)
 
   /** Benchmark decontamination (the GPT-3 appendix-C / PaLM recipe):
     * flag training documents that share any word n-gram with a
@@ -685,7 +685,7 @@ object Pipeline {
         .select(col("doc_id"), col("bench_id"),
           round(col("hits").cast("double") / col("n"), 6).as("containment"))
         .orderBy(col("doc_id"), col("bench_id"))
-    })
+    }, bench = false)
 
   /** Domain mixing (the data-mixture step of a pretraining pipeline —
     * per-source sampling rates a la Pile/LLaMA mixtures): every doc is
@@ -724,7 +724,7 @@ object Pipeline {
         .select(col("source"), col("thr").cast("long").as("target_permyriad"),
           col("n_total"), col("n_kept"), col("sum_tokens_kept"))
         .orderBy(col("source"))
-    })
+    }, bench = false)
 
   /** The full composed ingest pipeline — every gate in the
     * production-recommended order, end-to-end, one oracle:

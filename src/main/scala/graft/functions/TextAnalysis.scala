@@ -39,7 +39,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("n_chars"), length(col("text")).as("text_len"),
         size(split(normText(col("text")), " ")).as("n_ws_tokens"),
         size(regexp_extract_all(lower(col("text")), lit(TokRe), lit(0))).as("n_re_tokens"))
-      .orderBy(col("doc_id")))
+      .orderBy(col("doc_id")), bench = false)
 
   // ---------------------------------------------------------- quality
   /** Quality scoring: length gate, unique-token ratio, alpha ratio,
@@ -100,7 +100,7 @@ object TextAnalysis {
         acc.when(col(s"n_$l") > 0 && others, l)
       }.otherwise("und")
       scored.withColumn("pred_lang", pred).orderBy(col("doc_id"))
-    })
+    }, bench = false)
 
   // ------------------------------------------------------ langid eval
   /** text_langid_eval: confusion matrix of the marker-word language
@@ -322,7 +322,7 @@ object TextAnalysis {
           regexp_count(col("t"), lit(PhoneRe)).cast("long").as("n_phone"),
           md5(scrubPii(col("t"))).as("scrub_md5"))
         .orderBy(col("doc_id"))
-    })
+    }, bench = false)
 
   // -------------------------------------------------------- histogram
   /** Token-length histogram (capped decile buckets) — the corpus-shape
@@ -337,7 +337,7 @@ object TextAnalysis {
       .select(least(expr("n div 10"), lit(9)).as("bucket"), col("n"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_docs"), min(col("n")).as("min_tokens"), max(col("n")).as("max_tokens"))
-      .orderBy(col("bucket")))
+      .orderBy(col("bucket")), bench = false)
 
   // -------------------------------------------------------- diversity
   /** Lexical-diversity scoring — the integer-exact siblings of Shannon

@@ -100,7 +100,7 @@ object Multimodal {
         }
         .toDF()
         .orderBy(col("doc_id"), col("frame_idx"))
-    })
+    }, bench = false)
 
   // ------------------------------------------------- real image kernel
   /** Decoded-image feature row: dimensions, per-channel means, 8-bin
@@ -230,7 +230,7 @@ object Multimodal {
           col("mean_r"), col("mean_g"), col("mean_b"),
           col("bin0").cast("long").as("bin"), col("cnt"))
         .orderBy(col("img_id"), col("bin"))
-    })
+    }, bench = false)
 
   /** Gate for the REAL resize kernel: solid-color gate images (even
     * ids) are resized to maxDim=10 with [[resizePng]] (decode →
@@ -271,7 +271,7 @@ object Multimodal {
           col("height").cast("long").as("height"),
           col("mean_r"), col("mean_g"), col("mean_b"))
         .orderBy(col("img_id"))
-    })
+    }, bench = false)
 
   // --------------------------------------------- real audio kernel
   /** Decoded-audio feature row: format header fields plus the standard
@@ -381,7 +381,7 @@ object Multimodal {
       val path = AudioGate.ensureParquet(s)
       audioFeatures(s.read.parquet(path), "audio_id", "wav")
         .orderBy(col("audio_id"))
-    })
+    }, bench = false)
 
   // --------------------------------------------------- energy VAD
   /** VAD frame length in samples (20 ms at 8 kHz — the standard

@@ -25,7 +25,7 @@ object Extra {
       .agg(count(lit(1)).as("n"), dsum2(col("l_quantity")).as("sum_qty"))
       .select(coalesce(col("l_returnflag"), lit("ALL")).as("rf"),
         coalesce(col("l_linestatus"), lit("ALL")).as("ls"), col("n"), col("sum_qty"))
-      .orderBy(col("rf"), col("ls")))
+      .orderBy(col("rf"), col("ls")), bench = false)
 
   // --------------------------------------------------------------- q22
   /** PIVOT: one column per line status. Spark's pivot with explicit
@@ -40,7 +40,7 @@ object Extra {
       .groupBy(col("l_returnflag"))
       .pivot("l_linestatus", Seq("F", "O"))
       .agg(graft.Portable.decSum2(col("l_quantity")))
-      .orderBy(col("l_returnflag")))
+      .orderBy(col("l_returnflag")), bench = false)
 
   // --------------------------------------------------------------- q23
   /** Navigation window functions: lag/lead/first_value/ntile. */
@@ -62,7 +62,7 @@ object Extra {
           first(col("o_orderkey")).over(w).as("first_order"),
           ntile(4).over(w).as("quartile"))
         .orderBy(col("o_custkey"), col("o_orderdate"), col("o_orderkey"))
-    })
+    }, bench = false)
 
   // --------------------------------------------------------------- q24
   /** Explicit GROUPING SETS with grouping() indicator. */
@@ -78,7 +78,7 @@ object Extra {
         CAST(grouping(o_orderpriority) AS INT) AS g_pri, count(*) AS n
         FROM graft_orders_gs GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())
         ORDER BY pri, st, g_pri""")
-    })
+    }, bench = false)
 
   // --------------------------------------------------------------- q25
   /** Calendar breakdown (year/quarter/month extraction). */
@@ -91,7 +91,7 @@ object Extra {
       .groupBy(year(col("o_orderdate")).as("y"), quarter(col("o_orderdate")).as("q"),
         month(col("o_orderdate")).as("m"))
       .agg(count(lit(1)).as("n"), dsum2(col("o_totalprice")).as("total"))
-      .orderBy(col("y"), col("q"), col("m")))
+      .orderBy(col("y"), col("q"), col("m")), bench = false)
 
   // --------------------------------------------------------------- q26
   /** Schema-aware unionByName: two differently-shaped projections
@@ -116,7 +116,7 @@ object Extra {
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
           col("l_extendedprice"), col("src"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    })
+    }, bench = false)
 
   // --------------------------------------------------------------- q27
   /** Collect aggregation surfaced deterministically: the distinct set
@@ -132,7 +132,7 @@ object Extra {
       .groupBy(col("o_custkey"))
       .agg(concat_ws(",", sort_array(collect_set(col("o_orderpriority")))).as("priorities"),
         count(lit(1)).as("n_orders"))
-      .orderBy(col("o_custkey")))
+      .orderBy(col("o_custkey")), bench = false)
 
   // --------------------------------------------------------------- q28
   /** Sliding time-window frame: per-user running event value over the
@@ -154,7 +154,7 @@ object Extra {
         .select(col("user_id"), col("event_id"),
           sum(col("value").cast(DecimalType(18, 2))).over(w).cast(DoubleType).as("hour_value"))
         .orderBy(col("user_id"), col("event_id"))
-    })
+    }, bench = false)
 
   // --------------------------------------------------------------- q29
   /** Correlated scalar subquery — Catalyst de-correlates it into a
@@ -171,7 +171,7 @@ object Extra {
       s.sql("""SELECT c_custkey, c_name,
         (SELECT max(o_totalprice) FROM graft_orders_sq WHERE o_custkey = c_custkey) AS max_order
         FROM graft_customer_sq ORDER BY c_custkey""")
-    })
+    }, bench = false)
 
   // --------------------------------------------------------------- q30
   /** Ranking distribution functions: rank/dense_rank/percent_rank/
@@ -200,7 +200,7 @@ object Extra {
           rank().over(w).as("rnk"), dense_rank().over(w).as("drnk"),
           percent_rank().over(w).as("prnk"), cume_dist().over(w).as("cdist"))
         .orderBy(col("l_returnflag"), col("l_quantity"))
-    })
+    }, bench = false)
 
   // --------------------------------------------------------------- q31
   /** Scalar string-function battery (upper/substr/replace/lpad/
@@ -218,7 +218,7 @@ object Extra {
         lpad(col("p_size").cast("string"), 4, "0").as("size4"),
         levenshtein(col("p_brand"), col("p_type")).as("lev"),
         reverse(col("p_name")).as("rname"))
-      .orderBy(col("p_partkey")))
+      .orderBy(col("p_partkey")), bench = false)
 
   // --------------------------------------------------------------- q32
   /** Conditional scalar expressions: CASE chains, greatest/least,
@@ -238,7 +238,7 @@ object Extra {
         greatest(col("o_totalprice"), lit(50000.0)).as("floored"),
         least(col("o_custkey").cast("long"), lit(100L)).as("capped_cust"),
         coalesce(nullif(col("o_orderstatus"), lit("O")), lit("OPEN")).as("status_label"))
-      .orderBy(col("o_orderkey")))
+      .orderBy(col("o_orderkey")), bench = false)
 
   // --------------------------------------------------------------- q33
   /** UNPIVOT (melt): wide metrics → long (key, metric, value) — the
@@ -255,7 +255,7 @@ object Extra {
       .unpivot(Array(col("o_orderkey")),
         Array(col("o_totalprice").as("totalprice"), col("o_custkey_d").as("custkey")),
         "metric", "v")
-      .orderBy(col("o_orderkey"), col("metric")))
+      .orderBy(col("o_orderkey"), col("metric")), bench = false)
 
   // --------------------------------------------------------------- q34
   /** LATERAL correlated subquery: each customer's single latest order
@@ -278,7 +278,7 @@ object Extra {
           WHERE o_custkey = c_custkey
           ORDER BY o_orderdate DESC, o_orderkey DESC LIMIT 1) l
         ORDER BY c_custkey""")
-    })
+    }, bench = false)
 
   // --------------------------------------------------------------- q35
   /** GROUP BY … HAVING on an aggregate predicate (post-aggregation
@@ -296,7 +296,7 @@ object Extra {
         sum(col("o_totalprice").cast(DecimalType(18, 2))).as("spend_dec"))
       .filter(col("n_orders") >= 12 && col("spend_dec") > 1000000)
       .select(col("o_custkey"), col("n_orders"), col("spend_dec").cast(DoubleType).as("spend"))
-      .orderBy(col("o_custkey")))
+      .orderBy(col("o_custkey")), bench = false)
 
   // --------------------------------------------------------------- q36
   /** Bag-semantics set ops: INTERSECT ALL / EXCEPT ALL preserve
@@ -323,7 +323,7 @@ object Extra {
         .exceptAll(o.filter(col("o_orderstatus") === "O").select(col("o_custkey").as("k")))
         .agg(count(lit(1)).as("n")).select(lit(-1L).as("k"), col("n"))
       ia.unionByName(ea).orderBy(col("k"))
-    })
+    }, bench = false)
 
   // --------------------------------------------------------------- q37
   /** FULL OUTER join: every customer and every high-value order
@@ -346,7 +346,7 @@ object Extra {
         .select(coalesce(col("c_custkey"), col("k")).as("custkey"),
           col("c_mktsegment").as("segment"), col("n_big"))
         .orderBy(col("custkey"), col("segment").asc_nulls_first)
-    })
+    }, bench = false)
 
   // --------------------------------------------------------------- q38
   /** Centered moving average (3-row window, decimal-exact; q8 covers
@@ -369,7 +369,7 @@ object Extra {
             / count(lit(1)).over(w), 6).as("mov_avg"))
         .orderBy(col("o_custkey"), col("o_orderdate"), col("o_orderkey"))
         .select(col("o_custkey"), col("o_orderkey"), col("mov_avg"))
-    })
+    }, bench = false)
 
   // --------------------------------------------------------------- q39
   /** q13's exact percentiles via DISTRIBUTED SELECTION
@@ -403,7 +403,7 @@ object Extra {
         .join(price.select(col("g"), round(col("value"), 4).as("p99_price")), Seq("g"))
         .select(col("g").as("l_returnflag"), col("median_qty"), col("p90_qty"), col("p99_price"))
         .orderBy(col("l_returnflag"))
-    })
+    }, bench = false)
 
   // --------------------------------------------------------------- q40
   /** Ordered multi-step funnel (view → click → purchase): per step,

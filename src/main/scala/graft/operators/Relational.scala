@@ -65,7 +65,7 @@ object Relational {
     (s, d) => Tables.lineitem(s, d)
       .filter(col("l_shipdate") >= tsNtz("1999-01-01 00:00:00") && col("l_quantity") < 5)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-      .orderBy(col("l_orderkey"), col("l_linenumber")))
+      .orderBy(col("l_orderkey"), col("l_linenumber")), bench = false)
 
   // ---------------------------------------------------------------- q3
   /** Join + agg + top-k. orders→lineitem shuffles on the join key once;
@@ -97,7 +97,7 @@ object Relational {
         broadcast(Tables.orders(s, d).filter(col("o_totalprice") > 200000).select(col("o_custkey"))),
         col("c_custkey") === col("o_custkey"), "left_semi")
       .select(col("c_custkey"), col("c_name"))
-      .orderBy(col("c_custkey")))
+      .orderBy(col("c_custkey")), bench = false)
 
   // ---------------------------------------------------------------- q5
   /** Left-anti join (NOT EXISTS): customers without any very large order. */
@@ -110,7 +110,7 @@ object Relational {
       .join(broadcast(Tables.orders(s, d).filter(col("o_totalprice") > 300000).select(col("o_custkey"))),
         col("c_custkey") === col("o_custkey"), "left_anti")
       .select(col("c_custkey"), col("c_name"))
-      .orderBy(col("c_custkey")))
+      .orderBy(col("c_custkey")), bench = false)
 
   // ---------------------------------------------------------------- q6
   /** Conditional aggregation (CASE inside agg, count over predicate). */
@@ -127,7 +127,7 @@ object Relational {
         count(when(col("o_orderstatus") === "F", 1)).as("n_finished"),
         sum(when(col("o_totalprice") > 150000, dec2(col("o_totalprice")))
           .otherwise(dec2(lit(0)))).cast(DoubleType).as("big_order_total"))
-      .orderBy(col("o_orderpriority")))
+      .orderBy(col("o_orderpriority")), bench = false)
 
   // ---------------------------------------------------------------- q7
   /** Window ranking: top-3 items per supplier. One shuffle on the
@@ -164,7 +164,7 @@ object Relational {
         .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
           sum(dec2(col("o_totalprice"))).over(w).cast(DoubleType).as("running_spend"))
         .orderBy(col("o_custkey"), col("o_orderdate"), col("o_orderkey"))
-    })
+    }, bench = false)
 
   // ---------------------------------------------------------------- q9
   /** ROLLUP multi-level aggregate over broadcast dim joins. */
@@ -181,7 +181,7 @@ object Relational {
       .agg(count(lit(1)).as("n_customers"))
       .select(coalesce(col("r_name"), lit("ALL")).as("region_name"),
         coalesce(col("n_name"), lit("ALL")).as("nation_name"), col("n_customers"))
-      .orderBy(col("region_name"), col("nation_name")))
+      .orderBy(col("region_name"), col("nation_name")), bench = false)
 
   // --------------------------------------------------------------- q10
   /** DISTINCT + multi-column count-distinct per group. */
@@ -194,7 +194,7 @@ object Relational {
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(countDistinct(col("l_partkey")).as("n_parts"),
         countDistinct(col("l_suppkey")).as("n_supps"))
-      .orderBy(col("l_returnflag"), col("l_linestatus")))
+      .orderBy(col("l_returnflag"), col("l_linestatus")), bench = false)
 
   // --------------------------------------------------------------- q11
   /** Set operations: ((A ∪ B) ∩ C) \ D with SQL distinct semantics. */
@@ -212,7 +212,7 @@ object Relational {
       val c = Tables.orders(s, d).select(col("o_custkey").as("k"))
       val e = Tables.orders(s, d).filter(col("o_orderstatus") === "F").select(col("o_custkey").as("k"))
       a.union(b).distinct().intersect(c).except(e).orderBy(col("k"))
-    })
+    }, bench = false)
 
   // --------------------------------------------------------------- q12
   /** 5-table star join; all dims broadcast so the only shuffle is the
@@ -276,7 +276,7 @@ object Relational {
         round(var_samp(col("l_quantity")), 6).as("var_qty"),
         round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qty_price"),
         round(avg(col("l_discount")), 6).as("avg_disc"))
-      .orderBy(col("l_returnflag")))
+      .orderBy(col("l_returnflag")), bench = false)
 
   // --------------------------------------------------------------- q15
   /** Non-equi range join: events bucketed into value bands. The band
@@ -295,7 +295,7 @@ object Relational {
         .groupBy(col("band_id"))
         .agg(count(lit(1)).as("n_events"), dsum2(col("value")).as("total_value"))
         .orderBy(col("band_id"))
-    })
+    }, bench = false)
 
   // --------------------------------------------------------------- q16
   /** Tumbling time-window aggregate on events — the batch twin of the
@@ -356,7 +356,7 @@ object Relational {
       .groupBy(col("event_type"))
       .agg(sum(get_json_object(col("props"), "$.k").cast(LongType)).as("sum_k"),
         count(lit(1)).as("n"))
-      .orderBy(col("event_type")))
+      .orderBy(col("event_type")), bench = false)
 
   // --------------------------------------------------------------- q19
   /** As-of join: for every purchase, the most recent click of the same
@@ -406,7 +406,7 @@ object Relational {
       .agg(count(lit(1)).as("pn"), sum(dec2(col("l_quantity"))).as("psum"))
       .groupBy(col("l_returnflag"))
       .agg(sum(col("pn")).as("n"), sum(col("psum")).cast(DoubleType).as("sum_qty"))
-      .orderBy(col("l_returnflag")))
+      .orderBy(col("l_returnflag")), bench = false)
 
   val defs: Seq[QueryDef] = Seq(q1, q2, q3, q4, q5, q6, q7, q8, q9, q10,
     q11, q12, q13, q14, q15, q16, q17, q18, q19, q20)

@@ -36,7 +36,7 @@ object Sketches {
           <= greatest(col("exact_parts") * 0.10, lit(16))).as("parts_within_bound"),
         (abs(col("approx_orders") - col("exact_orders"))
           <= greatest(col("exact_orders") * 0.10, lit(16))).as("orders_within_bound"))
-      .orderBy(col("l_returnflag")))
+      .orderBy(col("l_returnflag")), bench = false)
 
   /** Approximate quantiles (Greenwald–Khanna, accuracy 1000 → rank
     * error <= 0.1%) next to the exact values, one row per
@@ -84,7 +84,7 @@ object Sketches {
           round(col("z.exact_arr"), 4).as("exact_p"),
           (col("z.approx_arr").cast(DoubleType).between(col("z.lo_arr"), col("z.hi_arr"))).as("within_bound"))
         .orderBy(col("l_returnflag"), col("q"))
-    })
+    }, bench = false)
 
   /** Space-Saving heavy hitters next to the exact top-10 tokens.
     * The oracle-checkable surface: exact top-k (DuckDB twin) plus a
@@ -117,7 +117,7 @@ object Sketches {
         .select(col("rk"), col("tok"), col("exact_n").cast("long").as("exact_n"),
           array_contains(col("sk_tokens"), col("tok")).as("in_sketch"))
         .orderBy(col("rk"))
-    })
+    }, bench = false)
 
   /** Count-min heavy hitters: the token stream folds into ONE
     * fixed-size CMS (ε = 0.001, δ = 0.01 — mergeable, map-side

@@ -31,7 +31,7 @@ object SchemaQueries {
       val result = Evolver.evolve(current, target, Some(df),
         table = "lineitem", allowBreaking = true)
       result.data.get.orderBy(col("l_orderkey"), col("l_linenumber"))
-    })
+    }, bench = false)
 
   /** pipeline_schema_drift (r10): the schema engine composed with the
     * data plane — the CI use case the reference README sells (schema

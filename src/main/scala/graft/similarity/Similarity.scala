@@ -66,7 +66,7 @@ object Similarity {
         FROM nx a JOIN nx b ON a.vec_id < 10 AND a.vec_id <> b.vec_id) t
       WHERE rk <= 5 ORDER BY id_p, rk"""),
     (s, d) => AnnApi.bruteTopK(Tables.embeddings(s, d), "vec_id", "embedding",
-      Tables.embeddings(s, d).filter(col("vec_id") < 10).select(col("vec_id"))))
+      Tables.embeddings(s, d).filter(col("vec_id") < 10).select(col("vec_id"))), bench = false)
 
   // --------------------------------------------------- hard negatives
   /** vec_hard_negatives: contrastive hard-negative mining — per probe
@@ -614,7 +614,7 @@ object Similarity {
     },
     (s, d) => AnnApi.kmeansCells(Tables.embeddings(s, d), "vec_id", "embedding",
         KmeansCells, KmeansIters, KmeansTrainMod)
-      .orderBy(col("vec_id")))
+      .orderBy(col("vec_id")), bench = false)
 
   /** Oracle of the k-means cell pruning shared by the IVF gates:
     * [[AnnApi.ivfTopK]] recomputes DECIMAL centroids and norms from
@@ -698,7 +698,7 @@ object Similarity {
       Tables.embeddings(s, d).filter(col("vec_id") < 10).select(col("vec_id")),
       k = 5, nProbeCells = 2, kCells = KmeansCells, kmIters = KmeansIters,
       m = PqSubspaces, subDim = PqSubDim, kCodes = PqCodes,
-      pqIters = PqIters, trainMod = PqTrainMod))
+      pqIters = PqIters, trainMod = PqTrainMod), bench = false)
 
   /** Residual IVFADC — the FULL Jégou et al. recipe (codebooks learn
     * `u − centroid(cell)`, so the code budget captures local structure
@@ -741,7 +741,7 @@ object Similarity {
         round(sum(col("nrm").cast(DecimalType(18, 9))).cast(DoubleType) / count(lit(1)), 6).as("mean_norm"),
         round(min(col("nrm")), 6).as("min_norm"),
         round(max(col("nrm")), 6).as("max_norm"))
-      .orderBy(col("label")))
+      .orderBy(col("label")), bench = false)
 
   /** Scalar quantization (SQ8) ANN — see [[AnnApi.sq8TopK]]. The
     * oracle unrolls the identical quantizer: per-dimension min/max

@@ -79,7 +79,7 @@ object Sources {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("user_id")).as("sum_users"))
         .orderBy(col("event_type"))
-    })
+    }, bench = false)
 
   /** Hive-style partitioned write + partition-PRUNED read — the
     * layout contract every 100 TB lake depends on: `partitionBy`
@@ -107,7 +107,7 @@ object Sources {
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"),
           sum(col("doc_id")).as("sum_ids"))
         .orderBy(col("lang"))
-    })
+    }, bench = false)
 
   /** Parquet schema-evolution read — the LAKE-side twin of the schema
     * engine's `union_by_name` diff: two writers with compatible but
@@ -140,7 +140,7 @@ object Sources {
         .agg(count(lit(1)).as("n"), count(col("n_chars")).as("n_with_chars"),
           sum(col("n_chars")).as("sum_chars"))
         .orderBy(col("lang"))
-    })
+    }, bench = false)
 
   /** JSON round-trip on string/long columns via the documents table. */
   val jsonRoundtrip = QueryDef(
@@ -155,7 +155,7 @@ object Sources {
         .groupBy(col("lang"), col("source"))
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
         .orderBy(col("lang"), col("source"))
-    })
+    }, bench = false)
 
   /** ORC round-trip (the columnar non-parquet lake format Spark ships
     * natively): long/string/double columns through an ORC sink and
@@ -174,7 +174,7 @@ object Sources {
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"), Portable.decSum2(col("l_extendedprice")).as("sum_price"))
         .orderBy(col("l_returnflag"))
-    })
+    }, bench = false)
 
   /** Z-order layout keys: the multi-dimension clustering sort key for
     * data laid out so parquet min/max skipping prunes on EITHER of two
@@ -196,7 +196,7 @@ object Sources {
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"),
           graft.functions.ZOrder.zkey(col("l_partkey"), col("l_suppkey")).as("zkey"))
         .orderBy(col("zkey"), col("l_orderkey"), col("l_linenumber"))
-    })
+    }, bench = false)
 
   /** binaryFile-source round-trip — the blob-ingestion path every
     * multimodal pipeline starts from (image/audio files landed on
@@ -236,7 +236,7 @@ object Sources {
         .select(element_at(split(col("path"), "/"), -1).as("fname"),
           col("length"), hex(col("content")).as("content_hex"))
         .orderBy(col("fname"))
-    })
+    }, bench = false)
 
   /** Line-text round-trip: documents.text → `text` sink (one line per
     * row — the raw-corpus interchange format every crawl pipeline

@@ -3,16 +3,38 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The shared entry-point harness: name lists resolve through the
-  * registry, the block drop leaves nothing behind, and the bench
-  * record counts completed sweeps only. */
+/** The shared entry-point harness: the one query loop checks its
+  * names first and leaves no block behind, the bench set comes from
+  * the registry, and the bench record counts completed sweeps only. */
 class HarnessSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("every Bench headline and ScaleProbe probe name is a SparkEntry query") {
-    val qs = SparkEntry.queries
-    assert(Bench.headline.filterNot(qs.contains).isEmpty)
-    assert(ScaleProbe.probeNames.filterNot(qs.contains).isEmpty)
+  test("eachQuery rejects an unknown name before running any query") {
+    var ran = 0
+    val e = intercept[IllegalArgumentException] {
+      Harness.eachQuery(spark, Seq("q1_pricing_summary", "no_such_query")) { (_, _) => ran += 1 }
+    }
+    assert(e.getMessage.contains("no_such_query"))
+    assert(ran == 0)
+  }
+
+  test("eachQuery drops every block when its body throws mid-query") {
+    val e = intercept[IllegalStateException] {
+      Harness.eachQuery(spark, Seq("graph_label_prop")) { (_, q) =>
+        q(TestSpark.sfDir) // checkpoints every round while it builds
+        assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("the bench set is 224 queries without the all-pairs references") {
+    val bench = SparkEntry.benchNames
+    assert(bench.size == 224 && bench.distinct.size == 224)
+    assert(bench.forall(SparkEntry.queries.contains))
+    assert(!bench.contains("dedup_embed_cosine") && !bench.contains("ann_brute_topk"))
   }
 
   test("dropAllBlocks after runNoop leaves no persistent RDD behind a localCheckpointing query") {
@@ -26,25 +48,17 @@ class HarnessSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val checkpointed = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val sentinel = s"harness_sentinel_${System.nanoTime()}"
-    @volatile var drained = false
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         if (funcName == "localCheckpoint") checkpointed.add(qe)
-        else if (qe.analyzed.schema.fieldNames.sameElements(Seq(sentinel))) drained = true
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     try {
       for (name <- Seq("graph_triangles", "pipeline_ml_scorecard")) {
-        checkpointed.clear(); drained = false
+        checkpointed.clear()
         val df = SparkEntry.queries(name)(spark, TestSpark.sfDir)
-        // the listener bus delivers in order: once the sentinel action
-        // is seen, every checkpoint the build ran has been seen too
-        spark.range(1).toDF(sentinel).collect()
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while (!drained && System.nanoTime() < deadline) Thread.sleep(20)
-        assert(drained, "listener bus did not drain within 10s")
+        assert(Harness.drainListenerBus(spark), "listener bus did not drain within 10s")
         // loop checkpoints stay; a terminal one checkpoints the result itself
         val terminal = checkpointed.toArray(Array.empty[QueryExecution])
           .count(_.analyzed.schema == df.schema)

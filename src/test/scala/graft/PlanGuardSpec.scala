@@ -488,7 +488,10 @@ class PlanGuardSpec extends AnyFunSuite {
     // partition + pid-local windows + broadcast offsets
     val p = plan("q77_abc_classification")
     assert(!p.contains("CartesianProduct"))
-    assert(p.contains("rangepartitioning"), s"expected the range-partitioned first level:\n$p")
+    // the final orderBy(cls) range-partitions too; the first level must
+    // range-partition the catalog on (rc DESC, pk)
+    assert("""rangepartitioning\(rc#\d+L? DESC NULLS LAST, pk#\d+L? ASC NULLS FIRST""".r
+      .findFirstIn(p).nonEmpty, s"expected the range-partitioned first level:\n$p")
   }
 
   test("top-k outputs of keyphrases and inverted index are TakeOrdered, not global sorts") {
@@ -557,6 +560,19 @@ class PlanGuardSpec extends AnyFunSuite {
     }
     assert(p.contains("BroadcastExchange") || p.contains("BroadcastNestedLoopJoin"),
       "rescale totals must broadcast")
+  }
+
+  test("graph loops shuffle-hash-join their per-round state") {
+    // the loops checkpoint while they build, which hides the static
+    // plan: read the executed pre-checkpoint stages as well
+    Harness.dropAllBlocks(spark)
+    val loops = Seq("graph_pagerank", "graph_kcore", "graph_hits", "graph_bfs", "graph_anf")
+    val plans = Harness.eachQuery(spark, loops) { (_, q) =>
+      Harness.explainExecuted(spark, q(TestSpark.sfDir))
+    }
+    val missing = loops.zip(plans).collect { case (n, p) if !p.contains("ShuffledHashJoin") => n }
+    assert(missing.isEmpty, s"per-round state joins lost their shuffle_hash plan: ${missing.mkString(", ")}")
+    assert(!plans.exists(_.contains("WARNING")), "a pre-checkpoint plan was not captured")
   }
 
   test("ann_mips keeps the probe side semi-joined and plans no cartesian") {

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Size and duplication figures for the Scala under src/main.
 
-Prints three numbers, so the trend of the code's size can be followed
+Prints these numbers, so the trend of the code's size can be followed
 from change to change:
 
   code_lines        non-blank, non-comment lines (a line whose first
@@ -16,6 +16,11 @@ from change to change:
                     characters; the first copy in path order is not
                     counted, and a line counts once however many
                     copies cover it
+  mains             `def main(` definitions
+  entry_lines       all lines (as wc -l counts them) of the files that
+                    define a main and read SparkEntry, that is the
+                    entry points that run registered queries, plus
+                    Harness.scala, which holds their shared loop
 
 Usage: python3 tools/code_stats.py [--dups N] [root]
   root     defaults to src/main
@@ -74,6 +79,12 @@ def main():
     print(f"scope.persist    {persists}")
     print(f"withScope        {scopes}")
     print(f"dup_block_lines  {len(dup)}")
+    sources = {p: open(p, encoding="utf-8").read() for p in paths}
+    mains = {p: len(re.findall(r"\bdef main\(", t)) for p, t in sources.items()}
+    entry = [p for p, t in sources.items() if os.path.basename(p) == "Harness.scala"
+             or (mains[p] and "SparkEntry" in t)]
+    print(f"mains            {sum(mains.values())}")
+    print(f"entry_lines      {sum(sources[p].count(chr(10)) for p in entry)}")
 
     if args.dups:
         per_file = defaultdict(int)
