@@ -23,8 +23,9 @@ import scala.collection.mutable
   *     two streaming microbatch plans (PLANS.md)
   *   runMain graft.Harness scale [factor=10] [q1,q2,...]
   *     each query at 1× (sf0.1) and at factor× ([[ScaleGen]]'s data,
-  *     built under target/ when missing) and the ratio; by default the
-  *     bench set plus `dedup_semantic_kscaled`
+  *     built under target/ when missing) and the ratio, after one
+  *     untimed run at each size; by default the bench set plus
+  *     `dedup_semantic_kscaled`
   *
   * [[Bench]] and [[Verify]] keep their own mains and run their queries
   * through [[eachQuery]] too. */
@@ -100,7 +101,7 @@ object Harness {
   private def description(e: SparkListenerJobStart): String =
     Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
 
-  private def isDrainMarker(e: SparkListenerJobStart): Boolean = description(e) == DrainMarker
+  private[graft] def isDrainMarker(e: SparkListenerJobStart): Boolean = description(e) == DrainMarker
 
   private def formatted(qe: QueryExecution): String =
     qe.explainString(ExplainMode.fromString("formatted"))
@@ -203,9 +204,9 @@ object Harness {
     sb ++= "\nReading notes: iterative index builds (ann_ivf_kmeans) print their\n"
     sb ++= "persisted subplans once per reference in the static explain — at\n"
     sb ++= "runtime each persisted stage executes once (CacheManager reuse), so\n"
-    sb ++= "the rendered Exchange count overstates executed shuffles. The\n"
-    sb ++= "BroadcastNestedLoopJoins there are the centroid-array cross joins\n"
-    sb ++= "(broadcast side <= kCells rows) — the intended assignment plan.\n"
+    sb ++= "the rendered Exchange count overstates executed shuffles. Their\n"
+    sb ++= "Lloyd rounds collect the <= kCells centroids to the driver, so each\n"
+    sb ++= "assignment is a map-only array_max fold over a centroid literal.\n"
     sb ++= "Sections whose gate checkpoints loop state while it builds show a\n"
     sb ++= "Scan ExistingRDD where each checkpoint sits, plus the captured\n"
     sb ++= "PRE-CHECKPOINT plan (the plan that actually executed) as an 'executed\n"
@@ -328,6 +329,9 @@ object Harness {
     }
     eachQuery(spark, only.getOrElse(SparkEntry.benchNames :+ "dedup_semantic_kscaled"),
         SparkEntry.queries ++ probes) { (n, q) =>
+      // untimed warm-up at both sizes, as Bench and `jobs` do: JIT,
+      // codegen and page cache must not land on the 1× run alone
+      for (d <- Seq(ScaleGen.Base, scaled)) { runNoop(q(d)); dropAllBlocks(spark) }
       val t1 = time(s"$n @1x", q(ScaleGen.Base))
       dropAllBlocks(spark) // the 1× run's persists must not skew the N× run
       val tn = time(s"$n @${factor}x", q(scaled))

@@ -502,8 +502,9 @@ object Corpus {
     * trick, Weinberger et al. 2009 — fixed width at any vocabulary);
     * [[TopicIters]] Lloyd rounds with init `doc_id % k`, per-dim
     * DECIMAL centroid means (`graft_vecsum_dec`, one map-combinable
-    * aggregate per round), and MAP-ONLY L2 argmin against the
-    * broadcast centroid array — d² = x·x − 2·x·m + m·m as shared
+    * aggregate per round, its few rows collected), and MAP-ONLY L2
+    * argmin against them as ONE literal centroid array — d² =
+    * x·x − 2·x·m + m·m as shared
     * left-to-right folds, ties to the smallest cell, the
     * `kmeansCells`/`vec_silhouette` determinism recipe. Top terms are
     * one (cluster, token) shrinking-key aggregate over the ALREADY
@@ -569,12 +570,13 @@ object Corpus {
         expr(s"transform(sequence(0, ${TopicDims - 1}), i -> CAST(coalesce(element_at(mp, CAST(i AS BIGINT)), 0) AS DOUBLE))").as("v")))
     var asg = dv.select(col("doc_id"), col("v"), (col("doc_id") % TopicK).as("cell"))
     for (_ <- 1 to TopicIters) {
-      val cents = asg.groupBy(col("cell"))
-        .agg(call_function("graft_vecsum_dec", col("v")).as("sv"))
-        .select(col("cell"), expr("zip_with(sv.sum, sv.cnt, (x, c) -> CAST(x AS DOUBLE) / c)").as("cm"))
-        .select(struct(col("cell"), col("cm"), expr("graft_dot(cm, cm)").as("cc")).as("ct"))
-        .agg(collect_list(col("ct")).as("cents"))
-      asg = dv.crossJoin(broadcast(cents))
+      val c = graft.similarity.AnnApi.centroidMeans(asg, Seq("cell"), "v")
+        .withColumn("cc", expr("graft_dot(cm, cm)"))
+      // doc_id % k spans -(k-1)..k-1, plus the NULL cell of a NULL
+      // doc_id; later rounds only pick collected cells
+      val cents = graft.similarity.AnnApi.rowsLit(
+        graft.similarity.AnnApi.boundedRows(c, 2 * TopicK, "topic centroids"), c.schema)
+      asg = dv.withColumn("cents", cents)
         .select(col("doc_id"), col("v"),
           expr("""-array_max(transform(cents, ct -> named_struct(
               'negd', -(graft_dot(v, v) - 2 * graft_dot(v, ct.cm) + ct.cc),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -2557,10 +2557,11 @@ object Analytics {
     * reproduce?" operator. Each round is ONE map-combinable gradient
     * aggregate (σ-residual terms rounded to 12 dp and summed as
     * DECIMAL(28,12) — merge-order-free; a last-ulp exp divergence
-    * moves one term ≤ 1e-12, the `corpus_ngram_lm` discipline), the
-    * weight update a one-row broadcast expression. The corpus is
-    * scanned once per round and NEVER shuffled; weights ride
-    * broadcasts — the textbook 100 TB batch-GD shape. The audit pass
+    * moves one term ≤ 1e-12, the `corpus_ngram_lm` discipline) with
+    * the weights as literals, collected as one row; the weight update
+    * runs on the driver. The corpus is scanned once per round and
+    * NEVER shuffled; the weights never leave the driver but as
+    * literals — MLlib's batch-GD shape. The audit pass
     * (log-loss + accuracy) reuses the same discipline; accuracy
     * decides via `z > 0 ⇔ σ(z) > ½` in exact comparisons. */
   /** The full GD training CHAIN: one-row (wa, wb, wc) weight frames
@@ -2578,29 +2579,23 @@ object Analytics {
     * exact BIGINT either way, so the lr·g/n update is bit-identical. */
   def logregWeightsChain(b: DataFrame, lr: Double = GdLr,
       rounds: Int = GdRounds): IndexedSeq[DataFrame] = {
-    // the zero-weight init is a 1-row CONSTANT: left lazy (r15) — its
-    // former eager localCheckpoint spent one whole scheduled job per
-    // training run materializing `range(1)` (guide §1.2); every round's
-    // updated weights below are still eagerly checkpointed, so lineage
-    // never grows across rounds
-    var w = b.sparkSession.range(1)
-      .selectExpr("CAST(0 AS DOUBLE) AS wa", "CAST(0 AS DOUBLE) AS wb", "CAST(0 AS DOUBLE) AS wc")
-    val chain = IndexedSeq.newBuilder[DataFrame]
-    chain += w
-    for (_ <- 1 to rounds) {
-      val g = b.crossJoin(broadcast(w)).agg(
-        count(lit(1)).cast(LongType).as("cnt"),
-        expr(gradSql("")).as("g0"),
-        expr(gradSql(" * x1")).as("g1"),
-        expr(gradSql(" * x2")).as("g2"))
-      w = w.crossJoin(broadcast(g)).selectExpr(
-        s"wa - CAST($lr AS DOUBLE) * (g0 / CAST(cnt AS DOUBLE)) AS wa",
-        s"wb - CAST($lr AS DOUBLE) * (g1 / CAST(cnt AS DOUBLE)) AS wb",
-        s"wc - CAST($lr AS DOUBLE) * (g2 / CAST(cnt AS DOUBLE)) AS wc")
-        .localCheckpoint(true)
-      chain += w
-    }
-    chain.result()
+    val names = Seq("wa", "wb", "wc")
+    // the 3 weights stay on the driver: a round is ONE gradient
+    // aggregate with the weights as literals, collected as one row,
+    // and the SQL update `w - lr * (g / n)` in the same operand order
+    // (one IEEE op each, as Spark's generated code does). A NULL
+    // gradient (empty b) gives a NULL weight, as the SQL does.
+    Iterator.iterate(Seq.fill(3)(Option(0.0))) { w =>
+      val Array(g) = b.withColumns(names.zip(w.map(x => lit(x.getOrElse(null)).cast(DoubleType))).toMap)
+        .agg(count(lit(1)).cast(LongType).as("cnt"), expr(gradSql("")).as("g0"),
+          expr(gradSql(" * x1")).as("g1"), expr(gradSql(" * x2")).as("g2"))
+        .collect()
+      w.zipWithIndex.map { case (wi, i) =>
+        for (x <- wi; gi <- Option(g.get(i + 1))) yield x - lr * (gi.asInstanceOf[Double] / g.getLong(0).toDouble)
+      }
+    }.take(rounds + 1).map(w => b.sparkSession.createDataFrame(
+      java.util.List.of(Row.fromSeq(w.map(_.getOrElse(null)))),
+      StructType(names.map(StructField(_, DoubleType))))).toIndexedSeq
   }
 
   /** The GD training loop alone: returns the one-row (wa, wb, wc)

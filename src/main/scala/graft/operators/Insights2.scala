@@ -1,10 +1,12 @@
 package graft.operators
 
 import graft.{Portable, QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Round-8 analytics tier (SURVEY.md §2.2 cont.): CUSUM changepoint
   * detection, market concentration (HHI), log-log price elasticity,
@@ -817,8 +819,10 @@ object Insights2 {
     * documented headroom; lift the factor into DECIMAL past that).
     *
     * 100 TB shape: ONE user-keyed window shuffle collapses the corpus
-    * to the ≤ types² transition-count cells; all 20 rounds run on
-    * broadcast-size frames. */
+    * to the ≤ types² transition-count cells, collected once; the
+    * row normalization and all 20 rounds run on the driver in the
+    * same exact BIGINT arithmetic (an overflow still fails), so no
+    * round costs a job. */
   val q90 = QueryDef(
     "q90_markov_stationary",
     Some {
@@ -850,33 +854,31 @@ object Insights2 {
   /** Integer-unit stationary distribution — see [[q90]]. */
   def markovStationary(ev: DataFrame, iters: Int = MarkovIters): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    // types² cells — eager checkpoint: the corpus window+shuffle runs
-    // once, and every tiny frame below is broadcast-HINTED (a
-    // checkpointed frame has no stats; the r8 silent-SMJ lesson)
     val c = ev.withColumn("nxt", lead(col("event_type"), 1).over(w))
       .filter(col("nxt").isNotNull)
       .groupBy(col("event_type").as("cur"), col("nxt"))
       .agg(count(lit(1)).cast(LongType).as("n"))
-      .localCheckpoint(true)
-    val st = c.select(col("cur")).distinct()
-    val kept = c.join(broadcast(st.select(col("cur").as("nxt2"))),
-      col("nxt") === col("nxt2")).drop("nxt2")
-    val ni = kept.groupBy(col("cur")).agg(sum(col("n")).cast(LongType).as("ni"))
-    val p = kept.join(broadcast(ni), Seq("cur"))
-      .selectExpr("cur", "nxt", "CAST((n * 1000000) div ni AS BIGINT) AS p6")
-      .localCheckpoint(true)
-    val m = st.agg(count(lit(1)).cast(LongType).as("m"))
-    var pi = st.crossJoin(broadcast(m))
-      .selectExpr("cur AS state", "CAST(1000000000000 div m AS BIGINT) AS pi")
-    for (i <- 1 to iters) {
-      pi = p.join(broadcast(pi), col("state") === col("cur"))
-        .groupBy(col("nxt"))
-        .agg(sum(col("pi") * col("p6")).as("s"))
-        .selectExpr("nxt AS state", "CAST(s div 1000000 AS BIGINT) AS pi")
-      if (i % 8 == 0 && i < iters) pi = pi.localCheckpoint(true)
-    }
-    pi.selectExpr("state", "pi AS pi_units", "CAST(pi AS DOUBLE) / 1000000000000 AS pi")
-      .orderBy(col("state"))
+    val cells = c.collect().map(r => (r.get(0), r.get(1), r.getLong(2)))
+    val st = cells.map(_._1).toSet // DISTINCT keeps a NULL cur
+    val types = (st ++ cells.map(_._2)).size
+    require(cells.length <= types.toLong * types,
+      s"q90 holds at most types² = ${types.toLong * types} transition cells, got ${cells.length}")
+    // the chain runs here in the SQL's BIGINT arithmetic: *Exact
+    // throws on overflow as ANSI `*` and `sum` do, and the filters
+    // drop NULL keys exactly as the SQL's equi-joins do
+    val kept = cells.filter { case (cur, nxt, _) => cur != null && st(nxt) }
+    val ni = kept.groupMapReduce(_._1)(_._3)(Math.addExact(_, _))
+    val p = kept.map { case (cur, nxt, n) => (cur, nxt, Math.multiplyExact(n, 1000000L) / ni(cur)) }
+    var pi = st.map(_ -> 1000000000000L / st.size).toMap
+    for (_ <- 1 to iters) pi = p.filter(x => pi.contains(x._1))
+      .groupMapReduce(_._2)(x => Math.multiplyExact(pi(x._1), x._3))(Math.addExact(_, _))
+      .map { case (state, s) => state -> s / 1000000L }
+    // ORDER BY state: NULL first, strings as UTF-8 bytes
+    val rows = pi.toSeq.sortBy(x => Option(x._1).map { case v: String => UTF8String.fromString(v); case v => v })(
+        Ordering.Option((a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)))
+      .map { case (state, u) => Row(state, u, u.toDouble / 1000000000000L) }
+    ev.sparkSession.createDataFrame(rows.asJava, StructType(Seq(StructField("state", c.schema("cur").dataType),
+      StructField("pi_units", LongType), StructField("pi", DoubleType))))
   }
 
   // ----------------------------------------------------------- q91

@@ -1,9 +1,10 @@
 package graft.similarity
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** User-facing parameterized ANN API (the `Similarity` QueryDefs are
   * thin instantiations). All variants share one contract: `probeIds`
@@ -362,10 +363,7 @@ object AnnApi {
     graft.functions.Natives.ensure(corpus.sparkSession)
     val n = normalized(corpus, id, vec, passthrough = Seq(label))
       .transform(scope.persist)
-    val cents = n.groupBy(col(label))
-      .agg(call_function("graft_vecsum_dec", col("v")).as("sv"))
-      .select(col(label).as("cl"),
-        expr("zip_with(sv.sum, sv.cnt, (x, c) -> CAST(x AS DOUBLE) / c)").as("cm"))
+    val cents = centroidMeans(n, Seq(label), "v").select(col(label).as("cl"), col("cm"))
       .select(struct(col("cl"), col("cm"), expr("graft_dot(cm, cm)").as("cc")).as("ct"))
       .agg(collect_list(col("ct")).as("cents"))
     val s = n.crossJoin(broadcast(cents))
@@ -425,10 +423,10 @@ object AnnApi {
     * Scale shape per iteration: one NATIVE vector-sum centroid
     * aggregate over the sample ([[graft.functions.VecSumDec]] — one
     * dim-length buffer per partition per cell; the corpus is never
-    * posexploded to corpus×dim rows), then a broadcast of kCells
-    * centroid *arrays* joined against the corpus with codegen'd
-    * `zip_with`/`aggregate` folds and a hash-aggregate argmax — the
-    * corpus is never shuffled for assignment. */
+    * posexploded to corpus×dim rows), whose ≤ kCells rows are
+    * collected and fed back as ONE literal array of centroids, then
+    * a map-only `array_max` argmax over it — the corpus is never
+    * shuffled or joined for assignment. */
   def kmeansCells(corpus: DataFrame, id: String, vec: String,
       kCells: Int = 8, iters: Int = 2, trainMod: Int = 1)(implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     require(iters >= 1 && kCells >= 1 && trainMod >= 1)
@@ -438,13 +436,13 @@ object AnnApi {
     val train = if (trainMod == 1) n else n.filter(pmod(col(id), lit(trainMod)) === 0)
     // the assignment rides the training frame as a COLUMN: each
     // iteration is one tiny centroid aggregate (map-side partial,
-    // kCells output rows collected into ONE broadcast row) plus a
-    // map-only argmax over the broadcast centroid array — the corpus
-    // is never exchanged or joined for assignment. (The r5-first-cut
-    // shape re-joined train to an (id, cell) frame and hash-aggregated
-    // an argmax per iteration: two corpus-scale exchanges per round
-    // that AQE ran as separate jobs — pure overhead at bench scale and
-    // a corpus shuffle per round at 100 TB.)
+    // ≤ kCells rows collected to the driver) plus a map-only argmax
+    // over the centroid literal — the corpus is never exchanged or
+    // joined for assignment. (The r5-first-cut shape re-joined train
+    // to an (id, cell) frame and hash-aggregated an argmax per
+    // iteration: two corpus-scale exchanges per round that AQE ran as
+    // separate jobs — pure overhead at bench scale and a corpus
+    // shuffle per round at 100 TB.)
     var tr = train.withColumn("cell", pmod(col(id), lit(kCells)).cast("bigint"))
     var out: DataFrame = null
     for (it <- 1 to iters) {
@@ -452,24 +450,48 @@ object AnnApi {
       // per-(cell, i) decimal mean of the posexplode formulation,
       // bit-for-bit — including null/ragged vectors, since the count
       // is per POSITION, not per row
-      val cents = tr
-        .groupBy(col("cell"))
-        .agg(call_function("graft_vecsum_dec", col("v")).as("sv"))
-        .select(col("cell"), expr("zip_with(sv.sum, sv.cnt, (x, c) -> CAST(x AS DOUBLE) / c)").as("cm"))
-        .select(struct(col("cell"), col("cm"),
-          expr("sqrt(graft_dot(cm, cm))").as("cn")).as("ct"))
-        .agg(collect_list(col("ct")).as("cents"))
+      val c = centroidMeans(tr, Seq("cell"), "v").withColumn("cn", expr("sqrt(graft_dot(cm, cm))"))
+      // pmod keeps a cell in [0, kCells); a NULL id adds the NULL cell
+      val cents = rowsLit(boundedRows(c, kCells + 1, "kmeansCells centroids"), c.schema)
       // map-only argmax: array_max uses the same struct ordering as
       // the max() aggregate — best cosine, smallest cell on ties
       val cellExpr = expr(
         """-array_max(transform(cents, ct ->
              named_struct('c', graft_dot(v, ct.cm) / (nrm * ct.cn),
                           'negc', -ct.cell))).negc""").as("cell")
-      if (it == iters) out = n.crossJoin(broadcast(cents)).select(col(id), cellExpr)
-      else tr = tr.crossJoin(broadcast(cents)).select(col(id), col("v"), col("nrm"), cellExpr)
+      if (it == iters) out = n.withColumn("cents", cents).select(col(id), cellExpr)
+      else tr = tr.withColumn("cents", cents).select(col(id), col("v"), col("nrm"), cellExpr)
     }
     out
   }
+
+  /** A loop's bounded state collected to the driver: the rows of `df`,
+    * which must number at most `bound` (`what` names the state). */
+  private[graft] def boundedRows(df: DataFrame, bound: Int, what: String): Array[Row] = {
+    val rows = df.collect()
+    require(rows.length <= bound, s"$what: ${rows.length} rows, bound $bound")
+    rows
+  }
+
+  /** Collected rows as ONE literal array of structs of `schema`'s row
+    * type — what a Lloyd assignment's argmax/argmin fold reads in
+    * place of a collect_list gather and a broadcast cross join. */
+  private[graft] def rowsLit(rows: Array[Row], schema: StructType): Column = {
+    // typedLit arrays may hold NULLs: widen the cast target to match
+    val elem = StructType(schema.map(f => f.dataType match {
+      case ArrayType(t, _) => f.copy(dataType = ArrayType(t)); case _ => f }))
+    array(rows.map(r => struct(schema.indices.map(i => schema(i).dataType match {
+      case ArrayType(DoubleType, _) => typedLit(r.getSeq[java.lang.Double](i))
+      case _ => lit(r.get(i))
+    }): _*)): _*).cast(ArrayType(elem))
+  }
+
+  /** Decimal-exact centroid means: ONE native vector-sum aggregate
+    * ([[graft.functions.VecSumDec]]) per `keys` group, `as` = the
+    * per-position sum over the per-position count. */
+  private[graft] def centroidMeans(df: DataFrame, keys: Seq[String], vec: String, as: String = "cm"): DataFrame =
+    df.groupBy(keys.map(col): _*).agg(call_function("graft_vecsum_dec", col(vec)).as("sv"))
+      .select(keys.map(col) :+ expr("zip_with(sv.sum, sv.cnt, (x, c) -> CAST(x AS DOUBLE) / c)").as(as): _*)
 
   // ------------------------------------------------- product quantization
   /** Sub-vector rows for product quantization: one (id, s, vs) row per
@@ -493,24 +515,22 @@ object AnnApi {
         struct(lit(s).as("s"), expr(s"slice(rv, ${s * subDim + 1}, $subDim)").as("vs"))): _*)).as("e"): _*)
       .select(keep.map(col) :+ col("e.s").as("s") :+ col("e.vs").as("vs"): _*)
 
-  /** The per-subspace codebook collected to one row per s — the
-    * m-row broadcast side of every code assignment. */
-  private def codebookPerS(codebook: DataFrame): DataFrame =
-    codebook.groupBy(col("s"))
-      .agg(collect_list(struct(col("code"), col("cm"), col("cn2"))).as("cbs"))
+  /** Map-only argmin over the codebook entries `cbs` of a row's
+    * subspace: array_min uses the same struct ordering as the min()
+    * aggregate — smallest squared L2 (monotone form `|c|² − 2·x·c`;
+    * the |x|² term is constant per row), smallest code on ties. */
+  private def codeArgmin(cbs: String): Column = expr(
+    s"""array_min(transform($cbs, cb ->
+         named_struct('score', cb.cn2 - CAST(2.0 AS DOUBLE) * graft_dot(vs, cb.cm),
+                      'code', cb.code))).code""").as("code")
 
-  /** Map-only argmin over the broadcast per-subspace codebook:
-    * array_min uses the same struct ordering as the min() aggregate —
-    * smallest squared L2 (monotone form `|c|² − 2·x·c`; the |x|² term
-    * is constant per row), smallest code on ties. The sub-vector rows
-    * are never exchanged for assignment. Keeps `vs` so the training
-    * loop can re-aggregate without a join back. */
+  /** [[codeArgmin]] against a codebook frame, gathered to one row per
+    * s and broadcast (m rows). The sub-vector rows are never
+    * exchanged for assignment. */
   private def assignCodes(sub: DataFrame, id: String, codebook: DataFrame): DataFrame =
-    sub.join(broadcast(codebookPerS(codebook)), Seq("s"))
-      .select(col(id), col("s"), col("vs"), expr(
-        """array_min(transform(cbs, cb ->
-             named_struct('score', cb.cn2 - CAST(2.0 AS DOUBLE) * graft_dot(vs, cb.cm),
-                          'code', cb.code))).code""").as("code"))
+    sub.join(broadcast(codebook.groupBy(col("s"))
+        .agg(collect_list(struct(col("code"), col("cm"), col("cn2"))).as("cbs"))), Seq("s"))
+      .select(col(id), col("s"), col("vs"), codeArgmin("cbs"))
 
   /** Product-quantization codebooks (Jégou, Douze & Schmid, TPAMI
     * 2011 "Product Quantization for Nearest Neighbor Search"): the
@@ -520,8 +540,9 @@ object AnnApi {
     * decimal-exact centroid means via the native
     * [[graft.functions.VecSumDec]], L2 argmin assignment) — ALL
     * subspaces train in the same jobs (s is a column, not a loop), so
-    * an iteration is one aggregate + one broadcast-join argmin
-    * regardless of m. Returns (s, code, cm, cn2). */
+    * an iteration is one aggregate, whose ≤ m·kCodes rows are
+    * collected, plus a map-only argmin over them as a literal,
+    * regardless of m. Returns (s, code, cm, cn2) as a local frame. */
   def pqCodebooks(corpus: DataFrame, id: String, vec: String,
       m: Int = 8, subDim: Int = 8, kCodes: Int = 16, iters: Int = 2, trainMod: Int = 4)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
@@ -541,20 +562,24 @@ object AnnApi {
       .filter(pmod(col(id), lit(trainMod)) === 0)
       .transform(scope.persist)
     // like kmeansCells: the code rides the training rows as a column —
-    // each iteration is one tiny (s, code) aggregate plus the map-only
-    // broadcast argmin of assignCodes; the sub-vector rows are never
-    // joined or exchanged inside the loop
+    // each iteration is one tiny (s, code) aggregate, collected, plus a
+    // map-only argmin over the literal codebook entries of the row's
+    // subspace; the sub-vector rows are never joined or exchanged
+    // inside the loop
     var tr = train.select(col(id), col("s"), col("vs"),
       pmod(col(id), lit(kCodes)).cast("int").as("code"))
     var codebook: DataFrame = null
-    for (_ <- 1 to iters) {
-      codebook = tr
-        .groupBy(col("s"), col("code"))
-        .agg(call_function("graft_vecsum_dec", col("vs")).as("sv"))
-        .select(col("s"), col("code"),
-          expr("zip_with(sv.sum, sv.cnt, (x, c) -> CAST(x AS DOUBLE) / c)").as("cm"))
-        .withColumn("cn2", expr("graft_dot(cm, cm)"))
-      tr = assignCodes(train, id, codebook)
+    for (it <- 1 to iters) {
+      val c = centroidMeans(tr, Seq("s", "code"), "vs").withColumn("cn2", expr("graft_dot(cm, cm)"))
+      val rows = c.collect()
+      // pmod keeps a code in [0, kCodes) and the argmin only picks a
+      // collected one: at most kCodes entries per subspace
+      require(rows.groupBy(_.get(0)).forall(_._2.length <= kCodes),
+        s"pqCodebooks: more than kCodes = $kCodes codebook entries in a subspace")
+      codebook = sub.sparkSession.createDataFrame(rows.toSeq.asJava, c.schema)
+      if (it < iters)
+        tr = train.withColumn("cbs", rowsLit(rows, c.schema))
+          .select(col(id), col("s"), col("vs"), codeArgmin("filter(cbs, cb -> cb.s = s)"))
     }
     codebook
   }
@@ -634,11 +659,7 @@ object AnnApi {
     // partitions); norms and probe dots over the resulting index-
     // ordered arrays are left-to-right double folds — per-row, fixed
     // order, so deterministic without decimal (≡ oracle list_reduce)
-    val centArr = n.groupBy(col(cell))
-      .agg(call_function("graft_vecsum_dec", col("v")).as("sv"))
-      .select(col(cell), expr("zip_with(sv.sum, sv.cnt, (x, c) -> CAST(x AS DOUBLE) / c)").as("cm"))
-      .withColumn("cn",
-        expr("sqrt(graft_dot(cm, cm))"))
+    val centArr = centroidMeans(n, Seq(cell), "v").withColumn("cn", expr("sqrt(graft_dot(cm, cm))"))
     n.join(probeIds, Seq(id), "left_semi")
       .select(col(id).as("id_p"), col("v"), col("nrm"))
       .crossJoin(broadcast(centArr.select(col(cell).as("cl"), col("cm"), col("cn"))))
@@ -738,10 +759,7 @@ object AnnApi {
     val (n, topCells, cand) = ivfCandidates(corpus, id, vec, probeIds, nProbeCells, kCells, kmIters, trainMod)
     val unit = n.select(col(id), col("cell"), expr("transform(v, x -> x / nrm)").as("u"))
     // decimal-exact unit-vector centroid per cell (kCells rows)
-    val cent = unit.groupBy(col("cell"))
-      .agg(call_function("graft_vecsum_dec", col("u")).as("sv"))
-      .select(col("cell"), expr("zip_with(sv.sum, sv.cnt, (x, c) -> CAST(x AS DOUBLE) / c)").as("cu"))
-      .transform(scope.persist)
+    val cent = centroidMeans(unit, Seq("cell"), "u", as = "cu").transform(scope.persist)
     val rsub = subspaceRows(
         unit.join(broadcast(cent), Seq("cell"))
           .select(col(id), expr("zip_with(u, cu, (a, b) -> a - b)").as("rv")),

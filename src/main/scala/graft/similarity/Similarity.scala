@@ -1121,9 +1121,7 @@ object Similarity {
     (s, d) => {
       graft.functions.Natives.ensure(s)
       val n = AnnApi.normalized(Tables.embeddings(s, d), "vec_id", "embedding", Seq("label"))
-      val cents = n.agg(call_function("graft_vecsum_dec", col("v")).as("sv"))
-        .select(expr("zip_with(sv.sum, sv.cnt, (x, c) -> CAST(x AS DOUBLE) / c)").as("cm"))
-        .select(col("cm"), expr("graft_dot(cm, cm)").as("c2"))
+      val cents = AnnApi.centroidMeans(n, Nil, "v").select(col("cm"), expr("graft_dot(cm, cm)").as("c2"))
       val dd = graft.CacheScope.untracked.persist(n.crossJoin(broadcast(cents))
         .select(col("vec_id"), col("label"),
           expr("""sqrt(greatest(graft_dot(v, v) - 2 * graft_dot(v, cm) + c2,

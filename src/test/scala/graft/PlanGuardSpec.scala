@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape guards: the scale properties the engine is built around
@@ -14,6 +17,23 @@ class PlanGuardSpec extends AnyFunSuite {
   private def plan(name: String): String = {
     Harness.dropAllBlocks(spark)
     SparkEntry.queries(name)(spark, TestSpark.sfDir).queryExecution.executedPlan.toString
+  }
+
+  /** A query's frame plus every action its builder ran: loop state it
+    * collects or checkpoints while building is not in the static plan. */
+  private def built(name: String): (DataFrame, Seq[QueryExecution]) = {
+    Harness.dropAllBlocks(spark)
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = ran.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val df = SparkEntry.queries(name)(spark, TestSpark.sfDir)
+      assert(Harness.drainListenerBus(spark), "listener bus did not drain within 10s")
+      (df, ran.toArray(Array.empty[QueryExecution]).toSeq)
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("q2 pushes filter and projection into the parquet scan") {
@@ -175,9 +195,8 @@ class PlanGuardSpec extends AnyFunSuite {
   }
 
   test("semantic dedup pair scan is cell-keyed, never a cartesian") {
-    // the embedded k-means centroid join IS a k-row broadcast
-    // nested-loop by design (guarded below), so the blanket no-BNLJ
-    // pair-scan check doesn't apply — pin the pair join specifically
+    // pin the pair join itself: the embedded k-means assignment is a
+    // map-only fold over a centroid literal (guarded below)
     val p = plan("dedup_semantic")
     assert(!p.contains("CartesianProduct"), "semantic pair scan planned a cartesian")
     assert(p.contains("SortMergeJoin [cell#") || p.contains("ShuffledHashJoin [cell#")
@@ -185,17 +204,44 @@ class PlanGuardSpec extends AnyFunSuite {
       "semantic pair join must key on the k-means cell id")
   }
 
-  test("k-means assignment broadcasts the centroid arrays") {
+  test("k-means assignment is map-only over the literal centroid array") {
+    Harness.dropAllBlocks(spark)
     val cells = similarity.AnnApi.kmeansCells(
       Tables.embeddings(spark, TestSpark.sfDir), "vec_id", "embedding")
     val p = cells.queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
-      "centroid cross join must broadcast the k-row side")
+    assert(p.contains("array_max") && p.contains("FileScan parquet"),
+      s"expected the argmax fold over the corpus scan:\n$p")
+    assert(!p.contains("Exchange") && !p.contains("Join"),
+      s"no exchange or join may sit between the corpus scan and cell:\n$p")
+  }
+
+  test("pipeline_ml_readouts and ml_lift_deciles collapse the scores to value grain once") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    // the (z, p, q) collapse of the scored corpus may only run inside
+    // ONE cache that every readout reads (lift checkpoints its decile
+    // counts while building, so the actions' plans count too)
+    for (q <- Seq("pipeline_ml_readouts", "ml_lift_deciles")) {
+      val (df, ran) = built(q)
+      val all = (df.queryExecution +: ran).map(_.optimizedPlan)
+      val bare = all.map(_.collect {
+        case a: Aggregate if a.groupingExpressions.collect { case z: Attribute => z.name } == Seq("z") => a
+      }.size).sum
+      val caches = all.flatMap(_.collect {
+        case r: InMemoryRelation if r.output.map(_.name) == Seq("z", "p", "q") =>
+          System.identityHashCode(r.cacheBuilder)
+      }).distinct
+      assert(bare == 0, s"$q collapses to value grain outside the shared cache $bare times")
+      assert(caches.size == 1, s"$q reads ${caches.size} value-grain caches")
+    }
   }
 
   test("centroid builds run the native vector-sum aggregate, no corpus×dim explode") {
     for (q <- Seq("vec_kmeans", "ann_ivf", "vec_centroids")) {
-      val p = plan(q)
+      // the Lloyd rounds collect their centroids while building
+      val (df, ran) = built(q)
+      val p = (df.queryExecution +: ran).map(_.executedPlan.toString).mkString("\n")
       assert(p.contains("graft_vecsum_dec"),
         s"$q centroid build must stay on the native VecSumDec aggregate")
       assert(!p.contains("PosExplode") || q == "vec_centroids",
@@ -590,10 +636,11 @@ class PlanGuardSpec extends AnyFunSuite {
 
   test("r9 session tier plans no cartesian and no sort-merge joins") {
     // q89: FK checks are keyed hash joins (AQE broadcasts the parent
-    // at test SF); q90/q91/panel: every small frame is broadcast-
-    // hinted past its checkpoint (stats-free frames silently SMJ
-    // otherwise — the r8 lesson); conformal: the corpus never
-    // shuffles past training
+    // at test SF); q90: one window shuffle and one aggregate, its
+    // power iteration runs on the driver (no join at all); q91/panel:
+    // every small frame is broadcast-hinted past its checkpoint
+    // (stats-free frames silently SMJ otherwise — the r8 lesson);
+    // conformal: the corpus never shuffles past training
     for (q <- Seq("q89_dq_audit", "q90_markov_stationary", "q91_theil_sen",
         "pipeline_trend_panel", "ml_conformal_interval")) {
       val p = plan(q)

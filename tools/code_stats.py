@@ -10,6 +10,7 @@ from change to change:
   scope.persist     CacheScope persist call sites (scope.persist and
                     CacheScope.untracked.persist)
   withScope         withScope occurrences on code lines
+  bcast_crossjoin   code lines that call `crossJoin(broadcast(`
   dup_block_lines   lines that sit in a second or later copy of a
                     block of 4 consecutive code lines (trimmed, blank
                     and comment lines skipped) totalling >= 160
@@ -74,10 +75,12 @@ def main():
     checkpoints = len(re.findall(r"localCheckpoint\(true\)", text))
     persists = len(re.findall(r"\b(?:scope|untracked)\.persist\b", text))
     scopes = len(re.findall(r"\bwithScope\b", text))
+    bcast = sum("crossJoin(broadcast(" in t for t in text.split("\n"))
     print(f"code_lines       {sum(map(len, lines.values()))}")
     print(f"localCheckpoint  {checkpoints}")
     print(f"scope.persist    {persists}")
     print(f"withScope        {scopes}")
+    print(f"bcast_crossjoin  {bcast}")
     print(f"dup_block_lines  {len(dup)}")
     sources = {p: open(p, encoding="utf-8").read() for p in paths}
     mains = {p: len(re.findall(r"\bdef main\(", t)) for p, t in sources.items()}
