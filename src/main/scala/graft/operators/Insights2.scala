@@ -858,11 +858,9 @@ object Insights2 {
       .filter(col("nxt").isNotNull)
       .groupBy(col("event_type").as("cur"), col("nxt"))
       .agg(count(lit(1)).cast(LongType).as("n"))
+    // one row per (cur, nxt) pair of event types: ≤ types² cells
     val cells = c.collect().map(r => (r.get(0), r.get(1), r.getLong(2)))
     val st = cells.map(_._1).toSet // DISTINCT keeps a NULL cur
-    val types = (st ++ cells.map(_._2)).size
-    require(cells.length <= types.toLong * types,
-      s"q90 holds at most types² = ${types.toLong * types} transition cells, got ${cells.length}")
     // the chain runs here in the SQL's BIGINT arithmetic: *Exact
     // throws on overflow as ANSI `*` and `sum` do, and the filters
     // drop NULL keys exactly as the SQL's equi-joins do

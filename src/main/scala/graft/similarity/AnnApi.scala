@@ -524,13 +524,13 @@ object AnnApi {
          named_struct('score', cb.cn2 - CAST(2.0 AS DOUBLE) * graft_dot(vs, cb.cm),
                       'code', cb.code))).code""").as("code")
 
-  /** [[codeArgmin]] against a codebook frame, gathered to one row per
-    * s and broadcast (m rows). The sub-vector rows are never
-    * exchanged for assignment. */
+  /** [[codeArgmin]] over the entries of the row's subspace, with the
+    * codebook — a local frame of ≤ m·kCodes rows, so collecting it
+    * runs no job — riding as ONE literal array: map-only, the
+    * sub-vector rows are never joined or exchanged for assignment. */
   private def assignCodes(sub: DataFrame, id: String, codebook: DataFrame): DataFrame =
-    sub.join(broadcast(codebook.groupBy(col("s"))
-        .agg(collect_list(struct(col("code"), col("cm"), col("cn2"))).as("cbs"))), Seq("s"))
-      .select(col(id), col("s"), col("vs"), codeArgmin("cbs"))
+    sub.withColumn("cbs", rowsLit(codebook.collect(), codebook.schema))
+      .select(col(id), col("s"), col("vs"), codeArgmin("filter(cbs, cb -> cb.s = s)"))
 
   /** Product-quantization codebooks (Jégou, Douze & Schmid, TPAMI
     * 2011 "Product Quantization for Nearest Neighbor Search"): the
@@ -577,9 +577,7 @@ object AnnApi {
       require(rows.groupBy(_.get(0)).forall(_._2.length <= kCodes),
         s"pqCodebooks: more than kCodes = $kCodes codebook entries in a subspace")
       codebook = sub.sparkSession.createDataFrame(rows.toSeq.asJava, c.schema)
-      if (it < iters)
-        tr = train.withColumn("cbs", rowsLit(rows, c.schema))
-          .select(col(id), col("s"), col("vs"), codeArgmin("filter(cbs, cb -> cb.s = s)"))
+      if (it < iters) tr = assignCodes(train, id, codebook)
     }
     codebook
   }
@@ -627,7 +625,6 @@ object AnnApi {
       iters: Int = 2, trainMod: Int = 4)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     val codebook = pqCodebooks(corpus, id, vec, m, subDim, kCodes, iters, trainMod)
-      .transform(scope.persist)
     val sub = subVectors(corpus, id, vec, m, subDim)
       .transform(scope.persist)
     val codes = assignCodes(sub, id, codebook)
@@ -722,7 +719,6 @@ object AnnApi {
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     val (_, _, cand) = ivfCandidates(corpus, id, vec, probeIds, nProbeCells, kCells, kmIters, trainMod)
     val codebook = pqCodebooks(corpus, id, vec, m, subDim, kCodes, pqIters, trainMod)
-      .transform(scope.persist)
     val sub = subVectors(corpus, id, vec, m, subDim)
       .transform(scope.persist)
     val codes = assignCodes(sub, id, codebook)
@@ -766,7 +762,6 @@ object AnnApi {
         Seq(id), m, subDim)
       .transform(scope.persist)
     val codebook = pqCodebooksFromSub(rsub, id, kCodes, pqIters, trainMod)
-      .transform(scope.persist)
     val codes = assignCodes(rsub, id, codebook)
     // one distance table per (probe, probed cell): the probe's residual
     // against THAT cell's centroid
