@@ -108,37 +108,42 @@ object Harness {
 
   /** Markdown `explain("formatted")` of `df`, built inside the call.
     * Builders return lazy frames, so the static plan is the real one,
-    * except where a loop checkpoints its state while building: those
-    * stages ran eagerly and show as a Scan ExistingRDD, so the static
-    * plan is blind there. Dataset.checkpoint runs through
-    * withAction("checkpoint", qe), so a QueryExecutionListener sees
-    * every pre-checkpoint QueryExecution; each captured stage follows
-    * the static plan. */
+    * except where a loop runs its state eagerly while building: a
+    * checkpointed stage shows as a Scan ExistingRDD, and loop state
+    * collected to the driver shows only as the literal or local frame
+    * it became, so the static plan is blind there. Dataset.checkpoint
+    * and Dataset.collect run through withAction("checkpoint" /
+    * "collect", qe), so a QueryExecutionListener sees each of those
+    * QueryExecutions; the captured pre-checkpoint stages, then the
+    * captured build stages (the collects), follow the static plan. */
   def explainExecuted(spark: SparkSession, df: => DataFrame): String = {
-    val caught = new ConcurrentLinkedQueue[String]()
+    val checkpoints, collects = new ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (funcName == "checkpoint" || funcName == "localCheckpoint") caught.add(formatted(qe))
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = funcName match {
+        case "checkpoint" | "localCheckpoint" => checkpoints.add(formatted(qe))
+        case "collect" => collects.add(formatted(qe))
+        case _ =>
+      }
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     try {
       val plan = formatted(df.queryExecution)
       val sb = new StringBuilder(s"```\n$plan```\n")
-      if (plan.contains("ExistingRDD")) {
-        val drained = drainListenerBus(spark)
-        val stages = caught.toArray(Array.empty[String])
-        if (stages.isEmpty)
-          // loud, never silent; an ExistingRDD can also come from an
-          // RDD-backed frame with no checkpoint executed in this build
-          sb ++= "\n### WARNING: pre-checkpoint plan NOT captured — " + (if (!drained)
-            "the listener bus did not drain within 10s (rerun on a quiet box)\n" else
-            "this plan's ExistingRDD is RDD-backed without a checkpoint/localCheckpoint " +
-            "executed during this build (no pre-checkpoint plan exists to capture)\n")
-        stages.zipWithIndex.foreach { case (p, i) =>
-          sb ++= s"\n### executed pre-checkpoint stage ${i + 1} of ${stages.length}\n\n```\n$p```\n"
-        }
+      val drained = drainListenerBus(spark)
+      val stages = checkpoints.toArray(Array.empty[String])
+      if (plan.contains("ExistingRDD") && stages.isEmpty)
+        // loud, never silent; an ExistingRDD can also come from an
+        // RDD-backed frame with no checkpoint executed in this build
+        sb ++= "\n### WARNING: pre-checkpoint plan NOT captured — " + (if (!drained)
+          "the listener bus did not drain within 10s (rerun on a quiet box)\n" else
+          "this plan's ExistingRDD is RDD-backed without a checkpoint/localCheckpoint " +
+          "executed during this build (no pre-checkpoint plan exists to capture)\n")
+      def section(label: String, plans: Array[String]): Unit = plans.zipWithIndex.foreach { case (p, i) =>
+        sb ++= s"\n### executed $label ${i + 1} of ${plans.length}\n\n```\n$p```\n"
       }
+      section("pre-checkpoint stage", stages)
+      section("build stage", collects.toArray(Array.empty[String]))
       sb.toString
     } finally spark.listenerManager.unregister(listener)
   }
@@ -210,7 +215,10 @@ object Harness {
     sb ++= "Sections whose gate checkpoints loop state while it builds show a\n"
     sb ++= "Scan ExistingRDD where each checkpoint sits, plus the captured\n"
     sb ++= "PRE-CHECKPOINT plan (the plan that actually executed) as an 'executed\n"
-    sb ++= "pre-checkpoint stage' subsection per checkpoint.\n"
+    sb ++= "pre-checkpoint stage' subsection per checkpoint. Loop state a\n"
+    sb ++= "builder collects to the driver (q90's transition cells, the GD\n"
+    sb ++= "gradients, the Lloyd centroid means) shows as an 'executed build\n"
+    sb ++= "stage' subsection per collect.\n"
     // with no names every query gets a section, in name order, so the
     // file never falls behind the inventory
     eachQuery(spark, only.getOrElse(SparkEntry.names.sorted)) { (n, q) =>

@@ -113,14 +113,17 @@ private object EmptyReaderFactory extends PartitionReaderFactory {
   * dotted field paths — the catalog-side twin of
   * [[graft.schema.Evolver.applyOp]] (which does the same at the
   * GSchema level). A path with a missing or non-struct segment
-  * throws. */
+  * throws, and so does an add or a rename that would give a struct two
+  * fields of one name, as Iceberg's `UpdateSchema` does. */
 object SchemaChanges {
   def apply(schema: StructType, change: TableChange): StructType = change match {
     case a: TableChange.AddColumn =>
       val f0 = StructField(a.fieldNames.last, a.dataType, nullable = a.isNullable)
       val f = if (a.comment == null) f0 else f0.withComment(a.comment)
+      requireNew(schema, a.fieldNames.init.toSeq, f.name)
       insert(schema, a.fieldNames.init.toSeq, f, a.position)
     case r: TableChange.RenameColumn =>
+      if (r.newName != r.fieldNames.last) requireNew(schema, r.fieldNames.init.toSeq, r.newName)
       update(schema, r.fieldNames.toSeq)(f => Some(f.copy(name = r.newName)))
     case u: TableChange.UpdateColumnType =>
       update(schema, u.fieldNames.toSeq)(f => Some(f.copy(dataType = u.newDataType)))
@@ -135,6 +138,12 @@ object SchemaChanges {
     case _: TableChange.SetProperty | _: TableChange.RemoveProperty => schema
     case other =>
       throw new UnsupportedOperationException(s"unsupported table change: $other")
+  }
+
+  /** Throws unless the struct at `parent` has no field named `name`. */
+  private def requireNew(st: StructType, parent: Seq[String], name: String): Unit = parent match {
+    case Seq() => if (st.fieldNames.contains(name)) throw new IllegalArgumentException(s"field '$name' already exists")
+    case head +: rest => descend(st, head) { s => requireNew(s, rest, name); s }
   }
 
   /** Rewrite the field at `path` (None = drop). */

@@ -20,7 +20,10 @@ final case class EvolveResult(
   * Where the reference mutates catalog metadata through PyIceberg,
   * graft does two Spark-native things:
   *  1. emits the equivalent `ALTER TABLE` DDL (what Spark's Iceberg
-  *     integration runs against a live table), and
+  *     integration runs against a live table), which [[executeDdl]]
+  *     commits to a V2 catalog straight as `TableChange`s, with no
+  *     Spark query and no `QueryExecutionListener` event per statement
+  *     (falling back to `spark.sql` for what it cannot vouch for), and
   *  2. migrates *data* by compiling the evolved schema into a single
   *     recursive projection (`conform`) — per-field cast / rename /
   *     null-fill / drop / reorder matched by field id. A projection
@@ -125,15 +128,25 @@ object Evolver {
     * [[graft.catalog.GraftCatalog]] offline). Each statement is one
     * `TableCatalog.alterTable` call, which is one Iceberg commit and
     * applies all of its changes or none, so a failure leaves exactly
-    * the statements before it applied. */
+    * the statements before it applied.
+    *
+    * A column `ADD`/`DROP`/`RENAME`/`ALTER COLUMN` of the forms
+    * [[Ddl.statements]] renders, on a V2 catalog other than the session
+    * catalog, commits directly: it is parsed with the session's parser
+    * and its `TableChange`s, the ones Spark's analyzer would produce,
+    * go to `alterTable` without a Spark query. Such a statement emits
+    * no SQL execution and no `QueryExecutionListener` event, and costs
+    * no analyzer pass over the table's columns. Every other statement,
+    * and any the direct path cannot vouch for, runs through `spark.sql`
+    * as before, so a failing statement fails with Spark's own error. */
   def executeDdl(spark: org.apache.spark.sql.SparkSession, ddl: Seq[String]): Unit =
     ddl.zipWithIndex.foreach { case (stmt, i) =>
-      try spark.sql(stmt)
+      try { if (!DirectDdl.commit(spark, stmt)) spark.sql(stmt) }
       catch { case e: Exception =>
         // report exactly how far the apply got — there is no transaction
         // to roll back outside a real lake catalog
-        throw new IllegalStateException(
-          s"DDL statement ${i + 1}/${ddl.size} failed (statements 1..$i were applied): $stmt", e)
+        val applied = if (i == 0) "no statement was applied" else s"statements 1..$i were applied"
+        throw new IllegalStateException(s"DDL statement ${i + 1}/${ddl.size} failed ($applied): $stmt", e)
       }
     }
 

@@ -1,18 +1,26 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.util.Random
 
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog, TableChange}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.schema._
 
 /** S12/S19 execution-level verification: the engine's emitted DDL is
-  * *run* through Spark's analyzer against a live V2 catalog
-  * ([[graft.catalog.GraftCatalog]]), and the table's schema read back
-  * afterwards must re-diff to empty against the evolution target —
-  * the Spark-native analogue of the reference's REST-catalog
-  * integration tests (reference tests/test_integration.py,
-  * migrate.py:31 apply).
+  * *run* against a live V2 catalog ([[graft.catalog.GraftCatalog]]),
+  * and the table's schema read back afterwards must re-diff to empty
+  * against the evolution target — the Spark-native analogue of the
+  * reference's REST-catalog integration tests (reference
+  * tests/test_integration.py, migrate.py:31 apply). `executeDdl`
+  * commits column statements straight to the catalog, so the same DDL
+  * is also run through `spark.sql` on a twin table: both must store the
+  * same schema, or fail with the same Spark error.
   */
 class DdlExecutionSpec extends AnyFunSuite {
   private lazy val spark = {
@@ -35,6 +43,43 @@ class DdlExecutionSpec extends AnyFunSuite {
     case other => other
   }
 
+  /** The schema `graftcat` stores for `t`, comments and metadata
+    * included. */
+  private def stored(t: String): StructType = {
+    val parts = t.split('.')
+    spark.sessionState.catalogManager.catalog(parts.head).asInstanceOf[TableCatalog]
+      .loadTable(Identifier.of(parts.slice(1, parts.length - 1), parts.last)).schema()
+  }
+
+  /** `QueryExecutionListener` events (successes and failures) while
+    * `body` runs. */
+  private def executions(body: => Unit): Int = {
+    Harness.drainListenerBus(spark)
+    val n = new AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = n.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = n.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    try { body; assert(Harness.drainListenerBus(spark)) }
+    finally spark.listenerManager.unregister(listener)
+    n.get
+  }
+
+  /** The error `spark.sql(stmt)` fails with. */
+  private def sqlError(stmt: String): SparkThrowable = intercept[SparkThrowable](spark.sql(stmt))
+
+  /** The Spark error `executeDdl(Seq(stmt))` fails with, as the cause
+    * of its wrapper. */
+  private def ddlError(stmt: String): SparkThrowable = {
+    val e = intercept[IllegalStateException](Evolver.executeDdl(spark, Seq(stmt)))
+    assert(e.getMessage.startsWith("DDL statement 1/1 failed (no statement was applied): "), e.getMessage)
+    e.getCause match {
+      case t: SparkThrowable => t
+      case other => fail(s"not a Spark error: $other", e)
+    }
+  }
+
   private val base = GSchema(0, Seq(
     GField(1, "id", required = true, GLong),
     GField(2, "qty", required = false, GInt),
@@ -53,25 +98,25 @@ class DdlExecutionSpec extends AnyFunSuite {
     assert(strip(GSchema.toSpark(back)) == strip(GSchema.toSpark(base)))
   }
 
+  // rename + retype + drop + top-level add + nested rename + nested
+  // add + move-before: every executable op class in one evolution
+  private val mixed = GSchema(0, Seq(
+    GField(1, "id", required = true, GLong),
+    GField(3, "new_name", required = false, GString, doc = Some("to be renamed")),
+    GField(2, "qty", required = false, GLong),
+    GField(5, "meta", required = false, GStruct(Seq(
+      GField(6, "town", required = false, GString),
+      GField(7, "zip", required = false, GString),
+      GField(10, "country", required = false, GString)))),
+    GField(8, "tags", required = false, GList(9, elementRequired = false, GString)),
+    GField(11, "score", required = false, GDouble, doc = Some("quality score"))),
+    lastColumnId = 11)
+
   test("evolution DDL executes against a live catalog and re-diffs to empty") {
     val t = "graftcat.ns.evolving"
     spark.sql(CreateTableDdl(base, t))
 
-    // rename + retype + drop + top-level add + nested rename + nested
-    // add + move-before: every executable op class in one evolution
-    val target = GSchema(0, Seq(
-      GField(1, "id", required = true, GLong),
-      GField(3, "new_name", required = false, GString, doc = Some("to be renamed")),
-      GField(2, "qty", required = false, GLong),
-      GField(5, "meta", required = false, GStruct(Seq(
-        GField(6, "town", required = false, GString),
-        GField(7, "zip", required = false, GString),
-        GField(10, "country", required = false, GString)))),
-      GField(8, "tags", required = false, GList(9, elementRequired = false, GString)),
-      GField(11, "score", required = false, GDouble, doc = Some("quality score"))),
-      lastColumnId = 11)
-
-    val res = Evolver.evolve(base, target, table = t, allowBreaking = true)
+    val res = Evolver.evolve(base, mixed, table = t, allowBreaking = true)
     // 8 ops, one statement each before coalescing: 2 renames, then one
     // statement each for the retype, the adds (meta.country, score),
     // the drop and the moves (the reorder, score's position)
@@ -178,23 +223,29 @@ class DdlExecutionSpec extends AnyFunSuite {
   }
 
   test("coalesced evolution DDL executes and re-diffs to empty, 100 seeded evolutions") {
-    var statements, perOp = 0
+    var statements, perOp, direct = 0
     val ddl = Seq.newBuilder[String]
     (0 until 100).foreach { seed =>
       val rnd = new Random(7000L + seed)
       val cur = Evolutions.schema(rnd)
       val target = Evolutions.evolve(cur, rnd)
-      val t = s"graftcat.ns.prop_$seed"
+      val (t, twin) = (s"graftcat.ns.prop_$seed", s"graftcat.ns.prop_${seed}_sql")
       val res = Evolver.evolve(cur, target, table = t, allowBreaking = true)
       if (res.ops.size == 1) assert(res.ddl == res.ops.head.toSql(t))
-      spark.sql(CreateTableDdl(cur, t))
-      Evolver.executeDdl(spark, res.ddl)
-      withClue(s"seed $seed\ncurrent=$cur\ntarget=$target\nops=${res.ops}\n")(assertApplied(t, res, target))
+      Seq(t, twin).foreach(n => spark.sql(CreateTableDdl(cur, n)))
+      direct += executions(Evolver.executeDdl(spark, res.ddl))
+      res.ddl.foreach(stmt => spark.sql(stmt.replace(s"ALTER TABLE $t ", s"ALTER TABLE $twin ")))
+      withClue(s"seed $seed\ncurrent=$cur\ntarget=$target\nops=${res.ops}\n") {
+        assertApplied(t, res, target)
+        assert(stored(t) == stored(twin), s"\ndirect:    ${stored(t).sql}\nspark.sql: ${stored(twin).sql}")
+      }
       statements += res.ddl.size
       perOp += res.ops.map(op => op.toSql(t).size).sum
       ddl ++= res.ddl
     }
     assert(statements < perOp)
+    // every statement took the direct path: no Spark query ran
+    assert(direct == 0)
     // the generator reaches every coalescing case
     val all = ddl.result()
     def covers(what: String)(p: String => Boolean): Unit = assert(all.exists(p), s"no $what in\n${all.mkString("\n")}")
@@ -206,6 +257,99 @@ class DdlExecutionSpec extends AnyFunSuite {
     covers("several adds")(d => d.contains("ADD COLUMN") && d.contains(", "))
     covers("struct-member drop")(d => d.contains("DROP COLUMN") && d.contains("`.`"))
   }
+
+  test("a statement Spark rejects fails with Spark's own error and leaves the schema unchanged") {
+    val cols = "a INT, b STRING COMMENT 'bee', s STRUCT<m: INT>, n INT"
+    val rejected = Seq(
+      "ALTER COLUMN a TYPE BIGINT, a COMMENT 'c'", // type plus comment on one column
+      "ALTER COLUMN a TYPE SMALLINT", // a narrowing type
+      "ADD COLUMN b INT", // an add of an existing column
+      "RENAME COLUMN a TO n", // a rename onto an existing column
+      "DROP COLUMN zz", // a drop of a missing column
+      "ALTER COLUMN a AFTER zz", // AFTER a missing column
+      "ADD COLUMN a.x INT", // an add into a non-struct
+      "ADD COLUMN p STRUCT<q: INT>, p.r INT") // an add into a struct the statement adds
+    rejected.zipWithIndex.foreach { case (clause, i) =>
+      val (t, twin) = (s"graftcat.ns.reject_$i", s"graftcat.ns.reject_${i}_sql")
+      Seq(t, twin).foreach(n => spark.sql(s"CREATE TABLE $n ($cols) USING parquet"))
+      val before = stored(t)
+      val expected = sqlError(s"ALTER TABLE $twin $clause")
+      assert(expected.getCondition != null, clause)
+      assert(ddlError(s"ALTER TABLE $t $clause").getCondition == expected.getCondition, clause)
+      assert(stored(t) == before && stored(twin) == before, clause)
+    }
+    // a catalog's own IllegalArgumentException becomes the error Spark's
+    // AlterTableExec raises for it, also on the direct path
+    spark.conf.set("spark.sql.catalog.refusecat", classOf[RefusingCatalog].getName)
+    Seq("refusecat.ns.r", "refusecat.ns.r_sql").foreach(n => spark.sql(s"CREATE TABLE $n ($cols) USING parquet"))
+    val refused = sqlError("ALTER TABLE refusecat.ns.r_sql ADD COLUMN c INT")
+    var direct: SparkThrowable = null
+    assert(executions { direct = ddlError("ALTER TABLE refusecat.ns.r ADD COLUMN c INT") } == 0)
+    assert(direct.getCondition == refused.getCondition && direct.getMessageParameters == refused.getMessageParameters)
+
+    // a later statement's failure names the statements before it
+    val t = "graftcat.ns.reject_later"
+    spark.sql(s"CREATE TABLE $t ($cols) USING parquet")
+    val e = intercept[IllegalStateException](Evolver.executeDdl(spark,
+      Seq(s"ALTER TABLE $t ADD COLUMN c INT", s"ALTER TABLE $t DROP COLUMN zz")))
+    assert(e.getMessage.startsWith("DDL statement 2/2 failed (statements 1..1 were applied): "), e.getMessage)
+    assert(stored(t).fieldNames.toSeq == Seq("a", "b", "s", "n", "c"))
+  }
+
+  test("mixed-case names resolve as spark.sql resolves them, with and without case sensitivity") {
+    val cols = "Abc INT, S STRUCT<Mm: INT, Nn: STRING>, Zed STRING"
+    val clauses = Seq(
+      "ALTER COLUMN abc TYPE BIGINT, s.mm COMMENT 'em', zed AFTER ABC",
+      "ADD COLUMN s.Oo DOUBLE, Q INT",
+      "ALTER COLUMN q FIRST, s.oo AFTER MM",
+      "RENAME COLUMN s.nn TO nn2",
+      "DROP COLUMN S.MM")
+    val key = "spark.sql.caseSensitive"
+    val was = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "false")
+      val (t, twin) = ("graftcat.ns.case_t", "graftcat.ns.case_t_sql")
+      Seq(t, twin).foreach(n => spark.sql(s"CREATE TABLE $n ($cols) USING parquet"))
+      // the direct path resolves every name: no Spark query runs
+      assert(executions(Evolver.executeDdl(spark, clauses.map(c => s"ALTER TABLE $t $c"))) == 0)
+      clauses.foreach(c => spark.sql(s"ALTER TABLE $twin $c"))
+      assert(stored(t) == stored(twin), s"\ndirect:    ${stored(t).sql}\nspark.sql: ${stored(twin).sql}")
+      assert(stored(t).sql == "STRUCT<Q: INT, Abc: BIGINT, Zed: STRING, " +
+        "S: STRUCT<Oo: DOUBLE, nn2: STRING>>", stored(t).sql)
+
+      spark.conf.set(key, "true")
+      clauses.zipWithIndex.foreach { case (clause, i) =>
+        val (t, twin) = (s"graftcat.ns.case_s_$i", s"graftcat.ns.case_s_${i}_sql")
+        Seq(t, twin).foreach(n => spark.sql(s"CREATE TABLE $n ($cols) USING parquet"))
+        val expected = sqlError(s"ALTER TABLE $twin $clause")
+        assert(ddlError(s"ALTER TABLE $t $clause").getCondition == expected.getCondition, clause)
+        assert(stored(t) == stored(twin), clause)
+      }
+    } finally spark.conf.set(key, was)
+  }
+
+  test("graft DDL on a V2 catalog commits without a Spark query; the session catalog still runs one") {
+    val t = "graftcat.ns.pinned"
+    spark.sql(CreateTableDdl(base, t))
+    val res = Evolver.evolve(base, mixed, table = t, allowBreaking = true)
+    assert(executions(Evolver.executeDdl(spark, res.ddl)) == 0)
+    assertApplied(t, res, mixed)
+
+    val v1 = "spark_catalog.default.graft_ddl_pin"
+    spark.sql(s"DROP TABLE IF EXISTS $v1")
+    spark.sql(s"CREATE TABLE $v1 (a INT) USING parquet")
+    try {
+      assert(executions(Evolver.executeDdl(spark, Seq(s"ALTER TABLE $v1 ADD COLUMN b INT"))) == 1)
+      assert(spark.table(v1).schema.fieldNames.toSeq == Seq("a", "b"))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $v1")
+  }
+}
+
+/** A catalog that refuses every change with a plain
+  * `IllegalArgumentException`, as a catalog rejecting a change does. */
+class RefusingCatalog extends graft.catalog.GraftCatalog {
+  override def alterTable(ident: Identifier, changes: TableChange*): Table =
+    throw new IllegalArgumentException(s"refused ${changes.size} changes")
 }
 
 /** Seeded schemas and evolutions that exercise every coalescing case:

@@ -16,11 +16,11 @@ class GraftCatalogSpec extends AnyFunSuite {
     StructField("id", LongType, nullable = false),
     StructField("meta", StructType(Seq(StructField("city", StringType))))))
 
-  private def catalog(): (GraftCatalog, Identifier) = {
+  private def catalog(st: StructType = schema): (GraftCatalog, Identifier) = {
     val cat = new GraftCatalog
     cat.initialize("graftcat", CaseInsensitiveStringMap.empty())
     val ident = Identifier.of(Array("ns"), "t")
-    cat.createTable(ident, schema, Array.empty, new java.util.HashMap[String, String]())
+    cat.createTable(ident, st, Array.empty, new java.util.HashMap[String, String]())
     (cat, ident)
   }
 
@@ -60,5 +60,26 @@ class GraftCatalogSpec extends AnyFunSuite {
       done.foreach(_.get(60, TimeUnit.SECONDS))
     } finally pool.shutdown()
     assert(cat.loadTable(ident).schema().size == schema.size + 200)
+  }
+
+  test("an add or a rename onto an existing name is rejected at any depth, leaving the schema unchanged") {
+    val st = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("meta", StructType(Seq(StructField("city", StringType), StructField("zip", StringType))))))
+    val (cat, ident) = catalog(st)
+    val clashes = Seq(
+      TableChange.addColumn(Array("id"), StringType),
+      TableChange.addColumn(Array("meta", "city"), IntegerType),
+      TableChange.renameColumn(Array("meta"), "id"),
+      TableChange.renameColumn(Array("meta", "city"), "zip"))
+    clashes.foreach { c =>
+      // alongside a good change, so the whole call must be refused
+      val ok = TableChange.addColumn(Array("meta", "country"), StringType)
+      intercept[IllegalArgumentException](cat.alterTable(ident, ok, c))
+      assert(cat.loadTable(ident).schema() == st, c)
+    }
+    // renaming a field to its own name is no clash
+    cat.alterTable(ident, TableChange.renameColumn(Array("meta", "zip"), "zip"))
+    assert(cat.loadTable(ident).schema() == st)
   }
 }

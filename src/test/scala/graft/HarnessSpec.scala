@@ -98,4 +98,18 @@ class HarnessSpec extends AnyFunSuite {
     assert(compact.get("n_queries").asInt == 2 && compact.get("full_result").asText == "out.json")
     assert(compact.get("value").asDouble == full.get("value").asDouble)
   }
+
+  test("explainExecuted prints the stages a builder collects while it builds") {
+    // q90 collects its transition cells and iterates on the driver:
+    // the static plan is one LocalTableScan, the work is in the collect
+    val Seq(p) = Harness.eachQuery(spark, Seq("q90_markov_stationary")) { (_, q) =>
+      Harness.explainExecuted(spark, q(TestSpark.sfDir))
+    }
+    val at = p.indexOf("### executed build stage 1 of 1")
+    assert(at >= 0, p)
+    val stage = p.substring(at)
+    assert(stage.contains("Window") && stage.contains("hashpartitioning(user_id"), s"no window Exchange:\n$p")
+    assert(stage.contains("HashAggregate") && stage.contains("count(1)"), s"no cell aggregate:\n$p")
+    assert(!p.contains("WARNING"), p)
+  }
 }
