@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** One engine capability: a named Spark query over a scale-factor
   * directory plus (when SQL-expressible) an equivalent DuckDB oracle.
@@ -105,9 +106,10 @@ object Tables {
   * "Spark's scheduler happily runs several jobs at once inside one
   * application; actions are only sequential because your driver code
   * calls them sequentially"). The composed readout pipelines interleave
-  * eager barriers (localCheckpoint / persist-materializing counts) with
-  * lazy frame building; running each independent readout chain on its
-  * own thread turns the sum of those barrier waits into their max.
+  * eager barriers ([[Small]] collects, localCheckpoint,
+  * persist-materializing counts) with lazy frame building; running
+  * each independent readout chain on its own thread turns the sum of
+  * those barrier waits into their max.
   * Results are untouched — every chain computes exactly what it
   * computed serially (exact-arithmetic, merge-order-free by the house
   * discipline); only the submission order changes. The first failure
@@ -139,6 +141,31 @@ object Par {
   def run3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
     val r = all[Any](() => a, () => b, () => c)
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C])
+  }
+}
+
+/** A frame whose row count the code bounds by a stated constant (a
+  * one-row aggregate, a decile grid, a loop's k centroids) is brought
+  * to the driver once, not pinned as executor blocks: `Small(df,
+  * bound, step)` collects `df`, `require`s at most `bound` rows (the
+  * message names `step`) and returns the rows as a local frame with
+  * exactly `df`'s schema, so nullability and decimal precision stay as
+  * they were. Its consumers then read a `LocalRelation`: no block that
+  * an executor loss could take, and no job to scan it. The collect's
+  * job is labelled `<description>/<step>`, under the description the
+  * caller's thread carries (the query name, in [[Harness.eachQuery]]). */
+object Small {
+  def apply(df: DataFrame, bound: Int, step: String): DataFrame =
+    df.sparkSession.createDataFrame(rows(df, bound, step).toSeq.asJava, df.schema)
+
+  /** The collected rows themselves, for a caller that folds them into
+    * a literal or steps them in Scala. */
+  def rows(df: DataFrame, bound: Int, step: String): Array[Row] = {
+    val sc = df.sparkSession.sparkContext
+    val label = Option(sc.getLocalProperty(Harness.JobDescription)).fold(step)(d => s"$d/$step")
+    val rows = Harness.labelled(sc, label)(df.collect())
+    require(rows.length <= bound, s"$step: ${rows.length} rows, bound $bound")
+    rows
   }
 }
 

@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
@@ -61,13 +62,27 @@ object Harness {
     * The body gets the query bound to `spark`; applying it to a data
     * directory builds the frame, so a timed body times the build too.
     * Every name is resolved in `builds` before any query runs, and
-    * every block is dropped after each body, also when it throws. */
+    * every block is dropped after each body, also when it throws.
+    * Every job the body runs on its own thread is described by the
+    * query's name ([[Small]] extends it with its step). */
   def eachQuery[T](spark: SparkSession, names: Seq[String],
       builds: Map[String, Build] = SparkEntry.queries)(
       body: (String, String => DataFrame) => T): Seq[T] = {
     val unknown = names.filterNot(builds.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    names.map(n => try body(n, builds(n)(spark, _)) finally dropAllBlocks(spark))
+    names.map(n =>
+      try labelled(spark.sparkContext, n)(body(n, builds(n)(spark, _))) finally dropAllBlocks(spark))
+  }
+
+  /** The local property a job's description is read from. */
+  private[graft] val JobDescription = "spark.job.description"
+
+  /** Runs `body` with the thread's job description set to `label`,
+    * restoring the one it had before, also when `body` throws. */
+  private[graft] def labelled[T](sc: SparkContext, label: String)(body: => T): T = {
+    val description = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(description)
   }
 
   private val DrainMarker = "graft-listener-bus-drain"
@@ -87,19 +102,14 @@ object Harness {
       override def onJobEnd(e: SparkListenerJobEnd): Unit = if (e.jobId == id) ended.countDown()
     }
     sc.addSparkListener(marker)
-    val description = sc.getLocalProperty("spark.job.description")
-    try {
-      sc.setJobDescription(DrainMarker)
+    try labelled(sc, DrainMarker) {
       sc.parallelize(Seq(0), 1).count()
       ended.await(10, TimeUnit.SECONDS)
-    } finally {
-      sc.setJobDescription(description)
-      sc.removeSparkListener(marker)
-    }
+    } finally sc.removeSparkListener(marker)
   }
 
-  private def description(e: SparkListenerJobStart): String =
-    Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+  private[graft] def description(e: SparkListenerJobStart): String =
+    Option(e.properties).flatMap(p => Option(p.getProperty(JobDescription))).getOrElse("")
 
   private[graft] def isDrainMarker(e: SparkListenerJobStart): Boolean = description(e) == DrainMarker
 
@@ -217,8 +227,9 @@ object Harness {
     sb ++= "PRE-CHECKPOINT plan (the plan that actually executed) as an 'executed\n"
     sb ++= "pre-checkpoint stage' subsection per checkpoint. Loop state a\n"
     sb ++= "builder collects to the driver (q90's transition cells, the GD\n"
-    sb ++= "gradients, the Lloyd centroid means) shows as an 'executed build\n"
-    sb ++= "stage' subsection per collect.\n"
+    sb ++= "gradients, the Lloyd centroid means, every graft.Small frame such as\n"
+    sb ++= "the percentile passes) shows as an 'executed build stage' subsection\n"
+    sb ++= "per collect.\n"
     // with no names every query gets a section, in name order, so the
     // file never falls behind the inventory
     eachQuery(spark, only.getOrElse(SparkEntry.names.sorted)) { (n, q) =>

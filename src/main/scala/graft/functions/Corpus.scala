@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.{Portable, QueryDef, Tables}
+import graft.{Portable, QueryDef, Small, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -320,10 +320,9 @@ object Corpus {
           explode(expr("transform(sequence(0, size(toks) - 2), i -> struct(toks[i] AS a, toks[i + 1] AS b))")).as("p"))
         .select(col("cnt"), col("p.a").as("a"), col("p.b").as("b"))
         .groupBy(col("a"), col("b")).agg(sum(col("cnt")).as("n"))
-      // ONE winner row, pinned eagerly: both consumers (the merge
-      // table and the next round's replace) must see the same pair
-      val top = pairs.orderBy(col("n").desc, col("a"), col("b")).limit(1)
-        .localCheckpoint(true)
+      // ONE winner row, brought to the driver: both consumers (the
+      // merge table and the next round's replace) see the same pair
+      val top = Small(pairs.orderBy(col("n").desc, col("a"), col("b")).limit(1), 1, "bpe merge")
       merges += top.select(lit(t).as("step"), col("a").as("lhs"), col("b").as("rhs"), col("n"))
       rep = rep.crossJoin(broadcast(top.select(col("a"), col("b"))))
         .select(col("word"), col("cnt"),
@@ -575,7 +574,7 @@ object Corpus {
       // doc_id % k spans -(k-1)..k-1, plus the NULL cell of a NULL
       // doc_id; later rounds only pick collected cells
       val cents = graft.similarity.AnnApi.rowsLit(
-        graft.similarity.AnnApi.boundedRows(c, 2 * TopicK, "topic centroids"), c.schema)
+        Small.rows(c, 2 * TopicK, "topic centroids"), c.schema)
       asg = dv.withColumn("cents", cents)
         .select(col("doc_id"), col("v"),
           expr("""-array_max(transform(cents, ct -> named_struct(

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.{Portable, QueryDef, Tables}
+import graft.{Portable, QueryDef, Small, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -996,8 +996,8 @@ object TextAnalysis {
       .select(explode(col("ps")).as("p"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(count(lit(1)).cast("long").as("cab")))
-    val nt = ug.agg(sum(col("c")).cast("long").as("n_tok")).localCheckpoint(true)
-    val np = pc.agg(sum(col("cab")).cast("long").as("n_pairs")).localCheckpoint(true)
+    val nt = Small(ug.agg(sum(col("c")).cast("long").as("n_tok")), 1, "token total")
+    val np = Small(pc.agg(sum(col("cab")).cast("long").as("n_pairs")), 1, "pair total")
     val lift = "CAST(cab AS DOUBLE) * CAST(n_tok AS DOUBLE) / CAST(ca AS DOUBLE)" +
       " * CAST(n_tok AS DOUBLE) / CAST(cb AS DOUBLE) / CAST(n_pairs AS DOUBLE)"
     pc.filter(col("cab") >= minSupport)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Small, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -99,8 +99,10 @@ object Analytics {
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
         .withColumn("nxt", lead(col("event_type"), 1).over(w))
         .filter(col("nxt").isNotNull)
-      // |types|² rows — eager checkpoint so the corpus scan+shuffle
-      // behind the cell aggregate runs once, not once per consumer
+      // |types|² rows — the event-type domain sets the size, so no
+      // constant bounds it: an eager checkpoint, so the corpus
+      // scan+shuffle behind the cell aggregate runs once, not once per
+      // consumer
       val c = t.groupBy(col("event_type").as("cur"), col("nxt"))
         .agg(count(lit(1)).as("n"))
         .localCheckpoint(true)
@@ -263,11 +265,10 @@ object Analytics {
       val li = Tables.fanout(Tables.lineitem(s, d)
         .select(col("l_quantity"), col("l_discount"), col("l_extendedprice")))
       val m = gramMoments(li, yy = true)
-      // ONE row — eager checkpoint so the moment scan runs once, not
-      // once per consumer (the residual pass and the final select)
-      val w = m.selectExpr("n", "sy", "syy",
-        s"$detA0 / $detA AS w0", s"$detA1 / $detA AS w1", s"$detA2 / $detA AS w2")
-        .localCheckpoint(true)
+      // ONE row, brought to the driver: the moment scan runs once for
+      // both consumers (the residual pass and the final select)
+      val w = Small(m.selectExpr("n", "sy", "syy",
+        s"$detA0 / $detA AS w0", s"$detA1 / $detA AS w1", s"$detA2 / $detA AS w2"), 1, "linear probe weights")
       val r = li.crossJoin(broadcast(w))
         .select((col("l_extendedprice") -
           (col("w0") + col("w1") * col("l_quantity") + col("w2") * col("l_discount"))).as("resid"))
@@ -331,17 +332,16 @@ object Analytics {
     (s, d) => {
       val li = Tables.fanout(Tables.lineitem(s, d)
         .select(col("l_quantity"), col("l_discount"), col("l_extendedprice")))
-      val m = gramMoments(li, yy = false)
-        .localCheckpoint(true)
+      val m = Small(gramMoments(li, yy = false), 1, "ridge moments")
       // |λ| rows of weights — one Cramer select per λ on the SAME
       // moment row, unioned (metadata scale)
-      val w = RidgeLambdas.map { l =>
+      val w = Small(RidgeLambdas.map { l =>
         val lam = s"($l * n)"
         m.selectExpr(s"CAST($l AS DOUBLE) AS lambda", "n",
           s"${rdetA0(lam)} / ${rdetA(lam)} AS w0",
           s"${rdetA1(lam)} / ${rdetA(lam)} AS w1",
           s"${rdetA2(lam)} / ${rdetA(lam)} AS w2")
-      }.reduce(_ unionAll _).localCheckpoint(true)
+      }.reduce(_ unionAll _), RidgeLambdas.size, "ridge weights")
       val r = li.crossJoin(broadcast(w))
         .select(col("lambda"), (col("l_extendedprice") -
           (col("w0") + col("w1") * col("l_quantity") + col("w2") * col("l_discount"))).as("resid"))
@@ -474,11 +474,11 @@ object Analytics {
         (1 to 9).map(i =>
           min(when(col("p") === i / 10.0, col("value"))).as(s"t$i")).tail: _*)
       .drop("g")
-    val dd = vg.crossJoin(broadcast(th))
+    // deciles 1..10 feed totals + cumulative
+    val dd = Small(vg.crossJoin(broadcast(th))
       .selectExpr(s"$decileSql AS decile", "p", "q")
       .groupBy(col("decile"))
-      .agg(sum(col("p") + col("q")).as("n"), sum(col("p")).as("pos"))
-      .localCheckpoint(true) // 10 rows feed totals + cumulative
+      .agg(sum(col("p") + col("q")).as("n"), sum(col("p")).as("pos")), 10, "lift deciles")
     val tot = dd.agg(sum(col("n")).cast(DoubleType).as("tn"),
       sum(col("pos")).cast(DoubleType).as("tp"))
     val wdesc = Window.orderBy(col("decile").desc)
@@ -562,15 +562,15 @@ object Analytics {
     * aggregate over the scored scan; everything after runs at bin
     * grain (10 rows + one broadcast totals row). */
   def brierOfScores(zz: DataFrame): DataFrame = {
-    val bins = zz.selectExpr(s"${calibBinSql("z")} AS bin",
+    // bins 0..9 (a NULL z lands in 0) feed totals + per-bin terms
+    val bins = Small(zz.selectExpr(s"${calibBinSql("z")} AS bin",
         "CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + exp(-z)) AS p", "y")
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("y") > 0.5, 1L).otherwise(0L)).as("pos"),
         sum(round(col("p"), 12).cast(DecimalType(28, 12))).as("sp"),
         sum(round((col("p") - col("y")) * (col("p") - col("y")), 12)
-          .cast(DecimalType(28, 12))).as("sbs"))
-      .localCheckpoint(true) // 10 rows feed totals + per-bin terms
+          .cast(DecimalType(28, 12))).as("sbs")), calibEdges.size + 1, "brier bins")
     val tot = bins.agg(sum(col("n")).cast(LongType).as("nt"),
       sum(col("pos")).cast(LongType).as("post"),
       sum(col("sbs")).as("sbst"))
@@ -730,9 +730,9 @@ object Analytics {
     (s, d) => {
       val vg = graft.CacheScope.untracked.persist(vgOfScores(gateScores(s, d)))
       val sw = sweepOfVg(vg).select(col("t"), col("tp"), col("fp"), col("fn"))
-      val ep = vg.agg(sum(col("p")).cast(LongType).as("tp"), sum(col("q")).cast(LongType).as("fp"))
-        .selectExpr("CAST(0 AS DOUBLE) AS t", "tp", "fp", "CAST(0 AS BIGINT) AS fn")
-        .localCheckpoint(true) // one row, reused for the base rate
+      val ep = Small(vg.agg(sum(col("p")).cast(LongType).as("tp"), sum(col("q")).cast(LongType).as("fp"))
+        .selectExpr("CAST(0 AS DOUBLE) AS t", "tp", "fp", "CAST(0 AS BIGINT) AS fn"),
+        1, "pr-auc end point") // reused for the base rate
       val pts = ep.unionAll(sw)
         .selectExpr("t", "tp", "fp", "fn", s"$recExpr AS rec", s"$precExpr AS prec")
       val w = Window.orderBy(col("t"))
@@ -778,12 +778,12 @@ object Analytics {
       .select(col("pid"), coalesce(sum(col("pq")).over(wo), lit(0L)).as("baseq"))
     // class totals off the PERSISTED ranked frame (not vg — re-aggregating
     // vg would run the value-grain groupBy over the input a second time)
-    val nn = ranked.agg(sum(col("p")).cast(LongType).as("n1"),
+    val nn = Small(ranked.agg(sum(col("p")).cast(LongType).as("n1"),
       sum(col("q")).cast(LongType).as("n0"),
-      count(lit(1)).cast(LongType).as("n_values")).localCheckpoint(true)
-    val u2 = ranked.join(broadcast(offsets), Seq("pid"))
+      count(lit(1)).cast(LongType).as("n_values")), 1, "roc class totals")
+    val u2 = Small(ranked.join(broadcast(offsets), Seq("pid"))
       .selectExpr("CAST(p AS DECIMAL(19,0)) * (2 * (baseq + lq - q) + q) AS t")
-      .agg(sum(col("t")).cast(DecimalType(38, 0)).as("u2")).localCheckpoint(true)
+      .agg(sum(col("t")).cast(DecimalType(38, 0)).as("u2")), 1, "roc u statistic")
     nn.crossJoin(broadcast(u2)).selectExpr("n1", "n0", "n_values",
       "CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)) AS auc_roc")
   }
@@ -865,14 +865,14 @@ object Analytics {
   def averagePrecisionOfScores(zz: DataFrame)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     val (ranked, offsets) = runningCounts(zz, col("z").desc)
-    val nn = ranked.agg(sum(col("p")).cast(LongType).as("n1"),
+    val nn = Small(ranked.agg(sum(col("p")).cast(LongType).as("n1"),
       sum(col("q")).cast(LongType).as("n0"),
-      count(lit(1)).cast(LongType).as("n_values")).localCheckpoint(true)
-    val ap = ranked.join(broadcast(offsets), Seq("pid"))
+      count(lit(1)).cast(LongType).as("n_values")), 1, "ap class totals")
+    val ap = Small(ranked.join(broadcast(offsets), Seq("pid"))
       .filter(col("p") > 0)
       .selectExpr("CAST(round(CAST(p AS DOUBLE) * CAST(basep + lp AS DOUBLE)" +
         " / CAST((basep + lp) + (baseq + lq) AS DOUBLE), 12) AS DECIMAL(28,12)) AS t")
-      .agg(sum(col("t")).as("ap_num")).localCheckpoint(true)
+      .agg(sum(col("t")).as("ap_num")), 1, "ap numerator")
     nn.crossJoin(broadcast(ap)).selectExpr("n1", "n0", "n_values",
       "CAST(ap_num AS DOUBLE) / CAST(n1 AS DOUBLE) AS avg_precision")
   }
@@ -951,7 +951,7 @@ object Analytics {
   }
 
   /** The ascending value-grain cumulative core of [[delongOfScores]]:
-    * returns (cum = persisted (z, p, q, cp, cq), scal = checkpointed
+    * returns (cum = persisted (z, p, q, cp, cq), scal = the local
     * one-row (n1, n0, u2)). Split out (r15) so [[scorecardOfScores]]
     * can feed BOTH the DeLong readout and the exact average-precision
     * readout from ONE value-grain collapse + ONE range-partition scan
@@ -963,21 +963,20 @@ object Analytics {
     val cum = scope.persist(ranked.join(broadcast(offsets), Seq("pid"))
       .select(col("z"), col("p"), col("q"),
         (col("basep") + col("lp")).as("cp"), (col("baseq") + col("lq")).as("cq")))
-    val scal = cum.agg(sum(col("p")).cast(LongType).as("n1"),
+    val scal = Small(cum.agg(sum(col("p")).cast(LongType).as("n1"),
         sum(col("q")).cast(LongType).as("n0"),
         sum(expr("CAST(p AS DECIMAL(19,0)) * (2 * (cq - q) + q)"))
-          .cast(DecimalType(38, 0)).as("u2")).localCheckpoint(true)
+          .cast(DecimalType(38, 0)).as("u2")), 1, "delong scalars")
     (cum, scal)
   }
 
   /** The DeLong variance/CI readout over a ([[delongCumScal]]) pair. */
   private def delongReadout(cum: DataFrame, scal: DataFrame): DataFrame = {
-    val sums = cum.crossJoin(broadcast(scal))
+    val sums = Small(cum.crossJoin(broadcast(scal))
       .selectExpr(
         "CAST(round(CAST(p AS DOUBLE) * ((CAST(2 * (cq - q) + q AS DOUBLE) / (2.0 * CAST(n0 AS DOUBLE)) - CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE))) * (CAST(2 * (cq - q) + q AS DOUBLE) / (2.0 * CAST(n0 AS DOUBLE)) - CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)))), 12) AS DECIMAL(28,12)) AS t10",
         "CAST(round(CAST(q AS DOUBLE) * ((CAST(2 * (n1 - cp) + p AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE)) - CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE))) * (CAST(2 * (n1 - cp) + p AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE)) - CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)))), 12) AS DECIMAL(28,12)) AS t01")
-      .agg(sum(col("t10")).as("s10n"), sum(col("t01")).as("s01n"))
-      .localCheckpoint(true)
+      .agg(sum(col("t10")).as("s10n"), sum(col("t01")).as("s01n")), 1, "delong variance sums")
     scal.crossJoin(broadcast(sums))
       .selectExpr("n1", "n0",
         "CAST(u2 AS DOUBLE) / (2.0 * CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)) AS auc_roc",
@@ -999,12 +998,12 @@ object Analytics {
     * zz pass and two exchanges); the standalone gate keeps its
     * self-contained shape. */
   private def apFromDelongCum(cum: DataFrame, scal: DataFrame): DataFrame = {
-    val nv = cum.agg(count(lit(1)).cast(LongType).as("n_values")).localCheckpoint(true)
-    val ap = cum.crossJoin(broadcast(scal))
+    val nv = Small(cum.agg(count(lit(1)).cast(LongType).as("n_values")), 1, "ap value count")
+    val ap = Small(cum.crossJoin(broadcast(scal))
       .filter(col("p") > 0)
       .selectExpr("CAST(round(CAST(p AS DOUBLE) * CAST(n1 - cp + p AS DOUBLE)" +
         " / CAST((n1 - cp + p) + (n0 - cq + q) AS DOUBLE), 12) AS DECIMAL(28,12)) AS t")
-      .agg(sum(col("t")).as("ap_num")).localCheckpoint(true)
+      .agg(sum(col("t")).as("ap_num")), 1, "ap numerator")
     scal.crossJoin(broadcast(nv)).crossJoin(broadcast(ap))
       .selectExpr("n1", "n0", "n_values",
         "CAST(ap_num AS DOUBLE) / CAST(n1 AS DOUBLE) AS avg_precision")
@@ -1047,18 +1046,17 @@ object Analytics {
   def shapLinear(b: DataFrame, w: DataFrame)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     val bP = scope.persist(b)
-    val mo = bP.agg(count(lit(1)).cast(LongType).as("n"),
+    val mo = Small(bP.agg(count(lit(1)).cast(LongType).as("n"),
       sum(round(col("x1"), 12).cast(DecimalType(28, 12))).as("sx1"),
-      sum(round(col("x2"), 12).cast(DecimalType(28, 12))).as("sx2"))
-      .localCheckpoint(true)
+      sum(round(col("x2"), 12).cast(DecimalType(28, 12))).as("sx2")), 1, "shap feature means")
     val mm = mo.selectExpr(
       "CAST(sx1 AS DOUBLE) / CAST(n AS DOUBLE) AS m1",
       "CAST(sx2 AS DOUBLE) / CAST(n AS DOUBLE) AS m2")
-    val ag = bP.crossJoin(broadcast(mm)).crossJoin(broadcast(w))
+    val ag = Small(bP.crossJoin(broadcast(mm)).crossJoin(broadcast(w))
       .agg(
         sum(expr("CAST(round(abs(wb * (x1 - m1)), 12) AS DECIMAL(28,12))")).as("a1"),
-        sum(expr("CAST(round(abs(wc * (x2 - m2)), 12) AS DECIMAL(28,12))")).as("a2"))
-      .localCheckpoint(true)
+        sum(expr("CAST(round(abs(wc * (x2 - m2)), 12) AS DECIMAL(28,12))")).as("a2")),
+      1, "shap attribution mass")
     ag.crossJoin(broadcast(mo)).crossJoin(broadcast(w))
       .selectExpr(
         "stack(2," +
@@ -1421,7 +1419,7 @@ object Analytics {
     val offsets = ranked.groupBy(col("pid"))
       .agg(max(col("lc")).as("pc"))
       .select(col("pid"), coalesce(sum(col("pc")).over(wo), lit(0L)).as("base"))
-    val nn = ranked.agg(sum(col("cnt")).cast(LongType).as("nt")).localCheckpoint(true)
+    val nn = Small(ranked.agg(sum(col("cnt")).cast(LongType).as("nt")), 1, "rank total")
     (ranked.join(broadcast(offsets), Seq("pid"))
       .crossJoin(broadcast(nn))
       .selectExpr(c,
@@ -1489,7 +1487,7 @@ object Analytics {
     // the two per-column rank-map chains below are independent
     // scan+window+count cascades, so they run CONCURRENTLY (guide
     // §2.6) — serially, each chain's eager actions (the key count, the
-    // nn checkpoint) waited on the other's. Materializing z first
+    // nn collect) waited on the other's. Materializing z first
     // keeps the concurrent chains from racing to fill the cache and
     // duplicating the upstream scan; the harness drops checkpoint
     // blocks exactly like persists. Each chain's computation — and so
@@ -1629,7 +1627,7 @@ object Analytics {
     // eager barriers with lazy building — overlap them (guide §2.6);
     // each chain's computation is bit-identical to its serial form
     val (cc, sp, wx) = graft.Par.run3(
-      zz.agg(
+      Small(zz.agg(
           count(lit(1)).cast(LongType).as("n_pairs"),
           sum(when(expr("((za > 0) = (y > 0.5))"), 1L).otherwise(0L)).cast(LongType).as("mc_nca"),
           sum(when(expr("((zb > 0) = (y > 0.5))"), 1L).otherwise(0L)).cast(LongType).as("mc_ncb"),
@@ -1645,10 +1643,10 @@ object Analytics {
           sum(expr(correctSql("zb"))).cast(LongType).as("q_gb"),
           sum(expr(correctSql("zc"))).cast(LongType).as("q_gc"),
           sum(expr(nCorrectSql)).cast(LongType).as("q_sum_l"),
-          sum(expr(s"$nCorrectSql * $nCorrectSql")).cast(LongType).as("q_sum_l2"))
-        .localCheckpoint(true),
-      spearmanOfScores(zz.select(col("za"), col("zb"))).localCheckpoint(true),
-      wilcoxonOfScores(zz.select(col("za"), col("zb"))).localCheckpoint(true))
+          sum(expr(s"$nCorrectSql * $nCorrectSql")).cast(LongType).as("q_sum_l2")),
+        1, "contingency counts"),
+      Small(spearmanOfScores(zz.select(col("za"), col("zb"))), 1, "spearman"),
+      Small(wilcoxonOfScores(zz.select(col("za"), col("zb"))), 1, "wilcoxon"))
     val mc = cc.selectExpr("n_pairs", "mc_nca AS n_correct_a",
         "mc_ncb AS n_correct_b", "mc_n01 AS n01", "mc_n10 AS n10")
       .selectExpr("n_pairs" +: "n_correct_a" +: "n_correct_b" +: "n01" +: "n10" +:
@@ -1875,16 +1873,16 @@ object Analytics {
     * IEEE comparisons of rounded rationals. Output is monotone
     * non-decreasing by construction. */
   def isotonicOfScores(zz: DataFrame): DataFrame = {
-    val c = zz.selectExpr(s"${calibBinSql("z")} AS bin", "y")
+    // bins 0..9 (a NULL z lands in 0); all algebra below is metadata-grain
+    val c = Small(zz.selectExpr(s"${calibBinSql("z")} AS bin", "y")
       .groupBy(col("bin"))
       .agg(count(lit(1)).cast(LongType).as("n"),
-        sum(when(col("y") > 0.5, 1L).otherwise(0L)).cast(LongType).as("pos"))
-      .localCheckpoint(true) // ≤ 10 rows; all algebra below is metadata-grain
+        sum(when(col("y") > 0.5, 1L).otherwise(0L)).cast(LongType).as("pos")),
+      calibEdges.size + 1, "isotonic bins")
     val wb = Window.orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = c.withColumn("cp", sum(col("pos")).over(wb).cast(LongType))
-      .withColumn("cn", sum(col("n")).over(wb).cast(LongType))
-      .localCheckpoint(true)
+    val cum = Small(c.withColumn("cp", sum(col("pos")).over(wb).cast(LongType))
+      .withColumn("cn", sum(col("n")).over(wb).cast(LongType)), calibEdges.size + 1, "isotonic cumulatives")
     val iv = cum.selectExpr("bin AS jb", "cp AS jcp", "cn AS jcn", "pos AS jp", "n AS jn")
       .join(broadcast(cum.selectExpr("bin AS kb", "cp AS kcp", "cn AS kcn")),
         expr("jb <= kb"))
@@ -2134,25 +2132,23 @@ object Analytics {
     val li = raw.select(expr("l_orderkey % 4").as("s"),
       col("l_quantity"), col("l_discount"), col("l_extendedprice"))
     val m = gramMoments(li.filter(col("s") <= 1), yy = false)
-    val w = m.selectExpr("CAST(n AS BIGINT) AS n_train",
-      s"$detA0 / $detA AS w0", s"$detA1 / $detA AS w1", s"$detA2 / $detA AS w2")
-      .localCheckpoint(true)
+    val w = Small(m.selectExpr("CAST(n AS BIGINT) AS n_train",
+      s"$detA0 / $detA AS w0", s"$detA1 / $detA AS w1", s"$detA2 / $detA AS w2"), 1, "conformal weights")
     val ar = scope.persist(li.filter(col("s") >= 2).crossJoin(broadcast(w.drop("n_train")))
       .select(col("s"),
         expr("abs(l_extendedprice - (w0 + w1 * l_quantity + w2 * l_discount))").as("ar")))
-    val kk = ar.filter(col("s") === 2)
+    val kk = Small(ar.filter(col("s") === 2)
       .agg(count(lit(1)).cast(LongType).as("n_cal"))
-      .selectExpr("n_cal", "(9 * (n_cal + 1) + 9) div 10 AS k_cal")
-      .localCheckpoint(true)
+      .selectExpr("n_cal", "(9 * (n_cal + 1) + 9) div 10 AS k_cal"), 1, "conformal rank")
     val ranks = kk.select(lit("cal").as("g"), (col("k_cal") - 1).as("k"))
     val qv = ExactPercentiles.orderStatistics(
       ar.filter(col("s") === 2).withColumn("g", lit("cal")), "g", "ar", ranks)
       .select(col("value").as("qhat"))
-    val q = kk.crossJoin(broadcast(qv)).localCheckpoint(true)
-    val t = ar.filter(col("s") === 3).crossJoin(broadcast(q.select(col("qhat"))))
+    val q = Small(kk.crossJoin(broadcast(qv)), 1, "conformal quantile")
+    val t = Small(ar.filter(col("s") === 3).crossJoin(broadcast(q.select(col("qhat"))))
       .agg(count(lit(1)).cast(LongType).as("n_test"),
-        sum(when(col("ar") <= col("qhat"), 1L).otherwise(0L)).cast(LongType).as("covered"))
-      .localCheckpoint(true)
+        sum(when(col("ar") <= col("qhat"), 1L).otherwise(0L)).cast(LongType).as("covered")),
+      1, "conformal coverage")
     w.select(col("n_train")).crossJoin(broadcast(q)).crossJoin(broadcast(t))
       .selectExpr("n_train", "n_cal", "n_test", "k_cal", "qhat",
         "2 * qhat AS width",
@@ -2286,8 +2282,8 @@ object Analytics {
   def learningCurve(s: SparkSession, raw: DataFrame): DataFrame = {
     val li = raw.select(expr("l_orderkey % 5").as("fold"),
       col("l_quantity"), col("l_discount"), col("l_extendedprice"))
-    val fm = foldMoments(li, yy = true)
-      .localCheckpoint(true) // 5 rows; the one corpus scan runs once
+    // folds −4..4 and NULL (l_orderkey % 5); the one corpus scan runs once
+    val fm = Small(foldMoments(li, yy = true), 10, "learning-curve fold moments")
     import s.implicits._
     val ks = Seq(1, 2, 3, 4).toDF("k")
     val tr = broadcast(ks).join(broadcast(fm), col("fold") < col("k"))
@@ -2402,14 +2398,14 @@ object Analytics {
       .select(col("pid"),
         coalesce(sum(col("pa")).over(wo), lit(0L)).as("basea"),
         coalesce(sum(col("pb")).over(wo), lit(0L)).as("baseb"))
-    val nn = vg.agg(sum(col("ca")).cast(LongType).as("na"),
+    val nn = Small(vg.agg(sum(col("ca")).cast(LongType).as("na"),
       sum(col("cb")).cast(LongType).as("nb"),
-      count(lit(1)).cast(LongType).as("nv")).localCheckpoint(true)
-    val dev = ranked.join(broadcast(offsets), Seq("pid"))
+      count(lit(1)).cast(LongType).as("nv")), 1, "ks totals")
+    val dev = Small(ranked.join(broadcast(offsets), Seq("pid"))
       .crossJoin(broadcast(nn))
       .selectExpr("""abs(CAST(basea + lca AS DECIMAL(19,0)) * nb
         - CAST(baseb + lcb AS DECIMAL(19,0)) * na) AS dv""")
-      .agg(max(col("dv")).as("mx")).localCheckpoint(true)
+      .agg(max(col("dv")).as("mx")), 1, "ks max deviation")
     nn.crossJoin(broadcast(dev))
       .selectExpr("na AS n_a", "nb AS n_b", "nv AS n_values",
         s"$ksD AS d", s"$ksLambda AS lambda", s"($ksLambda > 1.358) AS reject_05")
@@ -2465,10 +2461,10 @@ object Analytics {
       .select(when(col("lt").isNotNull &&
           col("lt.tts") >= col("ts") - expr("INTERVAL 1 HOUR"), col("lt.ch"))
         .otherwise(lit("none")).as("channel"))
-    // |channels| rows — eager checkpoint: the user-keyed window scan
-    // behind it must run once, not once per consumer
-    val c = att.groupBy(col("channel")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+    // one row per touch type plus 'none', brought to the driver: the
+    // user-keyed window scan behind it runs once for both consumers
+    val c = Small(att.groupBy(col("channel")).agg(count(lit(1)).as("n")),
+      touchTypes.distinct.size + 1, "channel counts")
     val tot = c.agg(sum(col("n")).as("tot"))
     c.crossJoin(broadcast(tot))
       .select(col("channel"), col("n"),
@@ -2620,10 +2616,8 @@ object Analytics {
     round6(logregWeights(b, lr, rounds))
 
   /** 6-dp publication rounding of a one-row weight frame — a lazy
-    * projection over the (already eagerly checkpointed) training
-    * output; the former extra `localCheckpoint(true)` here spent one
-    * whole job re-materializing a 1-row rounding (guide §1.2: per-task
-    * work that costs a scheduled pass). */
+    * projection over the training output, which is already a local
+    * frame (the GD chain steps its weights on the driver). */
   private def round6(w: DataFrame): DataFrame =
     w.selectExpr("round(wa, 6) AS wa", "round(wb, 6) AS wb", "round(wc, 6) AS wc")
 
@@ -2900,7 +2894,8 @@ object Analytics {
       .agg(min(col("value")).as("mnv"), max(col("value")).as("mxv"))
     val binned = h.join(broadcast(rng), Seq("event_type"))
       .select(col("event_type"), col("half"), expr(PsiBinExpr).as("bin"))
-    // |types| × 2 × 10 rows — eager checkpoint: one corpus count
+    // |types| × 2 × 10 rows — the event-type domain sets the size, so
+    // no constant bounds it: an eager checkpoint, so one corpus count
     // shuffle feeds grid, totals, and cells
     val cnt = binned.groupBy(col("event_type"), col("half"), col("bin"))
       .agg(count(lit(1)).as("c"))
@@ -3003,10 +2998,10 @@ object Analytics {
     (s, d) => {
       val li = Tables.fanout(Tables.lineitem(s, d).select(expr("l_orderkey % 5").as("fold"),
         col("l_quantity"), col("l_discount"), col("l_extendedprice")))
-      // 5 rows of exact DECIMAL sums — totals and train moments derive
-      // from them without touching the corpus again
-      val fm = foldMoments(li, yy = false)
-        .localCheckpoint(true)
+      // exact DECIMAL sums of folds −4..4 and NULL (l_orderkey % 5) —
+      // totals and train moments derive from them without touching
+      // the corpus again
+      val fm = Small(foldMoments(li, yy = false), 10, "kfold moments")
       val tot = fm.agg(sum(col("cnt")).as("tcnt"), sum(col("d1")).as("t1"),
         sum(col("d2")).as("t2"), sum(col("dy")).as("ty"),
         sum(col("d11")).as("t11"), sum(col("d12")).as("t12"), sum(col("d22")).as("t22"),
@@ -3021,9 +3016,8 @@ object Analytics {
         (col("t22") - col("d22")).cast(DoubleType).as("s22"),
         (col("t1y") - col("d1y")).cast(DoubleType).as("s1y"),
         (col("t2y") - col("d2y")).cast(DoubleType).as("s2y"))
-      val w = train.selectExpr("fold", "n_test", "CAST(n AS BIGINT) AS n_train",
-          s"$detA0 / $detA AS w0", s"$detA1 / $detA AS w1", s"$detA2 / $detA AS w2")
-        .localCheckpoint(true)
+      val w = Small(train.selectExpr("fold", "n_test", "CAST(n AS BIGINT) AS n_train",
+          s"$detA0 / $detA AS w0", s"$detA1 / $detA AS w1", s"$detA2 / $detA AS w2"), 10, "kfold weights")
       val r = li.join(broadcast(w.select(col("fold"), col("w0"), col("w1"), col("w2"))), Seq("fold"))
         .select(col("fold"), (col("l_extendedprice") -
           (col("w0") + col("w1") * col("l_quantity") + col("w2") * col("l_discount"))).as("resid"))
@@ -3219,9 +3213,9 @@ object Analytics {
     * tiebreak. Grid algebra at 9-row grain past the ONE sweep scan. */
   def costOptOfScores(zz: DataFrame)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
-    val grid = sweepOfVg(vgOfScores(zz))
-      .selectExpr("t", "tp", "fp", "fn", s"$CostFp * fp + $CostFn * fn AS cost")
-      .localCheckpoint(true) // 9 rows feed the argmin and the output
+    // the 9 sweep thresholds feed the argmin and the output
+    val grid = Small(sweepOfVg(vgOfScores(zz))
+      .selectExpr("t", "tp", "fp", "fn", s"$CostFp * fp + $CostFn * fn AS cost"), 9, "cost grid")
     val best = grid.agg(min(col("cost")).as("min_cost"))
     val bestT = grid.crossJoin(broadcast(best))
       .filter(col("cost") === col("min_cost"))
@@ -3341,7 +3335,8 @@ object Analytics {
 
   /** Weekday χ² readout over (event_type, ts) rows — see [[q66]]. */
   def seasonalityOf(ev: DataFrame): DataFrame = {
-    // |types|×7 rows — checkpoint so the corpus count runs once
+    // |types|×7 rows — the event-type domain sets the size, so no
+    // constant bounds it: checkpoint so the corpus count runs once
     val c = ev
       .select(col("event_type"), expr(DowSpark).as("dow"))
       .groupBy(col("event_type"), col("dow")).agg(count(lit(1)).as("o"))

@@ -1,9 +1,12 @@
 package graft.operators
 
-import graft.CacheScope
-import org.apache.spark.sql.DataFrame
+import graft.{CacheScope, Small}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** EXACT interpolated percentiles that scale: distributed order-
   * statistic selection by iterative range narrowing (the classic
@@ -20,9 +23,10 @@ import org.apache.spark.sql.functions._
   *  2. each pass histograms the in-range rows of every unresolved
   *     (group, rank) target into 2^16 buckets (map-side partial
   *     aggregation; the shuffle carries buckets, never rows), walks
-  *     the tiny cumulative histogram to find the bucket holding the
-  *     target rank, and narrows the range to that bucket's ACTUAL
-  *     [min, max] while reducing the rank to its offset inside it;
+  *     the cumulative histogram in Spark to find the bucket holding
+  *     the target rank, collects that one bucket per target, and
+  *     narrows the range to the bucket's ACTUAL [min, max] while
+  *     reducing the rank to its offset inside it;
   *  3. a target resolves when its bucket holds a single long pattern
   *     (min == max — every row in it is the same double). Nominal
   *     narrowing is 2^16× per pass, so 4 passes pin any 64-bit
@@ -34,8 +38,10 @@ import org.apache.spark.sql.functions._
   *     per-bucket long min/max).
   *
   * The full-table scans per pass read one pruned (group, value)
-  * projection (persisted via the caller's [[graft.CacheScope]]), and
-  * all selection state is (groups × ranks) rows — KBs. Interpolation
+  * projection, persisted via the caller's [[graft.CacheScope]]. Each
+  * pass collects one row per live (group, rank) target, at most
+  * [[MaxTargets]], and the narrowing between passes runs on the
+  * driver: no selection state is ever an executor block. Interpolation
   * matches Spark `percentile` BIT-FOR-BIT: the two-sided
   * `(⌈r⌉ − r)·lo + (r − ⌊r⌋)·hi` at rank `r = p·(n−1)` — NOT the
   * algebraically-equal `lo + (hi − lo)·(r − ⌊r⌋)`, which rounds
@@ -122,10 +128,9 @@ object ExactPercentiles {
     val out = targets
       .withColumn("kf", floor(col("r")).cast("long"))
       .withColumn("kc", ceil(col("r")).cast("long"))
-      // resolved is (groups × ranks)-scale but assembled from
-      // checkpointed stats-free frames — without the hint the
-      // interpolation join can fall to a sort-merge (r9: q88 planned
-      // one; the r8 checkpoint-blinds-stats lesson)
+      // resolved is a local frame of at most MaxTargets rows; the
+      // hints keep both interpolation joins broadcast whatever the
+      // planner estimates (r9: q88 once planned a sort-merge here)
       .join(broadcast(resolved.toDF("g", "kf", "xlo")), Seq("g", "kf"))
       .join(broadcast(resolved.toDF("g", "kc", "xhi")), Seq("g", "kc"))
       // integral rank returns the order statistic ITSELF (as Spark's
@@ -141,7 +146,7 @@ object ExactPercentiles {
     * (g, k) frame naming, for each group, the ascending-order index
     * (0 = smallest non-null value) to select; returns (g, k, value).
     * The same narrowing selection as [[percentiles]] — never a sort
-    * shuffle, selection state is (groups × ranks) rows — for callers
+    * shuffle, at most [[MaxTargets]] (g, k) targets — for callers
     * whose rank is an exact integer (conformal calibration's
     * ⌈(1−α)(n+1)⌉-th residual) rather than an interpolated p. A rank
     * outside [0, n) simply never resolves inside a real bucket and
@@ -193,26 +198,40 @@ object ExactPercentiles {
     grained.transform(scope.persist)
   }
 
+  /** Most (group, rank) targets one selection resolves. The narrowing
+    * state is one driver-side row per live target, so this bounds what
+    * each pass collects. Every caller groups by a small domain, with at
+    * most 2·|ps| ranks a group (k for the equidepth buckets):
+    * `l_returnflag` (q39), the order priority (the order-gap and
+    * lead-time percentiles), `event_type` (winsorize, MAD, Theil–Sen,
+    * percentile bands), the 3-metric RFM unpivot, join skew's 2-value
+    * `kc` literal, or one constant group (lift deciles, conformal
+    * calibration, the equidepth boundaries, the quality and perplexity
+    * thresholds). The largest is the percentile bands' 6 ranks for each
+    * of the 5 event types: 30 targets. */
+  val MaxTargets = 4096
+
   /** Core multi-pass selection: resolves every (g, k) target in
     * `ranks` to its value over the prepared `data`; returns the
-    * (g, k, v) frame and the pass count. */
-  private def selectRanks(data: DataFrame, ranks: DataFrame)(
-      implicit scope: CacheScope): (DataFrame, Int) = {
+    * (g, k, v) frame, local, and the pass count. Each pass histograms
+    * and walks the buckets in Spark and collects one row per live
+    * target; the narrowing state between passes lives on the driver. */
+  private def selectRanks(data: DataFrame, ranks: DataFrame): (DataFrame, Int) = {
+    val spark = data.sparkSession
     // selection state per (g, k): s-range [lo, hi] (inclusive) still in
     // play and the rank offset `rem` inside it. Initial range = the
     // group's actual s min/max (also resolves single-value groups on
     // pass 1 without the full-domain span).
     val bounds = data.groupBy(col("g")).agg(min(col("s")).as("glo"), max(col("s")).as("ghi"))
-    var state = ranks.join(bounds, Seq("g"))
+    val seed = ranks.join(bounds, Seq("g"))
       .select(col("g"), col("k"), col("glo").as("lo"), col("ghi").as("hi"), col("k").as("rem"))
-      .localCheckpoint(true)
-    var resolved: DataFrame = ranks.limit(0)
-      .select(col("g"), col("k"), lit(0.0).as("v")) // typed empty seed
+    var live = Small.rows(seed, MaxTargets, "percentile bounds")
+    val resolved = mutable.ArrayBuffer.empty[Row]
 
     var pass = 0
-    var live = !state.isEmpty // tiny checkpointed frame — metadata-scale check
-    while (live && pass < MaxPasses) {
+    while (live.nonEmpty && pass < MaxPasses) {
       pass += 1
+      val state = spark.createDataFrame(live.toSeq.asJava, seed.schema)
       // bucket the in-range rows of every live target. Offsets inside
       // [lo, hi] are computed in LONG arithmetic and cast ONCE — exact
       // and monotone whenever hi − lo fits in a long. Casting s and lo
@@ -243,25 +262,28 @@ object ExactPercentiles {
           min(col("rem")).as("rem")) // constant per (g, k) — carried through
       val w = Window.partitionBy(col("g"), col("k")).orderBy(col("b"))
         .rowsBetween(Window.unboundedPreceding, -1)
+      // the one bucket of each target that holds its rank: at most one
+      // row per live target comes back, never the histogram
       val sel = hist
         .withColumn("cum", coalesce(sum(col("c")).over(w), lit(0L)))
         .filter(col("cum") <= col("rem") && col("rem") < col("cum") + col("c"))
         .select(col("g"), col("k"), col("bmin").as("lo"), col("bmax").as("hi"),
           (col("rem") - col("cum")).as("rem"), col("bx").as("v"))
-        .localCheckpoint(true) // truncate the per-pass lineage (tiny frame)
-      val done = sel.filter(col("lo") === col("hi")).select(col("g"), col("k"), col("v"))
-      resolved = resolved.union(done)
-      state = sel.filter(col("lo") =!= col("hi"))
-        .select(col("g"), col("k"), col("lo"), col("hi"), col("rem"))
-      // early-exit: once every (group, rank) resolves (typically pass
-      // 2–3), stop scheduling scans — `state` filters the pass's tiny
-      // checkpointed `sel`, so the emptiness check costs ~nothing
-      live = !state.isEmpty
+      val (done, open) = Small.rows(sel, MaxTargets, "percentile pass")
+        .partition(r => r.getLong(2) == r.getLong(3))
+      resolved ++= done.map(r => Row(r(0), r(1), r(5)))
+      // early exit: once every (group, rank) resolves (typically pass
+      // 2–3), stop scheduling scans
+      live = open.map(r => Row.fromSeq(r.toSeq.take(5)))
     }
     // MaxPasses of 2^16 narrowing pin any 64-bit pattern; a live row
     // here means the invariant broke — fail loudly, never silently
-    if (live) throw new IllegalStateException(
+    if (live.nonEmpty) throw new IllegalStateException(
       s"ExactPercentiles did not resolve within $MaxPasses passes")
-    (resolved, pass)
+    // (g, k, v) typed as ranks' columns; v takes the nullability of
+    // the min(x) it came from once a pass ran
+    val typed = ranks.select(col("g"), col("k"), lit(0.0).as("v")).schema
+    val schema = if (pass == 0) typed else StructType(typed.init :+ typed.last.copy(nullable = true))
+    (spark.createDataFrame(resolved.asJava, schema), pass)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Portable, QueryDef, Tables}
+import graft.{Portable, QueryDef, Small, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -410,10 +410,11 @@ object Insights2 {
   /** Benford audit over one positive-BIGINT `v` column — see [[q85]]. */
   def benfordAudit(amounts: DataFrame): DataFrame = {
     val pArr = benfordP.map(p => s"CAST($p AS DOUBLE)").mkString("array(", ", ", ")")
-    val o = amounts
+    // the 9 first digits of a positive v below 10^15 feed the total
+    // AND the grid join; a v outside that range fails the bound
+    val o = Small(amounts
       .selectExpr(s"${firstDigitSql("v", "div")} AS d")
-      .groupBy(col("d")).agg(count(lit(1)).cast(LongType).as("n"))
-      .localCheckpoint(true) // ≤9 rows feed the total AND the grid join
+      .groupBy(col("d")).agg(count(lit(1)).cast(LongType).as("n")), 9, "benford digit counts")
     val nn = o.agg(sum(col("n")).cast(LongType).as("nt"))
     val grid = amounts.sparkSession.range(1, 10)
       .selectExpr("id AS d", s"element_at($pArr, CAST(id AS INT)) AS p")
@@ -1070,7 +1071,7 @@ object Insights2 {
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     val s = v.sparkSession
     import s.implicits._
-    val nn = v.agg(count(lit(1)).cast(LongType).as("n")).localCheckpoint(true)
+    val nn = Small(v.agg(count(lit(1)).cast(LongType).as("n")), 1, "equidepth row count")
     // 0-based rank of bucket i's upper boundary: ceil(i*n/k) - 1
     val ranks = broadcast(nn).crossJoin(broadcast((1 to k).toDF("bucket")))
       .selectExpr("'x' AS g", "bucket", s"(bucket * n + $k - 1) div $k - 1 AS k")
@@ -1080,11 +1081,12 @@ object Insights2 {
     // in bucket, so a sort-free join on k suffices)
     val withB = ranks.join(broadcast(bd), Seq("g", "k"))
       .select(col("bucket"), col("value").as("hi"))
-    val bb = withB
+    // one row per bucket; the single-partition window runs once, in
+    // the collect, so its warning is logged once
+    val bb = Small(withB
       .withColumn("lo", lag(col("hi"), 1).over(
         org.apache.spark.sql.expressions.Window.orderBy(col("bucket"))))
-      .select(col("bucket"), col("lo"), col("hi"))
-      .localCheckpoint(true) // k rows; also silences the single-partition window warn
+      .select(col("bucket"), col("lo"), col("hi")), k, "equidepth bounds")
     // left-join the counts back so a bucket emptied by tied
     // boundaries (lo = hi) still surfaces with n_rows = 0, exactly
     // as the oracle's sum(CASE) over all k buckets does
@@ -1156,13 +1158,12 @@ object Insights2 {
   /** Exact Σ f_A·f_B join-size prediction over two (k, f) key-count
     * frames — see [[q93]]. */
   def joinSizeEstimate(name: String, fa: DataFrame, fb: DataFrame): DataFrame = {
-    val sa = fa.agg(sum(col("f")).cast(LongType).as("rows_a"),
-      count(lit(1)).cast(LongType).as("keys_a")).localCheckpoint(true)
-    val sb = fb.agg(sum(col("f")).cast(LongType).as("rows_b"),
-      count(lit(1)).cast(LongType).as("keys_b")).localCheckpoint(true)
-    val est = fa.join(fb.withColumnRenamed("f", "fb"), Seq("k"))
-      .agg(sum(expr("CAST(f AS DECIMAL(19,0)) * fb")).cast(LongType).as("est_rows"))
-      .localCheckpoint(true)
+    val sa = Small(fa.agg(sum(col("f")).cast(LongType).as("rows_a"),
+      count(lit(1)).cast(LongType).as("keys_a")), 1, "join side a totals")
+    val sb = Small(fb.agg(sum(col("f")).cast(LongType).as("rows_b"),
+      count(lit(1)).cast(LongType).as("keys_b")), 1, "join side b totals")
+    val est = Small(fa.join(fb.withColumnRenamed("f", "fb"), Seq("k"))
+      .agg(sum(expr("CAST(f AS DECIMAL(19,0)) * fb")).cast(LongType).as("est_rows")), 1, "join size")
     broadcast(sa).crossJoin(broadcast(sb)).crossJoin(broadcast(est))
       .selectExpr(s"'$name' AS join_name", "rows_a", "keys_a", "rows_b", "keys_b",
         "est_rows", "CAST(est_rows AS DOUBLE) / greatest(rows_a, rows_b) AS fanout")

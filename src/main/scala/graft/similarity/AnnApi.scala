@@ -1,10 +1,10 @@
 package graft.similarity
 
+import graft.Small
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, StructType}
-import scala.jdk.CollectionConverters._
 
 /** User-facing parameterized ANN API (the `Similarity` QueryDefs are
   * thin instantiations). All variants share one contract: `probeIds`
@@ -452,7 +452,7 @@ object AnnApi {
       // is per POSITION, not per row
       val c = centroidMeans(tr, Seq("cell"), "v").withColumn("cn", expr("sqrt(graft_dot(cm, cm))"))
       // pmod keeps a cell in [0, kCells); a NULL id adds the NULL cell
-      val cents = rowsLit(boundedRows(c, kCells + 1, "kmeansCells centroids"), c.schema)
+      val cents = rowsLit(Small.rows(c, kCells + 1, "kmeansCells centroids"), c.schema)
       // map-only argmax: array_max uses the same struct ordering as
       // the max() aggregate — best cosine, smallest cell on ties
       val cellExpr = expr(
@@ -463,14 +463,6 @@ object AnnApi {
       else tr = tr.withColumn("cents", cents).select(col(id), col("v"), col("nrm"), cellExpr)
     }
     out
-  }
-
-  /** A loop's bounded state collected to the driver: the rows of `df`,
-    * which must number at most `bound` (`what` names the state). */
-  private[graft] def boundedRows(df: DataFrame, bound: Int, what: String): Array[Row] = {
-    val rows = df.collect()
-    require(rows.length <= bound, s"$what: ${rows.length} rows, bound $bound")
-    rows
   }
 
   /** Collected rows as ONE literal array of structs of `schema`'s row
@@ -547,14 +539,14 @@ object AnnApi {
       m: Int = 8, subDim: Int = 8, kCodes: Int = 16, iters: Int = 2, trainMod: Int = 4)(
       implicit scope: graft.CacheScope = graft.CacheScope.untracked): DataFrame = {
     require(m >= 1 && subDim >= 1, s"bad pq geometry: m=$m subDim=$subDim")
-    pqCodebooksFromSub(subVectors(corpus, id, vec, m, subDim), id, kCodes, iters, trainMod)
+    pqCodebooksFromSub(subVectors(corpus, id, vec, m, subDim), id, m, kCodes, iters, trainMod)
   }
 
   /** [[pqCodebooks]] over prebuilt (id, s, vs) sub-vector rows — the
     * entry the residual variant shares, so raw and residual codebooks
-    * train through literally the same loop. */
+    * train through literally the same loop; `sub` has `m` subspaces. */
   private def pqCodebooksFromSub(sub: DataFrame, id: String,
-      kCodes: Int, iters: Int, trainMod: Int)(
+      m: Int, kCodes: Int, iters: Int, trainMod: Int)(
       implicit scope: graft.CacheScope): DataFrame = {
     require(kCodes >= 1 && iters >= 1 && trainMod >= 1)
     graft.functions.Natives.ensure(sub.sparkSession)
@@ -571,12 +563,9 @@ object AnnApi {
     var codebook: DataFrame = null
     for (it <- 1 to iters) {
       val c = centroidMeans(tr, Seq("s", "code"), "vs").withColumn("cn2", expr("graft_dot(cm, cm)"))
-      val rows = c.collect()
-      // pmod keeps a code in [0, kCodes) and the argmin only picks a
-      // collected one: at most kCodes entries per subspace
-      require(rows.groupBy(_.get(0)).forall(_._2.length <= kCodes),
-        s"pqCodebooks: more than kCodes = $kCodes codebook entries in a subspace")
-      codebook = sub.sparkSession.createDataFrame(rows.toSeq.asJava, c.schema)
+      // s is in [0, m), pmod keeps a code in [0, kCodes) and the
+      // argmin only picks a collected one: at most m·kCodes entries
+      codebook = Small(c, m * kCodes, "pq codebook")
       if (it < iters) tr = assignCodes(train, id, codebook)
     }
     codebook
@@ -761,7 +750,7 @@ object AnnApi {
           .select(col(id), expr("zip_with(u, cu, (a, b) -> a - b)").as("rv")),
         Seq(id), m, subDim)
       .transform(scope.persist)
-    val codebook = pqCodebooksFromSub(rsub, id, kCodes, pqIters, trainMod)
+    val codebook = pqCodebooksFromSub(rsub, id, m, kCodes, pqIters, trainMod)
     val codes = assignCodes(rsub, id, codebook)
     // one distance table per (probe, probed cell): the probe's residual
     // against THAT cell's centroid

@@ -8,9 +8,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Loops whose state the domain bounds (q90's types² transition cells,
-  * the GD chain's 3 weights, the Lloyd loops' k centroids) run their
-  * recurrences on the driver: only the passes over data are Spark
-  * jobs, and degenerate inputs give what the Spark-side loops gave. */
+  * the GD chain's 3 weights, the Lloyd loops' k centroids, the
+  * percentile selection's targets) run their recurrences on the
+  * driver: only the passes over data are Spark jobs, and degenerate
+  * inputs give what the Spark-side loops gave. */
 class DriverLoopSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -32,25 +33,53 @@ class DriverLoopSpec extends AnyFunSuite {
     assert(jobs.get <= 5, s"q90 ran ${jobs.get} jobs")
   }
 
-  test("the GD chain runs one collected gradient aggregate per round and no localCheckpoint") {
+  /** `body`'s result and the QueryExecutionListener actions it ran. */
+  private def actionsOf[T](body: => T): (T, Seq[String]) = {
     val actions = new ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         actions.add(funcName)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    spark.listenerManager.register(listener)
+    try {
+      val t = body
+      assert(Harness.drainListenerBus(spark), "listener bus did not drain within 10s")
+      (t, actions.toArray(Array.empty[String]).toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("the GD chain runs one collected gradient aggregate per round and no localCheckpoint") {
     val b = (0 until 50).map(i => ((i % 7).toDouble - 3, (i % 3).toDouble, (i % 2).toDouble))
       .toDF("x1", "x2", "y")
-    spark.listenerManager.register(listener)
-    val chain = try {
-      val c = operators.Analytics.logregWeightsChain(b, rounds = 3)
-      assert(Harness.drainListenerBus(spark), "listener bus did not drain within 10s")
-      c
-    } finally spark.listenerManager.unregister(listener)
-    val ran = actions.toArray(Array.empty[String]).toSeq
+    val (chain, ran) = actionsOf(operators.Analytics.logregWeightsChain(b, rounds = 3))
     assert(ran == Seq.fill(3)("collect"), s"actions: $ran")
     assert(chain.size == 4)
     assert(chain.last.collect().head == operators.Analytics.logregWeights(b).collect().head)
+  }
+
+  test("percentile selection collects the bounds, then one row per target a pass, and checkpoints nothing") {
+    // ExactPercentilesSpec's ulp trap: two doubles 1 dbits ulp apart
+    val ulps = Seq((0L, 0.3), (0L, 0.1 + 0.2)).toDF("g", "x")
+    val (passes, ran) = actionsOf(CacheScope.withScope { implicit s =>
+      operators.ExactPercentiles.percentilesCounted(ulps, "g", "x", Seq(0.5))._2
+    })
+    assert(passes == 1, s"the ulp-apart pair must resolve on pass 1, took $passes")
+    assert(ran == Seq.fill(1 + passes)("collect"), s"actions: $ran")
+  }
+
+  test("Small keeps an empty frame's schema and fails over its bound naming the step") {
+    val df = spark.range(3).selectExpr("CAST(id AS DECIMAL(38,0)) AS d", "id",
+      "CAST(IF(id = 1, NULL, id) AS DECIMAL(10,2)) AS n")
+    assert(!df.schema("id").nullable && df.schema("n").nullable)
+    val empty = Small(df.limit(0), 0, "empty step")
+    assert(empty.schema == df.schema)
+    assert(empty.collect().isEmpty)
+    val all = Small(df, 3, "three rows")
+    assert(all.schema == df.schema)
+    assert(all.collect().toSet == df.collect().toSet)
+    val e = intercept[IllegalArgumentException](Small(df, 2, "bounded step"))
+    assert(e.getMessage.contains("bounded step: 3 rows, bound 2"), e.getMessage)
   }
 
   test("GD on an empty frame gives NULL weights") {

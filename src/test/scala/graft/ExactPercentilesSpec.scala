@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The scalable exact-selection percentiles must equal Spark's
@@ -220,6 +221,29 @@ class ExactPercentilesSpec extends AnyFunSuite {
     }
     assert(out.nonEmpty)
     assert(passes == 1, s"bounded domain under valueGrain must resolve in one pass, took $passes")
+  }
+
+  test("empty input, an all-NULL value column and a rank k >= n give no row, typed as ever") {
+    import spark.implicits._
+    val one = Seq((0L, 1.0)).toDF("g", "x")
+    val nulls = Seq((0L, null: java.lang.Double), (1L, null)).toDF("g", "x")
+    val ranks = Seq((0L, 5L), (1L, 0L)).toDF("g", "k")
+    val pct = StructType(Seq(StructField("g", LongType, nullable = false),
+      StructField("p", DoubleType, nullable = false), StructField("value", DoubleType)))
+    // with no target at all no pass runs, and `value` is NOT NULL
+    def ord(valueNullable: Boolean) = StructType(Seq(StructField("g", LongType, nullable = false),
+      StructField("k", LongType, nullable = false), StructField("value", DoubleType, valueNullable)))
+    CacheScope.withScope { implicit s =>
+      for (df <- Seq(one.limit(0), nulls)) {
+        val p = operators.ExactPercentiles.percentiles(df, "g", "x", Seq(0.5))
+        assert(p.schema == pct && p.collect().isEmpty)
+        val o = operators.ExactPercentiles.orderStatistics(df, "g", "x", ranks)
+        assert(o.schema == ord(valueNullable = false) && o.collect().isEmpty)
+      }
+      // group 0 has one value, so rank 5 never resolves; group 1 is absent
+      val o = operators.ExactPercentiles.orderStatistics(one, "g", "x", ranks)
+      assert(o.schema == ord(valueNullable = true) && o.collect().isEmpty)
+    }
   }
 
   test("orderStatistics: duplicate (g, k) targets select the TRUE rank, once") {

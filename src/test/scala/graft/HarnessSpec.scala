@@ -99,6 +99,25 @@ class HarnessSpec extends AnyFunSuite {
     assert(compact.get("value").asDouble == full.get("value").asDouble)
   }
 
+  test("eachQuery describes every job by its query, and Small's collects by their step") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (!Harness.isDrainMarker(e)) descriptions.add(Harness.description(e))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Harness.eachQuery(spark, Seq("q91_theil_sen"))((_, q) => Harness.runNoop(q(TestSpark.sfDir)))
+      assert(Harness.drainListenerBus(spark), "listener bus did not drain within 10s")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val seen = descriptions.toArray(Array.empty[String]).toSeq
+    // the Theil–Sen medians' percentile passes are Small collects
+    assert(seen.contains("q91_theil_sen/percentile pass"), seen)
+    assert(seen.forall(d => d == "q91_theil_sen" || d.startsWith("q91_theil_sen/")), seen)
+    assert(spark.sparkContext.getLocalProperty(Harness.JobDescription) == null)
+  }
+
   test("explainExecuted prints the stages a builder collects while it builds") {
     // q90 collects its transition cells and iterates on the driver:
     // the static plan is one LocalTableScan, the work is in the collect

@@ -10,6 +10,9 @@ from change to change:
   scope.persist     CacheScope persist call sites (scope.persist and
                     CacheScope.untracked.persist)
   withScope         withScope occurrences on code lines
+  bounded_frames    call sites of graft.Small, the helper that collects
+                    a frame of stated bounded size to the driver
+                    (Small(...) and Small.rows(...))
   bcast_crossjoin   code lines that call `crossJoin(broadcast(`
   dup_block_lines   lines that sit in a second or later copy of a
                     block of 4 consecutive code lines (trimmed, blank
@@ -76,10 +79,12 @@ def main():
     persists = len(re.findall(r"\b(?:scope|untracked)\.persist\b", text))
     scopes = len(re.findall(r"\bwithScope\b", text))
     bcast = sum("crossJoin(broadcast(" in t for t in text.split("\n"))
+    bounded = len(re.findall(r"\bSmall(?:\.rows)?\(", text))
     print(f"code_lines       {sum(map(len, lines.values()))}")
     print(f"localCheckpoint  {checkpoints}")
     print(f"scope.persist    {persists}")
     print(f"withScope        {scopes}")
+    print(f"bounded_frames   {bounded}")
     print(f"bcast_crossjoin  {bcast}")
     print(f"dup_block_lines  {len(dup)}")
     sources = {p: open(p, encoding="utf-8").read() for p in paths}
