@@ -32,13 +32,58 @@ final case class QueryDef(
 
 /** Parquet table loaders for the driver test data.
   *
-  * Always `spark.read.parquet` — Catalyst prunes columns and pushes
+  * Always a parquet scan — Catalyst prunes columns and pushes
   * predicates into the scan, which is what makes these plans survive a
   * 100 TB scale-up (the scan reads only the referenced columns).
+  *
+  * A bare `spark.read.parquet(path)` infers the schema from the file
+  * footers, and that inference is a Spark job on every read. [[parquet]]
+  * runs Spark's own inference once per file version and reads with
+  * the schema it gave (`spark.read.schema(s).parquet(path)`, no job).
+  * The memo keeps one entry per path. An entry holds for the version
+  * it was inferred from: the (path, length, modification time) of
+  * every leaf file under the path, and every set session conf whose
+  * key contains `parquet` (`nanosAsLong`, `binaryAsString`, ...). A
+  * rewritten file, an added or removed file, or a changed parquet conf
+  * infers again and replaces the entry. Checking the version costs one
+  * Hadoop listing of the path on the driver and no Spark job.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` with the schema inferred once per file
+    * version; see [[Tables]]. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+
+  private final case class Version(files: Seq[(String, Long, Long)], confs: Map[String, String])
+
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, (Version, StructType)]
+
+  // the inference runs outside the map's locks: Par threads read
+  // tables concurrently, and two misses on one path both infer and
+  // put the same schema
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val version = versionOf(spark, path)
+    Option(schemas.get(path)).collect { case (`version`, schema) => schema }.getOrElse {
+      val schema = spark.read.parquet(path).schema
+      schemas.put(path, (version, schema))
+      schema
+    }
+  }
+
+  private def versionOf(spark: SparkSession, path: String): Version = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    // a missing path has no files; the inference then fails with
+    // Spark's own error and nothing is memoized
+    val files = try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
+    } catch { case _: java.io.FileNotFoundException => Vector.empty }
+    Version(files, spark.conf.getAll.filter(_._1.contains("parquet")))
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

@@ -48,11 +48,16 @@ object Harness {
   }
 
   /** Drops every cached block between queries: the lifetime rule for
-    * query builders, whose persists are untracked. clearCache() only
-    * drops catalog-tracked cache entries; the localCheckpoint(true)
-    * RDDs of loop builders would otherwise wait on the GC-driven
-    * ContextCleaner and pile up block-manager memory across a session.
-    * blocking = true, so no block removal bleeds into the next timed run. */
+    * query builders, whose persists are untracked. clearCache() drops
+    * the frames persisted through [[CacheScope]] (Dataset.persist
+    * registers them with the session's cache manager). It does not see
+    * RDD-level blocks: the localCheckpoint(true) RDDs of the loops whose
+    * state the data sizes (the graph loops' per-vertex state, among
+    * others) and any RDD persisted directly. Unpersisting every
+    * persistent RDD drops those, which would otherwise wait on the
+    * GC-driven ContextCleaner and pile up block-manager memory across a
+    * session. blocking = true, so no block removal bleeds into the next
+    * timed run. */
   def dropAllBlocks(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))

@@ -220,7 +220,7 @@ object Multimodal {
       ORDER BY i.img_id, hh.bin"""),
     (s, d) => {
       val path = ImageGate.ensureParquet(s)
-      imageFeatures(s.read.parquet(path), "img_id", "png")
+      imageFeatures(Tables.parquet(s, path), "img_id", "png")
         .select(col("doc_id").as("img_id"),
           col("width").cast("long").as("width"),
           col("height").cast("long").as("height"),
@@ -257,7 +257,7 @@ object Multimodal {
       val path = ImageGate.ensureParquet(s)
       val sp = s
       import sp.implicits._
-      val resized = s.read.parquet(path)
+      val resized = Tables.parquet(s, path)
         .filter(pmod(col("img_id"), lit(2)) === 0) // solid-color images only
         .select(col("img_id"), col("png"))
         .as[(Long, Array[Byte])]
@@ -379,7 +379,7 @@ object Multimodal {
       FROM agg ORDER BY audio_id"""),
     (s, d) => {
       val path = AudioGate.ensureParquet(s)
-      audioFeatures(s.read.parquet(path), "audio_id", "wav")
+      audioFeatures(Tables.parquet(s, path), "audio_id", "wav")
         .orderBy(col("audio_id"))
     }, bench = false)
 
@@ -505,7 +505,7 @@ object Multimodal {
       FROM agg ORDER BY audio_id"""),
     (s, d) => {
       val path = VadGate.ensureParquet(s)
-      vadFeatures(s.read.parquet(path), "audio_id", "wav")
+      vadFeatures(Tables.parquet(s, path), "audio_id", "wav")
         .selectExpr("audio_id", "n_samples", "n_frames", "n_voiced", "n_segments",
           s"${Portable.round6RatioSpark("n_voiced", "n_frames")} AS voiced_fraction")
         .orderBy(col("audio_id"))
@@ -668,7 +668,7 @@ object Multimodal {
       // (band-size cap aggregate, band-join build, two hash-lookup
       // joins) — unpersisted, the mapPartitions image decode would
       // recompute per consumer
-      val hs = graft.CacheScope.untracked.persist(s.read.parquet(path)
+      val hs = graft.CacheScope.untracked.persist(Tables.parquet(s, path)
         .select(col("img_id").cast("long"), col("png").cast("binary"))
         .filter(col("img_id").isNotNull && col("png").isNotNull)
         .as[(Long, Array[Byte])]
@@ -761,7 +761,7 @@ object Multimodal {
       val sp = s
       import sp.implicits._
       val path = AudioGate.ensureParquet(s)
-      val fp = s.read.parquet(path)
+      val fp = Tables.parquet(s, path)
         .select(col("audio_id").cast("long"), col("wav").cast("binary"))
         .as[(Long, Array[Byte])]
         .mapPartitions(_.flatMap { case (i, bytes) => decodeAudioFp(i, bytes) })

@@ -4,7 +4,6 @@ import graft.{CacheScope, Small}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -280,10 +279,10 @@ object ExactPercentiles {
     // here means the invariant broke — fail loudly, never silently
     if (live.nonEmpty) throw new IllegalStateException(
       s"ExactPercentiles did not resolve within $MaxPasses passes")
-    // (g, k, v) typed as ranks' columns; v takes the nullability of
-    // the min(x) it came from once a pass ran
-    val typed = ranks.select(col("g"), col("k"), lit(0.0).as("v")).schema
-    val schema = if (pass == 0) typed else StructType(typed.init :+ typed.last.copy(nullable = true))
+    // (g, k, v) typed as ranks' columns; v is nullable like the min(x)
+    // it comes from, also when no pass ran, so the schema never
+    // depends on the data
+    val schema = ranks.select(col("g"), col("k"), lit(null).cast("double").as("v")).schema
     (spark.createDataFrame(resolved.asJava, schema), pass)
   }
 }

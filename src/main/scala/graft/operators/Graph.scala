@@ -136,9 +136,10 @@ object Graph {
     * endpoint to its higher one; a triangle {a, b, c} in rank order
     * has oriented edges a→b, a→c, b→c and is counted exactly once, at
     * edge (a, b), as c ∈ N⁺(a) ∩ N⁺(b). The count is therefore
-    * Σ over oriented edges of |N⁺(u) ∩ N⁺(v)| — computed by joining
-    * each edge to the two SORTED out-neighbor lists and running the
-    * native merge-walk intersect ([[graft.functions.
+    * Σ over oriented edges of |N⁺(u) ∩ N⁺(v)| — computed edge-iterator
+    * style: each source's SORTED out-neighbor list is exploded into its
+    * edges (u, v) and joined once to v's list, and the native
+    * merge-walk intersect ([[graft.functions.
     * SortedInterSizeExpr]]). Wedges are NEVER materialized: the r5
     * first cut generated every rank-ordered out-neighbor pair (41 M
     * rows at sf0.1) and shuffled them into a semi-join against the
@@ -194,13 +195,17 @@ object Graph {
     *
     * The adjacency is built with ONE shuffle; its total payload is |E|
     * longs regardless of degree skew (each edge appears in exactly one
-    * list), and sort_array gives the merge walk its contract. The two
-    * list joins carry no hint: AQE's runtime size statistics turn them
-    * into broadcast joins when the adjacency (≈8 B/edge) is under
+    * list), and sort_array gives the merge walk its contract. The
+    * edges come back out of the adjacency itself (the edge iterator:
+    * `explode(nbrs)` next to the source's own list `nu`), so the one
+    * list join is dst to its list `nv`. It carries no hint: AQE's
+    * runtime size statistics turn it into a broadcast join when the
+    * adjacency (≈8 B/edge) is under
     * `spark.sql.adaptive.autoBroadcastJoinThreshold`, and beyond that
-    * they stay shuffle joins with per-edge list replication as the
-    * cost (the MapReduce edge-iterator trade). `ori` is persisted
-    * because the adjacency build and the list joins both read it. */
+    * it stays a shuffle join with per-edge list replication as the
+    * cost (the MapReduce edge-iterator trade). `ori` feeds only the
+    * adjacency build and is not persisted; `e`, `deg` and `adj` each
+    * have several consumers. */
   private def orientedLists(edges: DataFrame)(
       implicit scope: graft.CacheScope): (DataFrame, DataFrame) = {
     val e = edges.transform(scope.persist)
@@ -216,12 +221,10 @@ object Graph {
           struct(col("u").as("src"), col("v").as("dst")))
           .otherwise(struct(col("v").as("src"), col("u").as("dst"))).as("r"))
       .select(col("r.src"), col("r.dst"))
-      .transform(scope.persist)
     val adj = ori.groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
       .transform(scope.persist)
-    val lists = ori
-      .join(adj.select(col("src").as("u_"), col("nbrs").as("nu")), col("src") === col("u_"))
+    val lists = adj.select(col("src"), col("nbrs").as("nu"), explode(col("nbrs")).as("dst"))
       .join(adj.select(col("src").as("v_"), col("nbrs").as("nv")), col("dst") === col("v_"))
     (deg, lists)
   }
@@ -236,12 +239,13 @@ object Graph {
     val (deg, lists) = orientedLists(edges)
     val tri = lists
       // coalesce: a triangle-free graph can drop EVERY edge at the
-      // inner joins (no dst has out-neighbors), leaving sum() = null
+      // inner list join (no dst has out-neighbors), leaving sum() = null
       .agg(coalesce(sum(graft.functions.SortedInter.interSize(col("nu"), col("nv"))
         .cast("long")), lit(0L)).as("n_triangles"))
-    val ne = edges.agg(count(lit(1)).as("n_edges"))
-    val wed = deg.agg(sum(expr("(dg * (dg - 1)) div 2")).as("n_wedges"))
-    ne.crossJoin(broadcast(wed)).crossJoin(broadcast(tri))
+    // every edge adds 1 to two degrees; coalesce: no edge, no degree
+    val sizes = deg.agg(coalesce(expr("sum(dg) div 2"), lit(0L)).as("n_edges"),
+      sum(expr("(dg * (dg - 1)) div 2")).as("n_wedges"))
+    sizes.crossJoin(broadcast(tri))
       .select(col("n_edges"), col("n_wedges"), col("n_triangles"),
         round(lit(3.0) * col("n_triangles") / col("n_wedges"), 6).as("clustering"))
   }

@@ -107,6 +107,49 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
+  test("triangleStats and localClustering on an empty and on a triangle-free edge set") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Long)].toDF("u", "v")
+    // a 4-cycle with a two-edge tail: every degree ≥ 1, no triangle
+    val free = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (4L, 5L), (5L, 6L)).toDF("u", "v")
+    val stats = "StructType(StructField(n_edges,LongType,false),StructField(n_wedges,LongType,true)," +
+      "StructField(n_triangles,LongType,false),StructField(clustering,DoubleType,true))"
+    val local = "StructType(StructField(deg_bucket,LongType,false),StructField(n_nodes,LongType,false)," +
+      "StructField(n_tri_corners,LongType,true),StructField(n_wedges,LongType,true)," +
+      "StructField(avg_local_cc,DoubleType,true))"
+    for ((e, wantStats, wantLocal) <- Seq(
+        (empty, Seq("[0,null,0,null]"), Seq.empty[String]),
+        (free, Seq("[6,7,0,0.0]"), Seq("[2,5,0,7,0.0]")))) {
+      CacheScope.withScope { implicit s =>
+        val t = operators.Graph.triangleStats(e)
+        assert(t.collect().map(_.toString).toSeq == wantStats)
+        assert(t.schema.toString == stats)
+        val l = operators.Graph.localClustering(e)
+        assert(l.collect().map(_.toString).toSeq == wantLocal)
+        assert(l.schema.toString == local)
+      }
+    }
+  }
+
+  test("graph_triangles runs at most 19 jobs once its table's schema is known") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (!Harness.isDrainMarker(e)) jobs.incrementAndGet()
+    }
+    Tables.lineitem(spark, TestSpark.sfDir) // the one schema inference
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      Harness.eachQuery(spark, Seq("graph_triangles"))((_, q) => Harness.runNoop(q(TestSpark.sfDir)))
+      assert(Harness.drainListenerBus(spark), "listener bus did not drain within 10s")
+    } finally spark.sparkContext.removeSparkListener(counter)
+    // AQE stages of the edge build, the degree and adjacency caches and
+    // the one list join; 26 when every read inferred its schema and the
+    // oriented edges were cached and joined back to their source's list
+    assert(jobs.get <= 19, s"graph_triangles ran ${jobs.get} jobs")
+  }
+
   test("component summary labels planted components by min id, any partitioning") {
     import spark.implicits._
     val off = operators.Graph.SuppOffset

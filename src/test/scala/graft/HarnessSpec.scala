@@ -118,6 +118,25 @@ class HarnessSpec extends AnyFunSuite {
     assert(spark.sparkContext.getLocalProperty(Harness.JobDescription) == null)
   }
 
+  test("jobs a Par thread starts under labelled carry the caller's description") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (!Harness.isDrainMarker(e)) descriptions.add(Harness.description(e))
+    }
+    def job(n: Int) = () => { spark.range(n).count(); Thread.currentThread.getName }
+    spark.sparkContext.addSparkListener(listener)
+    val threads = try {
+      val t = Harness.labelled(spark.sparkContext, "par caller")(Par.all(job(10), job(20)))
+      assert(Harness.drainListenerBus(spark), "listener bus did not drain within 10s")
+      t
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(threads.forall(_.startsWith("graft-par-")), threads)
+    val seen = descriptions.toArray(Array.empty[String]).toSeq
+    assert(seen.size >= 2 && seen.forall(_ == "par caller"), seen)
+  }
+
   test("explainExecuted prints the stages a builder collects while it builds") {
     // q90 collects its transition cells and iterates on the driver:
     // the static plan is one LocalTableScan, the work is in the collect

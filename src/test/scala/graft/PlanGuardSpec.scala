@@ -312,22 +312,33 @@ class PlanGuardSpec extends AnyFunSuite {
 
   test("triangle count intersects broadcast adjacency lists — wedges never materialize") {
     // run the gate query and read its final adaptive plan
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     Harness.dropAllBlocks(spark)
     val df = SparkEntry.queries("graph_triangles")(spark, TestSpark.sfDir)
     df.collect()
     val fp = df.queryExecution.executedPlan
     assert(fp.toString.contains("graft_sorted_inter_size"),
       "triangle closure must stay on the merge-walk intersect, not a wedge semi-join")
-    // at gate scale the adjacency payload is KBs: AQE turns BOTH list
-    // joins (edge src to its list, edge dst to its list) into
-    // broadcast joins, so the count is map-only over the persisted edges
-    val bhjKeys = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-      .collect(fp) { case j: BroadcastHashJoinExec =>
-        (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name)).toSet }
-    for (keys <- Seq(Set("src", "u_"), Set("dst", "v_")))
-      assert(bhjKeys.contains(keys),
-        s"the ${keys.mkString("=")} adjacency-list join must be a broadcast join; got $bhjKeys")
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    // the edge iterator: the edges come out of the adjacency (explode
+    // next to the source's own list), so exactly one list join is
+    // left, dst to its list; at gate scale the adjacency payload is
+    // KBs and AQE makes it a broadcast join
+    val listJoins = helper.collect(fp) { case j: BaseJoinExec =>
+      j -> (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name)).toSet }
+      .filter(_._2.exists(k => k == "dst" || k == "v_" || k == "u_"))
+    assert(listJoins.map(_._2) == Seq(Set("dst", "v_")),
+      s"exactly one adjacency-list join, dst = v_; got ${listJoins.map(_._2)}")
+    assert(listJoins.head._1.isInstanceOf[BroadcastHashJoinExec],
+      s"the dst = v_ list join must be a broadcast join; got ${listJoins.head._1.nodeName}")
+    val explodes = helper.collect(fp) { case g: GenerateExec => g }
+    assert(explodes.exists(g => helper.find(g.child) {
+        case _: InMemoryTableScanExec => true
+        case _ => false
+      }.isDefined),
+      s"the edges must be exploded from the cached adjacency; got ${explodes.map(_.simpleString(200))}")
     spark.catalog.clearCache()
   }
 

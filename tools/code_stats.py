@@ -14,6 +14,15 @@ from change to change:
                     a frame of stated bounded size to the driver
                     (Small(...) and Small.rows(...))
   bcast_crossjoin   code lines that call `crossJoin(broadcast(`
+  parquet_reads     `.read.parquet(` call sites on code lines outside
+                    `object Tables`, whose reader infers each file
+                    version's schema once; a bare `.read.parquet(`
+                    runs Spark's schema inference, a job, on every
+                    read. Sources.compact and Cli stay on it: each
+                    reads a user path once a call, so a memo spares no
+                    inference, and the path may be a large directory,
+                    whose version check would list every file on the
+                    driver
   dup_block_lines   lines that sit in a second or later copy of a
                     block of 4 consecutive code lines (trimmed, blank
                     and comment lines skipped) totalling >= 160
@@ -53,6 +62,19 @@ def code_lines(path):
                 if t and not COMMENT.match(t)]
 
 
+def outside_tables(path, code):
+    """The code lines of a file that are not inside `object Tables`,
+    which runs from its `object Tables` line to the next `}` line at
+    column 0."""
+    with open(path, encoding="utf-8") as fh:
+        raw = fh.read().split("\n")
+    start = next((i for i, l in enumerate(raw, 1) if l.startswith("object Tables")), None)
+    if start is None:
+        return [t for _, t in code]
+    end = next(i for i, l in enumerate(raw, 1) if i > start and l == "}")
+    return [t for i, t in code if not start <= i <= end]
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("root", nargs="?", default="src/main")
@@ -80,12 +102,14 @@ def main():
     scopes = len(re.findall(r"\bwithScope\b", text))
     bcast = sum("crossJoin(broadcast(" in t for t in text.split("\n"))
     bounded = len(re.findall(r"\bSmall(?:\.rows)?\(", text))
+    reads = sum(t.count(".read.parquet(") for p in paths for t in outside_tables(p, lines[p]))
     print(f"code_lines       {sum(map(len, lines.values()))}")
     print(f"localCheckpoint  {checkpoints}")
     print(f"scope.persist    {persists}")
     print(f"withScope        {scopes}")
     print(f"bounded_frames   {bounded}")
     print(f"bcast_crossjoin  {bcast}")
+    print(f"parquet_reads    {reads}")
     print(f"dup_block_lines  {len(dup)}")
     sources = {p: open(p, encoding="utf-8").read() for p in paths}
     mains = {p: len(re.findall(r"\bdef main\(", t)) for p, t in sources.items()}
