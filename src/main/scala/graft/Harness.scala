@@ -179,7 +179,7 @@ object Harness {
   private def jobs(sfDir: String, name: String, reps: Int): Unit = {
     val spark = Sessions.local(cores)
     final case class Job(start: Long, desc: String, var end: Long = 0L,
-        var tasks: Int = 0, var taskMs: Long = 0L)
+        var tasks: Int = 0, var taskMs: Long = 0L, var cpuNs: Long = 0L)
     val jobs = mutable.LinkedHashMap.empty[Int, Job] // guards itself and stageToJob
     val stageToJob = mutable.Map.empty[Int, Int]
     val listener = new SparkListener {
@@ -193,7 +193,10 @@ object Harness {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = jobs.synchronized {
         stageToJob.get(e.stageId).flatMap(jobs.get).foreach { j =>
           j.tasks += 1
-          if (e.taskMetrics != null) j.taskMs += e.taskMetrics.executorRunTime
+          if (e.taskMetrics != null) {
+            j.taskMs += e.taskMetrics.executorRunTime
+            j.cpuNs += e.taskMetrics.executorCpuTime
+          }
         }
       }
     }
@@ -206,7 +209,7 @@ object Harness {
       val snap = jobs.synchronized(jobs.toVector)
       println(f"== $name rep: $t%.3f s, ${snap.size} jobs ==")
       snap.foreach { case (id, j) =>
-        println(f"  job $id%3d  wall ${j.end - j.start}%6d ms  tasks ${j.tasks}%4d  taskTime ${j.taskMs}%7d ms  ${j.desc.take(80)}")
+        println(f"  job $id%3d  wall ${j.end - j.start}%6d ms  tasks ${j.tasks}%4d  taskTime ${j.taskMs}%7d ms  cpu ${j.cpuNs / 1000000}%7d ms  ${j.desc.take(80)}")
       }
       t
     }

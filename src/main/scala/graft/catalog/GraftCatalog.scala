@@ -142,8 +142,8 @@ object SchemaChanges {
 
   /** Throws unless the struct at `parent` has no field named `name`. */
   private def requireNew(st: StructType, parent: Seq[String], name: String): Unit = parent match {
-    case Seq() => if (st.fieldNames.contains(name)) throw new IllegalArgumentException(s"field '$name' already exists")
-    case head +: rest => descend(st, head) { s => requireNew(s, rest, name); s }
+    case Seq() => if (st.fields.exists(_.name == name)) throw new IllegalArgumentException(s"field '$name' already exists")
+    case head +: rest => requireNew(structAt(st, head)._2, rest, name)
   }
 
   /** Rewrite the field at `path` (None = drop). */
@@ -184,11 +184,16 @@ object SchemaChanges {
 
   /** Rewrite the struct-typed field `head` of `st` with `rec`. */
   private def descend(st: StructType, head: String)(rec: StructType => StructType): StructType = {
-    val i = st.fieldNames.indexOf(head)
+    val (i, inner) = structAt(st, head)
+    StructType(st.fields.updated(i, st.fields(i).copy(dataType = rec(inner))))
+  }
+
+  /** The index and struct type of `st`'s field `head`; copies nothing. */
+  private def structAt(st: StructType, head: String): (Int, StructType) = {
+    val i = st.fields.indexWhere(_.name == head)
     require(i >= 0, s"no field '$head'")
-    val fl = st.fields(i)
-    fl.dataType match {
-      case s: StructType => StructType(st.fields.updated(i, fl.copy(dataType = rec(s))))
+    st.fields(i).dataType match {
+      case s: StructType => (i, s)
       case other => throw new IllegalArgumentException(s"'$head' is not a struct ($other)")
     }
   }

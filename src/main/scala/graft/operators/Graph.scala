@@ -140,15 +140,17 @@ object Graph {
     * style: each source's SORTED out-neighbor list is exploded into its
     * edges (u, v) and joined once to v's list, and the native
     * merge-walk intersect ([[graft.functions.
-    * SortedInterSizeExpr]]). Wedges are NEVER materialized: the r5
-    * first cut generated every rank-ordered out-neighbor pair (41 M
-    * rows at sf0.1) and shuffled them into a semi-join against the
-    * edge set — 16.5 of the query's 23 s; the adjacency-intersect
-    * form replaces both shuffles with per-edge O(deg⁺(u)+deg⁺(v))
-    * merge walks. Degree ordering still bounds every list at
-    * O(√|E|) (the arboricity argument), which is what kills the
-    * hub-adjacency explosion a naive id-ordering suffers on skewed
-    * degree distributions at 100 TB.
+    * SortedInterSizeExpr]]). Wedges are NEVER materialized: each edge
+    * costs one O(deg⁺(u)+deg⁺(v)) merge walk, not one row per wedge.
+    * Degree ordering bounds every list at O(√|E|) (the arboricity
+    * argument), which is what kills the hub-adjacency explosion a
+    * naive id-ordering suffers on skewed degree distributions.
+    *
+    * The graph is built with aggregates, not joins: [[partEdges]]
+    * expands each order's part set into its pairs with two
+    * generators, and [[orientedLists]] ranks the endpoints by window
+    * counts of their degrees and collects each node's out-neighbors
+    * in one aggregate, the one frame it persists.
     *
     * The oracle counts the SAME triangles by the straightforward
     * id-ordered 3-way self-join — orientation changes which wedges
@@ -170,12 +172,25 @@ object Graph {
     (s, d) => triangleStats(partEdges(s, d)))
 
   /** The part co-purchase graph of [[triangles]] and [[clusteringCoeff]]:
-    * distinct (u, v) part pairs with u < v sharing an order. */
-  private def partEdges(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val co = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-    co.as("a").join(co.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-      .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
+    * distinct (u, v) part pairs with u < v sharing an order.
+    *
+    * One aggregate gathers each order's sorted distinct parts `ps`
+    * (lines with a NULL order or part key name no pair and are dropped
+    * first; duplicate lines collapse in the set). The pairs come out
+    * of two streaming generators: `posexplode(ps)` gives each part u
+    * at position i, and `explode(slice(ps, i + 2, size(ps)))` the
+    * parts after it, each v > u. A k-part order yields its C(k, 2)
+    * pairs one row at a time, as the self-join on the order key did,
+    * and no row ever holds them all. One `distinct` then merges the
+    * pairs that several orders share. */
+  private[graft] def partEdges(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
+    val orders = Tables.lineitem(s, d)
+      .where(col("l_orderkey").isNotNull && col("l_partkey").isNotNull)
+      .groupBy(col("l_orderkey"))
+      .agg(array_sort(collect_set(col("l_partkey"))).as("ps"))
+    orders.select(col("ps"), posexplode(col("ps")).as(Seq("i", "u")))
+      .select(col("u"), explode(slice(col("ps"), col("i") + 2, size(col("ps")))).as("v"))
+      .distinct()
   }
 
   /** Oracle twin of [[partEdges]] (`co`, `e`) plus the degree table
@@ -193,37 +208,45 @@ object Graph {
     * edge `(src, dst)` carrying both endpoints' SORTED out-neighbor
     * lists `nu`, `nv`.
     *
-    * The adjacency is built with ONE shuffle; its total payload is |E|
-    * longs regardless of degree skew (each edge appears in exactly one
-    * list), and sort_array gives the merge walk its contract. The
-    * edges come back out of the adjacency itself (the edge iterator:
-    * `explode(nbrs)` next to the source's own list `nu`), so the one
-    * list join is dst to its list `nv`. It carries no hint: AQE's
-    * runtime size statistics turn it into a broadcast join when the
-    * adjacency (≈8 B/edge) is under
+    * Every edge is exploded into both of its directions (a, b), and two
+    * window counts put the degrees of both endpoints on the row:
+    * `da` over the rows of a, `db` over the rows of b. One aggregate
+    * per node b then gives its degree `dg` and its sorted out-neighbor
+    * list: the a whose (da, a) ranks above (db, b). The degrees ride
+    * on the rows, so no degree table is joined back, and `deg` is a
+    * projection of the adjacency. Only out-neighbors are collected:
+    * each edge lands in exactly one list, so the lists' total payload
+    * is |E| longs regardless of degree skew, and degree ordering bounds
+    * every list at O(√|E|) (a node with more out-neighbors than that
+    * would need as many neighbors of at least its degree). A hub's
+    * list is short, and no row ever holds a whole neighborhood; the
+    * window operators buffer a node's rows in spillable memory.
+    * sort_array gives the merge walk its contract.
+    *
+    * The edges come back out of the adjacency itself (the edge
+    * iterator: `explode(nbrs)` next to the source's own list `nu`), so
+    * the one list join is dst to its list `nv`. It carries no hint:
+    * AQE's runtime size statistics turn it into a broadcast join when
+    * the adjacency (≈8 B/edge) is under
     * `spark.sql.adaptive.autoBroadcastJoinThreshold`, and beyond that
     * it stays a shuffle join with per-edge list replication as the
-    * cost (the MapReduce edge-iterator trade). `ori` feeds only the
-    * adjacency build and is not persisted; `e`, `deg` and `adj` each
-    * have several consumers. */
-  private def orientedLists(edges: DataFrame)(
+    * cost (the MapReduce edge-iterator trade). `adj` is the one frame
+    * persisted: both sides of the list join and `deg` read it. The
+    * edge set feeds only the adjacency build. */
+  private[graft] def orientedLists(edges: DataFrame)(
       implicit scope: graft.CacheScope): (DataFrame, DataFrame) = {
-    val e = edges.transform(scope.persist)
-    val deg = e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("dg"))
+    val und = edges
+      .select(explode(array(struct(col("u").as("a"), col("v").as("b")),
+        struct(col("v").as("a"), col("u").as("b")))).as("r"))
+      .select(col("r.a"), col("r.b"))
+      .withColumn("da", count(lit(1)).over(Window.partitionBy(col("a"))))
+      .withColumn("db", count(lit(1)).over(Window.partitionBy(col("b"))))
+    // a is an out-neighbor of b when (da, a) ranks above (db, b)
+    val out = col("da") > col("db") || (col("da") === col("db") && col("a") > col("b"))
+    val adj = und.groupBy(col("b").as("src"))
+      .agg(max(col("db")).as("dg"), sort_array(collect_list(when(out, col("a")))).as("nbrs"))
       .transform(scope.persist)
-    // orient lower (deg, id) → higher
-    val ori = e
-      .join(deg.withColumnRenamed("node", "u").withColumnRenamed("dg", "du"), Seq("u"))
-      .join(deg.withColumnRenamed("node", "v").withColumnRenamed("dg", "dv"), Seq("v"))
-      .select(
-        when(col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v")),
-          struct(col("u").as("src"), col("v").as("dst")))
-          .otherwise(struct(col("v").as("src"), col("u").as("dst"))).as("r"))
-      .select(col("r.src"), col("r.dst"))
-    val adj = ori.groupBy(col("src"))
-      .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-      .transform(scope.persist)
+    val deg = adj.select(col("src").as("node"), col("dg"))
     val lists = adj.select(col("src"), col("nbrs").as("nu"), explode(col("nbrs")).as("dst"))
       .join(adj.select(col("src").as("v_"), col("nbrs").as("nv")), col("dst") === col("v_"))
     (deg, lists)

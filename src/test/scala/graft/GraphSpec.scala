@@ -131,7 +131,9 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
-  test("graph_triangles runs at most 19 jobs once its table's schema is known") {
+  /** Jobs one run of the registered query `name` starts at sf0.001,
+    * once lineitem's schema is known. */
+  private def jobsOf(name: String): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val counter = new SparkListener {
@@ -141,13 +143,109 @@ class GraphSpec extends AnyFunSuite {
     Tables.lineitem(spark, TestSpark.sfDir) // the one schema inference
     spark.sparkContext.addSparkListener(counter)
     try {
-      Harness.eachQuery(spark, Seq("graph_triangles"))((_, q) => Harness.runNoop(q(TestSpark.sfDir)))
+      Harness.eachQuery(spark, Seq(name))((_, q) => Harness.runNoop(q(TestSpark.sfDir)))
       assert(Harness.drainListenerBus(spark), "listener bus did not drain within 10s")
     } finally spark.sparkContext.removeSparkListener(counter)
-    // AQE stages of the edge build, the degree and adjacency caches and
-    // the one list join; 26 when every read inferred its schema and the
-    // oriented edges were cached and joined back to their source's list
-    assert(jobs.get <= 19, s"graph_triangles ran ${jobs.get} jobs")
+    jobs.get
+  }
+
+  test("graph_triangles runs at most 12 jobs once its table's schema is known") {
+    // AQE stages of the per-order pair expansion and its distinct, the
+    // two window counts and the adjacency aggregate, and the one list
+    // join; 19 when the edges came from a self-join between two
+    // distincts and the orientation joined the degree table back twice
+    val n = jobsOf("graph_triangles")
+    assert(n <= 12, s"graph_triangles ran $n jobs")
+  }
+
+  test("graph_clustering_coeff runs at most 14 jobs once its table's schema is known") {
+    // the same edge and adjacency build as graph_triangles, plus the
+    // corner count and its join to the degrees; 21 with the parent's
+    // self-join edges and degree join-backs
+    val n = jobsOf("graph_clustering_coeff")
+    assert(n <= 14, s"graph_clustering_coeff ran $n jobs")
+  }
+
+  test("partEdges equals the distinct self-join over NULL keys, duplicate lines, one-part orders and no rows") {
+    import spark.implicits._
+    // the edge set as a distinct (order, part) self-join on the order
+    // key: what the per-order pair expansion replaced
+    def selfJoin(d: String) = {
+      val co = Tables.lineitem(spark, d)
+        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
+      co.as("a").join(co.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+        .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
+    }
+    val none = Option.empty[Long]
+    def some(x: Long) = Option(x)
+    val lines = Seq(
+      (some(1), some(10)), (some(1), some(12)), (some(1), some(11)),
+      (some(1), some(12)), (some(1), none), // a duplicate line and a NULL part
+      (some(2), some(11)), (some(2), some(10)), (some(2), some(13)),
+      (some(3), some(12)), // a one-part order
+      (none, some(10)), (none, some(14)), (none, none), // NULL order keys
+      (some(4), none), (some(4), some(14)), (some(4), some(14))) // one part, twice
+    val root = java.nio.file.Files.createTempDirectory("graft-partedges")
+    try {
+      for ((name, rows) <- Seq("lines" -> lines, "empty" -> Seq.empty[(Option[Long], Option[Long])])) {
+        val d = root.resolve(name).toString
+        rows.toDF("l_orderkey", "l_partkey").write.parquet(s"$d/lineitem.parquet")
+        val (got, want) = (operators.Graph.partEdges(spark, d), selfJoin(d))
+        // same names and types; u and v are NOT NULL, as no pair comes
+        // from a NULL part, where the self-join's columns are nullable
+        val notNull = org.apache.spark.sql.types.StructType(want.schema.map(_.copy(nullable = false)))
+        assert(got.schema == notNull, s"$name: ${got.schema} != $notNull")
+        val rowsOf = (df: org.apache.spark.sql.DataFrame) => df.collect().map(_.toString).sorted.toSeq
+        assert(rowsOf(got) == rowsOf(want), s"$name edges")
+        if (name == "lines")
+          assert(rowsOf(got) == Seq("[10,11]", "[10,12]", "[10,13]", "[11,12]", "[11,13]"))
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
+
+  test("orientation: each edge in one sorted list, from lower to higher (degree, id); a star's hub has none") {
+    import spark.implicits._
+    def random(seed: Int) = {
+      val rnd = new scala.util.Random(seed)
+      (1 to 120).map(_ => (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+    }
+    val star = (1L to 20L).map((0L, _))
+    val clique = for { a <- 0L to 5L; b <- a + 1 to 5L } yield (a, b)
+    val hubs = Map("star" -> 0L, "random 7 + star" -> 100L)
+    for ((name, raw) <- Seq("random 5" -> random(5), "random 6" -> random(6),
+        "random 7 + star" -> (random(7) ++ star.map(e => (e._1 + 100, e._2 + 100))),
+        "star" -> star, "clique" -> clique)) {
+      val edges = raw.filter(e => e._1 != e._2)
+        .map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).distinct
+      val degree = edges.flatMap(e => Seq(e._1, e._2)).groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+      val (degRows, listRows) = CacheScope.withScope { implicit s =>
+        val (deg, lists) = operators.Graph.orientedLists(edges.toDF("u", "v").repartition(3))
+        (deg.collect(), lists.collect())
+      }
+      assert(degRows.map(r => r.getLong(0) -> r.getLong(1)).toMap == degree, s"$name: degrees")
+      assert(degRows.length == degree.size, s"$name: one degree row per node")
+      // every node's out-list, from both sides of the list join: a
+      // source carries its list as `nu`, a destination as `nv`
+      val sides = listRows.toSeq.flatMap(r => Seq(
+        r.getAs[Long]("src") -> r.getAs[scala.collection.Seq[Long]]("nu").toSeq,
+        r.getAs[Long]("v_") -> r.getAs[scala.collection.Seq[Long]]("nv").toSeq)).distinct
+      val nbrs = sides.toMap
+      assert(nbrs.size == sides.size, s"$name: a node carries two different lists")
+      assert(listRows.forall(r => r.getAs[Long]("dst") == r.getAs[Long]("v_")))
+      val rank = (x: Long) => (degree(x), x)
+      val ord = Ordering[(Long, Long)]
+      for ((u, v) <- edges) {
+        val (lo, hi) = if (ord.lt(rank(u), rank(v))) (u, v) else (v, u)
+        assert(nbrs.getOrElse(lo, Nil).count(_ == hi) == 1, s"$name: $lo -> $hi missing")
+        assert(!nbrs.getOrElse(hi, Nil).contains(lo), s"$name: $hi -> $lo oriented the wrong way")
+      }
+      assert(nbrs.values.map(_.size).sum == edges.size, s"$name: each edge in exactly one list")
+      assert(nbrs.values.forall(l => l == l.sorted), s"$name: unsorted list")
+      assert(listRows.map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst"))).toSet ==
+        nbrs.toSeq.flatMap { case (x, l) => l.map((x, _)) }.toSet, s"$name: list rows")
+      // a star's hub ranks above all of its leaves: its own list is empty
+      hubs.get(name).foreach(h => assert(nbrs.get(h).contains(Seq.empty[Long]), s"$name: hub list ${nbrs.get(h)}"))
+    }
   }
 
   test("component summary labels planted components by min id, any partitioning") {
